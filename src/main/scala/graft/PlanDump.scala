@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for named declared queries to files —
   * the plan evidence harness for optimization rounds (guide §7.2).
   *
@@ -20,14 +18,8 @@ object PlanDump {
     require(args.length == 3, "usage: PlanDump <outDir> <suffix> <q1,q2,...>")
     val Array(outDir, suffix, names) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
       val fn = SparkEntry.queries.getOrElse(q,

@@ -57,8 +57,9 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }
 
-/** Session factory used by tests and local mains. Verify/Bench build their
-  * own sessions per the driver contract; this one matches their settings.
+/** The one session factory: tests and the Verify, Bench and PlanDump
+  * mains all build their local session here, so every entry point runs
+  * with the same settings. Adaptive execution is on by Spark's default.
   */
 object GraftSession {
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
@@ -67,7 +68,6 @@ object GraftSession {
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

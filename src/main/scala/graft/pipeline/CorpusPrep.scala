@@ -22,16 +22,16 @@ object CorpusPrep {
     * bucket turns the candidate join quadratic. Exact dedup runs first, so
     * identical documents never reach the LSH pass, but heavily-templated
     * NEAR-identical content still can — production corpora set a cap.
-    */
-  /** `exactDupGroups = true` replaces the greedy near-dup drop policy
+    *
+    * `exactDupGroups = true` replaces the greedy near-dup drop policy
     * with full connected-components keeper assignment
     * ([[Dedup.dupComponents]]): only each duplicate component's minimum
     * survives. The greedy policy can keep several representatives of one
     * transitive chain (every node whose direct partners are all larger
     * survives); the CC policy cannot — at the cost of the iterative
     * label-propagation rounds, so it's opt-in.
-    */
-  /** `semanticVecCol = Some(col)` appends a SemDeDup pass
+    *
+    * `semanticVecCol = Some(col)` appends a SemDeDup pass
     * ([[graft.operators.SemanticDedup.dropSemanticDuplicates]]) over a
     * precomputed embedding column: documents whose TEXT already
     * diverged past the Jaccard gates but whose embeddings are
@@ -40,8 +40,8 @@ object CorpusPrep {
     * `semanticK`-cell codebook), so it sees the smallest corpus. A
     * corpus the earlier gates shrink below `semanticK` clamps to one
     * cell per document (the stage degrades, never aborts the pipeline).
-    */
-  /** `lineBoilerplateMaxDf > 0` prepends [[Dedup.dropFrequentLines]]
+    *
+    * `lineBoilerplateMaxDf > 0` prepends [[Dedup.dropFrequentLines]]
     * (lines in more than that many distinct documents removed from all
     * of them, `lineSep`-delimited) BEFORE the quality gate — CCNet's
     * order: strip what repeats because of the SITE first, so boilerplate

@@ -1,12 +1,57 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.DecimalType
 
 import graft.embed.Embedder
 import graft.store.ParquetVectorStore
 import graft.text.Splitters
+
+/** A driver-held state object folded from `foreachBatch`
+  * micro-batches — the shape every monitor ledger in [[EventStreams]]
+  * shares. A subclass supplies the empty state and a pure [[fold]];
+  * this class owns the replay gate and the sink.
+  *
+  * [[ingest]] is IDEMPOTENT per batchId: foreachBatch's at-least-once
+  * semantics mean a failed/retried micro-batch runs the sink again
+  * with the same id, and a second unconditional fold would
+  * double-count its rows (or, for a bounded fold such as a top-k
+  * heap, silently corrupt it). Only the first successful fold for an
+  * id lands; a replay of an already-folded batch is skipped. Ids from
+  * a restarted query resume past the checkpointed high-water mark, so
+  * strictly-increasing ids is the correct acceptance test. The folded
+  * state is installed only after the WHOLE batch folded: a batch that
+  * throws part-way leaves both `state` and `lastBatchId` unchanged, so
+  * its redelivery starts from a clean ledger.
+  *
+  * Restart caveat: the state lives in driver memory only. A ledger
+  * recreated after a checkpoint restart starts empty, while the
+  * restarted query resumes past every batch the old ledger had
+  * folded — those batches are not re-delivered.
+  */
+abstract class BatchLedger[S](empty: S) {
+  private[streaming] var state: S = empty
+  /** Highest batchId already folded in; -1 before the first batch. */
+  private[streaming] var lastBatchId: Long = -1L
+
+  /** `s` with one micro-batch folded in; must not mutate `s`. */
+  protected def fold(s: S, batch: DataFrame): S
+
+  /** Folds one micro-batch; a replay of an already-folded id is a no-op. */
+  final def ingest(batch: DataFrame, batchId: Long): Unit =
+    if (batchId > lastBatchId) {
+      state = fold(state, batch)
+      lastBatchId = batchId
+    }
+
+  /** The `foreachBatch` writer that feeds `rows` into this ledger. */
+  final def sink(rows: DataFrame): DataStreamWriter[Row] =
+    rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      ingest(batch, batchId)
+    }
+}
 
 /** Structured Streaming faces of the engine (SURVEY.md §7.2 step 5).
   * The reference has no streaming (§2.9) — this is the driver-table
@@ -24,6 +69,14 @@ import graft.text.Splitters
 object EventStreams {
 
   private def dsum(c: Column) = sum(c.cast(DecimalType(12, 2))).cast("double")
+
+  /** Epoch hour / epoch day of a window-start timestamp — the
+    * `ts_us div 3600e6` / `ts_us div 86400e6` keys of the batch queries.
+    */
+  private def hourIdx(ts: java.sql.Timestamp): Long =
+    ts.getTime * 1000L / (3600L * 1000 * 1000)
+  private def dayIdx(ts: java.sql.Timestamp): Long =
+    ts.getTime * 1000L / (24L * 3600 * 1000 * 1000)
 
   /** e01's streaming face: tumbling 1-hour windows per event type.
     * Watermark bounds state: windows older than it are finalized and
@@ -129,68 +182,35 @@ object EventStreams {
         col("p._2").as("user_id"), col("p._1").as("total_value"))
   }
 
-  /** Driver-held ledger for [[EventStreams.profileSink]]: one tiny
-    * partial-profile row per micro-batch (bounded by k longs per
-    * column — the sketch state, not the data), folded to the exact
-    * global profile on demand. This is q36's merge≡direct contract
-    * run CONTINUOUSLY: the catalog row for a table stays current as
-    * the stream ingests, and no fold ever rescans history.
+  /** Driver-held ledger for the streaming incremental table profile:
+    * each micro-batch reduces to one tiny
+    * [[graft.operators.TableProfile.partial]] row appended to the
+    * ledger (bounded by k longs per column — the sketch state, not the
+    * data), folded to the exact global profile on demand. This is q36's
+    * merge≡direct contract run CONTINUOUSLY: the catalog row for a
+    * table stays current as the stream ingests, and no fold ever
+    * rescans history. The per-batch driver traffic is one
+    * catalog-sized row; KMV's set-function state makes the folded
+    * profile EXACTLY equal to a one-pass batch profile of the same
+    * rows regardless of how the stream was micro-batched — pinned in
+    * StreamingSpec. Wire as `ledger.sink(rows)`.
     */
-  final class ProfileLedger(val cols: Seq[String], val k: Int = 256) {
-    private[streaming] var partials: Vector[org.apache.spark.sql.Row] =
-      Vector.empty
-    private[streaming] var schema: org.apache.spark.sql.types.StructType = _
-    // Highest batchId already folded in. foreachBatch is at-least-once:
-    // a failed/retried micro-batch re-presents the SAME batchId, and a
-    // second unconditional append would double-count its rows/sums —
-    // breaking the ledger's merge≡direct exactness contract. Tracking
-    // the id makes the append idempotent (see [[EventStreams.profileSink]]).
-    private[streaming] var lastBatchId: Long = -1L
-
-    /** Folds one micro-batch into the ledger; idempotent per batchId
-      * (a replay of an already-folded id is a no-op — see
-      * [[EventStreams.profileSink]] for why at-least-once delivery
-      * makes this necessary).
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        val p = graft.operators.TableProfile.partial(batch, cols, k)
-        schema = p.schema
-        partials = partials ++ p.collect()
-        lastBatchId = batchId
-      }
+  final class ProfileLedger(val cols: Seq[String], val k: Int = 256)
+      extends BatchLedger[Vector[Row]](Vector.empty) {
+    protected def fold(s: Vector[Row], batch: DataFrame) =
+      s ++ graft.operators.TableProfile.partial(batch, cols, k).collect()
 
     /** The exact global profile over everything ingested so far. */
     def current(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      require(schema != null, "profile ledger has seen no batches yet")
+      require(state.nonEmpty, "profile ledger has seen no batches yet")
       graft.operators.TableProfile.fold(
         spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(partials).asJava),
-          schema),
+          new java.util.ArrayList[Row](
+            scala.jdk.CollectionConverters.SeqHasAsJava(state).asJava),
+          state.head.schema),
         cols, k)
     }
   }
-
-  /** Streaming incremental table profile: each micro-batch reduces to
-    * one [[graft.operators.TableProfile.partial]] row appended to the
-    * ledger. The per-batch driver traffic is one catalog-sized row;
-    * KMV's set-function state makes the folded profile EXACTLY equal
-    * to a one-pass batch profile of the same rows regardless of how
-    * the stream was micro-batched — pinned in StreamingSpec.
-    *
-    * The append is IDEMPOTENT per batchId: foreachBatch's at-least-once
-    * semantics mean a failed/retried micro-batch runs the lambda again
-    * with the same id, and only the first successful append for an id
-    * lands (a replay of an already-folded batch is skipped). Ids from a
-    * restarted query resume past the checkpointed high-water mark, so
-    * strictly-increasing ids is the correct acceptance test.
-    */
-  def profileSink(rows: DataFrame, ledger: ProfileLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      ledger.ingest(batch, batchId)
-    }
 
   final case class AnomalyRow(
       event_type: String,
@@ -200,39 +220,45 @@ object EventStreams {
       z: Double,
       is_anomaly: Boolean)
 
-  /** Driver-held ledger for [[anomalySink]]: e23's trailing-24-hour
-    * z-score surveillance run CONTINUOUSLY. State is one long per
-    * CLOSED (type, hour) — catalog-sized (≤ |types| rows per stream
-    * hour), never event-sized; each finalized tumbling window from
-    * [[hourlyRollup]] lands exactly once (append mode emits a window
-    * once; the batchId gate makes foreachBatch replays no-ops, the
-    * [[ProfileLedger]] discipline). [[anomalies]] replays e23's exact
-    * arithmetic over the ledger: integer window sums (n, Σn, Σn²) over
-    * the type's PRESENT hours in [h−24, h−1] — RANGE semantics, empty
-    * hours absent exactly as e23's window over the hourly reduce —
-    * then the identical fixed double sequence, so a closed hour's
-    * z-score equals the batch query's bit for bit (pinned in
-    * StreamingSpec against the batch expression chain).
+  /** The closed per-(type, hour) count state of the four hourly
+    * monitors ([[AnomalyLedger]], [[CusumLedger]], [[HoltLedger]],
+    * [[HoltWintersLedger]]): one long per CLOSED (type, hour) —
+    * catalog-sized (≤ |types| rows per stream hour), never
+    * event-sized — folded from [[hourlyRollup]]'s finalized windows
+    * (append mode emits a window once; the batchId gate makes
+    * foreachBatch replays no-ops). Wire as
+    * `ledger.sink(hourlyRollup(events)).outputMode("append")`.
     */
-  final class AnomalyLedger {
-    private[streaming] var counts: Map[(String, Long), Long] = Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val hourUs = 3600L * 1000 * 1000
+  abstract class HourlyCountLedger
+      extends BatchLedger[Map[(String, Long), Long]](Map.empty) {
+    protected def fold(s: Map[(String, Long), Long], batch: DataFrame) =
+      s ++ batch.select(col("event_type"), col("hour"), col("n")).collect()
+        .map(r => (r.getString(0), hourIdx(r.getTimestamp(1))) -> r.getLong(2))
 
-    /** Folds one micro-batch of closed [[hourlyRollup]] windows;
-      * idempotent per batchId.
+    /** Bounds the ledger on a forever-running monitor: drops every
+      * (type, hour) strictly before `minHourIdx`. What the cut does to
+      * surviving scores is each monitor's eviction contract (class doc).
       */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("event_type"), col("hour"), col("n")).collect()
-          .foreach { r =>
-            val key = (r.getString(0),
-              r.getTimestamp(1).getTime * 1000L / hourUs)
-            counts += key -> r.getLong(2)
-          }
-        lastBatchId = batchId
-      }
+    def evictBefore(minHourIdx: Long): Unit =
+      state = state.filter { case ((_, h), _) => h >= minHourIdx }
+  }
 
+  /** Driver-held [[HourlyCountLedger]]: e23's trailing-24-hour z-score
+    * surveillance run CONTINUOUSLY — the live traffic-spike monitor,
+    * kept current without ever rescanning history. [[anomalies]]
+    * replays e23's exact arithmetic over the ledger: integer window
+    * sums (n, Σn, Σn²) over the type's PRESENT hours in [h−24, h−1] —
+    * RANGE semantics, empty hours absent exactly as e23's window over
+    * the hourly reduce — then the identical fixed double sequence, so
+    * a closed hour's z-score equals the batch query's bit for bit
+    * (pinned in StreamingSpec against the batch expression chain).
+    *
+    * Eviction: the caller keeps the 24 hours BEFORE the earliest hour
+    * it still wants scored — an hour whose trailing window was
+    * truncated by eviction would otherwise z-score against a shorter
+    * trail than batch e23 sees.
+    */
+  final class AnomalyLedger extends HourlyCountLedger {
     /** e23 over the ledger: every closed (type, hour) with at least
       * `minWindow` present trailing hours, z-scored. Pure driver
       * arithmetic over catalog-sized state — one sort per type plus a
@@ -245,7 +271,7 @@ object EventStreams {
       */
     def anomalies(minWindow: Int = 12, flagAt: Double = 2.0)
         : Seq[AnomalyRow] =
-      counts.groupBy(_._1._1).toSeq.sortBy(_._1).flatMap { case (t, m) =>
+      state.groupBy(_._1._1).toSeq.sortBy(_._1).flatMap { case (t, m) =>
         val hours = m.toArray.map { case ((_, h), n) => (h, n) }.sortBy(_._1)
         // prefix(i) = Σ n, Σ n² over hours(0 until i) — longs, exact.
         val psum = new Array[Long](hours.length + 1)
@@ -274,28 +300,7 @@ object EventStreams {
           }
         }
       }
-
-    /** Bounds the ledger on a forever-running monitor: drops every
-      * (type, hour) strictly before `minHourIdx`. The caller keeps the
-      * 24 hours BEFORE the earliest hour it still wants scored — an
-      * hour whose trailing window was truncated by eviction would
-      * otherwise z-score against a shorter trail than batch e23 sees.
-      */
-    def evictBefore(minHourIdx: Long): Unit =
-      counts = counts.filter { case ((_, h), _) => h >= minHourIdx }
   }
-
-  /** Streaming face of e23: [[hourlyRollup]]'s finalized windows feed
-    * the [[AnomalyLedger]], which keeps the trailing-24h z-scores
-    * current without ever rescanning history — the live traffic-spike
-    * monitor. Wire it as
-    * `anomalySink(hourlyRollup(events), ledger).outputMode("append")`.
-    */
-  def anomalySink(closedWindows: DataFrame, ledger: AnomalyLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedWindows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** One scored (type, day) from [[DriftLedger.drifts]] — e28's row. */
   final case class DriftRow(event_type: String, day_idx: Long,
@@ -339,39 +344,32 @@ object EventStreams {
         col("n"))
   }
 
-  /** Driver-held ledger for [[driftSink]]: e28's per-day PSI against a
-    * FIXED baseline, run continuously — the live distribution-drift
+  /** Driver-held ledger: e28's per-day PSI against a FIXED baseline,
+    * run continuously — the live distribution-drift
     * monitor a serving pipeline keeps next to e23's volume monitor.
     * `baseline` is the (type, bucket) → count table of the frozen
     * reference window (types-sized, from a batch run of the e28
     * chain); state is one long per CLOSED (type, day, bucket) —
     * ≤ 8·|types| per stream day, never event-sized — idempotent per
-    * batchId (the [[ProfileLedger]] discipline). [[drifts]] replays
+    * batchId (the [[BatchLedger]] discipline). [[drifts]] replays
     * e28's exact smoothing/quantization arithmetic over the union of
     * the baseline's and the day's observed buckets, so a closed day's
     * psi_micro equals the batch query's bit for bit (StreamingSpec
-    * pins it against the batch expression chain).
+    * pins it against the batch expression chain). Wire as
+    * `ledger.sink(dailyValueBuckets(events, bounds))
+    * .outputMode("append")`.
     */
-  final class DriftLedger(baseline: Map[(String, Long), Long]) {
-    private[streaming] var counts: Map[(String, Long, Long), Long] =
-      Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val dayUs = 24L * 3600 * 1000 * 1000
+  final class DriftLedger(baseline: Map[(String, Long), Long])
+      extends BatchLedger[Map[(String, Long, Long), Long]](Map.empty) {
     private val nb: Map[String, Long] =
       baseline.groupBy(_._1._1).map { case (t, m) => t -> m.values.sum }
 
-    /** Folds one micro-batch of closed [[dailyValueBuckets]] cells;
-      * idempotent per batchId.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("event_type"), col("day"), col("bucket"),
-          col("n")).collect().foreach { r =>
-          val key = (r.getString(0),
-            r.getTimestamp(1).getTime * 1000L / dayUs, r.getLong(2))
-          counts += key -> r.getLong(3)
-        }
-        lastBatchId = batchId
+    /** Folds closed [[dailyValueBuckets]] cells. */
+    protected def fold(s: Map[(String, Long, Long), Long], batch: DataFrame) =
+      s ++ batch.select(col("event_type"), col("day"), col("bucket"),
+        col("n")).collect().map { r =>
+        (r.getString(0), dayIdx(r.getTimestamp(1)), r.getLong(2)) ->
+          r.getLong(3)
       }
 
     /** e28 over the ledger: every closed (type, day) PSI-scored
@@ -380,7 +378,7 @@ object EventStreams {
       * result is independent of ingest order.
       */
     def drifts(): Seq[DriftRow] =
-      counts.groupBy(k => (k._1._1, k._1._2)).toSeq.sortBy(_._1)
+      state.groupBy(k => (k._1._1, k._1._2)).toSeq.sortBy(_._1)
         .map { case ((t, day), m) =>
           val cd = m.map { case ((_, _, b), n) => b -> n }
           val nd = cd.values.sum
@@ -397,26 +395,15 @@ object EventStreams {
         }
 
     /** Bounds the ledger on a forever-running monitor (the
-      * [[AnomalyLedger.evictBefore]] discipline): drops every closed
+      * [[HourlyCountLedger.evictBefore]] discipline): drops every closed
       * (type, day, bucket) cell strictly before `minDayIdx`. Safe at
       * any cut — unlike the z-score ledger, a day's PSI reads only its
       * own cells and the frozen baseline, so eviction can never change
       * a surviving day's score.
       */
     def evictBefore(minDayIdx: Long): Unit =
-      counts = counts.filter { case ((_, day, _), _) => day >= minDayIdx }
+      state = state.filter { case ((_, day, _), _) => day >= minDayIdx }
   }
-
-  /** Streaming face of e28: [[dailyValueBuckets]]'s finalized cells
-    * feed the [[DriftLedger]] — wire as
-    * `driftSink(dailyValueBuckets(events, bounds), ledger)
-    * .outputMode("append")`.
-    */
-  def driftSink(closedCells: DataFrame, ledger: DriftLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedCells.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** One scored type from [[CusumLedger.alarms]] — e32's row shape
     * over the ledger's observed hours.
@@ -424,14 +411,15 @@ object EventStreams {
   final case class CusumRow(event_type: String, n_hours: Long,
       n_alarms: Long, first_alarm_hour: Option[Long], max_s_micro: Long)
 
-  /** Driver-held ledger for [[cusumSink]]: e32's sustained-shift
+  /** Driver-held [[HourlyCountLedger]]: e32's sustained-shift
     * CUSUM run CONTINUOUSLY — the third leg of the monitor trio next
     * to [[AnomalyLedger]] (single-hour spikes) and [[DriftLedger]]
     * (distribution drift). `muMicro` is the FROZEN per-type reference
     * level (micro-units, from a batch run over the baseline window —
     * the DriftLedger bounds discipline: a monitor that re-fits its
-    * own reference absorbs the very drift it should flag). State is
-    * one long per CLOSED (type, hour); idempotent per batchId.
+    * own reference absorbs the very drift it should flag). Types with
+    * no frozen reference are not scoreable — [[alarms]] skips them;
+    * refit the baseline to admit them.
     * [[alarms]] replays e32's exact integer transitions (slack μ/10,
     * threshold 2μ, alarm-and-reset) over the type's hours in order,
     * so given the same reference the alarm sequence matches the batch
@@ -446,33 +434,16 @@ object EventStreams {
     * surviving scores are unchanged. The contract is explicit, not
     * silent.
     */
-  final class CusumLedger(muMicro: Map[String, Long]) {
-    private[streaming] var counts: Map[(String, Long), Long] = Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val hourUs = 3600L * 1000 * 1000
-
-    /** Folds one micro-batch of closed [[hourlyRollup]] windows;
-      * idempotent per batchId. Types with no frozen reference are
-      * dropped (not scoreable — refit the baseline to admit them).
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("event_type"), col("hour"), col("n")).collect()
-          .foreach { r =>
-            if (muMicro.contains(r.getString(0)))
-              counts += (r.getString(0),
-                r.getTimestamp(1).getTime * 1000L / hourUs) -> r.getLong(2)
-          }
-        lastBatchId = batchId
-      }
-
+  final class CusumLedger(muMicro: Map[String, Long])
+      extends HourlyCountLedger {
     /** e32 over the ledger: per type, the alarm count, first alarm
       * hour, and max accumulation, folded over observed hours in
       * order with the frozen reference. Pure driver arithmetic over
       * catalog-sized state; exact integers end to end.
       */
     def alarms(): Seq[CusumRow] =
-      counts.groupBy(_._1._1).toSeq.sortBy(_._1).map { case (t, m) =>
+      state.groupBy(_._1._1).toSeq.sortBy(_._1)
+        .filter { case (t, _) => muMicro.contains(t) }.map { case (t, m) =>
         val mu = muMicro(t)
         val k = mu / 10
         val h = mu * 2
@@ -492,26 +463,10 @@ object EventStreams {
           }
         CusumRow(t, m.size.toLong, nAlarms, first, maxS)
       }
-
-    /** Drops every closed (type, hour) strictly before `minHourIdx`;
-      * accumulation restarts at the horizon (see class doc).
-      */
-    def evictBefore(minHourIdx: Long): Unit =
-      counts = counts.filter { case ((_, hr), _) => hr >= minHourIdx }
   }
 
-  /** Streaming face of e32: [[hourlyRollup]]'s finalized windows feed
-    * the [[CusumLedger]] — wire as
-    * `cusumSink(hourlyRollup(events), ledger).outputMode("append")`.
-    */
-  def cusumSink(closedWindows: DataFrame, ledger: CusumLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedWindows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
-
   /** Closed per-(hour, user) spend windows — the input of
-    * [[leaderboardSink]]; e19's first aggregate as a watermarked
+    * [[LeaderboardLedger]]; e19's first aggregate as a watermarked
     * tumbling window. Append mode emits each (hour, user) total
     * exactly once, on close.
     */
@@ -524,8 +479,8 @@ object EventStreams {
       .select(col("window.start").as("hour"), col("user_id"),
         col("total_value"))
 
-  /** Driver-held ledger for [[termHeavyHitterSink]]: Misra-Gries
-    * heavy-hitter state over a STREAM of items — the frequency monitor
+  /** Driver-held ledger: Misra-Gries heavy-hitter state over a STREAM
+    * of items — the frequency monitor
     * completing the ledger family ([[AnomalyLedger]] volume spikes,
     * [[DriftLedger]] distribution drift, [[CusumLedger]] sustained
     * shifts, [[HoltLedger]] forecasts; this answers "which items
@@ -541,52 +496,37 @@ object EventStreams {
     * [true − n/(k+1), true]. Counter VALUES are merge-order dependent
     * — inherent to MG — so the deterministic contract is the bound,
     * pinned in StreamingSpec exactly as SketchesSpec pins the batch
-    * sketch. State: k counters + one n; idempotent per batchId.
+    * sketch. State: k counters + one n; idempotent per batchId. Wire
+    * any item stream (terms, URLs, user agents) as
+    * `ledger.sink(docs.select(explode(tokens(col("text"))).as("item")))`.
     */
-  final class HeavyHitterLedger(val k: Int) {
+  final class HeavyHitterLedger(val k: Int)
+      extends BatchLedger[(Map[String, Long], Long)]((Map.empty, 0L)) {
     require(k >= 1, s"MG needs k >= 1, got $k")
-    private[streaming] var state: Map[String, Long] = Map.empty
-    private[streaming] var n: Long = 0L
-    private[streaming] var lastBatchId: Long = -1L
     private val mg = new graft.operators.Sketches.HeavyHitters(k)
 
-    /** Folds one micro-batch of items (column `item`); idempotent per
-      * batchId.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        val agg = batch
-          .agg(udaf(new graft.operators.Sketches.HeavyHitters(k),
-            org.apache.spark.sql.Encoders.STRING)(col("item")).as("hh"),
-            count(col("item")).as("cnt"))
-          .head()
-        val batchState = agg.getSeq[org.apache.spark.sql.Row](0)
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        state = mg.merge(state, batchState)
-        n += agg.getLong(1)
-        lastBatchId = batchId
-      }
+    /** Folds one micro-batch of items (column `item`). */
+    protected def fold(s: (Map[String, Long], Long), batch: DataFrame) = {
+      val agg = batch
+        .agg(udaf(new graft.operators.Sketches.HeavyHitters(k),
+          org.apache.spark.sql.Encoders.STRING)(col("item")).as("hh"),
+          count(col("item")).as("cnt"))
+        .head()
+      val batchState = agg.getSeq[org.apache.spark.sql.Row](0)
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      (mg.merge(s._1, batchState), s._2 + agg.getLong(1))
+    }
 
     /** The surviving candidates, (count DESC, item ASC), with the
       * stream-wide error bound n div (k+1) each count is within.
       */
     def top(): Seq[(String, Long, Long)] = {
+      val (counters, n) = state
       val b = n / (k + 1)
-      state.toSeq.sortBy { case (t, c) => (-c, t) }
+      counters.toSeq.sortBy { case (t, c) => (-c, t) }
         .map { case (t, c) => (t, c, b) }
     }
   }
-
-  /** Streaming frequency monitor: any item stream (terms, URLs, user
-    * agents) into the [[HeavyHitterLedger]] — wire as
-    * `termHeavyHitterSink(docs.select(explode(tokens(col("text")))
-    * .as("item")), ledger)`.
-    */
-  def termHeavyHitterSink(items: DataFrame, ledger: HeavyHitterLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    items.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** STREAMING face of e46's time-decayed engagement: closed
     * per-(hour, user) increments — event count + exact cents sum —
@@ -620,8 +560,8 @@ object EventStreams {
   final case class LeaderboardRow(hour_idx: Long, rank: Long,
       user_id: Long, total_value: Double)
 
-  /** Driver-held ledger for [[leaderboardSink]]: e19's hourly
-    * top-spender leaderboard run CONTINUOUSLY. State is a BOUNDED
+  /** Driver-held ledger: e19's hourly top-spender leaderboard run
+    * CONTINUOUSLY. State is a BOUNDED
     * top-k heap per CLOSED hour — k×horizon entries, never
     * hourly-actives×horizon (a user-keyed driver map is the one
     * driver-state shape that does NOT survive 100 TB: hourly actives
@@ -640,43 +580,36 @@ object EventStreams {
     *
     * Unlike the CUSUM/Holt recurrences, hours are INDEPENDENT here, so
     * [[evictBefore]] is score-invariant for every surviving hour — the
-    * eviction contract is free.
+    * eviction contract is free. Wire as
+    * `ledger.sink(hourlyUserValue(events)).outputMode("append")`.
     */
-  final class LeaderboardLedger(k: Int = 3) {
+  final class LeaderboardLedger(k: Int = 3)
+      extends BatchLedger[Map[Long, Vector[(Double, Long)]]](Map.empty) {
     require(k >= 1, s"leaderboard needs k >= 1, got $k")
-    private[streaming] var heaps: Map[Long, Vector[(Double, Long)]] =
-      Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val hourUs = 3600L * 1000 * 1000
 
     /** Strict "ranks ahead of": value DESC then user ASC. */
     private def ahead(a: (Double, Long), b: (Double, Long)): Boolean =
       a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
 
-    /** Folds one micro-batch of closed [[hourlyUserValue]] windows
-      * into the per-hour heaps; idempotent per batchId.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("hour"), col("user_id"), col("total_value"))
-          .collect()
-          .foreach { r =>
-            val h = r.getTimestamp(0).getTime * 1000L / hourUs
-            val pair = (r.getDouble(2), r.getLong(1))
-            val heap = heaps.getOrElse(h, Vector.empty)
-            if (heap.length < k || ahead(pair, heap.last)) {
-              val (better, rest) = heap.span(ahead(_, pair))
-              heaps += h -> ((better :+ pair) ++ rest).take(k)
-            }
-          }
-        lastBatchId = batchId
-      }
+    /** Folds closed [[hourlyUserValue]] windows into the per-hour heaps. */
+    protected def fold(s: Map[Long, Vector[(Double, Long)]], batch: DataFrame) =
+      batch.select(col("hour"), col("user_id"), col("total_value"))
+        .collect()
+        .foldLeft(s) { (heaps, r) =>
+          val h = hourIdx(r.getTimestamp(0))
+          val pair = (r.getDouble(2), r.getLong(1))
+          val heap = heaps.getOrElse(h, Vector.empty)
+          if (heap.length < k || ahead(pair, heap.last)) {
+            val (better, rest) = heap.span(ahead(_, pair))
+            heaps + (h -> ((better :+ pair) ++ rest).take(k))
+          } else heaps
+        }
 
     /** e19 over the ledger: per closed hour, the top-k spenders ranked
       * (value DESC, user ASC) — the heaps are already in rank order.
       */
     def top(): Seq[LeaderboardRow] =
-      heaps.toSeq.sortBy(_._1).flatMap { case (h, heap) =>
+      state.toSeq.sortBy(_._1).flatMap { case (h, heap) =>
         heap.zipWithIndex.map { case ((v, u), i) =>
           LeaderboardRow(h, i + 1L, u, v)
         }
@@ -686,19 +619,8 @@ object EventStreams {
       * surviving hours' rankings are unchanged (hours independent).
       */
     def evictBefore(minHourIdx: Long): Unit =
-      heaps = heaps.filter { case (h, _) => h >= minHourIdx }
+      state = state.filter { case (h, _) => h >= minHourIdx }
   }
-
-  /** Streaming face of e19: [[hourlyUserValue]]'s finalized windows
-    * feed the [[LeaderboardLedger]] — wire as
-    * `leaderboardSink(hourlyUserValue(events), ledger)
-    * .outputMode("append")`.
-    */
-  def leaderboardSink(closedWindows: DataFrame, ledger: LeaderboardLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedWindows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** One forecast row from [[HoltLedger.forecast]] — e36's row shape
     * over the ledger's observed hours.
@@ -707,12 +629,11 @@ object EventStreams {
       level_micro: Long, trend_micro: Long, forecast_micro: Long,
       mae_micro: Long, max_abs_err_micro: Long)
 
-  /** Driver-held ledger for [[holtSink]]: e36's Holt double smoothing
+  /** Driver-held [[HourlyCountLedger]]: e36's Holt double smoothing
     * run CONTINUOUSLY — the forecasting leg of the monitor family
     * ([[AnomalyLedger]] spikes, [[DriftLedger]] drift, [[CusumLedger]]
     * sustained shifts; this one answers "what does next hour look
-    * like", which is what capacity alerts threshold against). State is
-    * one long per CLOSED (type, hour); idempotent per batchId.
+    * like", which is what capacity alerts threshold against).
     * [[forecast]] replays e36's exact integer recurrence (alpha 1/5,
     * beta 1/10, truncate-toward-zero division — Scala `/` on Long IS
     * the engines' div) over the type's hours in order, so on closed
@@ -725,31 +646,14 @@ object EventStreams {
     * b = 0. Explicit, not silent — forecasts stabilize again after
     * ~1/alpha surviving hours.
     */
-  final class HoltLedger {
-    private[streaming] var counts: Map[(String, Long), Long] = Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val hourUs = 3600L * 1000 * 1000
-
-    /** Folds one micro-batch of closed [[hourlyRollup]] windows;
-      * idempotent per batchId.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("event_type"), col("hour"), col("n")).collect()
-          .foreach { r =>
-            counts += (r.getString(0),
-              r.getTimestamp(1).getTime * 1000L / hourUs) -> r.getLong(2)
-          }
-        lastBatchId = batchId
-      }
-
+  final class HoltLedger extends HourlyCountLedger {
     /** e36 over the ledger: per type, final level/trend, the next-hour
       * forecast, and the one-step-ahead error profile, folded over
       * observed hours in order. Pure driver arithmetic over
       * catalog-sized state; exact integers end to end.
       */
     def forecast(): Seq[HoltRow] =
-      counts.groupBy(_._1._1).toSeq.sortBy(_._1).map { case (t, m) =>
+      state.groupBy(_._1._1).toSeq.sortBy(_._1).map { case (t, m) =>
         val hs = m.toSeq.map { case ((_, hr), n) => (hr, n) }.sortBy(_._1)
         var l = 0L
         var b = 0L
@@ -774,23 +678,7 @@ object EventStreams {
         HoltRow(t, nh, l, b, l + b,
           if (nh > 1) sae / (nh - 1) else 0L, maxae)
       }
-
-    /** Drops every closed (type, hour) strictly before `minHourIdx`;
-      * the recurrence re-initializes at the horizon (see class doc).
-      */
-    def evictBefore(minHourIdx: Long): Unit =
-      counts = counts.filter { case ((_, hr), _) => hr >= minHourIdx }
   }
-
-  /** Streaming face of e36: [[hourlyRollup]]'s finalized windows feed
-    * the [[HoltLedger]] — wire as
-    * `holtSink(hourlyRollup(events), ledger).outputMode("append")`.
-    */
-  def holtSink(closedWindows: DataFrame, ledger: HoltLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedWindows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** One forecast row from [[HoltWintersLedger.forecast]] — e39's row
     * shape over the ledger's observed hours.
@@ -802,39 +690,22 @@ object EventStreams {
   /** [[HoltLedger]] with e39's 24-slot hour-of-day seasonal vector —
     * the continuous face of the Holt-Winters query, for the capacity
     * alerts where "is this hour unusual" depends on which hour of the
-    * day it is. Same state shape (one long per closed (type, hour),
-    * idempotent per batchId), same eviction contract (the recurrence —
-    * level, trend AND seasonals — re-initializes at the horizon; the
-    * seasonal vector refills over the next cycle). [[forecast]]
-    * replays e39's exact integer recurrence (alpha 1/5, beta 1/10,
+    * day it is. Same state shape (an [[HourlyCountLedger]]), same
+    * eviction contract (the recurrence — level, trend AND seasonals —
+    * re-initializes at the horizon; the seasonal vector refills over
+    * the next cycle). [[forecast]] replays e39's exact integer
+    * recurrence (alpha 1/5, beta 1/10,
     * gamma 1/10; Scala Long `/` IS both engines' truncate-toward-zero
     * div), so closed hours match the batch query bit for bit
     * (StreamingSpec pins it against a driver replay).
     */
-  final class HoltWintersLedger {
-    private[streaming] var counts: Map[(String, Long), Long] = Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val hourUs = 3600L * 1000 * 1000
-
-    /** Folds one micro-batch of closed [[hourlyRollup]] windows;
-      * idempotent per batchId.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("event_type"), col("hour"), col("n")).collect()
-          .foreach { r =>
-            counts += (r.getString(0),
-              r.getTimestamp(1).getTime * 1000L / hourUs) -> r.getLong(2)
-          }
-        lastBatchId = batchId
-      }
-
+  final class HoltWintersLedger extends HourlyCountLedger {
     /** e39 over the ledger: per type, final level/trend, the next-hour
       * forecast WITH the upcoming hour-of-day's seasonal, and the MAE.
       * Pure driver arithmetic over catalog-sized state.
       */
     def forecast(): Seq[HoltWintersRow] =
-      counts.groupBy(_._1._1).toSeq.sortBy(_._1).map { case (t, m) =>
+      state.groupBy(_._1._1).toSeq.sortBy(_._1).map { case (t, m) =>
         val hs = m.toSeq.map { case ((_, hr), n) => (hr, n) }.sortBy(_._1)
         val s = Array.fill(24)(0L)
         var l = 0L
@@ -862,24 +733,7 @@ object EventStreams {
           l + b + s(((((lasth + 1) % 24) + 24) % 24).toInt),
           if (nh > 1) sae / (nh - 1) else 0L)
       }
-
-    /** Drops every closed (type, hour) strictly before `minHourIdx`;
-      * the full recurrence re-initializes at the horizon (class doc).
-      */
-    def evictBefore(minHourIdx: Long): Unit =
-      counts = counts.filter { case ((_, hr), _) => hr >= minHourIdx }
   }
-
-  /** Streaming face of e39: [[hourlyRollup]]'s finalized windows feed
-    * the [[HoltWintersLedger]] — wire as
-    * `holtWintersSink(hourlyRollup(events), ledger)
-    * .outputMode("append")`.
-    */
-  def holtWintersSink(closedWindows: DataFrame, ledger: HoltWintersLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedWindows.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** Streaming ingest into the on-disk inverted text index
     * ([[graft.store.TextIndex]]): each micro-batch of documents folds
@@ -982,35 +836,27 @@ object EventStreams {
   final case class ActiveRow(day_idx: Long, dau: Long,
       wau_est: Double, mau_est: Double)
 
-  /** Driver-held ledger for [[activesSink]]: e29's rolling DAU/WAU/MAU
-    * run CONTINUOUSLY — the dashboard triple kept current as days
+  /** Driver-held ledger: e29's rolling DAU/WAU/MAU run CONTINUOUSLY —
+    * the dashboard triple kept current as days
     * close. State is one (count, k-longs KMV state) per CLOSED day —
     * calendar-sized, never event- or user-sized; idempotent per
-    * batchId (the [[ProfileLedger]] discipline). [[actives]] merges
+    * batchId (the [[BatchLedger]] discipline). [[actives]] merges
     * each day's trailing 7/30 member states through the same
     * [[graft.operators.Sketches.KmvDistinct]] merge/finish the batch
     * query's KmvMerge delegates to, so a closed day's estimates equal
     * batch e29's bit for bit (merge-of-states ≡ state-of-union —
-    * pinned in StreamingSpec against the batch expression chain).
+    * pinned in StreamingSpec against the batch expression chain). Wire
+    * as `ledger.sink(dailyUserStates(events)).outputMode("append")`.
     */
-  final class ActivesLedger(k: Int = 64) {
-    private[streaming] var days: Map[Long, (Long, Array[Long])] = Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val dayUs = 24L * 3600 * 1000 * 1000
+  final class ActivesLedger(k: Int = 64)
+      extends BatchLedger[Map[Long, (Long, Array[Long])]](Map.empty) {
     private val kmv = new graft.operators.Sketches.KmvDistinct(k)
 
-    /** Folds one micro-batch of closed [[dailyUserStates]] days;
-      * idempotent per batchId.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("day"), col("dau"), col("state")).collect()
-          .foreach { r =>
-            days += (r.getTimestamp(0).getTime * 1000L / dayUs) ->
-              (r.getLong(1), r.getSeq[Long](2).toArray)
-          }
-        lastBatchId = batchId
-      }
+    /** Folds closed [[dailyUserStates]] days. */
+    protected def fold(s: Map[Long, (Long, Array[Long])], batch: DataFrame) =
+      s ++ batch.select(col("day"), col("dau"), col("state")).collect()
+        .map(r => dayIdx(r.getTimestamp(0)) ->
+          (r.getLong(1), r.getSeq[Long](2).toArray))
 
     /** e29 over the ledger: every closed day with its trailing 7/30-day
       * merged estimates. Pure driver arithmetic over calendar-sized
@@ -1018,7 +864,7 @@ object EventStreams {
       * independent of ingest order and micro-batch boundaries.
       */
     def actives(): Seq[ActiveRow] = {
-      val sorted = days.toSeq.sortBy(_._1)
+      val sorted = state.toSeq.sortBy(_._1)
       def est(day: Long, w: Int): Double = kmv.finish(
         sorted.filter { case (d, _) => d > day - w && d <= day }
           .map(_._2._2).foldLeft(kmv.zero)(kmv.merge))
@@ -1028,25 +874,15 @@ object EventStreams {
     }
 
     /** Bounds the ledger on a forever-running monitor (the
-      * [[AnomalyLedger.evictBefore]] discipline): drops every closed
+      * [[HourlyCountLedger.evictBefore]] discipline): drops every closed
       * day strictly before `minDayIdx`. The caller keeps the 30 days
       * BEFORE the earliest day it still wants scored — a surviving
       * day whose trailing window was truncated by eviction would
       * otherwise merge fewer member states than batch e29 sees.
       */
     def evictBefore(minDayIdx: Long): Unit =
-      days = days.filter { case (d, _) => d >= minDayIdx }
+      state = state.filter { case (d, _) => d >= minDayIdx }
   }
-
-  /** Streaming face of e29: [[dailyUserStates]]'s finalized days feed
-    * the [[ActivesLedger]] — wire as
-    * `activesSink(dailyUserStates(events), ledger).outputMode("append")`.
-    */
-  def activesSink(closedDays: DataFrame, ledger: ActivesLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedDays.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** Per-(day, type) KMV audience state, finalized at watermark close —
     * the streaming reduce that feeds [[OverlapLedger]] (e41's face).
@@ -1077,8 +913,8 @@ object EventStreams {
       est_a: Double, est_b: Double, est_union: Double,
       est_inter: Double, jaccard: Double)
 
-  /** Driver-held ledger for [[overlapSink]]: e41's pairwise engaged-
-    * audience matrix run CONTINUOUSLY — segment overlap kept current
+  /** Driver-held ledger: e41's pairwise engaged-audience matrix run
+    * CONTINUOUSLY — segment overlap kept current
     * as days close, without rescanning the event log per pair or per
     * day. State is one k-longs KMV state per CLOSED (type, day) —
     * calendar×types-sized; idempotent per batchId. [[overlaps]] merges
@@ -1088,34 +924,25 @@ object EventStreams {
     * inclusion–exclusion arithmetic — on closed data the matrix
     * equals the batch query's bit for bit (StreamingSpec pins it
     * against the batch expression chain). [[evictBefore]] gives the
-    * trailing-window audience matrix, exact for survivors.
+    * trailing-window audience matrix, exact for survivors. Wire as
+    * `ledger.sink(dailyTypeUserStates(events)).outputMode("append")`.
     */
-  final class OverlapLedger(k: Int = 32) {
-    private[streaming] var states: Map[(String, Long), Array[Long]] = Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val dayUs = 24L * 3600 * 1000 * 1000
+  final class OverlapLedger(k: Int = 32)
+      extends BatchLedger[Map[(String, Long), Array[Long]]](Map.empty) {
     private val kmv = new graft.operators.Sketches.KmvDistinct(k)
 
-    /** Folds one micro-batch of closed [[dailyTypeUserStates]] rows;
-      * idempotent per batchId.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("event_type"), col("day"), col("state")).collect()
-          .foreach { r =>
-            states += (r.getString(0),
-              r.getTimestamp(1).getTime * 1000L / dayUs) ->
-              r.getSeq[Long](2).toArray
-          }
-        lastBatchId = batchId
-      }
+    /** Folds closed [[dailyTypeUserStates]] rows. */
+    protected def fold(s: Map[(String, Long), Array[Long]], batch: DataFrame) =
+      s ++ batch.select(col("event_type"), col("day"), col("state")).collect()
+        .map(r => (r.getString(0), dayIdx(r.getTimestamp(1))) ->
+          r.getSeq[Long](2).toArray)
 
     /** e41 over the ledger: every type pair (a < b) with estimates,
       * inclusion–exclusion intersection and Jaccard — e41's exact
       * double arithmetic over the merged per-type states.
       */
     def overlaps(): Seq[OverlapRow] = {
-      val byType = states.groupBy(_._1._1).toSeq.sortBy(_._1)
+      val byType = state.groupBy(_._1._1).toSeq.sortBy(_._1)
         .map { case (t, m) =>
           t -> m.values.foldLeft(kmv.zero)(kmv.merge)
         }
@@ -1138,19 +965,8 @@ object EventStreams {
       * the trailing-window matrix; surviving days' states are exact.
       */
     def evictBefore(minDayIdx: Long): Unit =
-      states = states.filter { case ((_, d), _) => d >= minDayIdx }
+      state = state.filter { case ((_, d), _) => d >= minDayIdx }
   }
-
-  /** Streaming face of e41: [[dailyTypeUserStates]]'s finalized days
-    * feed the [[OverlapLedger]] — wire as
-    * `overlapSink(dailyTypeUserStates(events), ledger)
-    * .outputMode("append")`.
-    */
-  def overlapSink(closedDays: DataFrame, ledger: OverlapLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedDays.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** Per-day EXACT user bitmap, finalized at watermark close — the
     * streaming reduce that feeds [[BitmapActivesLedger]] (e33's face,
@@ -1175,34 +991,29 @@ object EventStreams {
         col("bm"))
   }
 
-  /** Driver-held ledger for [[bitmapSink]]: e33's EXACT rolling
-    * DAU/WAU/MAU run continuously — [[ActivesLedger]]'s shape with
+  /** Driver-held ledger: e33's EXACT rolling DAU/WAU/MAU run
+    * continuously — [[ActivesLedger]]'s shape with
     * zero estimator error. State is capacity/64 longs per CLOSED day
     * (calendar-sized); idempotent per batchId; trailing windows
     * OR-merge member-day bitmaps, so a closed day's counts equal
     * batch e33's (and plain COUNT DISTINCT's) bit for bit — pinned
-    * in StreamingSpec.
+    * in StreamingSpec. Wire as
+    * `ledger.sink(dailyUserBitmaps(events, cap)).outputMode("append")`.
     */
-  final class BitmapActivesLedger(capacity: Int) {
-    private[streaming] var days: Map[Long, Array[Long]] = Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val dayUs = 24L * 3600 * 1000 * 1000
+  final class BitmapActivesLedger(capacity: Int)
+      extends BatchLedger[Map[Long, Array[Long]]](Map.empty) {
     private val words = (capacity + 63) >>> 6
 
-    /** Folds one micro-batch of closed [[dailyUserBitmaps]] days;
-      * idempotent per batchId; wrong-width states fail loudly (a
-      * different capacity is a different dictionary).
+    /** Folds closed [[dailyUserBitmaps]] days; wrong-width states fail
+      * loudly (a different capacity is a different dictionary).
       */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("day"), col("bm")).collect().foreach { r =>
-          val bm = r.getSeq[Long](1).toArray
-          require(bm.length == words,
-            s"bitmap state width ${bm.length} != $words — " +
-              "states from a different capacity/dictionary")
-          days += (r.getTimestamp(0).getTime * 1000L / dayUs) -> bm
-        }
-        lastBatchId = batchId
+    protected def fold(s: Map[Long, Array[Long]], batch: DataFrame) =
+      s ++ batch.select(col("day"), col("bm")).collect().map { r =>
+        val bm = r.getSeq[Long](1).toArray
+        require(bm.length == words,
+          s"bitmap state width ${bm.length} != $words — " +
+            "states from a different capacity/dictionary")
+        dayIdx(r.getTimestamp(0)) -> bm
       }
 
     private def pop(a: Array[Long]): Long = {
@@ -1216,7 +1027,7 @@ object EventStreams {
       * independent of ingest order and micro-batch boundaries.
       */
     def actives(): Seq[ActiveExactRow] = {
-      val sorted = days.toSeq.sortBy(_._1)
+      val sorted = state.toSeq.sortBy(_._1)
       def winPop(day: Long, w: Int): Long = {
         val acc = new Array[Long](words)
         sorted.foreach { case (d, bm) =>
@@ -1236,7 +1047,7 @@ object EventStreams {
       * 30 days before the earliest day it still wants scored.
       */
     def evictBefore(minDayIdx: Long): Unit =
-      days = days.filter { case (d, _) => d >= minDayIdx }
+      state = state.filter { case (d, _) => d >= minDayIdx }
   }
 
   /** One exact (day, DAU, WAU, MAU) row from
@@ -1244,17 +1055,6 @@ object EventStreams {
     */
   final case class ActiveExactRow(day_idx: Long, dau_exact: Long,
       wau_exact: Long, mau_exact: Long)
-
-  /** Streaming face of e33: [[dailyUserBitmaps]]'s finalized days
-    * feed the [[BitmapActivesLedger]] — wire as
-    * `bitmapSink(dailyUserBitmaps(events, cap), ledger)
-    * .outputMode("append")`.
-    */
-  def bitmapSink(closedDays: DataFrame, ledger: BitmapActivesLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedDays.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** Daily per-arm exact moment partials — the streaming reduce that
     * feeds [[WelfordLedger]] (e40's continuous face): per closed
@@ -1283,12 +1083,12 @@ object EventStreams {
   final case class WelchRow(n_a: Long, n_b: Long, mean_a_micro: Long,
       mean_b_micro: Long, t_stat: Double, df_welch: Double)
 
-  /** Driver-held ledger for [[welfordSink]]: e40's Welch test run
+  /** Driver-held ledger: e40's Welch test run
     * CONTINUOUSLY — the always-on experiment monitor that re-scores
     * the A/B comparison as each day closes, without ever rescanning
     * history. State is one exact moment triple per closed
     * (arm, day) — calendar-bounded, never event-sized — idempotent
-    * per batchId (the [[ProfileLedger]] discipline); Σ and Σ² live as
+    * per batchId (the [[BatchLedger]] discipline); Σ and Σ² live as
     * BigInt on the driver (Σm² exceeds a long at ~10⁹ events/arm).
     * [[welch]] folds the retained days by integer ADDITION (moments
     * merge exactly — the associativity IS the correctness argument)
@@ -1297,33 +1097,25 @@ object EventStreams {
     * (StreamingSpec pins it against the batch expression chain).
     * [[evictBefore]] turns the all-time test into a trailing-window
     * test: surviving days' moments are untouched, so the re-fold is
-    * exact for the window.
+    * exact for the window. Wire as
+    * `ledger.sink(dailyValueMoments(events, a, b)).outputMode("append")`.
     */
-  final class WelfordLedger(typeA: String, typeB: String) {
-    private[streaming] var moments: Map[(String, Long), (Long, BigInt, BigInt)] =
-      Map.empty
-    private[streaming] var lastBatchId: Long = -1L
-    private val dayUs = 24L * 3600 * 1000 * 1000
-
-    /** Folds one micro-batch of closed [[dailyValueMoments]] rows;
-      * idempotent per batchId.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit =
-      if (batchId > lastBatchId) {
-        batch.select(col("event_type"), col("day"), col("n"), col("s"),
-          col("q")).collect()
-          .foreach { r =>
-            moments += (r.getString(0),
-              r.getTimestamp(1).getTime * 1000L / dayUs) ->
-              ((r.getLong(2),
-                BigInt(r.getDecimal(3).toBigInteger),
-                BigInt(r.getDecimal(4).toBigInteger)))
-          }
-        lastBatchId = batchId
+  final class WelfordLedger(typeA: String, typeB: String)
+      extends BatchLedger[Map[(String, Long), (Long, BigInt, BigInt)]](
+        Map.empty) {
+    /** Folds closed [[dailyValueMoments]] rows. */
+    protected def fold(s: Map[(String, Long), (Long, BigInt, BigInt)],
+        batch: DataFrame) =
+      s ++ batch.select(col("event_type"), col("day"), col("n"), col("s"),
+        col("q")).collect().map { r =>
+        (r.getString(0), dayIdx(r.getTimestamp(1))) ->
+          ((r.getLong(2),
+            BigInt(r.getDecimal(3).toBigInteger),
+            BigInt(r.getDecimal(4).toBigInteger)))
       }
 
     private def arm(t: String): (Long, BigInt, BigInt) =
-      moments.collect { case ((`t`, _), m) => m }
+      state.collect { case ((`t`, _), m) => m }
         .foldLeft((0L, BigInt(0), BigInt(0))) { case ((n, s, q), (dn, ds, dq)) =>
           (n + dn, s + ds, q + dq)
         }
@@ -1357,19 +1149,8 @@ object EventStreams {
       * the trailing-window form; survivors' moments are exact.
       */
     def evictBefore(minDayIdx: Long): Unit =
-      moments = moments.filter { case ((_, d), _) => d >= minDayIdx }
+      state = state.filter { case ((_, d), _) => d >= minDayIdx }
   }
-
-  /** Streaming face of e40: [[dailyValueMoments]]'s finalized days
-    * feed the [[WelfordLedger]] — wire as
-    * `welfordSink(dailyValueMoments(events, a, b), ledger)
-    * .outputMode("append")`.
-    */
-  def welfordSink(closedDays: DataFrame, ledger: WelfordLedger)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    closedDays.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) => ledger.ingest(batch, batchId)
-    }
 
   /** Open-session state carried between micro-batches by
     * [[statefulSessionize]]: bounded per open session (counters + the

@@ -161,8 +161,8 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Double, Double)]
     val cols = Seq("x", "y")
     val ledger = new EventStreams.ProfileLedger(cols, k = 8)
-    val q = EventStreams.profileSink(
-      in.toDF.toDF("id", "x", "y"), ledger)
+    val q = ledger.sink(
+      in.toDF.toDF("id", "x", "y"))
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
       .start()
@@ -184,7 +184,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed == direct,
         s"incremental profile drifted from the one-pass profile:\n" +
           s"stream: $streamed\ndirect: $direct")
-      assert(ledger.partials.size == 3, "one partial row per micro-batch")
+      assert(ledger.state.size == 3, "one partial row per micro-batch")
     } finally q.stop()
   }
 
@@ -199,7 +199,7 @@ class StreamingSpec extends AnyFunSuite {
     ledger.ingest(b0, 0L) // retry of an already-committed batch: no-op
     ledger.ingest(b1, 1L)
     ledger.ingest(b0, 0L) // late replay after progress: still a no-op
-    assert(ledger.partials.size == 2, "one partial per DISTINCT batchId")
+    assert(ledger.state.size == 2, "one partial per DISTINCT batchId")
     val prof = ledger.current(spark).collect().head
     assert(prof.getAs[Long]("n_rows") == 3L,
       s"rows double-counted: $prof")
@@ -648,8 +648,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[String]
     val ledger = new EventStreams.HeavyHitterLedger(4)
-    val q = EventStreams.termHeavyHitterSink(
-        in.toDF.toDF("item"), ledger)
+    val q = ledger.sink(
+        in.toDF.toDF("item"))
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
       .start()
@@ -678,9 +678,9 @@ class StreamingSpec extends AnyFunSuite {
           s"$t reported $c outside [${truth(t) - bound}, ${truth(t)}]")
       }
       // a replayed batchId must not re-fold (foreachBatch redelivery)
-      val before = (ledger.top(), ledger.n)
+      val before = (ledger.top(), ledger.state._2)
       ledger.ingest(Seq("alpha", "alpha").toDF("item"), batchId = 0L)
-      assert((ledger.top(), ledger.n) == before,
+      assert((ledger.top(), ledger.state._2) == before,
         "stale batchId replay must be a no-op")
     } finally q.stop()
   }
@@ -697,8 +697,8 @@ class StreamingSpec extends AnyFunSuite {
     val stream = in.toDS().toDF("event_id", "ts_us", "event_type")
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withColumn("value", lit(1.0))
-    val q = EventStreams.anomalySink(
-        EventStreams.hourlyRollup(stream, watermark = "2 hours"), ledger)
+    val q = ledger.sink(
+        EventStreams.hourlyRollup(stream, watermark = "2 hours"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -745,12 +745,12 @@ class StreamingSpec extends AnyFunSuite {
       assert(got.exists(r => r.hour_idx == 25L && r.is_anomaly),
         "the hour-25 spike must flag")
       // idempotence: replaying an already-folded batchId is a no-op
-      val before = ledger.counts
+      val before = ledger.state
       ledger.ingest(
         Seq(("view", new java.sql.Timestamp(0L), 999L))
           .toDF("event_type", "hour", "n"),
         ledger.lastBatchId)
-      assert(ledger.counts == before)
+      assert(ledger.state == before)
     } finally q.stop()
   }
 
@@ -760,14 +760,14 @@ class StreamingSpec extends AnyFunSuite {
     // types, colliding hour indexes all at once.
     val rnd = new scala.util.Random(15)
     val ledger = new EventStreams.AnomalyLedger
-    ledger.counts = (for {
+    ledger.state = (for {
       t <- Seq("view", "click", "purchase")
       h <- 0L to 120L if rnd.nextDouble() < 0.8 // ~20% missing hours
     } yield (t, h) -> (1L + rnd.nextInt(50)).toLong).toMap
     def naive(minWindow: Int, flagAt: Double) =
-      ledger.counts.toSeq.sortBy { case ((t, h), _) => (t, h) }.flatMap {
+      ledger.state.toSeq.sortBy { case ((t, h), _) => (t, h) }.flatMap {
         case ((t, h), n) =>
-          val trail = ledger.counts.collect {
+          val trail = ledger.state.collect {
             case ((`t`, hh), nn) if hh >= h - 24 && hh <= h - 1 => nn
           }.toSeq
           val cnt = trail.size.toLong
@@ -789,7 +789,7 @@ class StreamingSpec extends AnyFunSuite {
     // trailing windows never reach below the horizon are unchanged
     val before = ledger.anomalies()
     ledger.evictBefore(40L)
-    assert(ledger.counts.keys.forall(_._2 >= 40L), "evicted hours survive")
+    assert(ledger.state.keys.forall(_._2 >= 40L), "evicted hours survive")
     val after = ledger.anomalies()
     assert(after.filter(_.hour_idx >= 40L + 24L) ==
       before.filter(_.hour_idx >= 40L + 24L),
@@ -1431,8 +1431,8 @@ class StreamingSpec extends AnyFunSuite {
     val ledger = new EventStreams.DriftLedger(baseline)
     val stream = in.toDS().toDF("event_id", "ts_us", "event_type", "value")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.driftSink(
-        EventStreams.dailyValueBuckets(stream, bounds, "1 day"), ledger)
+    val q = ledger.sink(
+        EventStreams.dailyValueBuckets(stream, bounds, "1 day"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -1464,12 +1464,12 @@ class StreamingSpec extends AnyFunSuite {
           .map(_.psi_micro).max,
         s"the shifted day must dominate the calibration floor: $aRows")
       // idempotence: replaying an already-folded batchId is a no-op
-      val before = ledger.counts
+      val before = ledger.state
       ledger.ingest(
         Seq(("a", new java.sql.Timestamp(0L), 0L, 999L))
           .toDF("event_type", "day", "bucket", "n"),
         ledger.lastBatchId)
-      assert(ledger.counts == before)
+      assert(ledger.state == before)
       // eviction: a day's PSI reads only its own cells + the frozen
       // baseline, so dropping old days is invisible to survivors
       val keptBefore = got.filter(_.day_idx >= 10L)
@@ -1524,8 +1524,8 @@ class StreamingSpec extends AnyFunSuite {
     val ledger = new EventStreams.ActivesLedger(K)
     val stream = in.toDS().toDF("event_id", "ts_us", "user_id")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.activesSink(
-        EventStreams.dailyUserStates(stream, K, "1 day"), ledger)
+    val q = ledger.sink(
+        EventStreams.dailyUserStates(stream, K, "1 day"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -1547,12 +1547,12 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == want,
         s"ledger diverged from batch e29:\n got: ${got.take(4)}\nwant: ${want.take(4)}")
       // idempotence: replaying an already-folded batchId is a no-op
-      val before = ledger.days
+      val before = ledger.state
       ledger.ingest(
         Seq((new java.sql.Timestamp(0L), 999L,
           Seq(1L, 2L, 3L))).toDF("day", "dau", "state"),
         ledger.lastBatchId)
-      assert(ledger.days == before)
+      assert(ledger.state == before)
       // eviction: surviving days whose trailing windows stay intact
       // keep their scores bit for bit (the caller-keeps-the-margin
       // contract); evicted days disappear.
@@ -1601,8 +1601,8 @@ class StreamingSpec extends AnyFunSuite {
     val ledger = new EventStreams.CusumLedger(mu)
     val stream = in.toDS().toDF("event_id", "ts_us", "event_type", "value")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.cusumSink(
-        EventStreams.hourlyRollup(stream, "1 hour"), ledger)
+    val q = ledger.sink(
+        EventStreams.hourlyRollup(stream, "1 hour"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -1618,10 +1618,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == want,
         s"cusum ledger diverged from the batch fold:\n got: $got\nwant: $want")
       // replayed batchId is a no-op
-      val before = ledger.counts
+      val before = ledger.state
       ledger.ingest(Seq(("a", new java.sql.Timestamp(0L), 999L))
         .toDF("event_type", "hour", "n"), ledger.lastBatchId)
-      assert(ledger.counts == before)
+      assert(ledger.state == before)
       // eviction restarts accumulation at the horizon: placing it at
       // an alarm boundary leaves later alarm counts intact
       val firstAlarm = got.head.first_alarm_hour.get
@@ -1665,8 +1665,8 @@ class StreamingSpec extends AnyFunSuite {
     val ledger = new EventStreams.LeaderboardLedger(3)
     val stream = in.toDS().toDF("event_id", "ts_us", "user_id", "value")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.leaderboardSink(
-        EventStreams.hourlyUserValue(stream, "1 hour"), ledger)
+    val q = ledger.sink(
+        EventStreams.hourlyUserValue(stream, "1 hour"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -1686,15 +1686,15 @@ class StreamingSpec extends AnyFunSuite {
       // — driver state is k×horizon, never hourly-actives×horizon.
       assert(want.groupBy(_.hour_idx).values.exists(_.size == 3),
         "fixture must close hours with more users than k")
-      assert(ledger.heaps.nonEmpty &&
-        ledger.heaps.values.forall(_.length <= 3),
-        s"per-hour state must stay ≤ k: ${ledger.heaps.view.mapValues(_.length).toMap}")
+      assert(ledger.state.nonEmpty &&
+        ledger.state.values.forall(_.length <= 3),
+        s"per-hour state must stay ≤ k: ${ledger.state.view.mapValues(_.length).toMap}")
       // replayed batchId is a no-op (the bounded fold is not
       // re-entrant per row, so the gate carries the idempotence)
-      val before = ledger.heaps
+      val before = ledger.state
       ledger.ingest(Seq((new java.sql.Timestamp(0L), 0L, 999.0))
         .toDF("hour", "user_id", "total_value"), ledger.lastBatchId)
-      assert(ledger.heaps == before)
+      assert(ledger.state == before)
       // hours are independent: eviction leaves surviving ranks intact
       ledger.evictBefore(2L)
       assert(ledger.top() == want.filter(_.hour_idx >= 2L),
@@ -1742,8 +1742,8 @@ class StreamingSpec extends AnyFunSuite {
     val ledger = new EventStreams.HoltLedger
     val stream = in.toDS().toDF("event_id", "ts_us", "event_type", "value")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.holtSink(
-        EventStreams.hourlyRollup(stream, "1 hour"), ledger)
+    val q = ledger.sink(
+        EventStreams.hourlyRollup(stream, "1 hour"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -1760,10 +1760,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == want,
         s"holt ledger diverged from the batch recurrence:\n got: $got\nwant: $want")
       // replayed batchId is a no-op
-      val before = ledger.counts
+      val before = ledger.state
       ledger.ingest(Seq(("a", new java.sql.Timestamp(0L), 999L))
         .toDF("event_type", "hour", "n"), ledger.lastBatchId)
-      assert(ledger.counts == before)
+      assert(ledger.state == before)
       // eviction restarts the recurrence at the horizon: the surviving
       // suffix forecasts exactly as a fresh fold over that suffix
       ledger.evictBefore(10L)
@@ -1819,8 +1819,8 @@ class StreamingSpec extends AnyFunSuite {
     val ledger = new EventStreams.HoltWintersLedger
     val stream = in.toDS().toDF("event_id", "ts_us", "event_type", "value")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.holtWintersSink(
-        EventStreams.hourlyRollup(stream, "1 hour"), ledger)
+    val q = ledger.sink(
+        EventStreams.hourlyRollup(stream, "1 hour"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -1836,10 +1836,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == want,
         s"HW ledger diverged from the batch recurrence:\n got: $got\nwant: $want")
       // replayed batchId is a no-op
-      val before = ledger.counts
+      val before = ledger.state
       ledger.ingest(Seq(("a", new java.sql.Timestamp(0L), 999L))
         .toDF("event_type", "hour", "n"), ledger.lastBatchId)
-      assert(ledger.counts == before)
+      assert(ledger.state == before)
       // eviction re-initializes level, trend AND seasonals at the horizon
       ledger.evictBefore(24L)
       val after = ledger.forecast().find(_.event_type == "a").get
@@ -1879,8 +1879,8 @@ class StreamingSpec extends AnyFunSuite {
     val ledger = new EventStreams.BitmapActivesLedger(capacity)
     val stream = in.toDS().toDF("event_id", "ts_us", "user_id")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.bitmapSink(
-        EventStreams.dailyUserBitmaps(stream, capacity, "1 day"), ledger)
+    val q = ledger.sink(
+        EventStreams.dailyUserBitmaps(stream, capacity, "1 day"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -1897,11 +1897,11 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == want,
         s"bitmap ledger diverged from COUNT DISTINCT:\n got: ${got.take(4)}\nwant: ${want.take(4)}")
       // replayed batchId is a no-op
-      val before = ledger.days
+      val before = ledger.state
       ledger.ingest(Seq((new java.sql.Timestamp(0L),
         Seq.fill(2)(java.lang.Long.valueOf(-1L)).toSeq))
         .toDF("day", "bm"), ledger.lastBatchId)
-      assert(ledger.days == before)
+      assert(ledger.state == before)
       // a wrong-width state fails loudly, never silently ORs
       val e = intercept[IllegalArgumentException] {
         ledger.ingest(Seq((new java.sql.Timestamp(0L),
@@ -1916,6 +1916,25 @@ class StreamingSpec extends AnyFunSuite {
         .map(r => (r.day_idx, r.wau_exact))
         == kept.map(r => (r.day_idx, r.wau_exact)))
     } finally q.stop()
+  }
+
+  test("BitmapActivesLedger: a batch that throws part-way leaves state and lastBatchId unchanged") {
+    // A valid day followed by a wrong-width day: the batch fails on
+    // its second row, and neither its first row nor its batchId may
+    // land, so a redelivery of the batch meets the ledger as it was.
+    val dayMs = 24L * 3600 * 1000
+    val ledger = new EventStreams.BitmapActivesLedger(128)
+    ledger.ingest(Seq((new java.sql.Timestamp(0L), Seq(1L, 0L)))
+      .toDF("day", "bm"), 0L)
+    val before = ledger.state
+    val mixed = Seq(
+      (new java.sql.Timestamp(dayMs), Seq(3L, 0L)),
+      (new java.sql.Timestamp(2 * dayMs), Seq(1L))).toDF("day", "bm")
+    val e = intercept[IllegalArgumentException] { ledger.ingest(mixed, 1L) }
+    assert(e.getMessage.contains("width"))
+    assert(ledger.state == before && ledger.state.keySet == Set(0L),
+      s"a failed batch left rows behind: ${ledger.state.keySet}")
+    assert(ledger.lastBatchId == 0L)
   }
 
   test("welfordSink: ledger Welch row equals the batch e40 arithmetic on closed days") {
@@ -1962,8 +1981,8 @@ class StreamingSpec extends AnyFunSuite {
     val ledger = new EventStreams.WelfordLedger("a", "b")
     val stream = in.toDS().toDF("event_id", "ts_us", "event_type", "value")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.welfordSink(
-        EventStreams.dailyValueMoments(stream, "a", "b", "1 day"), ledger)
+    val q = ledger.sink(
+        EventStreams.dailyValueMoments(stream, "a", "b", "1 day"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -1981,13 +2000,13 @@ class StreamingSpec extends AnyFunSuite {
       assert(ledger.welch().contains(want),
         s"ledger drifted from the batch chain: ${ledger.welch()} vs $want")
       // idempotence: replaying an already-folded batchId is a no-op
-      val before = ledger.moments
+      val before = ledger.state
       ledger.ingest(
         Seq(("a", new java.sql.Timestamp(0L), 5L,
           new java.math.BigDecimal(999), new java.math.BigDecimal(999)))
           .toDF("event_type", "day", "n", "s", "q"),
         ledger.lastBatchId)
-      assert(ledger.moments == before)
+      assert(ledger.state == before)
       // eviction = the trailing-window test: survivors re-fold exactly
       ledger.evictBefore(5L)
       val wantTail = wantOver(batchDf.filter(col("ts_us") >= 5L * dayUs))
@@ -2046,8 +2065,8 @@ class StreamingSpec extends AnyFunSuite {
     val stream = in.toDS()
       .toDF("event_id", "ts_us", "event_type", "user_id", "value")
       .withColumn("ts", timestamp_micros(col("ts_us")))
-    val q = EventStreams.overlapSink(
-        EventStreams.dailyTypeUserStates(stream, K, "1 day"), ledger)
+    val q = ledger.sink(
+        EventStreams.dailyTypeUserStates(stream, K, "1 day"))
       .outputMode("append")
       .option("checkpointLocation",
         Files.createTempDirectory("graft-ck").toString)
@@ -2068,12 +2087,12 @@ class StreamingSpec extends AnyFunSuite {
       assert(cells(("b", "c")).jaccard >= cells(("a", "c")).jaccard,
         s"nested audiences must order the jaccards: $cells")
       // idempotence: replaying an already-folded batchId is a no-op
-      val before = ledger.states
+      val before = ledger.state
       ledger.ingest(
         Seq(("a", new java.sql.Timestamp(0L), Seq(1L, 2L)))
           .toDF("event_type", "day", "state"),
         ledger.lastBatchId)
-      assert(ledger.states == before)
+      assert(ledger.state == before)
       // eviction = the trailing-window matrix, exact for survivors
       ledger.evictBefore(5L)
       assert(ledger.overlaps() ==
