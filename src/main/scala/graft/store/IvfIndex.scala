@@ -191,8 +191,8 @@ object IvfIndex {
       : Option[DataFrame] = {
     import org.apache.hadoop.fs.Path
     val p = new Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+    if (Commit.fs(spark, path).exists(p)) Some(spark.read.parquet(p.toString))
+    else None
   }
 
   /** Anti-join the tombstone set out of a candidate frame. Broadcast:
@@ -215,15 +215,11 @@ object IvfIndex {
     * lands wholly in one task, so the writer emits exactly one file
     * per cell, layout (and therefore partition pruning) unchanged.
     *
-    * The directory swap is rename-aside → rename-in → delete-old, so
-    * the data is ALWAYS present under some name: a crash between the
-    * renames leaves `vectors_old` (healed by the next compact, which
-    * restores it), a crash before the delete leaves both (healed by
-    * dropping the superseded `vectors_old`). Still not ATOMIC for
-    * concurrent readers — production runs schedule it in a maintenance
-    * window or wrap the layout in a manifest/table format. Tombstones
-    * are cleared only AFTER the swap commits; a crash before that
-    * point re-drops the same rows next time (idempotent). Returns
+    * The directory swap is [[Commit.swap]] via `vectors_compacting`
+    * and `vectors_old`, so the data is ALWAYS present under some name
+    * and the next compact heals a crashed one. Tombstones are cleared
+    * only AFTER the swap commits; a crash before that point re-drops
+    * the same rows next time (idempotent). Returns
     * (dataFilesBefore, dataFilesAfter).
     */
   def compact(spark: SparkSession, path: String): (Long, Long) =
@@ -234,7 +230,7 @@ object IvfIndex {
   /** The shared compact core: read `<path>/<dirName>`, anti-join any
     * tombstones (on `idCol`, resolved lazily — only when tombstones
     * exist), fold to one file per cell, and swap the directory in with
-    * the rename-aside discipline documented on [[compact]]. Shared
+    * [[Commit.swap]]. Shared
     * with [[IvfPqIndex.compact]] so the PQ layout can't drift from the
     * float layout's crash-safety story.
     */
@@ -243,58 +239,41 @@ object IvfIndex {
       partCol: String = "cell",
       clearTombstones: Boolean = true): (Long, Long) = {
     import org.apache.hadoop.fs.Path
-    val dir = s"$path/$dirName"
+    val dir = new Path(s"$path/$dirName")
     val tmp = s"$path/${dirName}_compacting"
-    val old = s"$path/${dirName}_old"
-    val fs = new Path(dir).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    // Heal a crashed predecessor before measuring anything.
-    if (!fs.exists(new Path(dir)) && fs.exists(new Path(old)))
-      require(fs.rename(new Path(old), new Path(dir)),
-        s"heal failed: could not restore $old to $dir")
-    if (fs.exists(new Path(old))) fs.delete(new Path(old), true)
-    if (fs.exists(new Path(tmp))) fs.delete(new Path(tmp), true)
-    def countFiles(p: String): Long = {
-      val it = fs.listFiles(new Path(p), true)
-      var n = 0L
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+    val fs = Commit.fs(spark, path)
+    val before = Commit.swap(fs, dir, new Path(tmp),
+        new Path(s"$path/${dirName}_old")) {
+      val before = Commit.parquetFiles(fs, dir).size.toLong
+      val src0 = spark.read.parquet(dir.toString)
+      // Unreferenced cells are DEAD by invariant: a cell directory whose
+      // id the seeds table does not list is a [[splitCell]] leftover (the
+      // superseded source cell, or staged halves from a crashed split
+      // whose seeds flip never landed) — no search face can ever probe
+      // it, so compaction drops it physically. This is what makes
+      // splitCell crash-tolerant without a journal: every crash point
+      // leaves at worst dead extra bytes, reclaimed here.
+      val liveCells = {
+        val p = new Path(s"$path/seeds")
+        if (!fs.exists(p)) None
+        else Some(spark.read.parquet(p.toString)
+          .select(col("cell")).collect().map(_.getLong(0)).toSeq)
       }
-      n
+      val src = liveCells.fold(src0)(cs => src0.filter(col("cell").isin(cs: _*)))
+      tombstones(spark, path).fold(src) { t =>
+        src.join(broadcast(t), src(idCol) === t("id"), "left_anti")
+      }
+        .repartition(col(partCol))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(partCol)
+        .parquet(tmp)
+      before
     }
-    val before = countFiles(dir)
-    val src0 = spark.read.parquet(dir)
-    // Unreferenced cells are DEAD by invariant: a cell directory whose
-    // id the seeds table does not list is a [[splitCell]] leftover (the
-    // superseded source cell, or staged halves from a crashed split
-    // whose seeds flip never landed) — no search face can ever probe
-    // it, so compaction drops it physically. This is what makes
-    // splitCell crash-tolerant without a journal: every crash point
-    // leaves at worst dead extra bytes, reclaimed here.
-    val liveCells = {
-      val p = new Path(s"$path/seeds")
-      if (!fs.exists(p)) None
-      else Some(spark.read.parquet(p.toString)
-        .select(col("cell")).collect().map(_.getLong(0)).toSeq)
-    }
-    val src = liveCells.fold(src0)(cs => src0.filter(col("cell").isin(cs: _*)))
-    tombstones(spark, path).fold(src) { t =>
-      src.join(broadcast(t), src(idCol) === t("id"), "left_anti")
-    }
-      .repartition(col(partCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partCol)
-      .parquet(tmp)
-    require(fs.rename(new Path(dir), new Path(old)),
-      s"compaction swap failed: could not move $dir aside")
-    require(fs.rename(new Path(tmp), new Path(dir)),
-      s"compaction swap failed: could not rename $tmp into $dir")
-    fs.delete(new Path(old), true)
     // A multi-directory layout (TextIndex's postings + postings_pos)
     // compacts its sibling dirs against the SAME tombstone set first
     // and clears it only with the last one.
     if (clearTombstones) fs.delete(new Path(s"$path/tombstones"), true)
-    (before, countFiles(dir))
+    (before, Commit.parquetFiles(fs, dir).size.toLong)
   }
 
   /** Split a HOT cell in place — the incremental rebalance real ANN
@@ -350,9 +329,7 @@ object IvfIndex {
     writeSeeds((kept ++ subRows).toSeq.toDF("cell", "seed_vec"),
       "cell", "seed_vec", path)
     // 3) drop the superseded source cell (best-effort; dead if it stays)
-    val oldDir = new Path(s"$path/vectors/cell=$cell")
-    oldDir.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(oldDir, true)
+    Commit.fs(spark, path).delete(new Path(s"$path/vectors/cell=$cell"), true)
     (nextId, nextId + 1)
   }
 
@@ -370,9 +347,7 @@ object IvfIndex {
   private[store] def nextCellId(spark: SparkSession, path: String,
       cellIds: Array[Long], layout: String = "vectors"): Long = {
     import org.apache.hadoop.fs.Path
-    val fsV = new Path(s"$path/$layout")
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val diskMax = fsV.listStatus(new Path(s"$path/$layout"))
+    val diskMax = Commit.fs(spark, path).listStatus(new Path(s"$path/$layout"))
       .iterator.map(_.getPath.getName)
       .collect { case n if n.startsWith("cell=") => n.drop(5).toLong }
       .foldLeft(Long.MinValue)(math.max)
@@ -427,8 +402,7 @@ object IvfIndex {
     writeSeeds((kept :+ (nextId, mean)).toSeq.toDF("cell", "seed_vec"),
       "cell", "seed_vec", path)
     // 3) drop the retired source cells (best-effort; dead if they stay)
-    val fs = new Path(s"$path/vectors")
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Commit.fs(spark, path)
     Seq(a, b).foreach(c =>
       fs.delete(new Path(s"$path/vectors/cell=$c"), true))
     nextId
@@ -449,8 +423,7 @@ object IvfIndex {
   private def storedIdCol(spark: SparkSession, path: String): String = {
     import org.apache.hadoop.fs.Path
     val p = new Path(s"$path/idcol")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
+    require(Commit.fs(spark, path).exists(p),
       s"$path/idcol missing — tombstone compaction needs the id column " +
         "recorded at build time (rebuild, or write the marker by hand)")
     spark.read.parquet(p.toString).head().getString(0)

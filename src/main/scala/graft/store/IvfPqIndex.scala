@@ -101,8 +101,8 @@ object IvfPqIndex {
 
   /** Fold appended small files back to one per cell and drop
     * tombstoned rows physically — delegates to the shared compact core
-    * ([[IvfIndex.compactLayout]]: cell-keyed repartition, rename-aside
-    * swap, crash-heal), applied to the `codes` directory.
+    * ([[IvfIndex.compactLayout]]: cell-keyed repartition, then
+    * [[Commit.swap]]), applied to the `codes` directory.
     */
   def compact(spark: SparkSession, path: String): (Long, Long) =
     IvfIndex.compactLayout(spark, path, "codes", "id")
@@ -153,8 +153,7 @@ object IvfPqIndex {
       (kept :+ ((nextId, mean))).toSeq.toDF("cell", "seed_vec"),
       "cell", "seed_vec", path)
     // 3) drop the retired source cells (best-effort; dead if they stay)
-    val fs = new Path(s"$path/codes")
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Commit.fs(spark, path)
     Seq(a, b).foreach(c =>
       fs.delete(new Path(s"$path/codes/cell=$c"), true))
     nextId

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -40,14 +40,14 @@ import graft.text.{Bm25, TextFunctions => TF}
   *   - `postings_pos/bucket=<b>/` — OPTIONAL positional tier for
   *     phrase queries, see [[buildPositions]];
   *   - `staging/<token>/` + `batch_markers/<token>` — the streaming
-  *     batch commit protocol, see [[appendBatch]].
+  *     batch commit protocol, see [[Commit]].
   *
   * Maintenance parity with [[IvfIndex]]: [[append]] (delta batches fold
   * into the existing buckets, append ≡ one-shot rebuild bit for bit),
   * [[delete]] (tombstones — invisible immediately, df/n/avgdl corrected
   * so the scores equal a rebuild without the doc), [[compact]] (one
   * file per bucket, tombstoned rows reclaimed physically,
-  * rename-aside→rename-in→delete-old swap).
+  * [[Commit.swap]]).
   *
   * Determinism: [[search]] reproduces [[Bm25.score]] BIT FOR BIT on the
   * candidate set — per-term score parts are identical IEEE expressions
@@ -70,10 +70,6 @@ object TextIndex {
       .map(b => f"${b & 0xff}%02x").mkString
     java.lang.Long.parseLong(hex, 16)
   }
-
-  private[store] def fsOf(spark: SparkSession, path: String)
-      : org.apache.hadoop.fs.FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** One corpus scan → bucketed postings + doc lengths + corpus stats.
     * Tokenization is [[TF.tokens]] (the corpus contract); re-building
@@ -160,97 +156,6 @@ object TextIndex {
       .write.mode(mode).parquet(s"$path/stats")
   }
 
-  // --------------------------------------------------------------------
-  // Streaming batch commit protocol (stage → STAGED marker → publish by
-  // per-file rename → batch marker → clean), shared by [[appendBatch]]
-  // and [[deleteBatch]]. foreachBatch re-delivers a failed batch with
-  // the SAME batchId, so every crash point replays safely:
-  //   - no STAGED marker  → the main layout is untouched; wipe the
-  //     partial staging dir and redo the whole batch;
-  //   - STAGED, no batch marker → the staged files are final; RESUME
-  //     the publish (a file is either still in staging or already at
-  //     its destination — dest names are deterministic, so the move is
-  //     idempotent) without recomputing anything;
-  //   - batch marker present → fully published; drop any staging
-  //     leftovers and skip wholesale (the ProfileLedger discipline).
-  // This closes the replay double-count hole a bare append has: a crash
-  // BETWEEN the postings append and the doclens write would otherwise
-  // make the replay's anti-join re-append those postings (df counted
-  // twice — permanently wrong scores).
-  // --------------------------------------------------------------------
-
-  private[store] def marker(path: String, token: String): Path =
-    new Path(s"$path/batch_markers/$token")
-
-  private[store] def touch(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit = {
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  // --------------------------------------------------------------------
-  // Bounded marker growth (r22; the r19/r20 robustness ask): markers
-  // are one empty file per batch FOREVER without retention — a
-  // year-long stream lists millions of them on every skip check. Old
-  // markers fold into a HIGH-WATER file `_hwm_<prefix>_<N>` meaning
-  // "every <prefix> batch with id ≤ N is done": a batch is skipped when
-  // its own marker exists OR its id is under the high water. Crash-safe
-  // by file NAMING, no content read: the new high-water file is created
-  // BEFORE any marker or older high-water file is deleted, and the
-  // reader takes the MAX across surviving `_hwm` files — at no crash
-  // point can a processed batch read as unprocessed (the only replay
-  // hazard). Structured streaming replays only the last uncommitted
-  // batch ids, so a 4096-batch window is far beyond any real replay
-  // horizon; pruning runs every 256th batch so the steady-state dir
-  // holds ≤ ~4.3k files per prefix instead of one per batch ever.
-  // --------------------------------------------------------------------
-
-  private[graft] val MarkerRetention = 4096L
-  private[graft] val MarkerPruneEvery = 256L
-
-  /** Max N across `_hwm_<prefix>_<N>` files; -1 when none. */
-  private[graft] def markerHighWater(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, prefix: String): Long = {
-    val dir = new Path(s"$path/batch_markers")
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(_.startsWith(s"_hwm_${prefix}_"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(s"_hwm_${prefix}_").toLong).toOption)
-      .foldLeft(-1L)(math.max)
-  }
-
-  /** The skip check: marker file present, or id under the high water. */
-  private[graft] def batchDone(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, prefix: String, batchId: Long): Boolean =
-    fs.exists(marker(path, s"$prefix$batchId")) ||
-      batchId <= markerHighWater(fs, path, prefix)
-
-  /** Advance the high water to `batchId - MarkerRetention` and drop the
-    * markers it covers — called AFTER this batch's marker is down, on
-    * the `MarkerPruneEvery` cadence. Deletion order (new `_hwm` first)
-    * is the crash-safety argument above.
-    */
-  private[graft] def pruneMarkers(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, prefix: String, batchId: Long): Unit = {
-    if (batchId <= 0 || batchId % MarkerPruneEvery != 0L) return
-    val hw = batchId - MarkerRetention
-    if (hw < 0 || hw <= markerHighWater(fs, path, prefix)) return
-    touch(fs, marker(path, s"_hwm_${prefix}_$hw"))
-    val dir = new Path(s"$path/batch_markers")
-    fs.listStatus(dir).foreach { st =>
-      val n = st.getPath.getName
-      val covered =
-        if (n.startsWith(s"_hwm_${prefix}_"))
-          scala.util.Try(n.stripPrefix(s"_hwm_${prefix}_").toLong)
-            .toOption.exists(_ < hw)
-        else if (n.startsWith(prefix) && !n.startsWith("_"))
-          scala.util.Try(n.stripPrefix(prefix).toLong)
-            .toOption.exists(_ <= hw)
-        else false
-      if (covered) fs.delete(st.getPath, false)
-    }
-  }
-
   /** Move every staged `.parquet` file to its mirrored location under
     * `path`, prefixing the deterministic `<token>-` so a resumed
     * publish recognizes already-moved files (dest exists → drop the
@@ -273,22 +178,13 @@ object TextIndex {
     * already exclude the docs, a wrong-scores state only the NEXT
     * compact would heal.
     */
-  private[store] def publishStaged(spark: SparkSession, path: String,
+  private def publishStaged(fs: FileSystem, path: String,
       token: String): Unit = {
-    val fs = fsOf(spark, path)
     val stg = new Path(s"$path/staging/$token")
     // listFiles returns fully-QUALIFIED paths (scheme + authority);
     // qualify the prefix the same way or the strip silently no-ops.
     val stgQ = fs.makeQualified(stg).toString
-    val files = {
-      val it = fs.listFiles(stg, true)
-      val b = Vector.newBuilder[Path]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.endsWith(".parquet")) b += f
-      }
-      b.result()
-    }.sortBy { f =>
+    val files = Commit.parquetFiles(fs, stg).sortBy { f =>
       val q = fs.makeQualified(f).toString
       (if (q.contains("/tombstone_stats/")) 0 else 1, q)
     }
@@ -305,12 +201,31 @@ object TextIndex {
     }
   }
 
+  /** The staged half of the batch commit ([[Commit]]'s protocol): run
+    * `stage` into `staging/<token>/` unless a STAGED marker says an
+    * earlier attempt finished it (a partial stage is wiped and redone),
+    * then publish. `stage` returns false when the batch has nothing to
+    * write, and nothing is published then.
+    */
+  private def stageAndPublish(fs: FileSystem, path: String, token: String)(
+      stage: Path => Boolean): Unit = {
+    val stg = new Path(s"$path/staging/$token")
+    val staged = new Path(stg, "STAGED")
+    val ready = fs.exists(staged) || {
+      if (fs.exists(stg)) fs.delete(stg, true) // partial stage: redo
+      val wrote = stage(stg)
+      if (wrote) Commit.touch(fs, staged)
+      wrote
+    }
+    if (ready) publishStaged(fs, path, token)
+  }
+
   /** Micro-batch ingest step — [[graft.streaming.EventStreams
     * .textIndexSink]]'s body, REPLAY-IDEMPOTENT at two levels: the
     * batchId marker skips a fully-processed batch wholesale, and the
-    * staged commit (protocol above) makes a PARTIALLY-written batch
-    * replayable — the main layout only ever changes by publishing a
-    * complete staged set. Cross-batch duplicate docs are additionally
+    * staged commit (protocol in [[Commit]]) makes a PARTIALLY-written
+    * batch replayable — the main layout only ever changes by publishing
+    * a complete staged set. Cross-batch duplicate docs are additionally
     * anti-joined against `doclens` (a document already indexed is
     * skipped), the ingest contract every store face here shares. The
     * first batch creates the index with meta written LAST, so a crash
@@ -339,12 +254,7 @@ object TextIndex {
       withPositions: Boolean = false): Unit = {
     val spark = batch0.sparkSession
     val token = s"a$batchId"
-    val fs = fsOf(spark, path)
-    val stg = new Path(s"$path/staging/$token")
-    if (batchDone(fs, path, "a", batchId)) {
-      if (fs.exists(stg)) fs.delete(stg, true)
-      return
-    }
+    val fs = Commit.fs(spark, path)
     // WITHIN-batch duplicate-doc guard (r21; the r19/r20 verdicts' top
     // ask): real streams deliver the same doc twice in one trigger
     // routinely (a doc updated twice before the micro-batch closed),
@@ -364,63 +274,56 @@ object TextIndex {
     // tiers and the keeper's determinism.
     val batch = batch0.select(col(idCol), col(textCol))
       .groupBy(col(idCol)).agg(max(col(textCol)).as(textCol))
-    if (!fs.exists(new Path(s"$path/meta"))) {
-      // Empty first batch: no index (ADVICE r17 — n = 0 poisons avgdl).
-      // meta lands LAST: a crash before it replays as a full rebuild
-      // (all Overwrite writes); a crash after it replays through the
-      // incremental branch, whose doclens anti-join comes up empty —
-      // by then BOTH tiers are already complete.
-      if (batch.head(1).nonEmpty) {
-        require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-        writeParts(batch, idCol, textCol, path, nBuckets, SaveMode.Overwrite)
+    Commit.once(fs, path, "a", batchId) {
+      if (!fs.exists(new Path(s"$path/meta"))) {
+        // Empty first batch: no index (ADVICE r17 — n = 0 poisons avgdl).
+        // meta lands LAST: a crash before it replays as a full rebuild
+        // (all Overwrite writes); a crash after it replays through the
+        // incremental branch, whose doclens anti-join comes up empty —
+        // by then BOTH tiers are already complete.
+        if (batch.head(1).nonEmpty) {
+          require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
+          writeParts(batch, idCol, textCol, path, nBuckets, SaveMode.Overwrite)
+          if (withPositions)
+            writePositions(batch, idCol, textCol, path, nBuckets,
+              SaveMode.Overwrite)
+          import spark.implicits._
+          Seq(nBuckets).toDF("n_buckets").coalesce(1)
+            .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
+        }
+      } else stageAndPublish(fs, path, token) { stg =>
+        // Enabling positions MID-stream on an index whose tier doesn't
+        // exist would create a tier holding only the batches from here
+        // on — phraseSearch would silently under-report. Positions
+        // cannot be derived after the fact, so fail loud instead: the
+        // tier must exist from the first batch (this branch is
+        // unreachable for batch 0 — no meta yet — which CREATES the
+        // tier above).
         if (withPositions)
-          writePositions(batch, idCol, textCol, path, nBuckets,
+          require(fs.exists(new Path(s"$path/postings_pos")),
+            s"no positional tier at $path — withPositions must be set " +
+              "from the FIRST batch (or buildPositions over the full " +
+              "corpus before streaming into it)")
+        val seen = spark.read.parquet(s"$path/doclens")
+          .select(col("doc_id"))
+        // checkpoint: writeParts consumes `fresh` three times (the
+        // multi-consumer rule), and the anti-join must be evaluated once.
+        val fresh = batch.join(broadcast(batch.select(col(idCol)).distinct()
+            .join(seen, batch(idCol) === seen("doc_id"), "left_anti")),
+          Seq(idCol))
+          .localCheckpoint()
+        if (fresh.head(1).isEmpty) false
+        else {
+          writeParts(fresh, idCol, textCol, stg.toString, nBuckets,
             SaveMode.Overwrite)
-        import spark.implicits._
-        Seq(nBuckets).toDF("n_buckets").coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
+          if (withPositions)
+            writePositions(fresh, idCol, textCol, stg.toString, nBuckets,
+              SaveMode.Overwrite)
+          true
+        }
       }
-      touch(fs, marker(path, token))
-      return
     }
-    val staged = new Path(s"$path/staging/$token/STAGED")
-    if (!fs.exists(staged)) {
-      if (fs.exists(stg)) fs.delete(stg, true) // partial stage: redo
-      // Enabling positions MID-stream on an index whose tier doesn't
-      // exist would create a tier holding only the batches from here
-      // on — phraseSearch would silently under-report. Positions
-      // cannot be derived after the fact, so fail loud instead: the
-      // tier must exist from the first batch (this branch is
-      // unreachable for batch 0 — no meta yet — which CREATES the
-      // tier above).
-      if (withPositions)
-        require(fs.exists(new Path(s"$path/postings_pos")),
-          s"no positional tier at $path — withPositions must be set " +
-            "from the FIRST batch (or buildPositions over the full " +
-            "corpus before streaming into it)")
-      val seen = spark.read.parquet(s"$path/doclens")
-        .select(col("doc_id"))
-      // checkpoint: writeParts consumes `fresh` three times (the
-      // multi-consumer rule), and the anti-join must be evaluated once.
-      val fresh = batch.join(broadcast(batch.select(col(idCol)).distinct()
-          .join(seen, batch(idCol) === seen("doc_id"), "left_anti")),
-        Seq(idCol))
-        .localCheckpoint()
-      if (fresh.head(1).isEmpty) {
-        touch(fs, marker(path, token))
-        return
-      }
-      writeParts(fresh, idCol, textCol, stg.toString, nBuckets,
-        SaveMode.Overwrite)
-      if (withPositions)
-        writePositions(fresh, idCol, textCol, stg.toString, nBuckets,
-          SaveMode.Overwrite)
-      touch(fs, staged)
-    }
-    publishStaged(spark, path, token)
-    touch(fs, marker(path, token))
-    pruneMarkers(fs, path, "a", batchId)
-    fs.delete(stg, true)
+    fs.delete(new Path(s"$path/staging/$token"), true)
   }
 
   /** Per-document DELETE as a tombstone write ([[IvfIndex.delete]]'s
@@ -482,46 +385,35 @@ object TextIndex {
     val spark = idsBatch.sparkSession
     import spark.implicits._
     val token = s"d$batchId"
-    val fs = fsOf(spark, path)
-    val stg = new Path(s"$path/staging/$token")
-    if (batchDone(fs, path, "d", batchId)) {
-      if (fs.exists(stg)) fs.delete(stg, true)
-      return
+    val fs = Commit.fs(spark, path)
+    Commit.once(fs, path, "d", batchId) {
+      // without meta there is no index, so nothing to delete from
+      if (fs.exists(new Path(s"$path/meta")))
+        stageAndPublish(fs, path, token) { stg =>
+          val fresh0 = idsBatch.select(col(idCol).cast("long").as("id"))
+            .distinct()
+          val fresh = IvfIndex.tombstones(spark, path)
+            .fold(fresh0)(t => fresh0.join(broadcast(t.select(col("id"))),
+              Seq("id"), "left_anti"))
+            .localCheckpoint() // consumed twice below (the correction + write)
+          if (fresh.head(1).isEmpty) false
+          else {
+            val doclens = spark.read.parquet(s"$path/doclens")
+            val c = doclens
+              .join(broadcast(fresh), doclens("doc_id") === fresh("id"))
+              .agg(count(lit(1)).as("n"),
+                coalesce(sum(col("dl")), lit(0L)).as("s"))
+              .head()
+            fresh.coalesce(1).write.mode(SaveMode.Overwrite)
+              .parquet(s"$stg/tombstones")
+            Seq((c.getLong(0), c.getAs[Long]("s")))
+              .toDF("n_docs", "sum_dl").coalesce(1)
+              .write.mode(SaveMode.Overwrite).parquet(s"$stg/tombstone_stats")
+            true
+          }
+        }
     }
-    if (!fs.exists(new Path(s"$path/meta"))) { // nothing to delete from
-      touch(fs, marker(path, token))
-      return
-    }
-    val staged = new Path(s"$path/staging/$token/STAGED")
-    if (!fs.exists(staged)) {
-      if (fs.exists(stg)) fs.delete(stg, true) // partial stage: redo
-      val fresh0 = idsBatch.select(col(idCol).cast("long").as("id"))
-        .distinct()
-      val fresh = IvfIndex.tombstones(spark, path)
-        .fold(fresh0)(t => fresh0.join(broadcast(t.select(col("id"))),
-          Seq("id"), "left_anti"))
-        .localCheckpoint() // consumed twice below (the correction + write)
-      if (fresh.head(1).isEmpty) {
-        touch(fs, marker(path, token))
-        return
-      }
-      val doclens = spark.read.parquet(s"$path/doclens")
-      val c = doclens
-        .join(broadcast(fresh), doclens("doc_id") === fresh("id"))
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(col("dl")), lit(0L)).as("s"))
-        .head()
-      fresh.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$stg/tombstones")
-      Seq((c.getLong(0), c.getAs[Long]("s")))
-        .toDF("n_docs", "sum_dl").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$stg/tombstone_stats")
-      touch(fs, staged)
-    }
-    publishStaged(spark, path, token)
-    touch(fs, marker(path, token))
-    pruneMarkers(fs, path, "d", batchId)
-    fs.delete(stg, true)
+    fs.delete(new Path(s"$path/staging/$token"), true)
   }
 
   /** Fold appended small files back to one per bucket and drop
@@ -534,12 +426,13 @@ object TextIndex {
     * and (3) leaves stats stale-HIGH with the tombstones intact, the
     * documented lag, healed because this refresh is UNCONDITIONAL on
     * every compact — then (4) reclaim the posting layout (which clears
-    * the tombstones last). At every intermediate point [[liveStats]]
-    * is exact or loudly absent, never silently double-subtracted.
+    * the tombstones last). At every intermediate point the live stats
+    * ([[metaAndLiveStats]]) are exact or loudly absent, never silently
+    * double-subtracted.
     */
   def compact(spark: SparkSession, path: String): (Long, Long) = {
     import spark.implicits._
-    val fs = fsOf(spark, path)
+    val fs = Commit.fs(spark, path)
     val dead = IvfIndex.tombstones(spark, path)
       .map(_.select(col("id")).distinct().localCheckpoint())
     // (1) purge doclens of reclaimed docs while the tombstones that
@@ -568,21 +461,12 @@ object TextIndex {
     // schema", so every reclamation step skips a fileless dir: there
     // is nothing in it to reclaim, and the next append re-populates
     // it with readable files.
-    def hasParquet(dir: String): Boolean = {
-      val d = new Path(dir)
-      if (!fs.exists(d)) return false
-      val it = fs.listFiles(d, true)
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) return true
-      }
-      false
-    }
     // (3b) the POSITIONAL tier reclaims its tombstoned rows BEFORE the
     // posting compaction clears the tombstone set — positions cannot
     // be rebuilt from postings (unlike the impact tier, the
     // corpus-side ordering lives only here), so this tier compacts
     // against the same tombstones instead of rebuilding.
-    if (hasParquet(s"$path/postings_pos"))
+    if (Commit.parquetFiles(fs, new Path(s"$path/postings_pos")).nonEmpty)
       IvfIndex.compactLayout(spark, path, "postings_pos", "doc_id",
         partCol = "bucket", clearTombstones = false)
     // (3c) the IMPACT tier reclaims against the same tombstones too,
@@ -594,7 +478,7 @@ object TextIndex {
     // this step the tier never holds a dead doc at ANY crash point;
     // its df_full stays the snapshot's until (5) refreshes it, the
     // already-documented freshness lag.
-    if (hasParquet(s"$path/postings_top"))
+    if (Commit.parquetFiles(fs, new Path(s"$path/postings_top")).nonEmpty)
       IvfIndex.compactLayout(spark, path, "postings_top", "doc_id",
         partCol = "bucket", clearTombstones = false)
     // (4) physical reclamation; clears tombstones/ as its last step —
@@ -602,7 +486,7 @@ object TextIndex {
     // idempotent re-compact of an emptied index must not try to read
     // schema off _SUCCESS droppings).
     val counts =
-      if (hasParquet(s"$path/postings"))
+      if (Commit.parquetFiles(fs, new Path(s"$path/postings")).nonEmpty)
         IvfIndex.compactLayout(spark, path, "postings", "doc_id",
           partCol = "bucket")
       else {
@@ -621,8 +505,7 @@ object TextIndex {
     // with a stale tier left behind).
     val topMeta = new Path(s"$path/top_meta")
     if (fs.exists(topMeta)) {
-      val live = liveStats(spark, path)
-      if (live._1 <= 0L) {
+      if (metaAndLiveStats(spark, path)._2 <= 0L) {
         fs.delete(new Path(s"$path/postings_top"), true)
         fs.delete(topMeta, true)
       } else {
@@ -648,7 +531,7 @@ object TextIndex {
     */
   private[graft] def metaAndLiveStats(spark: SparkSession, path: String)
       : (Int, Long, Long) = {
-    val fs = fsOf(spark, path)
+    val fs = Commit.fs(spark, path)
     val ts = s"$path/tombstone_stats"
     val paths = Seq(s"$path/meta", s"$path/stats") ++
       (if (fs.exists(new Path(ts))) Seq(ts) else Nil)
@@ -662,26 +545,6 @@ object TextIndex {
         coalesce(sum(sign * col("sum_dl")), lit(0L)))
       .head()
     (r.getInt(0), r.getLong(1), r.getLong(2))
-  }
-
-  /** The summed live-stats pair after tombstone corrections — `stats`
-    * is append-only delta rows (build/compact collapse it back to
-    * one), so the read is a sum either way.
-    */
-  private[store] def liveStats(spark: SparkSession, path: String): (Long, Long) = {
-    val st = spark.read.parquet(s"$path/stats")
-      .agg(coalesce(sum(col("n_docs")), lit(0L)),
-        coalesce(sum(col("sum_dl")), lit(0L))).head()
-    val (n0, s0) = (st.getLong(0), st.getLong(1))
-    val p = new Path(s"$path/tombstone_stats")
-    val fs = fsOf(spark, path)
-    if (!fs.exists(p)) (n0, s0)
-    else {
-      val c = spark.read.parquet(p.toString)
-        .agg(coalesce(sum(col("n_docs")), lit(0L)),
-          coalesce(sum(col("sum_dl")), lit(0L))).head()
-      (n0 - c.getLong(0), s0 - c.getLong(1))
-    }
   }
 
   /** The empty result frame — [[search]]'s shape when the index holds
@@ -1143,7 +1006,7 @@ object TextIndex {
       phrase: Seq[String], gateMaxDf: Long = 8000000L): DataFrame = {
     import spark.implicits._
     require(phrase.nonEmpty, "empty phrase")
-    val fs = fsOf(spark, path)
+    val fs = Commit.fs(spark, path)
     require(fs.exists(new Path(s"$path/postings_pos")),
       s"no positional tier at $path — buildPositions first")
     val terms = phrase.distinct

@@ -201,37 +201,32 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
 
   /** Compact an index: fold the append-accumulated small files and
     * drop tombstoned documents PHYSICALLY, clearing the tombstones —
-    * [[IvfIndex.compact]]'s crash-safety story on the store layout.
-    * The swap is rename-aside → rename-in → delete-old, so the data is
-    * always present under some name: a crash between the renames
-    * leaves `.old-<index>` (healed by the next compact, which restores
-    * it); a crash before the delete leaves both (healed by dropping
-    * the superseded copy). Tombstones vanish WITH the swap — the
-    * compacted directory is written without them — so a crash before
-    * the swap re-drops the same rows next time (idempotent). Returns
-    * (dataFilesBefore, dataFilesAfter).
+    * [[IvfIndex.compact]]'s crash-safety story on the store layout:
+    * the directory swap is [[Commit.swap]] via `.compacting-<index>`
+    * and `.old-<index>`, so the data is always present under some name
+    * and the next compact heals a crashed one. Tombstones vanish WITH
+    * the swap — the compacted directory is written without them — so a
+    * crash before the swap re-drops the same rows next time
+    * (idempotent). Returns (dataFilesBefore, dataFilesAfter).
     */
   def compactIndex(index: String, targetFiles: Int = 1): (Long, Long) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val d = dir(index)
     val tmp = Paths.get(root, s".compacting-$index")
-    val old = Paths.get(root, s".old-$index")
-    // Heal a crashed predecessor before measuring anything.
-    if (!Files.isDirectory(d) && Files.isDirectory(old))
-      Files.move(old, d)
-    if (Files.isDirectory(old)) rm(old)
-    if (Files.isDirectory(tmp)) rm(tmp)
-    require(exists(index), s"no such index: $index")
+    def hadoop(p: Path) = new org.apache.hadoop.fs.Path(p.toString)
+    // top level only: the `_tombstones/` files are not data files
     def countFiles(p: Path): Long =
       Files.list(p).iterator().asScala
         .count(_.getFileName.toString.endsWith(".parquet"))
-    val before = countFiles(d)
-    read(index) // tombstone anti-join applied here
-      .coalesce(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    Files.move(d, old)   // rename-aside (tombstones ride along, out)
-    Files.move(tmp, d)   // rename-in: clean data, no tombstone dir
-    rm(old)              // delete-old commits the swap
+    val before = Commit.swap(Commit.fs(spark, root), hadoop(d), hadoop(tmp),
+        hadoop(Paths.get(root, s".old-$index"))) {
+      require(exists(index), s"no such index: $index")
+      val before = countFiles(d)
+      read(index) // tombstone anti-join applied here
+        .coalesce(targetFiles)
+        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      before
+    }
     (before, countFiles(d))
   }
 

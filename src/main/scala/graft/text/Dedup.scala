@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.store.Commit
 import graft.text.{TextFunctions => TF}
 
 /** Corpus deduplication that actually DROPS rows (the d04/d06 queries
@@ -658,8 +659,7 @@ object Dedup {
     * `<path>/labels` and each delta pair batch folds in through the
     * quotient identity, so per batch the cost is |labels| + |delta|
     * edges through the O(log n) star contraction and the pair history
-    * is never stored or replayed. Replay-idempotent at two levels,
-    * the [[graft.store.TextIndex.appendBatch]] discipline:
+    * is never stored or replayed. Replay-idempotent at two levels:
     *   - a `batch_markers/<id>` marker skips a fully-processed batch
     *     wholesale (foreachBatch is at-least-once);
     *   - WITHOUT the marker a replay is STILL exact, because the fold
@@ -669,10 +669,11 @@ object Dedup {
     *     included) — so the marker is a work-skip, not a correctness
     *     crutch, and no crash point between the label swap and the
     *     marker can corrupt the store.
-    * The swap is write-aside → rename-aside → rename-in → delete-old
-    * ([[graft.store.IvfIndex.compactLayout]]'s discipline): the label
-    * frame is always present under some name, and a crash between the
-    * renames is healed at the next entry by restoring `labels_old`.
+    * The marker is [[graft.store.Commit.once]]'s. The fold lands by
+    * [[graft.store.Commit.swap]] via `labels_next` and `labels_old`:
+    * the label frame is always present under some name, and a crash
+    * between the renames is healed by the next non-empty batch or by
+    * [[labelStore]].
     * An empty FIRST batch creates nothing (no store of zero labels);
     * an empty later batch just lands its marker. StreamingSpec pins
     * stream labels ≡ batch [[dupComponents]] over the concatenated
@@ -683,57 +684,38 @@ object Dedup {
     * the renames; [[labelStore]] heals by restoring the aside copy,
     * which would then fail the writer's rename-in loudly, never
     * silently) — production readers snapshot the labels dir or read
-    * between batches, the [[graft.store.IvfIndex.compact]] caveat.
+    * between batches, the [[graft.store.Commit.swap]] caveat.
     */
   def labelStoreBatch(deltaPairs: DataFrame, path: String, batchId: Long,
       maxIter: Int = 50, checkpointDir: Option[String] = None): Unit = {
     import org.apache.hadoop.fs.Path
     val spark = deltaPairs.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val marker = new Path(s"$path/batch_markers/l$batchId")
-    // Marker growth is bounded by the shared high-water retention
-    // ([[graft.store.TextIndex.pruneMarkers]], r22): skip covers both
-    // an existing marker and an id under the pruned window's water line.
-    if (graft.store.TextIndex.batchDone(fs, path, "l", batchId)) return
+    val fs = Commit.fs(spark, path)
     val labelsP = new Path(s"$path/labels")
-    val oldP = new Path(s"$path/labels_old")
     val tmpP = new Path(s"$path/labels_next")
-    // Heal a crashed predecessor's half-done swap before anything else.
-    if (!fs.exists(labelsP) && fs.exists(oldP))
-      require(fs.rename(oldP, labelsP),
-        s"heal failed: could not restore $oldP to $labelsP")
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (fs.exists(tmpP)) fs.delete(tmpP, true)
-    val hasStore = fs.exists(labelsP)
-    if (deltaPairs.head(1).isEmpty) {
-      // nothing to fold — and an empty FIRST batch must not create an
-      // empty store (the appendBatch empty-first-batch rule).
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, true).close()
-      return
+    Commit.once(fs, path, "l", batchId) {
+      // nothing to fold on an empty delta — and an empty FIRST batch
+      // must not create an empty store (the appendBatch empty-first-batch
+      // rule).
+      if (deltaPairs.head(1).nonEmpty)
+        Commit.swap(fs, labelsP, tmpP, new Path(s"$path/labels_old")) {
+          val next =
+            if (!fs.exists(labelsP))
+              dupComponentsStar(deltaPairs, maxIter, checkpointDir)
+            else dupComponentsIncremental(
+              spark.read.parquet(labelsP.toString), deltaPairs, maxIter,
+              checkpointDir)
+          // `next` is checkpointed by the contraction, so this write reads
+          // materialized blocks, never the `labels` dir being swapped out.
+          next.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(tmpP.toString)
+        }
     }
-    val next =
-      if (!hasStore) dupComponentsStar(deltaPairs, maxIter, checkpointDir)
-      else dupComponentsIncremental(spark.read.parquet(labelsP.toString),
-        deltaPairs, maxIter, checkpointDir)
-    // `next` is checkpointed by the contraction, so this write reads
-    // materialized blocks, never the `labels` dir being swapped out.
-    next.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(tmpP.toString)
-    if (fs.exists(labelsP))
-      require(fs.rename(labelsP, oldP),
-        s"label swap failed: could not move $labelsP aside")
-    require(fs.rename(tmpP, labelsP),
-      s"label swap failed: could not rename $tmpP into $labelsP")
-    fs.delete(oldP, true)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-    graft.store.TextIndex.pruneMarkers(fs, path, "l", batchId)
   }
 
   /** The current label frame of a [[labelStoreBatch]] store — (id,
     * component), healing a crashed swap if one is pending (the same
-    * restore [[labelStoreBatch]] runs at entry, so a reader after a
+    * restore [[labelStoreBatch]]'s swap runs first, so a reader after a
     * crash sees the last committed labeling, never nothing). A path
     * where every batch so far was empty has no `labels` dir (the
     * empty-first-batch rule above) — that reads as the empty labeling,
@@ -743,12 +725,9 @@ object Dedup {
   def labelStore(spark: org.apache.spark.sql.SparkSession, path: String)
       : DataFrame = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Commit.fs(spark, path)
     val labelsP = new Path(s"$path/labels")
-    val oldP = new Path(s"$path/labels_old")
-    if (!fs.exists(labelsP) && fs.exists(oldP))
-      require(fs.rename(oldP, labelsP),
-        s"heal failed: could not restore $oldP to $labelsP")
+    Commit.heal(fs, labelsP, new Path(s"$path/labels_old"))
     if (!fs.exists(labelsP)) {
       import spark.implicits._
       return Seq.empty[(Long, Long)].toDF("id", "component")

@@ -98,7 +98,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.build(docs.filter(col("doc_id") < 200), "doc_id", "text",
       pRef, nBuckets = 16)
     val p = Files.createTempDirectory("graft-ti-crash").toString
-    val fs = TextIndex.fsOf(spark, p)
+    val fs = Commit.fs(spark, p)
     // batch 0 creates the index (build is Overwrite — replay-safe).
     TextIndex.appendBatch(docs.filter(col("doc_id") < 100),
       "doc_id", "text", p, 16, batchId = 0L)
@@ -115,14 +115,14 @@ class TextIndexSpec extends AnyFunSuite {
     val b2 = docs.filter(col("doc_id") >= 150 && col("doc_id") < 180)
     TextIndex.writeParts(b2, "doc_id", "text", s"$p/staging/a2", 16,
       SaveMode.Overwrite)
-    TextIndex.touch(fs, new Path(s"$p/staging/a2/STAGED"))
+    Commit.touch(fs, new Path(s"$p/staging/a2/STAGED"))
     TextIndex.appendBatch(b2, "doc_id", "text", p, 16, batchId = 2L)
     // batch 3 — crash MID-publish: one staged file already moved; the
     // resumed publish must move the rest and not re-move (or lose) it.
     val b3 = docs.filter(col("doc_id") >= 180 && col("doc_id") < 200)
     val stg3 = s"$p/staging/a3"
     TextIndex.writeParts(b3, "doc_id", "text", stg3, 16, SaveMode.Overwrite)
-    TextIndex.touch(fs, new Path(s"$stg3/STAGED"))
+    Commit.touch(fs, new Path(s"$stg3/STAGED"))
     val it = fs.listFiles(new Path(stg3), true)
     var moved = false
     while (it.hasNext && !moved) {
@@ -229,32 +229,49 @@ class TextIndexSpec extends AnyFunSuite {
     // delete), and the skip rule (marker OR id ≤ high water) must hold
     // at every point.
     val p = Files.createTempDirectory("graft-ti-markers").toString
-    val fs = TextIndex.fsOf(spark, p)
+    val fs = Commit.fs(spark, p)
     (4340L to 4352L).foreach(i =>
-      TextIndex.touch(fs, TextIndex.marker(p, s"a$i")))
-    TextIndex.touch(fs, TextIndex.marker(p, "a10"))
-    TextIndex.touch(fs, TextIndex.marker(p, "d10")) // other prefix
-    TextIndex.pruneMarkers(fs, p, "a", 4351L) // off-cadence: no-op
-    assert(fs.exists(TextIndex.marker(p, "a10")))
-    TextIndex.pruneMarkers(fs, p, "a", 4352L) // 17·256 → high water 256
-    assert(!fs.exists(TextIndex.marker(p, "a10")),
+      Commit.touch(fs, Commit.marker(p, s"a$i")))
+    Commit.touch(fs, Commit.marker(p, "a10"))
+    Commit.touch(fs, Commit.marker(p, "d10")) // other prefix
+    Commit.pruneMarkers(fs, p, "a", 4351L) // off-cadence: no-op
+    assert(fs.exists(Commit.marker(p, "a10")))
+    Commit.pruneMarkers(fs, p, "a", 4352L) // 17·256 → high water 256
+    assert(!fs.exists(Commit.marker(p, "a10")),
       "a marker under the water line must be pruned")
-    assert(fs.exists(TextIndex.marker(p, "d10")),
+    assert(fs.exists(Commit.marker(p, "d10")),
       "pruning one prefix must not touch another's markers")
-    assert(TextIndex.batchDone(fs, p, "a", 10L),
+    assert(Commit.batchDone(fs, p, "a", 10L),
       "a pruned batch must still read as done (the replay hazard)")
-    assert(TextIndex.batchDone(fs, p, "a", 4350L), "marker still present")
-    assert(!TextIndex.batchDone(fs, p, "a", 257L),
+    assert(Commit.batchDone(fs, p, "a", 4350L), "marker still present")
+    assert(!Commit.batchDone(fs, p, "a", 257L),
       "an unprocessed id above the water line must not read done")
     // advancing the water replaces the old hwm file and prunes more.
-    TextIndex.pruneMarkers(fs, p, "a", 8448L) // high water 4352
-    assert(!fs.exists(TextIndex.marker(p, "a4350")))
-    assert(TextIndex.batchDone(fs, p, "a", 4350L))
-    assert(TextIndex.batchDone(fs, p, "a", 10L))
+    Commit.pruneMarkers(fs, p, "a", 8448L) // high water 4352
+    assert(!fs.exists(Commit.marker(p, "a4350")))
+    assert(Commit.batchDone(fs, p, "a", 4350L))
+    assert(Commit.batchDone(fs, p, "a", 10L))
     val hwms = fs.listStatus(new Path(s"$p/batch_markers"))
       .map(_.getPath.getName).filter(_.startsWith("_hwm_a_")).toSeq
     assert(hwms == Seq("_hwm_a_4352"),
       s"exactly one high-water file must survive, got $hwms")
+  }
+
+  test("a delete batch with no ids still prunes its markers") {
+    // Most batches of a delete stream carry no ids; their markers must
+    // fold into the high water like any other committed batch's.
+    val p = Files.createTempDirectory("graft-ti-emptydel").toString
+    TextIndex.build(Seq((1L, "one two")).toDF("doc_id", "text"),
+      "doc_id", "text", p, nBuckets = 4)
+    val none = Seq.empty[Long].toDF("doc_id")
+    TextIndex.deleteBatch(none, "doc_id", p, batchId = 10L)
+    TextIndex.deleteBatch(none, "doc_id", p, batchId = 4352L)
+    val fs = Commit.fs(spark, p)
+    assert(fs.exists(Commit.marker(p, "_hwm_d_256")),
+      "the 4352nd batch must advance the high water to 256")
+    assert(!fs.exists(Commit.marker(p, "d10")),
+      "a marker under the water line must be pruned")
+    assert(Commit.batchDone(fs, p, "d", 10L))
   }
 
   test("searchBatch refuses a batch past MaxBatchQueries, loudly") {
@@ -277,7 +294,7 @@ class TextIndexSpec extends AnyFunSuite {
     val dead = searchAll(pStream).take(2).map(_._1)
     val deadDf = dead.toDF("doc_id")
     // crash sim: a partial delete staging dir with no STAGED marker.
-    val fs = TextIndex.fsOf(spark, pStream)
+    val fs = Commit.fs(spark, pStream)
     fs.mkdirs(new Path(s"$pStream/staging/d7"))
     deadDf.write.parquet(s"$pStream/staging/d7/tombstones")
     TextIndex.deleteBatch(deadDf, "doc_id", pStream, batchId = 7L)
@@ -474,10 +491,10 @@ class TextIndexSpec extends AnyFunSuite {
     val p2 = Files.createTempDirectory("graft-ti-emptyfirst").toString
     TextIndex.appendBatch(docs.filter(col("doc_id") < 0), "doc_id",
       "text", p2, 4, batchId = 0L)
-    val fs = TextIndex.fsOf(spark, p2)
+    val fs = Commit.fs(spark, p2)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p2/meta")),
       "an empty first batch must not create the index")
-    assert(fs.exists(TextIndex.marker(p2, "a0")),
+    assert(fs.exists(Commit.marker(p2, "a0")),
       "…but the batch must still be marked processed")
   }
 
@@ -629,7 +646,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.build(docs, "doc_id", "text", pRef, nBuckets = 16)
     TextIndex.buildPositions(docs, "doc_id", "text", pRef)
     val p = Files.createTempDirectory("graft-ti-wp").toString
-    val fs = TextIndex.fsOf(spark, p)
+    val fs = Commit.fs(spark, p)
     // batch 0 creates BOTH tiers; meta lands last, so a crash between
     // them replays as a clean rebuild — simulate by pre-writing the
     // postings half only (no meta) and replaying.
@@ -643,7 +660,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.writeParts(b1, "doc_id", "text", stg1, 16, SaveMode.Overwrite)
     TextIndex.writePositions(b1, "doc_id", "text", stg1, 16,
       SaveMode.Overwrite)
-    TextIndex.touch(fs, new Path(s"$stg1/STAGED"))
+    Commit.touch(fs, new Path(s"$stg1/STAGED"))
     TextIndex.appendBatch(b1, "doc_id", "text", p, 16, batchId = 1L,
       withPositions = true)
     // batch 2 — crash MID-publish with one POSITIONAL file already
@@ -653,7 +670,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.writeParts(b2, "doc_id", "text", stg2, 16, SaveMode.Overwrite)
     TextIndex.writePositions(b2, "doc_id", "text", stg2, 16,
       SaveMode.Overwrite)
-    TextIndex.touch(fs, new Path(s"$stg2/STAGED"))
+    Commit.touch(fs, new Path(s"$stg2/STAGED"))
     val it = fs.listFiles(new Path(s"$stg2/postings_pos"), true)
     var moved = false
     while (it.hasNext && !moved) {
@@ -707,7 +724,7 @@ class TextIndexSpec extends AnyFunSuite {
       partCol = "bucket", clearTombstones = false)
     IvfIndex.compactLayout(spark, p, "postings", "doc_id",
       partCol = "bucket")
-    assert(!TextIndex.fsOf(spark, p)
+    assert(!Commit.fs(spark, p)
       .exists(new org.apache.hadoop.fs.Path(s"$p/tombstones")),
       "fixture: tombstones must be cleared to open the window")
     val got = TextIndex.searchTop(spark, p, query, k = 10)
@@ -732,7 +749,7 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.buildPositions(docs, "doc_id", "text", p)
     TextIndex.delete(spark, p, Seq(1L, 2L, 3L))
     TextIndex.compact(spark, p) // r18 ADVICE: this threw in buildTopTier
-    val fs = TextIndex.fsOf(spark, p)
+    val fs = Commit.fs(spark, p)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/postings_top")) &&
       !fs.exists(new org.apache.hadoop.fs.Path(s"$p/top_meta")),
       "an empty corpus must not keep a serving tier")
@@ -770,7 +787,7 @@ class TextIndexSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf).filter(col("doc_id") < 120)
     val p = Files.createTempDirectory("graft-ti-interleave").toString
     TextIndex.build(docs, "doc_id", "text", p, nBuckets = 16)
-    val n0 = TextIndex.liveStats(spark, p)._1
+    val n0 = TextIndex.metaAndLiveStats(spark, p)._2
     def top(path: String) = TextIndex.search(spark, path, query, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val dead = top(p).take(2).map(_._1)
@@ -778,7 +795,7 @@ class TextIndexSpec extends AnyFunSuite {
     // the point the ORDERED publish allows: the stats CORRECTION moved,
     // the tombstones still staged. (The reverse state — tombstones
     // published, correction staged — is unreachable post-fix.)
-    val fs = TextIndex.fsOf(spark, p)
+    val fs = Commit.fs(spark, p)
     val doclens = spark.read.parquet(s"$p/doclens")
     val c = doclens.filter(col("doc_id").isin(dead: _*))
       .agg(count(lit(1)).as("n"),
@@ -788,7 +805,7 @@ class TextIndexSpec extends AnyFunSuite {
     Seq((c.getLong(0), c.getAs[Long]("s")))
       .toDF("n_docs", "sum_dl").coalesce(1)
       .write.parquet(s"$p/staging/d5/tombstone_stats")
-    TextIndex.touch(fs, new Path(s"$p/staging/d5/STAGED"))
+    Commit.touch(fs, new Path(s"$p/staging/d5/STAGED"))
     val itc = fs.listFiles(new Path(s"$p/staging/d5/tombstone_stats"), true)
     var moved = false
     while (itc.hasNext && !moved) {
@@ -803,22 +820,22 @@ class TextIndexSpec extends AnyFunSuite {
     assert(moved)
     // window state: correction published without its tombstones —
     // transiently stale-LOW, the benign direction…
-    assert(TextIndex.liveStats(spark, p)._1 == n0 - dead.length)
+    assert(TextIndex.metaAndLiveStats(spark, p)._2 == n0 - dead.length)
     // …and a compact INSIDE the window deletes the orphaned correction
     // while the (un-tombstoned) docs stay counted: exact stats.
     TextIndex.compact(spark, p)
-    assert(TextIndex.liveStats(spark, p)._1 == n0,
+    assert(TextIndex.metaAndLiveStats(spark, p)._2 == n0,
       "compact inside the window must land on exact stats")
     // the replay resumes the publish: docs tombstoned, correction gone
     // — stale-HIGH (the documented lag), NEVER double-subtracted.
     TextIndex.deleteBatch(dead.toDF("doc_id"), "doc_id", p, batchId = 5L)
     assert(top(p).forall(r => !dead.contains(r._1)),
       "resumed delete must hide the docs")
-    assert(TextIndex.liveStats(spark, p)._1 == n0,
+    assert(TextIndex.metaAndLiveStats(spark, p)._2 == n0,
       s"stats must be stale-high here, not double-subtracted to ${n0 - 2 * dead.length}")
     // the next compact heals the lag to exactly a rebuild-without.
     TextIndex.compact(spark, p)
-    assert(TextIndex.liveStats(spark, p)._1 == n0 - dead.length)
+    assert(TextIndex.metaAndLiveStats(spark, p)._2 == n0 - dead.length)
     val pWo = Files.createTempDirectory("graft-ti-interwo").toString
     TextIndex.build(docs.filter(!col("doc_id").isin(dead: _*)),
       "doc_id", "text", pWo, nBuckets = 16)
