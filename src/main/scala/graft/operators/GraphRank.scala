@@ -65,9 +65,9 @@ object GraphRank {
     * `convergeTol = Some(t)` turns `iters` into a MAXIMUM: the loop
     * stops as soon as no node's rank moved by more than `t`
     * micro-units in a round (checked on the just-checkpointed frame by
-    * carrying the previous rank alongside — dupComponents' one-job
-    * convergence idiom; the extra old-rank join is node-keyed, the
-    * partitioning every other per-iteration exchange already uses),
+    * carrying the previous rank alongside — one job per round; the
+    * extra old-rank join is node-keyed, the partitioning every other
+    * per-iteration exchange already uses),
     * and FAILS LOUDLY if `iters` rounds pass without convergence — a
     * truncated unconverged walk must never silently read as a ranking.
     * Exact integer dynamics can 2-cycle at the last micro-unit, so a
@@ -227,11 +227,11 @@ object GraphRank {
     */
   /** `converge = true` turns `iters` into a MAXIMUM: the loop stops
     * the first round no node changed label (checked on the just-
-    * checkpointed frame by carrying the previous label — the
-    * dupComponents one-job idiom) and FAILS LOUDLY if `iters` rounds
-    * pass without a fixed point, because sync LPA can 2-cycle on
-    * near-bipartite structure and a truncated oscillation must never
-    * silently read as a clustering.
+    * checkpointed frame by carrying the previous label — one job per
+    * round) and FAILS LOUDLY if `iters` rounds pass without a fixed
+    * point, because sync LPA can 2-cycle on near-bipartite structure
+    * and a truncated oscillation must never silently read as a
+    * clustering.
     */
   /** Per-node TRIANGLE counts + degrees over the undirected simple
     * graph `edges` induces — the clustering-structure primitive under
@@ -442,7 +442,7 @@ object GraphRank {
             // One frame carries old and new rank: the checkpoint
             // materializes it (one job) and the convergence check is a
             // cheap scan of the materialized result — no re-run of the
-            // iteration join (dupComponents' idiom).
+            // iteration join.
             val next = checkpointed(
               nodes.join(contrib, Seq("node"), "left")
                 .join(ranks.select(col("node"),

@@ -28,8 +28,8 @@ object CorpusPrep {
     * ([[Dedup.dupComponents]]): only each duplicate component's minimum
     * survives. The greedy policy can keep several representatives of one
     * transitive chain (every node whose direct partners are all larger
-    * survives); the CC policy cannot — at the cost of the iterative
-    * label-propagation rounds, so it's opt-in.
+    * survives); the CC policy cannot — at the cost of the components
+    * pass, so it's opt-in.
     *
     * `semanticVecCol = Some(col)` appends a SemDeDup pass
     * ([[graft.operators.SemanticDedup.dropSemanticDuplicates]]) over a

@@ -209,8 +209,9 @@ object TextQueries {
     },
 
     // Exact duplicate grouping: connected components over the d06
-    // candidate-pair edge list (iterative min-label propagation — each
-    // round one join+aggregate job; lineage kept flat via checkpoints).
+    // candidate-pair edge list (Dedup.dupComponents: star-contraction
+    // rounds while the edge set is large, a driver-side union-find
+    // finish once it is small — at sf0.01 the whole graph is small).
     // The oracle re-derives the same labels with a recursive CTE
     // (transitive closure, then min over reachable nodes) — the one
     // operator that was previously pinned only by unit tests.
@@ -514,8 +515,8 @@ object TextQueries {
     // "yesterday" base (both endpoints < 250) and a "today" delta,
     // the base labels computed once, and the delta FOLDED into them
     // via the quotient identity (labels' star edges reconnect exactly
-    // the old components, so contraction over |labels| + |delta|
-    // edges equals contraction over the full history — which is never
+    // the old components, so components over |labels| + |delta|
+    // edges equal components over the full history — which is never
     // re-read). The oracle computes ONLY the full pass (d19's
     // recursive closure over every pair); hash-equality proves the
     // maintenance identity, the e14/q36 pattern. At 100 TB this is
@@ -529,7 +530,7 @@ object TextQueries {
       val cut = 250L
       val base = pinned.filter(col("a_id") < cut && col("b_id") < cut)
       val delta = pinned.filter(col("a_id") >= cut || col("b_id") >= cut)
-      val baseLabels = graft.text.Dedup.dupComponentsStar(base)
+      val baseLabels = graft.text.Dedup.dupComponents(base)
       graft.text.Dedup.dupComponentsIncremental(baseLabels, delta)
         .orderBy(col("id"))
     },
@@ -1566,13 +1567,11 @@ object TextQueries {
     // cluster-keyed aggregates (max length, then min id among the
     // maxima — the argmax form both engines compute identically, no
     // struct-ordering dependence) over cluster-sized groups; the
-    // candidate graph is d19's pinned machinery and the labels come
-    // from the log-round star contraction (d71 proves it ≡ d19's
-    // min-label propagation, and it measures ~1 s faster even at
-    // sf0.1 — the production choice).
+    // candidate graph and the labels are d19's pinned machinery
+    // (Dedup.dupComponents, checkpointed — scanned three times here).
     "d69_dup_survivors" -> { (s, d) =>
       val docs = Tables.documents(s, d)
-      val comp = graft.text.Dedup.dupComponentsStar(
+      val comp = graft.text.Dedup.dupComponents(
         graft.text.Dedup.nearDupPairs(docs, "doc_id", "text",
           threshold = 0.0))
       val sized = comp.join(
@@ -1623,18 +1622,16 @@ object TextQueries {
         .orderBy(col("source"))
     },
 
-    // ALTERNATING-STAR CONNECTED COMPONENTS ([[graft.text.Dedup
-    // .dupComponentsStar]]) — d19's answer by the O(log n)-round
-    // algorithm: min-label propagation pays one join per unit of
-    // component DIAMETER (a million-doc repost chain = a million
-    // rounds); large-star/small-star contraction rewires whole
-    // neighborhoods to their minimum and converges logarithmically on
-    // any topology. Same candidate graph, same (id, component = min
-    // reachable) contract — the oracle runs d19's recursive
-    // transitive closure, so hash equality PROVES the two algorithms
-    // agree on every label at sf0.01.
+    // CONNECTED COMPONENTS, the key its label consumers (d69, d77, d83)
+    // cite: d19's query through the same [[graft.text.Dedup
+    // .dupComponents]] — O(log n) star-contraction rounds on a large
+    // edge set, a driver-side union-find finish on a small one (at
+    // sf0.01 the whole candidate graph is small; DedupSpec drives the
+    // rounds on generated graphs above the hand-over constant). The
+    // oracle runs d19's recursive transitive closure, so hash equality
+    // pins every (id, component = min reachable) label.
     "d71_cc_star" -> { (s, d) =>
-      graft.text.Dedup.dupComponentsStar(
+      graft.text.Dedup.dupComponents(
         graft.text.Dedup.nearDupPairs(
           Tables.documents(s, d), "doc_id", "text", threshold = 0.0))
         .orderBy(col("id"))
@@ -1806,13 +1803,13 @@ object TextQueries {
     // grouped path's straddling-cluster count is computed, not
     // assumed, and reads 0, while the naive per-doc bucketing's count
     // is the >0 contrast witness (24 straddled clusters at sf0.01).
-    // Scale shape: the component labels are d71's pinned machinery;
-    // the key join is doc-keyed; the two leak witnesses are
-    // group-keyed aggregates folded to 1-row broadcasts; the report
-    // is a catalog-sized rollup.
+    // Scale shape: the component labels are d71's checkpointed
+    // dupComponents frame; the key join is doc-keyed; the two leak
+    // witnesses are group-keyed aggregates folded to 1-row broadcasts;
+    // the report is a catalog-sized rollup.
     "d77_component_split" -> { (s, d) =>
       val docs = Tables.documents(s, d)
-      val comp = graft.text.Dedup.dupComponentsStar(
+      val comp = graft.text.Dedup.dupComponents(
         graft.text.Dedup.nearDupPairs(docs, "doc_id", "text",
           threshold = 0.0))
       def bucketOf(c: Column) = TF.hash32(c.cast("string")) % 100
@@ -2496,13 +2493,13 @@ object TextQueries {
     // reads before deciding source-level dedup order and admission
     // weights (a source whose row sums high is re-serving others'
     // content — d67's budget and d69's survivorship both want to
-    // know). Scale shape: the contraction ran inside
-    // dupComponentsStar (checkpointed); (component, source) is a
+    // know). Scale shape: the components ran inside
+    // dupComponents (checkpointed); (component, source) is a
     // components-sized distinct; the pair build is one
     // component-keyed self-join; the matrix is sources²-bounded.
     "d83_source_contamination" -> { (s, d) =>
       val docs = Tables.documents(s, d)
-      val comp = graft.text.Dedup.dupComponentsStar(
+      val comp = graft.text.Dedup.dupComponents(
         graft.text.Dedup.nearDupPairs(docs, "doc_id", "text",
           threshold = 0.0))
       val cs = comp

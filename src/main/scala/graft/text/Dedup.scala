@@ -553,79 +553,187 @@ object Dedup {
   }
 
   /** Connected components over a duplicate-pair edge list: every node
-    * labeled with its component's MINIMUM id — the exact keeper
-    * assignment (the greedy [[dropNearDuplicates]] policy can keep >1
-    * representative of a long chain; this cannot).
+    * in `pairs` labeled (id, component = the smallest id it can reach)
+    * — the exact keeper assignment (the greedy [[dropNearDuplicates]]
+    * policy can keep >1 representative of a long chain; this cannot).
+    * A node that appears only in self-pairs (a = b) is its own
+    * singleton component.
     *
-    * Iterative min-label propagation: each round every node adopts the
-    * smallest label among itself and its neighbors; converges in
-    * O(component diameter) rounds (checked, not assumed). Each round is
-    * one join + one aggregate on the edge list — the standard
-    * large-scale CC shape — materialized as exactly ONE job: the new
-    * label frame carries the old label alongside, so the convergence
-    * check is a count over the just-materialized frame, not a second
-    * recomputation of the join.
+    * Rounds: ALTERNATING large-star/small-star contraction (Kiveris et
+    * al. 2014, "Connected Components in MapReduce and Beyond"), which
+    * converges in O(log n) rounds on ANY topology by rewiring whole
+    * neighborhoods to their minimum each round — min-label propagation
+    * needs one round per unit of component DIAMETER, and a near-dup
+    * chain (reposts of reposts) can be arbitrarily long.
+    *   - large-star(u): every neighbor v > u re-attaches to
+    *     m = min(N(u) ∪ u);
+    *   - small-star(u): every neighbor v ≤ u, and u itself,
+    *     attaches to m.
+    * Each half-round is one node-keyed min aggregate + one node-keyed
+    * join over the CURRENT edge set (which only shrinks toward one star
+    * per component), then a canonical-pair distinct, checkpointed on
+    * one [[graft.operators.LineageCheckpoint]] rotation — RELIABLE
+    * under `checkpointDir`, `localCheckpoint` otherwise (see its doc
+    * for the trade and the per-round GC). At the fixed point every
+    * edge is (component min, member): the labels read straight off the
+    * terminal edges.
     *
-    * Lineage across rounds is truncated by checkpointing. With
-    * `checkpointDir` set the checkpoint is RELIABLE (written to that
-    * path — typically HDFS/object storage on a cluster — and survives
-    * executor loss, the right mode for a long 100-TB run); unset, it
-    * falls back to `localCheckpoint` (executor-memory lineage — cheaper,
-    * but a lost executor aborts the computation; fine for short jobs and
-    * tests).
+    * Convergence is CHECKED in ONE aggregate job per round: a (count,
+    * Σ xxhash64, ⊕ xxhash64) triple over the just-checkpointed edge
+    * frame, compared to the previous round's triple held driver-side.
+    * Both frames are DISTINCT canonical pair sets, so set equality
+    * implies triple equality (sum and xor are order-independent, the
+    * decimal sum is exact); two DIFFERENT equal-sized sets pass only by
+    * colliding on both the 64-bit hash sum and the hash xor at once —
+    * ~2⁻¹²⁸-grade for ids that derive from content similarity, and a
+    * false stop would fail the oracle hash check every sweep runs.
+    * Fail-loud: a loop that neither converged nor handed over within
+    * `maxIter` rounds throws.
     *
-    * Returns (id, component) for every node appearing in `pairs`.
+    * Hand-over: the triple's count is the edge-set size, known at entry
+    * and after every round. Once it is at most `DriverFinishEdges`
+    * (2¹⁶ pairs, ≈1 MB) the edges are collected ONCE — with the
+    * self-pairs, which register singleton nodes — and finished by
+    * union-find on the driver. The labels stay exact: union-find over
+    * the remaining edges reaches the same min-label fixed point. The
+    * reason is the per-round floor: a distributed round costs several
+    * jobs whatever the graph's size, so a small graph (a typical
+    * near-dup graph, a few hundred pairs) finishes in one collect,
+    * while a graph bigger than driver memory still runs the rounds.
+    * The constant is not a setting: which side a graph lands on
+    * depends only on its size.
+    *
+    * The result is always a checkpointed frame on the same rotation, so
+    * branching consumers (d69 reads it three times) scan materialized
+    * labels instead of re-deriving them, and a caller that writes the
+    * labels never reads `pairs`' sources during the write
+    * ([[labelStoreBatch]] relies on it).
     */
   def dupComponents(pairs: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val spark = pairs.sparkSession
-    // Each round's labels are eagerly checkpointed and the PREVIOUS
-    // round's checkpoint artifacts freed as soon as the new round is
-    // materialized (reliable files deleted / localCheckpoint blocks
-    // unpersisted) — see [[graft.operators.LineageCheckpoint]] for the
-    // rotation and its safety argument.
-    val checkpointed =
-      new graft.operators.LineageCheckpoint(spark, checkpointDir)
-    // Undirected edges, both directions; reused every round, so cache
-    // once (self-loops are implicit: `least(old, nbr_min)` keeps a
-    // node's own label in play without doubling the edge list).
-    // Pre-partitioned on the loop's join key (r22, guide §2.4 — the
-    // GraphRank idiom): every round joins this cache on `dst`, and an
-    // InMemoryRelation preserves its child's partitioning, so the SMJ
-    // path re-shuffles only the node-sized label frame per round.
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .distinct()
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = checkpointed(
-      edges.select(col("src").as("id"))
-        .distinct()
-        .withColumn("component", col("id")))
+    val ckpt = new graft.operators.LineageCheckpoint(spark, checkpointDir)
+    def canon(df: DataFrame): DataFrame =
+      df.select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"))
+        .filter(col("a") =!= col("b")).distinct()
+    def star(e: DataFrame, large: Boolean): DataFrame = {
+      val adj = e.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+      val mins = adj.groupBy(col("u"))
+        .agg(least(min(col("v")), first(col("u"))).as("m"))
+      val joined = adj.join(mins, "u")
+      val out =
+        if (large)
+          joined.filter(col("v") > col("u"))
+            .select(col("v").as("a"), col("m").as("b"))
+        else
+          joined.filter(col("v") <= col("u"))
+            .select(col("v").as("a"), col("m").as("b"))
+            .unionByName(mins.select(col("u").as("a"), col("m").as("b")))
+      canon(out)
+    }
+    // Canonicalize BEFORE dropping self-loops: a self-pair (a = b)
+    // carries no edge, but it still labels its node.
+    val all = ckpt(
+      pairs.select(least(col("a_id"), col("b_id")).as("a"),
+        greatest(col("a_id"), col("b_id")).as("b")).distinct())
+    // The one-job fixed-point detector (see the docstring's equality
+    // argument): count + exact decimal sum + xor of xxhash64(a, b),
+    // all in a single scan of a materialized frame. Nulls (empty edge
+    // set) resolve driver-side.
+    def edgeStats(df: DataFrame): (Long, java.math.BigDecimal, Long) = {
+      val r = df.agg(
+        count(lit(1)),
+        sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")),
+        expr("bit_xor(xxhash64(a, b))")).head()
+      (r.getLong(0),
+        Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO),
+        if (r.isNullAt(2)) 0L else r.getLong(2))
+    }
+    var edges = all.filter(col("a") =!= col("b"))
+    var stats = edgeStats(edges) // one scan of the `all` checkpoint
+    // The rounds drop a self-pair-only node, and their first call frees
+    // `all`: a graph that enters them holds its self-pairs on a rotation
+    // of their own (read off the materialized frame, never by
+    // rescanning the caller's pair pipeline), released once the labels
+    // land.
+    val selfCkpt = new graft.operators.LineageCheckpoint(spark, checkpointDir)
+    val selfPairs = all.filter(col("a") === col("b"))
+    val selfs =
+      if (stats._1 > DriverFinishEdges) selfCkpt(selfPairs) else selfPairs
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
-      val neighborMin = edges
-        .join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src").as("id2"))
-        .agg(min(col("component")).as("nbr_min"))
-      // One frame carries both labels: checkpointing materializes it
-      // (one job), and the convergence count is a cheap scan of the
-      // materialized result — no re-run of the join, no extra isEmpty.
-      val next = checkpointed(
-        labels.withColumnRenamed("component", "old")
-          .join(neighborMin, col("id") === col("id2"), "left")
-          .select(col("id"), col("old"),
-            least(col("old"), coalesce(col("nbr_min"), col("old")))
-              .as("component")))
-      converged = next.filter(col("component") =!= col("old")).isEmpty
-      labels = next.select(col("id"), col("component"))
+    while (!converged && stats._1 > DriverFinishEdges && i < maxIter) {
+      // The INNER (large) star materializes before the outer (small)
+      // star consumes it: left lazy, the outer star's plan references
+      // the inner subtree several times (both adj projections, the
+      // mins aggregate, both join sides — 14 SMJ / 22 exchanges in the
+      // fused round), and exchange reuse does not cover all of them.
+      // Rotation safety holds per-call: apply() materializes the new
+      // frame BEFORE freeing the previous one, and once a round's
+      // inner frame lands nothing reads the previous round's `edges`
+      // again (its stats triple is already driver-held).
+      val inner = ckpt(star(edges, large = true))
+      val next = ckpt(star(inner, large = false))
+      val nextStats = edgeStats(next)
+      converged = nextStats._1 == stats._1 &&
+        nextStats._2.compareTo(stats._2) == 0 &&
+        nextStats._3 == stats._3
+      stats = nextStats
+      edges = next
       i += 1
     }
-    edges.unpersist()
-    require(converged, s"label propagation did not converge in $maxIter rounds")
-    labels
+    val labels =
+      if (stats._1 <= DriverFinishEdges)
+        driverComponents(edges.unionByName(selfs))
+      else {
+        require(converged,
+          s"star contraction did not converge in $maxIter rounds")
+        // terminal stars: (member → min) per edge, (min → min) per
+        // center and per self-pair; a self-paired member keeps its min
+        edges.select(col("b").as("id"), col("a").as("component"))
+          .unionByName(edges.unionByName(selfs)
+            .select(col("a").as("id"), col("a").as("component")))
+          .groupBy(col("id")).agg(min(col("component")).as("component"))
+      }
+    // Safe on the loop rotation: the last edge frame is read while the
+    // label frame materializes, then superseded.
+    val out = ckpt(labels)
+    selfCkpt.release()
+    out
+  }
+
+  /** Edge-set size at or below which [[dupComponents]] collects the
+    * edges and finishes on the driver: 2¹⁶ id pairs, ≈1 MB.
+    */
+  private val DriverFinishEdges = 1L << 16
+
+  /** [[dupComponents]]'s driver finish: union-find over the collected
+    * (a, b) pairs, a self-pair registering a singleton node. Roots link
+    * by min, so every root IS its set's smallest id; `find` is
+    * iterative with path compression, because min-linking can build a
+    * tree as deep as the edge set — too deep for a recursive find.
+    * Returns (id, component) for every node, typed like the input ids.
+    */
+  private def driverComponents(pairs: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var root = parent.getOrElseUpdate(x, x)
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    pairs.collect().foreach { r =>
+      val (ra, rb) = (find(r.get(0)), find(r.get(1)))
+      if (ra.asInstanceOf[Comparable[Any]].compareTo(rb) < 0) parent(rb) = ra
+      else parent(ra) = rb // equal roots: a no-op
+    }
+    val rows = parent.keys.toSeq.map(k => org.apache.spark.sql.Row(k, find(k)))
+    pairs.sparkSession.createDataFrame(rows.asJava, pairs.schema)
+      .toDF("id", "component")
   }
 
   /** INCREMENTAL connected-components maintenance: fold a DELTA pair
@@ -641,14 +749,13 @@ object Dedup {
     * component's minimum id, components over (star edges ∪ delta)
     * equal components over (full old edge set ∪ delta), minima
     * included. Cost per batch: |labels| + |delta| edges through
-    * [[dupComponentsStar]]'s O(log n) contraction; the historical
-    * edge set is never stored or read again. Singleton components
-    * ride through as self-pairs (the pinned dupComponentsStar
-    * contract). Output contract = [[dupComponents]]: (id, component).
+    * [[dupComponents]]; the historical edge set is never stored or
+    * read again. Singleton components ride through as self-pairs.
+    * Output contract = [[dupComponents]]: (id, component).
     */
   def dupComponentsIncremental(labels: DataFrame, deltaPairs: DataFrame,
       maxIter: Int = 50, checkpointDir: Option[String] = None): DataFrame =
-    dupComponentsStar(
+    dupComponents(
       labels.select(col("id").as("a_id"), col("component").as("b_id"))
         .unionByName(deltaPairs.select(col("a_id"), col("b_id"))),
       maxIter, checkpointDir)
@@ -658,8 +765,8 @@ object Dedup {
     * production ingest shape: the label frame lives ON DISK at
     * `<path>/labels` and each delta pair batch folds in through the
     * quotient identity, so per batch the cost is |labels| + |delta|
-    * edges through the O(log n) star contraction and the pair history
-    * is never stored or replayed. Replay-idempotent at two levels:
+    * edges through [[dupComponents]] and the pair history is never
+    * stored or replayed. Replay-idempotent at two levels:
     *   - a `batch_markers/<id>` marker skips a fully-processed batch
     *     wholesale (foreachBatch is at-least-once);
     *   - WITHOUT the marker a replay is STILL exact, because the fold
@@ -701,11 +808,11 @@ object Dedup {
         Commit.swap(fs, labelsP, tmpP, new Path(s"$path/labels_old")) {
           val next =
             if (!fs.exists(labelsP))
-              dupComponentsStar(deltaPairs, maxIter, checkpointDir)
+              dupComponents(deltaPairs, maxIter, checkpointDir)
             else dupComponentsIncremental(
               spark.read.parquet(labelsP.toString), deltaPairs, maxIter,
               checkpointDir)
-          // `next` is checkpointed by the contraction, so this write reads
+          // `next` is checkpointed by dupComponents, so this write reads
           // materialized blocks, never the `labels` dir being swapped out.
           next.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(tmpP.toString)
@@ -733,145 +840,5 @@ object Dedup {
       return Seq.empty[(Long, Long)].toDF("id", "component")
     }
     spark.read.parquet(labelsP.toString)
-  }
-
-  /** [[dupComponents]] by the ALTERNATING large-star/small-star
-    * algorithm (Kiveris et al. 2014, "Connected Components in
-    * MapReduce and Beyond") — the round-count scale path: min-label
-    * propagation needs O(component DIAMETER) rounds, so a 10⁶-node
-    * near-dup chain (reposts of reposts) costs 10⁶ joins; star
-    * contraction converges in O(log n) rounds on ANY topology by
-    * rewiring whole neighborhoods to their minimum each round.
-    *   - large-star(u): every neighbor v > u re-attaches to
-    *     m = min(N(u) ∪ u);
-    *   - small-star(u): every neighbor v ≤ u, and u itself,
-    *     attaches to m.
-    * Each half-round is one node-keyed min aggregate + one node-keyed
-    * join over the CURRENT edge set (which only shrinks toward one
-    * star per component), then a canonical-pair distinct. At the fixed
-    * point every edge is (component min, member) — the labels are read
-    * straight off the terminal edges, no closure pass.
-    *
-    * Convergence is CHECKED (edge set unchanged over a full round),
-    * fail-loud past `maxIter` — detected in ONE aggregate job per
-    * round (r22, guide §1.2 job count): a (count, Σ xxhash64,
-    * ⊕ xxhash64) triple over the just-checkpointed frame, compared to
-    * the previous round's triple held driver-side. The r21 shape paid
-    * next.count() + edges.count() + (counts tied) a full `except` —
-    * two extra scans per round plus a distinct anti-join that ALWAYS
-    * fired on the converged round. Equality argument: both frames are
-    * DISTINCT canonical pair sets (`canon` ends in `.distinct()`), so
-    * set equality implies triple equality outright (sum and xor are
-    * order-independent, the decimal sum is exact); two DIFFERENT
-    * equal-sized distinct pair sets pass only by colliding on both
-    * the 64-bit hash sum and the hash xor simultaneously —
-    * ~2⁻¹²⁸-grade under non-adversarial inputs (these pairs derive
-    * from content similarity, not attacker-chosen ids) — and a false
-    * stop would be caught loudly by the oracle hash check every sweep
-    * runs. Because the check never re-reads the PREVIOUS round's
-    * frame, the loop needs only ONE checkpoint rotation (the old
-    * interleaved pair existed solely so the compared frame outlived
-    * its successor), halving lingering superseded state.
-    *
-    * Same output contract as [[dupComponents]]: (id, component = min
-    * reachable id) for every node in `pairs` — INCLUDING a node that
-    * appears only in self-pairs (a = b), which contraction would
-    * otherwise drop (self-loops carry no edge) and which is unioned
-    * back as its own singleton component — d71's oracle proves the
-    * two algorithms agree by hashing this against d19's recursive
-    * transitive closure, and DedupSpec pins the self-pair-only case.
-    */
-  def dupComponentsStar(pairs: DataFrame, maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
-    val ckpt = new graft.operators.LineageCheckpoint(spark, checkpointDir)
-    def canon(df: DataFrame): DataFrame =
-      df.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-    def star(e: DataFrame, large: Boolean): DataFrame = {
-      val adj = e.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      val mins = adj.groupBy(col("u"))
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      val joined = adj.join(mins, "u")
-      val out =
-        if (large)
-          joined.filter(col("v") > col("u"))
-            .select(col("v").as("a"), col("m").as("b"))
-        else
-          joined.filter(col("v") <= col("u"))
-            .select(col("v").as("a"), col("m").as("b"))
-            .unionByName(mins.select(col("u").as("a"), col("m").as("b")))
-      canon(out)
-    }
-    // Canonicalize BEFORE dropping self-loops: a self-pair (a = b)
-    // carries no edge, but the output contract labels EVERY node in
-    // `pairs` (dupComponents does), so self-pair-ONLY nodes are
-    // captured here — off the materialized frame, never by rescanning
-    // the caller's (expensive) pair pipeline — onto their own rotation
-    // (the loop rotation frees `all` on its first in-loop call), and
-    // union back in as their own singleton components at the end.
-    val all = ckpt(
-      pairs.select(least(col("a_id"), col("b_id")).as("a"),
-        greatest(col("a_id"), col("b_id")).as("b")).distinct())
-    val selfCkpt = new graft.operators.LineageCheckpoint(spark, checkpointDir)
-    val selfOnly = selfCkpt(
-      all.filter(col("a") === col("b")).select(col("a").as("id"))
-        .except(all.filter(col("a") =!= col("b")).select(col("a").as("id"))
-          .unionByName(
-            all.filter(col("a") =!= col("b")).select(col("b").as("id")))))
-    // The one-job fixed-point detector (see the docstring's equality
-    // argument): count + exact decimal sum + xor of xxhash64(a, b),
-    // all in a single scan of a materialized frame. Nulls (empty edge
-    // set) resolve driver-side.
-    def edgeStats(df: DataFrame): (Long, java.math.BigDecimal, Long) = {
-      val r = df.agg(
-        count(lit(1)),
-        sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")),
-        expr("bit_xor(xxhash64(a, b))")).head()
-      (r.getLong(0),
-        Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    var edges = all.filter(col("a") =!= col("b"))
-    var prevStats = edgeStats(edges) // one scan of the `all` checkpoint
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // The INNER (large) star materializes before the outer (small)
-      // star consumes it (r22, guide §1.2 step 1): left lazy, the
-      // outer star's plan references the inner subtree several times
-      // (both adj projections, the mins aggregate, both join sides —
-      // the per-round dump showed 14 SMJ / 22 exchanges in the fused
-      // round), and exchange reuse does not cover all of them.
-      // Interleaved A/B on pinned pairs: 0.93 min-ratio, the split
-      // arm ahead in all four pairs; labels verified identical.
-      // Rotation safety holds per-call: apply() materializes the new
-      // frame BEFORE freeing the previous one, and once a round's
-      // inner frame lands nothing reads the previous round's `edges`
-      // again (its stats triple is already driver-held).
-      val inner = ckpt(star(edges, large = true))
-      val next = ckpt(star(inner, large = false))
-      val nextStats = edgeStats(next)
-      converged = nextStats._1 == prevStats._1 &&
-        nextStats._2.compareTo(prevStats._2) == 0 &&
-        nextStats._3 == prevStats._3
-      prevStats = nextStats
-      edges = next
-      i += 1
-    }
-    require(converged, s"star contraction did not converge in $maxIter rounds")
-    // Materialize the label frame: like dupComponents, callers get a
-    // checkpointed result, so branching consumers (d69 reads it three
-    // times) scan it instead of re-deriving the union+distinct per
-    // branch (measured: the un-materialized form cost d69 ~2 s extra
-    // at sf0.1). Safe on the same rotation — the final edges frame is
-    // read while the label frame materializes, then superseded.
-    ckpt(
-      edges.select(col("b").as("id"), col("a").as("component"))
-        .unionByName(edges.select(col("a").as("id"), col("a").as("component")))
-        .distinct()
-        .unionByName(selfOnly.select(col("id"), col("id").as("component"))))
   }
 }

@@ -1137,7 +1137,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("ExistingRDD") || p.contains("Scan ExistingRDD"),
       s"d71 must scan the checkpointed terminal edge frame:\n${p.take(600)}")
     assert(scans("d71_cc_star").isEmpty,
-      "no parquet scan may survive the checkpoints — the candidate graph ran inside dupComponentsStar")
+      "no parquet scan may survive the checkpoints — the candidate graph ran inside dupComponents")
   }
 
   test("d73: the returned merge table is trainer state — the rounds ran inside train()") {
@@ -1149,7 +1149,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("d69: survivorship reads the checkpointed labels — component-keyed equi joins only") {
-    // The contraction loop ran inside dupComponentsStar (d71's pin);
+    // The components ran inside dupComponents (d71's pin);
     // what survives is the label scan joined to doc sizes and the two
     // cluster-keyed argmax aggregates — every join keyed, nothing
     // all-pairs, no rank window over component groups.

@@ -17,6 +17,9 @@ class DedupSpec extends AnyFunSuite {
       " with watermarks and timeouts everywhere"),
     (5L, base)) // exact dup of 1
     .toDF("doc_id", "text")
+  // Edges in a chain long enough that dupComponents runs its distributed
+  // rounds: above the 2^16-edge driver-finish constant.
+  private val longChain = (1L << 16) + 4096
 
   test("bloomNovelty: every true duplicate is flagged, novels mostly pass") {
     import org.apache.spark.sql.functions.col
@@ -211,23 +214,62 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("dupComponents reliable-checkpoint mode GCs previous rounds") {
-    // A diameter-8 chain forces several label-propagation rounds, each
-    // with its own reliable checkpoint. If per-round GC works, exactly
-    // one rdd-* checkpoint dir survives the run (the final round's);
-    // the r6 getCheckpointFile bug left one per round.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(tmp)
-    val chain = (1L to 9L).sliding(2).map(s => (s(1), s(0))).toSeq
-    val got = Dedup.dupComponents(chain.toDF("a_id", "b_id"),
-      checkpointDir = Some(tmp)).collect()
+    // Every frame the operator checkpoints (the canonical pairs, the
+    // held-aside self-pairs, each round's edges) is a reliable
+    // checkpoint. If the GC works, exactly one rdd-* checkpoint dir
+    // survives the run (the final label frame's); the r6
+    // getCheckpointFile bug left one per round. Run on both sides of
+    // the driver-finish constant: a 9-node chain with a self-pair
+    // finishes on the driver, a chain longer than the constant runs
+    // the contraction rounds.
+    for (n <- Seq(9L, longChain)) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+      spark.sparkContext.setCheckpointDir(tmp)
+      val chain = (1L to n).sliding(2).map(s => (s(1), s(0))).toSeq :+ ((2L, 2L))
+      val got = Dedup.dupComponents(chain.toDF("a_id", "b_id"),
+        checkpointDir = Some(tmp)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == (1L to n).map(_ -> 1L).toMap)
+      val ckptRoot = new java.io.File(
+        new java.net.URI(spark.sparkContext.getCheckpointDir.get).getPath)
+      val rddDirs = Option(ckptRoot.listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
+      assert(rddDirs.length == 1,
+        s"expected exactly the final round's checkpoint, got: ${rddDirs.map(_.getName).toSeq}")
+    }
+  }
+
+  test("dupComponents labels a chain longer than 50 at the default maxIter") {
+    // 60 edges: one round per unit of diameter would need 60 rounds.
+    val chain = (0L until 60L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val got = Dedup.dupComponents(chain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (1L to 9L).map(_ -> 1L).toMap)
-    val ckptRoot = new java.io.File(
-      new java.net.URI(spark.sparkContext.getCheckpointDir.get).getPath)
-    val rddDirs = Option(ckptRoot.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
-    assert(rddDirs.length == 1,
-      s"expected exactly the final round's checkpoint, got: ${rddDirs.map(_.getName).toSeq}")
+    assert(got == (0L to 60L).map(_ -> 0L).toMap)
+  }
+
+  test("dupComponents above the driver-finish constant: a chain runs the rounds, cliques hand over") {
+    def labels(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // A chain's edge count never drops below its node count − 1, so it
+    // contracts to one star in distributed rounds. Ids are scrambled
+    // (i ↦ (7919 i + 12345) mod p is a permutation) so the min sits
+    // mid-chain; a self-paired member and a self-pair-only node ride
+    // along.
+    val p = longChain + 1
+    val ids = (0L until p).map(i => (i * 7919L + 12345L) % p)
+    val chain = ids.sliding(2).map(s => (s(0), s(1))).toSeq ++
+      Seq((ids(5), ids(5)), (p + 10, p + 10))
+    assert(labels(Dedup.dupComponents(chain.toDF("a_id", "b_id"))) ==
+      ids.map(_ -> 0L).toMap + ((p + 10) -> (p + 10)))
+    // 600 disjoint 16-cliques: 72,000 edges enter the rounds, and the
+    // first contraction leaves at most 15 per clique — the driver
+    // finishes the rest.
+    val cliques = for {
+      c <- 0L until 600L; i <- 0L until 16L; j <- i + 1 until 16L
+    } yield (c + 600 * j, c + 600 * i)
+    assert(cliques.length > (1 << 16))
+    assert(labels(Dedup.dupComponents(cliques.toDF("a_id", "b_id"))) ==
+      (for (c <- 0L until 600L; i <- 0L until 16L) yield (c + 600 * i) -> c).toMap)
   }
 
   test("dropNearDuplicates keeps component minima") {
@@ -262,41 +304,38 @@ class DedupSpec extends AnyFunSuite {
     assert(loose(3L) == s"$header\n$footer")
   }
 
-  test("dupComponentsStar equals dupComponents on chains, cycles, and pairs") {
-    // a 20-node chain — diameter 19, so min-label pays 19 rounds while
-    // star contraction converges logarithmically — plus a 4-cycle and
-    // an isolated pair (three separate components).
+  test("dupComponents labels chains, cycles, and pairs with their minima") {
+    // a 20-node chain (diameter 19) plus a 4-cycle and an isolated
+    // pair (three separate components).
     val chain = (100L until 119L).map(i => (i, i + 1))
     val cycle = Seq((200L, 201L), (201L, 202L), (202L, 203L), (203L, 200L))
     val pair = Seq((300L, 301L))
     val edges = (chain ++ cycle ++ pair).toDF("a_id", "b_id")
-    val star = Dedup.dupComponentsStar(edges).collect()
+    val got = Dedup.dupComponents(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val base = Dedup.dupComponents(edges).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(star == base, s"star labels diverge:\n$star\nvs\n$base")
-    assert(star(119L) == 100L && star(203L) == 200L && star(301L) == 300L)
+    val want = (100L to 119L).map(_ -> 100L).toMap ++
+      (200L to 203L).map(_ -> 200L) ++ Seq(300L -> 300L, 301L -> 300L)
+    assert(got == want, s"labels diverge:\n$got\nvs\n$want")
+    assert(got(119L) == 100L && got(203L) == 200L && got(301L) == 300L)
   }
 
-  test("dupComponentsStar labels self-pair-only nodes as singleton components, like dupComponents") {
-    // 500 appears ONLY in a self-pair (a = b) — contraction drops
-    // self-loops, so without the explicit union the node would vanish;
-    // 100 has a self-pair AND a real edge — it must be labeled exactly
-    // once, by its component min, not duplicated as a singleton.
+  test("dupComponents labels self-pair-only nodes as singleton components") {
+    // 500 appears ONLY in a self-pair (a = b) — a self-pair carries no
+    // edge, so without its registration the node would vanish; 100 has
+    // a self-pair AND a real edge — it must be labeled exactly once, by
+    // its component min, not duplicated as a singleton.
     val edges = Seq((100L, 101L), (100L, 100L), (500L, 500L))
       .toDF("a_id", "b_id")
-    val star = Dedup.dupComponentsStar(edges).collect()
+    val got = Dedup.dupComponents(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val base = Dedup.dupComponents(edges).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(star == Seq((100L, 100L), (101L, 100L), (500L, 500L)))
-    assert(star == base, s"star/min-label diverge on self-pairs:\n$star\nvs\n$base")
+    assert(got == Seq((100L, 100L), (101L, 100L), (500L, 500L)))
   }
 
-  test("dupComponentsStar fails loudly when maxIter truncates the contraction") {
-    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+  test("dupComponents fails loudly when maxIter truncates the contraction") {
+    // above the driver-finish constant, so the rounds must converge
+    val chain = (0L until longChain).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val e = intercept[IllegalArgumentException] {
-      Dedup.dupComponentsStar(chain, maxIter = 1)
+      Dedup.dupComponents(chain, maxIter = 1)
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -306,21 +345,21 @@ class DedupSpec extends AnyFunSuite {
     // base: two chains {1-2-3} and {10-11}, a singleton 20 (self-pair)
     val base = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 20L))
       .toDF("a_id", "b_id")
-    val labels = Dedup.dupComponentsStar(base)
+    val labels = Dedup.dupComponents(base)
     def lbl(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     // delta 1: brand-new component {30, 31} plus growth 11-12
     val d1 = Seq((30L, 31L), (11L, 12L)).toDF("a_id", "b_id")
     val inc1 = Dedup.dupComponentsIncremental(labels, d1)
     assert(lbl(inc1) ==
-      lbl(Dedup.dupComponentsStar(base.unionByName(d1))),
+      lbl(Dedup.dupComponents(base.unionByName(d1))),
       "incremental must equal the full recompute")
     // delta 2 MERGES the two old components (3-10) — the quotient
     // identity's interesting case: the bridge crosses old labels.
     val d2 = Seq((3L, 10L)).toDF("a_id", "b_id")
     val inc2 = Dedup.dupComponentsIncremental(inc1, d2)
     assert(lbl(inc2) ==
-      lbl(Dedup.dupComponentsStar(
+      lbl(Dedup.dupComponents(
         base.unionByName(d1).unionByName(d2))),
       "a delta bridging two old components must collapse them to one min")
     assert(inc2.filter(col("id").isin(1L, 2L, 3L, 10L, 11L, 12L))
