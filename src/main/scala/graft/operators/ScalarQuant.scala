@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Symmetric per-vector int8 scalar quantization — the embedding STORAGE
   * lever at corpus scale: a float32 embedding column is 4 bytes/dim; the
@@ -45,6 +46,16 @@ object ScalarQuant {
     */
   def dequantize(df: DataFrame, codesCol: String, scaleCol: String,
       outCol: String): DataFrame =
-    df.withColumn(outCol,
-      transform(col(codesCol), c => c.cast("double") * col(scaleCol)))
+    df.withColumn(outCol, decode(col(codesCol), col(scaleCol)))
+
+  /** The vector a quantized row SCORES as: [[quantize]]'s `codes` ·
+    * `scale` in double, cast back to float32 — v11's arithmetic, the
+    * one form every quantized scan feeds the cosine expression, so the
+    * coarse scores stay oracle-reproducible.
+    */
+  private[operators] def scoringVec: Column =
+    decode(col("codes"), col("scale")).cast(ArrayType(FloatType))
+
+  private def decode(codes: Column, scale: Column): Column =
+    transform(codes, c => c.cast("double") * scale)
 }

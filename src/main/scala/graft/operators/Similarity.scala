@@ -146,11 +146,9 @@ object Similarity {
       query: Array[Float], k: Int, candidates: Int): DataFrame = {
     require(k >= 1 && candidates >= k,
       s"need candidates >= k >= 1, got k=$k candidates=$candidates")
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val deq = transform(col("codes"), c => c.cast("double") * col("scale"))
-      .cast(ArrayType(FloatType))
     ScalarQuant.quantize(corpus, vecCol)
-      .withColumn("qscore", vectors.cosineSimilarity(deq, lit(query)))
+      .withColumn("qscore",
+        vectors.cosineSimilarity(ScalarQuant.scoringVec, lit(query)))
       .orderBy(col("qscore").desc, col(idCol))
       .limit(candidates)
       .withColumn("score", vectors.cosineSimilarity(col(vecCol), lit(query)))
@@ -260,12 +258,8 @@ object Similarity {
   /** ANN search: scan only the query's IVF cell, exact top-k inside it. */
   def ivfSearch(assigned: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], queryCell: Long, k: Int): DataFrame =
-    assigned
-      .filter(col("cell") === queryCell)
-      .withColumn("score", vectors.cosineSimilarity(col(vecCol), lit(query)))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-      .select(col("cell"), col(idCol), col("score"))
+    cellTopK(assigned, idCol, Seq(queryCell),
+      vectors.cosineSimilarity(col(vecCol), lit(query)), k)
 
   /** Multi-probe ANN: scan the `nprobe` cells whose CENTROIDS are most
     * similar to the query (ties to the smaller cell id), exact top-k
@@ -279,41 +273,54 @@ object Similarity {
     */
   def ivfMultiProbeSearch(assigned: DataFrame, idCol: String, vecCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
-      query: Array[Float], nprobe: Int, k: Int): DataFrame = {
-    require(nprobe >= 1 && k >= 1, s"nprobe=$nprobe k=$k must be positive")
-    assigned
-      .filter(col("cell").isin(
-        probeCells(seeds, seedIdCol, seedVecCol, query, nprobe): _*))
-      .withColumn("score", vectors.cosineSimilarity(col(vecCol), lit(query)))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-      .select(col("cell"), col(idCol), col("score"))
-  }
+      query: Array[Float], nprobe: Int, k: Int): DataFrame =
+    probeSearch(assigned, idCol, seeds, seedIdCol, seedVecCol, query,
+      nprobe, k, vectors.cosineSimilarity(col(vecCol), lit(query)))
 
   /** [[ivfMultiProbeSearch]] over int8-quantized storage: the input
     * carries (codes, scale, cell) instead of a float vector column
     * ([[ScalarQuant.quantize]]'s output, [[graft.store.IvfIndex
     * .buildQuantized]]'s on-disk layout), cells rank exactly as the
     * float search's, and candidates score on dequantized codes with
-    * v11's arithmetic (codes · scale cast back to float32, then the
-    * same cosine) — so the quantized probe reads ~4× fewer bytes per
-    * cell and stays oracle-reproducible (v13).
+    * v11's arithmetic ([[ScalarQuant.scoringVec]], then the same
+    * cosine) — so the quantized probe reads ~4× fewer bytes per cell
+    * and stays oracle-reproducible (v13).
     */
   def ivfQuantizedSearch(quantized: DataFrame, idCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
-      query: Array[Float], nprobe: Int, k: Int): DataFrame = {
+      query: Array[Float], nprobe: Int, k: Int): DataFrame =
+    probeSearch(quantized, idCol, seeds, seedIdCol, seedVecCol, query,
+      nprobe, k, vectors.cosineSimilarity(ScalarQuant.scoringVec, lit(query)))
+
+  /** The one single-query IVF probe: rank the codebook's cells with
+    * [[probeCells]], then take the exact top-k of the probed cells
+    * under `score` — cosine on float vectors, cosine on dequantized
+    * codes, or PQ ADC ([[graft.store.IvfPqIndex.search]]). Every face
+    * that ranks cells for one query, on-disk ones included, probes
+    * through here, so no two faces can pick different cells for it.
+    */
+  private[graft] def probeSearch(corpus: DataFrame, idCol: String,
+      seeds: DataFrame, seedIdCol: String, seedVecCol: String,
+      query: Array[Float], nprobe: Int, k: Int, score: Column): DataFrame = {
     require(nprobe >= 1 && k >= 1, s"nprobe=$nprobe k=$k must be positive")
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val deq = transform(col("codes"), c => c.cast("double") * col("scale"))
-      .cast(ArrayType(FloatType))
-    quantized
-      .filter(col("cell").isin(
-        probeCells(seeds, seedIdCol, seedVecCol, query, nprobe): _*))
-      .withColumn("score", vectors.cosineSimilarity(deq, lit(query)))
+    cellTopK(corpus, idCol,
+      probeCells(seeds, seedIdCol, seedVecCol, query, nprobe), score, k)
+  }
+
+  /** The exact top-k of a probed cell set: keep the rows of `cells`
+    * (a partition filter on a cell-partitioned layout), score with
+    * `score`, order by (score DESC, id ASC) — planned as
+    * TakeOrderedAndProject, per-partition heaps, no global sort.
+    * Returns (cell, id, score).
+    */
+  private def cellTopK(corpus: DataFrame, idCol: String, cells: Seq[Long],
+      score: Column, k: Int): DataFrame =
+    corpus
+      .filter(col("cell").isin(cells: _*))
+      .withColumn("score", score)
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
       .select(col("cell"), col(idCol), col("score"))
-  }
 
   /** Batch ANN: exact top-k inside the probed cells for EVERY probe
     * row in ONE pass — the serving shape for query BATCHES, where the
@@ -361,11 +368,8 @@ object Similarity {
       probes: DataFrame, probeIdCol: String, probeVecCol: String,
       nprobe: Int, k: Int): DataFrame = {
     require(nprobe >= 1 && k >= 1, s"nprobe=$nprobe k=$k must be positive")
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val deq = transform(col("codes"), c => c.cast("double") * col("scale"))
-      .cast(ArrayType(FloatType))
-    batchTopK(
-      quantized, vectors.cosineSimilarity(deq, col("_ann_pv")),
+    batchTopK(quantized,
+      vectors.cosineSimilarity(ScalarQuant.scoringVec, col("_ann_pv")),
       idCol, batchProbeCells(probes, probeIdCol, probeVecCol,
         seeds, seedIdCol, seedVecCol, nprobe), probeIdCol, k)
   }
@@ -415,10 +419,12 @@ object Similarity {
         col("_ann_p._2").as(idCol), col("_ann_p._1").as("score"))
   }
 
-  /** The `nprobe` cells whose centroids are most cosine-similar to the
-    * query (ties to the smaller cell id), ranked through the SAME
-    * cosine expression the scans score with — ranking and scoring can
-    * never disagree on arithmetic.
+  /** The one cell ranker: the `nprobe` cells whose centroids are most
+    * cosine-similar to the query (ties to the smaller cell id), ranked
+    * through the SAME clamped cosine expression the scans score with and
+    * [[ivfAssign]] assigns with — ranking, assignment and scoring can
+    * never disagree on arithmetic. [[batchProbeCells]] is its per-probe
+    * form for query batches.
     */
   private def probeCells(seeds: DataFrame, seedIdCol: String,
       seedVecCol: String, query: Array[Float], nprobe: Int): Seq[Long] =

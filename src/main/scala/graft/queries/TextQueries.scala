@@ -105,6 +105,17 @@ object TextQueries {
   private def scratchDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(scratchBase, tag).toString
 
+  /** d19's and d71's one body: [[graft.text.Dedup.dupComponents]] over
+    * d06's candidate pairs, ordered by id. Both keys stay in the map and
+    * each recomputes it — the 245-query contract times every key on its
+    * own, with no caching across runs.
+    */
+  private def dupComponentLabels(s: SparkSession, d: String): DataFrame =
+    graft.text.Dedup.dupComponents(
+      graft.text.Dedup.nearDupPairs(
+        Tables.documents(s, d), "doc_id", "text", threshold = 0.0))
+      .orderBy(col("id"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // T2 declarative form: fixed-stride substring windows (chunk i covers
     // [i*stride, i*stride+size)). Projection-only: no UDF, no shuffle.
@@ -215,12 +226,7 @@ object TextQueries {
     // The oracle re-derives the same labels with a recursive CTE
     // (transitive closure, then min over reachable nodes) — the one
     // operator that was previously pinned only by unit tests.
-    "d19_dup_components" -> { (s, d) =>
-      graft.text.Dedup.dupComponents(
-        graft.text.Dedup.nearDupPairs(
-          Tables.documents(s, d), "doc_id", "text", threshold = 0.0))
-        .orderBy(col("id"))
-    },
+    "d19_dup_components" -> dupComponentLabels _,
 
     // WEB-variant section pipeline (P13/WEB + T1/Headers4): per-document
     // 4-level markdown run through the real markdownHeaderSplit with the
@@ -1630,12 +1636,7 @@ object TextQueries {
     // rounds on generated graphs above the hand-over constant). The
     // oracle runs d19's recursive transitive closure, so hash equality
     // pins every (id, component = min reachable) label.
-    "d71_cc_star" -> { (s, d) =>
-      graft.text.Dedup.dupComponents(
-        graft.text.Dedup.nearDupPairs(
-          Tables.documents(s, d), "doc_id", "text", threshold = 0.0))
-        .orderBy(col("id"))
-    },
+    "d71_cc_star" -> dupComponentLabels _,
 
     // WEIGHTED RESERVOIR SAMPLE (A-ES, Efraimidis & Spirakis 2006) —
     // k docs per language, inclusion probability proportional to
@@ -3419,6 +3420,21 @@ object TextQueries {
 
   private val CandCtes: String = candCtes("documents")
 
+  /** Min-label connected components as a recursive transitive closure
+    * over the candidate edges — the one oracle of d19, d71, d109 and
+    * d112 (each key checks its own Spark path against it).
+    */
+  private val DupComponentsSql: String =
+    s"""WITH RECURSIVE $CandCtes,
+      |e AS (SELECT a_id AS src, b_id AS dst FROM cand
+      |      UNION SELECT b_id, a_id FROM cand),
+      |reach(id, r) AS (
+      |  SELECT DISTINCT src, src FROM e
+      |  UNION
+      |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
+      |SELECT id, MIN(r) AS component FROM reach GROUP BY id
+      |ORDER BY id""".stripMargin
+
   /** DuckDB CTE chain mirroring [[graft.text.LangId.langId]] over
     * `src(doc_id, text)`, ending in relation `lang(doc_id, lang_guess)`:
     * profile IN-lists generated from [[graft.text.LangId.Profiles]], the
@@ -3598,16 +3614,7 @@ object TextQueries {
     // reach(id, r) = every node r reachable from id over the undirected
     // candidate edges; the component label is min(reach). Same candidate
     // CTEs as d06 (threshold 0 keeps every candidate pair).
-    "d19_dup_components" ->
-      s"""WITH RECURSIVE $CandCtes,
-        |e AS (SELECT a_id AS src, b_id AS dst FROM cand
-        |      UNION SELECT b_id, a_id FROM cand),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM e
-        |  UNION
-        |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
-        |SELECT id, MIN(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
+    "d19_dup_components" -> DupComponentsSql,
 
     "d20_web_sections" ->
       """SELECT doc_id, 'body' AS header4,
@@ -3868,32 +3875,14 @@ object TextQueries {
         |FROM r, s WHERE r.rank <= 16 ORDER BY r.rank""".stripMargin,
 
     // d109: the oracle computes ONLY the full closure over every pair
-    // (d19's SQL verbatim) — hash-equality against the incremental
+    // (d19's SQL) — hash-equality against the incremental
     // path proves the quotient maintenance identity.
-    "d109_incremental_cc" ->
-      s"""WITH RECURSIVE $CandCtes,
-        |e AS (SELECT a_id AS src, b_id AS dst FROM cand
-        |      UNION SELECT b_id, a_id FROM cand),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM e
-        |  UNION
-        |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
-        |SELECT id, MIN(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
+    "d109_incremental_cc" -> DupComponentsSql,
 
     // d112: the oracle computes ONLY the full closure over every pair
-    // (d109's SQL verbatim) — hash-equality proves the on-disk label
+    // (d19's SQL) — hash-equality proves the on-disk label
     // store's batch-by-batch fold lands the one-shot answer.
-    "d112_label_store_cc" ->
-      s"""WITH RECURSIVE $CandCtes,
-        |e AS (SELECT a_id AS src, b_id AS dst FROM cand
-        |      UNION SELECT b_id, a_id FROM cand),
-        |reach(id, r) AS (
-        |  SELECT DISTINCT src, src FROM e
-        |  UNION
-        |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
-        |SELECT id, MIN(r) AS component FROM reach GROUP BY id
-        |ORDER BY id""".stripMargin,
+    "d112_label_store_cc" -> DupComponentsSql,
 
     // d108: both lattice levels re-derived; the coarse level counts
     // only rows from fine-failing classes.
@@ -4543,18 +4532,9 @@ object TextQueries {
         |FROM q CROSS JOIN tot t
         |ORDER BY q.source""".stripMargin,
 
-    // d71: the oracle is d19's recursive transitive closure VERBATIM —
-    // hash equality proves the star algorithm computes the same labels.
-    "d71_cc_star" ->
-      s"""WITH RECURSIVE $CandCtes,
-         |e AS (SELECT a_id AS src, b_id AS dst FROM cand
-         |      UNION SELECT b_id, a_id FROM cand),
-         |reach(id, r) AS (
-         |  SELECT DISTINCT src, src FROM e
-         |  UNION
-         |  SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id)
-         |SELECT id, MIN(r) AS component FROM reach GROUP BY id
-         |ORDER BY id""".stripMargin,
+    // d71: the oracle is d19's recursive transitive closure — hash
+    // equality pins the same labels.
+    "d71_cc_star" -> DupComponentsSql,
 
     // d85: d73's unrolled training CTEs give every word's post-merge
     // segmentation; docs join their words to it and roll up by lang.

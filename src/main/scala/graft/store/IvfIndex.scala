@@ -3,7 +3,6 @@ package graft.store
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.vectors
 import graft.operators.Similarity
 
 /** On-disk IVF (inverted-file) ANN index: the embeddings table written
@@ -435,24 +434,23 @@ object IvfIndex {
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/seeds")
 
-  /** Search: score the query against the stored seeds (driver-side, the
-    * codebook is tiny), then scan ONLY the nProbe nearest cells — the
-    * cell filter prunes partitions before IO — and take the exact top-k
-    * inside them (per-partition heap, no global sort). Tombstoned ids
-    * ([[delete]]) are anti-joined out of the pruned scan before
-    * scoring, so a deleted vector is invisible from the moment the
-    * tombstone lands, not from the next compact.
+  /** Search: the on-disk face of [[Similarity.ivfMultiProbeSearch]]
+    * (delegated, like [[searchBatch]] and [[searchQuantized]], so every
+    * face ranks cells through the one [[Similarity]] ranker): rank the
+    * stored seeds with a codebook-sized job, then scan ONLY the nProbe
+    * nearest cells — the cell filter prunes partitions before IO — and
+    * take the exact top-k inside them (per-partition heap, no global
+    * sort). Tombstoned ids ([[delete]]) are anti-joined out of the
+    * pruned scan before scoring, so a deleted vector is invisible from
+    * the moment the tombstone lands, not from the next compact.
     */
   def search(spark: SparkSession, path: String, idCol: String,
       vecCol: String, query: Array[Float], k: Int, nProbe: Int = 1): DataFrame =
-    dropTombstoned(
-      spark.read.parquet(s"$path/vectors")
-        .filter(col("cell").isin(probeCells(spark, path, query, nProbe): _*)), // partition pruning
-      idCol, spark, path)
-      .withColumn("score", vectors.cosineSimilarity(col(vecCol), lit(query)))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-      .select(col("cell"), col(idCol), col("score"))
+    Similarity.ivfMultiProbeSearch(
+      dropTombstoned(spark.read.parquet(s"$path/vectors"), idCol, spark, path),
+      idCol, vecCol,
+      spark.read.parquet(s"$path/seeds"), "cell", "seed_vec",
+      query, nProbe, k)
 
   /** Batch search: the on-disk face of [[Similarity.ivfSearchBatch]]
     * (delegated, so the store and the spec-pinned operator can never
@@ -490,26 +488,4 @@ object IvfIndex {
       idCol,
       spark.read.parquet(s"$path/seeds"), "cell", "seed_vec",
       query, nProbe, k)
-
-  /** The `nProbe` nearest seed cells for a query, scored driver-side
-    * against the on-disk `<path>/seeds` codebook (tiny by contract).
-    * Shared by the plain and the PQ-compressed index.
-    */
-  private[store] def probeCells(spark: SparkSession, path: String,
-      query: Array[Float], nProbe: Int): Seq[Long] = {
-    val seeds = spark.read.parquet(s"$path/seeds")
-      .collect()
-      .map(r => (r.getLong(r.fieldIndex("cell")),
-        r.getSeq[Float](r.fieldIndex("seed_vec")).toArray))
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1
-      }
-      if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    seeds.sortBy { case (id, v) => (-cos(v, query), id) }
-      .take(math.max(nProbe, 1)).map(_._1).toIndexedSeq
-  }
 }

@@ -160,22 +160,18 @@ object IvfPqIndex {
   }
 
   /** Probe the `nProbe` nearest cells (partition-pruned) and ADC-score
-    * their codes; `(cell, id, score)` top-k. The scan touches codes
-    * only — no vector column exists on disk to read. Tombstoned ids
-    * are anti-joined out before scoring ([[delete]]).
+    * their codes; `(cell, id, score)` top-k. Cells rank and the probed
+    * cells' top-k is taken by [[Similarity.probeSearch]], the probe
+    * path every IVF face shares; only the score is PQ's own. The scan
+    * touches codes only — no vector column exists on disk to read.
+    * Tombstoned ids are anti-joined out before scoring ([[delete]]).
     */
   def search(spark: SparkSession, path: String, query: Array[Float],
-      k: Int, nProbe: Int = 1): DataFrame = {
-    val cb = loadCodebooks(spark, path)
-    IvfIndex.dropTombstoned(
-      spark.read.parquet(s"$path/codes")
-        .filter(col("cell").isin(
-          IvfIndex.probeCells(spark, path, query, nProbe): _*)), // partition pruning
-      "id", spark, path)
-      .withColumn("score",
-        ProductQuantizer.adcScoreCol(col("codes"), cb, query))
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .select(col("cell"), col("id"), col("score"))
-  }
+      k: Int, nProbe: Int = 1): DataFrame =
+    Similarity.probeSearch(
+      IvfIndex.dropTombstoned(
+        spark.read.parquet(s"$path/codes"), "id", spark, path),
+      "id", spark.read.parquet(s"$path/seeds"), "cell", "seed_vec", query,
+      nProbe, k, ProductQuantizer.adcScoreCol(
+        col("codes"), loadCodebooks(spark, path), query))
 }

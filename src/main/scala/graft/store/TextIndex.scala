@@ -568,20 +568,60 @@ object TextIndex {
       b: Double = Bm25.DefaultB): DataFrame = {
     require(query.nonEmpty, "empty query")
     val terms = query.distinct
-    val (nBuckets, n, sumDl) = metaAndLiveStats(spark, path)
-    if (n <= 0L) return emptyResult(spark)
-    val buckets = terms.map(t => hash32Of(t) % nBuckets).distinct
-    val pruned = IvfIndex.dropTombstoned(
-      spark.read.parquet(s"$path/postings")
-        .filter(col("bucket").isin(buckets: _*)) // partition pruning
-        .filter(col("term").isin(terms: _*)),
-      "doc_id", spark, path)
-    // df per term from the pruned postings — driver state bounded by
-    // |terms|, exactly like Bm25.score's single stats row.
-    val dfs = pruned.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    scoreCandidates(pruned, terms, dfs, n, sumDl.toDouble / n, k1, b, k)
+    readCandidates(spark, path, terms, topTier = false, shared = false)
+      .fold(emptyResult(spark))(c =>
+        scoreCandidates(c.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k))
   }
+
+  /** One serving read's candidates: the posting rows of the query
+    * terms (tombstones anti-joined out), each term's df, and the live
+    * n / avgdl — or None when the index holds no live documents.
+    */
+  private case class Candidates(rows: DataFrame, dfs: Map[String, Long],
+      n: Long, avgdl: Double)
+
+  /** The candidate read every serving face shares: live stats, then
+    * ONLY the terms' bucket partitions of the full postings or of the
+    * impact tier (`topTier`), minus tombstones. df per term comes from
+    * the pruned rows — a count on the full postings, the stored TRUE
+    * `df_full` on the tier (every surviving row of a term carries the
+    * same value, so max reads it without a second scan) — driver state
+    * bounded by |terms|, exactly like Bm25.score's single stats row.
+    * `shared` (the batch faces) locally checkpoints the rows once: the
+    * df collect and the scoring join both read them, never the parquet
+    * again.
+    */
+  private def readCandidates(spark: SparkSession, path: String,
+      terms: Seq[String], topTier: Boolean,
+      shared: Boolean): Option[Candidates] = {
+    val (nBuckets, n, sumDl) = metaAndLiveStats(spark, path)
+    if (n <= 0L) None
+    else {
+      val buckets = terms.map(t => hash32Of(t) % nBuckets).distinct
+      val tier = if (topTier) "postings_top" else "postings"
+      val read = IvfIndex.dropTombstoned(
+        spark.read.parquet(s"$path/$tier")
+          .filter(col("bucket").isin(buckets: _*)) // partition pruning
+          .filter(col("term").isin(terms: _*)),
+        "doc_id", spark, path)
+      val pruned = if (shared) read.localCheckpoint() else read
+      val df = if (topTier) max(col("df_full")) else count(lit(1))
+      val dfs = pruned.groupBy(col("term")).agg(df.as("df"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      Some(Candidates(if (topTier) pruned.drop("df_full") else pruned,
+        dfs, n, sumDl.toDouble / n))
+    }
+  }
+
+  /** Cap on one serving batch's query count (r22, the r19 robustness
+    * ask): the per-batch score dispatch is one CASE chain with a branch
+    * per query, so plan size and generated code grow O(Q) — fine for
+    * real serving batches (hundreds), but an unbounded Q would blow
+    * codegen/analysis long before any executor works hard. Fail loud
+    * with the remedy instead of degrading mysteriously; a caller with
+    * more queries chunks and unions.
+    */
+  val MaxBatchQueries = 1024
 
   /** BATCH SERVING: answer a whole query batch from ONE pruned posting
     * read AND ONE plan — the [[graft.operators.Similarity
@@ -608,19 +648,18 @@ object TextIndex {
     * partitions by query_id over candidate-bounded rows (ties on
     * doc_id).
     */
-  /** Cap on one serving batch's query count (r22, the r19 robustness
-    * ask): the per-batch score dispatch is one CASE chain with a branch
-    * per query, so plan size and generated code grow O(Q) — fine for
-    * real serving batches (hundreds), but an unbounded Q would blow
-    * codegen/analysis long before any executor works hard. Fail loud
-    * with the remedy instead of degrading mysteriously; a caller with
-    * more queries chunks and unions.
-    */
-  val MaxBatchQueries = 1024
-
   def searchBatch(spark: SparkSession, path: String,
       queries: Seq[(Long, Seq[String])], k: Int,
-      k1: Double = Bm25.DefaultK1, b: Double = Bm25.DefaultB): DataFrame = {
+      k1: Double = Bm25.DefaultK1, b: Double = Bm25.DefaultB): DataFrame =
+    servingBatch(spark, path, queries, topTier = false, k1, b, k)
+
+  /** Both batch faces: the batch-argument checks, ONE candidate read
+    * for the whole batch ([[readCandidates]], materialized once), and
+    * the shared batch scoring tail.
+    */
+  private def servingBatch(spark: SparkSession, path: String,
+      queries: Seq[(Long, Seq[String])], topTier: Boolean, k1: Double,
+      b: Double, k: Int): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "empty batch or empty query")
     require(queries.length <= MaxBatchQueries,
@@ -628,23 +667,10 @@ object TextIndex {
         s"$MaxBatchQueries — chunk the batch and union the results")
     require(queries.map(_._1).distinct.length == queries.length,
       "query ids must be unique")
-    val allTerms = queries.flatMap(_._2).distinct
-    val (nBuckets, n, sumDl) = metaAndLiveStats(spark, path)
-    if (n <= 0L) return emptyBatchResult(spark)
-    val buckets = allTerms.map(t => hash32Of(t) % nBuckets).distinct
-    // one disk read for the whole batch, materialized once (the
-    // multi-consumer rule: the df collect and the scoring join below
-    // both read these candidate rows, never the parquet again).
-    val pruned = IvfIndex.dropTombstoned(
-      spark.read.parquet(s"$path/postings")
-        .filter(col("bucket").isin(buckets: _*))
-        .filter(col("term").isin(allTerms: _*)),
-      "doc_id", spark, path)
-      .localCheckpoint()
-    val dfs = pruned.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    scoreBatchCandidates(pruned, queries, dfs, n, sumDl.toDouble / n,
-      k1, b, k)
+    readCandidates(spark, path, queries.flatMap(_._2).distinct, topTier,
+      shared = true)
+      .fold(emptyBatchResult(spark))(c =>
+        scoreBatchCandidates(c.rows, queries, c.dfs, c.n, c.avgdl, k1, b, k))
   }
 
   /** BATCH SERVING off the IMPACT TIER — [[searchBatch]]'s one-plan
@@ -663,33 +689,8 @@ object TextIndex {
     */
   def searchTopBatch(spark: SparkSession, path: String,
       queries: Seq[(Long, Seq[String])], k: Int,
-      k1: Double = Bm25.DefaultK1, b: Double = Bm25.DefaultB): DataFrame = {
-    require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
-      "empty batch or empty query")
-    require(queries.length <= MaxBatchQueries,
-      s"batch of ${queries.length} queries exceeds MaxBatchQueries=" +
-        s"$MaxBatchQueries — chunk the batch and union the results")
-    require(queries.map(_._1).distinct.length == queries.length,
-      "query ids must be unique")
-    val allTerms = queries.flatMap(_._2).distinct
-    val (nBuckets, n, sumDl) = metaAndLiveStats(spark, path)
-    if (n <= 0L) return emptyBatchResult(spark)
-    val buckets = allTerms.map(t => hash32Of(t) % nBuckets).distinct
-    val pruned = IvfIndex.dropTombstoned(
-      spark.read.parquet(s"$path/postings_top")
-        .filter(col("bucket").isin(buckets: _*)) // partition pruning
-        .filter(col("term").isin(allTerms: _*)),
-      "doc_id", spark, path)
-      .localCheckpoint()
-    // TRUE df off the tier rows — every surviving row of a term
-    // carries the same df_full, so max reads it without a second scan
-    // (the [[searchTop]] idiom, batch-wide).
-    val dfs = pruned.groupBy(col("term"))
-      .agg(max(col("df_full")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    scoreBatchCandidates(pruned.drop("df_full"), queries, dfs, n,
-      sumDl.toDouble / n, k1, b, k)
-  }
+      k1: Double = Bm25.DefaultK1, b: Double = Bm25.DefaultB): DataFrame =
+    servingBatch(spark, path, queries, topTier = true, k1, b, k)
 
   private def emptyBatchResult(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -1076,18 +1077,8 @@ object TextIndex {
       b: Double = Bm25.DefaultB): DataFrame = {
     require(query.nonEmpty, "empty query")
     val terms = query.distinct
-    val (nBuckets, n, sumDl) = metaAndLiveStats(spark, path)
-    if (n <= 0L) return emptyResult(spark)
-    val buckets = terms.map(t => hash32Of(t) % nBuckets).distinct
-    val pruned = IvfIndex.dropTombstoned(
-      spark.read.parquet(s"$path/postings_top")
-        .filter(col("bucket").isin(buckets: _*)) // partition pruning
-        .filter(col("term").isin(terms: _*)),
-      "doc_id", spark, path)
-    val dfs = pruned.groupBy(col("term"))
-      .agg(max(col("df_full")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    scoreCandidates(pruned.drop("df_full"), terms, dfs, n,
-      sumDl.toDouble / n, k1, b, k)
+    readCandidates(spark, path, terms, topTier = true, shared = false)
+      .fold(emptyResult(spark))(c =>
+        scoreCandidates(c.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k))
   }
 }

@@ -52,23 +52,51 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(got == brute)
   }
 
-  test("searchBatch matches per-probe search and prunes partitions dynamically") {
-    val probes = Tables.embeddings(spark, sf)
-      .filter(col("vec_id") % 100 === 0 && col("vec_id") < 300)
-      .select(col("vec_id").as("probe_id"), col("embedding"))
-    val batch = IvfIndex.searchBatch(spark, path, "vec_id", "embedding",
+  /** Rows of [[IvfIndex.searchBatch]] and, per probe, of
+    * [[IvfIndex.search]] as (probe, rank, id) sets; plus the batch frame.
+    */
+  private def batchAndSolo(index: String, probes: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, Set[(Long, Long, Long)], Set[(Long, Long, Long)]) = {
+    val batch = IvfIndex.searchBatch(spark, index, "vec_id", "embedding",
       probes, "probe_id", "embedding", k = 5)
-    // Equality per probe against the single-query face (same cells,
-    // same arithmetic, same ties).
     val got = batch.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val expected = probes.collect().flatMap { p =>
       val q = p.getSeq[Float](1).toArray
-      IvfIndex.search(spark, path, "vec_id", "embedding", q, k = 5)
+      IvfIndex.search(spark, index, "vec_id", "embedding", q, k = 5)
         .collect().zipWithIndex
         .map { case (r, i) => (p.getLong(0), (i + 1).toLong, r.getLong(1)) }
     }.toSet
+    (batch, got, expected)
+  }
+
+  test("searchBatch matches per-probe search and prunes partitions dynamically") {
+    val probes = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") % 100 === 0 && col("vec_id") < 300)
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    // Equality per probe against the single-query face (same cells,
+    // same arithmetic, same ties).
+    val (batch, got, expected) = batchAndSolo(path, probes)
     assert(got == expected)
+    // A cell-ranking near-tie: seed 0 = 3q and seed 1 = q are parallel,
+    // so both centroids score 1.0 under the clamped cosine and the tie
+    // goes to cell 0 — where ivfAssign also puts q. An unclamped
+    // ranker scores cos(q, q) = 1.0000000000000002 and probes cell 1
+    // instead; both faces must probe the same cell.
+    import spark.implicits._
+    val q = Array(-0.5668011903762817f, -0.15576684474945068f,
+      -0.9419184327125549f, -0.5566166639328003f)
+    val tiePath = Files.createTempDirectory("graft-ivf-tie").toString
+    val docs = (0 until 6).map { j =>
+      (j.toLong, q.zipWithIndex.map { case (x, i) =>
+        if (j > 0 && i == j % q.length) x + 0.01f * j else x }.toSeq)
+    }.toDF("vec_id", "embedding")
+    IvfIndex.build(docs, "vec_id", "embedding",
+      Seq((0L, q.map(_ * 3f).toSeq), (1L, q.toSeq)).toDF("seed_id", "seed_vec"),
+      "seed_id", "seed_vec", tiePath)
+    val (_, tieGot, tieExpected) =
+      batchAndSolo(tiePath, Seq((0L, q.toSeq)).toDF("probe_id", "embedding"))
+    assert(tieGot.nonEmpty && tieGot == tieExpected)
     // The scale pin: the cell filter must reach the partitioned scan
     // as a DYNAMIC pruning subquery (derived from the broadcast
     // probe-cell pairs at runtime), so unprobed cells' files are
