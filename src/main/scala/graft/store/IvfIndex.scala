@@ -1,7 +1,11 @@
 package graft.store
 
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.Similarity
 
@@ -82,13 +86,23 @@ object IvfIndex {
     */
   def build(df: DataFrame, idCol: String, vecCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
+      path: String): Unit =
+    writeLayout(
+      Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol, seedVecCol),
+      seeds, seedIdCol, seedVecCol, idCol, path)
+
+  /** The build writes both faces share: the cell-partitioned `vectors`
+    * layout, the seeds, the id column and the layout's column types.
+    */
+  private def writeLayout(assigned: DataFrame, seeds: DataFrame,
+      seedIdCol: String, seedVecCol: String, idCol: String,
       path: String): Unit = {
-    Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol, seedVecCol)
-      .write.mode(SaveMode.Overwrite)
+    assigned.write.mode(SaveMode.Overwrite)
       .partitionBy("cell")
       .parquet(s"$path/vectors")
     writeSeeds(seeds, seedIdCol, seedVecCol, path)
-    writeIdCol(df.sparkSession, idCol, path)
+    writeIdCol(assigned.sparkSession, idCol, path)
+    writeVectorsRecord(assigned, path)
   }
 
   /** [[build]] with int8 scalar-quantized storage ([[graft.operators
@@ -106,17 +120,12 @@ object IvfIndex {
     */
   def buildQuantized(df: DataFrame, idCol: String, vecCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
-      path: String): Unit = {
-    graft.operators.ScalarQuant.quantize(
-      Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol, seedVecCol),
-      vecCol)
-      .drop(vecCol)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/vectors")
-    writeSeeds(seeds, seedIdCol, seedVecCol, path)
-    writeIdCol(df.sparkSession, idCol, path)
-  }
+      path: String): Unit =
+    writeLayout(
+      graft.operators.ScalarQuant.quantize(
+        Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol, seedVecCol),
+        vecCol).drop(vecCol),
+      seeds, seedIdCol, seedVecCol, idCol, path)
 
   /** INCREMENTAL index maintenance: assign a delta batch against the
     * index's OWN frozen on-disk seeds and append into the existing
@@ -133,10 +142,26 @@ object IvfIndex {
     * v18 cell-balance profile is the signal that it's due.
     */
   def append(df: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val seeds = df.sparkSession.read.parquet(s"$path/seeds")
-    Similarity.ivfAssign(df, idCol, vecCol, seeds, "cell", "seed_vec")
-      .write.mode(SaveMode.Append)
+      path: String): Unit =
+    appendLayout(
+      Similarity.ivfAssign(df, idCol, vecCol, readSeeds(df.sparkSession, path),
+        "cell", "seed_vec"),
+      path)
+
+  /** Append assigned rows to `vectors` after checking they carry exactly
+    * the columns and types recorded at build, in any order (parquet
+    * reads columns by name): a delta missing a column (or typing it
+    * differently) would make every read of those rows return nulls or
+    * fail, long after the append that caused it.
+    */
+  private def appendLayout(assigned: DataFrame, path: String): Unit = {
+    val want = vectorsRecord(assigned.sparkSession, path)
+    val got = dataColumns(assigned)
+    def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    require(shape(got) == shape(want),
+      s"appended rows do not match the vectors layout of $path: " +
+        s"got ${got.simpleString}, the index was built with ${want.simpleString}")
+    assigned.write.mode(SaveMode.Append)
       .partitionBy("cell")
       .parquet(s"$path/vectors")
   }
@@ -147,16 +172,13 @@ object IvfIndex {
     * ones to [[searchQuantized]].
     */
   def appendQuantized(df: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val seeds = df.sparkSession.read.parquet(s"$path/seeds")
-    graft.operators.ScalarQuant.quantize(
-      Similarity.ivfAssign(df, idCol, vecCol, seeds, "cell", "seed_vec"),
-      vecCol)
-      .drop(vecCol)
-      .write.mode(SaveMode.Append)
-      .partitionBy("cell")
-      .parquet(s"$path/vectors")
-  }
+      path: String): Unit =
+    appendLayout(
+      graft.operators.ScalarQuant.quantize(
+        Similarity.ivfAssign(df, idCol, vecCol,
+          readSeeds(df.sparkSession, path), "cell", "seed_vec"),
+        vecCol).drop(vecCol),
+      path)
 
   /** Per-document DELETE as a tombstone write: appends the ids to
     * `<path>/tombstones` (one long column, parquet). No index data
@@ -182,15 +204,21 @@ object IvfIndex {
     ids.select(col(ids.columns.head).cast("long").as("id"))
       .write.mode(SaveMode.Append).parquet(s"$path/tombstones")
 
+  /** `tombstones/`: the deleted ids, shared by every index here
+    * ([[TextIndex.delete]] and [[TextIndex.deleteBatch]] write it too).
+    */
+  private[store] val TombstonesSchema = StructType(Seq(
+    StructField("id", LongType)))
+
   /** The live tombstone set, or None when nothing was ever deleted —
     * None keeps every read path's plan byte-identical to a
     * tombstone-free index (no join node appears at all).
     */
   private[store] def tombstones(spark: SparkSession, path: String)
       : Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(s"$path/tombstones")
-    if (Commit.fs(spark, path).exists(p)) Some(spark.read.parquet(p.toString))
+    if (Commit.fs(spark, path).exists(p))
+      Some(spark.read.schema(TombstonesSchema).parquet(p.toString))
     else None
   }
 
@@ -224,9 +252,11 @@ object IvfIndex {
   def compact(spark: SparkSession, path: String): (Long, Long) =
     // resolve the stored id column only when tombstones exist, so a
     // tombstone-free compact works on indexes without the marker
-    compactLayout(spark, path, "vectors", storedIdCol(spark, path))
+    compactLayout(spark, path, "vectors", vectorsSchema(spark, path),
+      storedIdCol(spark, path))
 
-  /** The shared compact core: read `<path>/<dirName>`, anti-join any
+  /** The shared compact core: read `<path>/<dirName>` with the
+    * caller's pinned `schema`, anti-join any
     * tombstones (on `idCol`, resolved lazily — only when tombstones
     * exist), fold to one file per cell, and swap the directory in with
     * [[Commit.swap]]. Shared
@@ -234,17 +264,16 @@ object IvfIndex {
     * float layout's crash-safety story.
     */
   private[store] def compactLayout(spark: SparkSession, path: String,
-      dirName: String, idCol: => String,
+      dirName: String, schema: StructType, idCol: => String,
       partCol: String = "cell",
       clearTombstones: Boolean = true): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
     val dir = new Path(s"$path/$dirName")
     val tmp = s"$path/${dirName}_compacting"
     val fs = Commit.fs(spark, path)
     val before = Commit.swap(fs, dir, new Path(tmp),
         new Path(s"$path/${dirName}_old")) {
       val before = Commit.parquetFiles(fs, dir).size.toLong
-      val src0 = spark.read.parquet(dir.toString)
+      val src0 = spark.read.schema(schema).parquet(dir.toString)
       // Unreferenced cells are DEAD by invariant: a cell directory whose
       // id the seeds table does not list is a [[splitCell]] leftover (the
       // superseded source cell, or staged halves from a crashed split
@@ -252,12 +281,9 @@ object IvfIndex {
       // it, so compaction drops it physically. This is what makes
       // splitCell crash-tolerant without a journal: every crash point
       // leaves at worst dead extra bytes, reclaimed here.
-      val liveCells = {
-        val p = new Path(s"$path/seeds")
-        if (!fs.exists(p)) None
-        else Some(spark.read.parquet(p.toString)
-          .select(col("cell")).collect().map(_.getLong(0)).toSeq)
-      }
+      val liveCells =
+        if (!fs.exists(new Path(s"$path/seeds"))) None
+        else Some(cellIdsOf(readSeeds(spark, path)).toSeq)
       val src = liveCells.fold(src0)(cs => src0.filter(col("cell").isin(cs: _*)))
       tombstones(spark, path).fold(src) { t =>
         src.join(broadcast(t), src(idCol) === t("id"), "left_anti")
@@ -301,14 +327,13 @@ object IvfIndex {
     */
   def splitCell(spark: SparkSession, path: String, idCol: String,
       vecCol: String, cell: Long, iters: Int = 5): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
-    val seeds = spark.read.parquet(s"$path/seeds")
-    val cellIds = seeds.select(col("cell")).collect().map(_.getLong(0))
+    val seeds = readSeeds(spark, path)
+    val cellIds = cellIdsOf(seeds)
     require(cellIds.contains(cell), s"no such cell in the codebook: $cell")
-    val hot = spark.read.parquet(s"$path/vectors")
+    val hot = readVectors(spark, path)
       .filter(col("cell") === cell) // partition-pruned: only this cell's IO
       .drop("cell")
-    val nextId = nextCellId(spark, path, cellIds)
+    val nextId = nextCellId(spark, path, cellIds, "vectors")
     val sub = trainSeeds(hot, idCol, vecCol, k = 2, iters = iters)
       .select((col("cell_id") + nextId).as("cell_id"), col("seed_vec"))
     // 1) append the reassigned halves (invisible: not in seeds yet)
@@ -344,8 +369,7 @@ object IvfIndex {
     * [[mergeCells]].
     */
   private[store] def nextCellId(spark: SparkSession, path: String,
-      cellIds: Array[Long], layout: String = "vectors"): Long = {
-    import org.apache.hadoop.fs.Path
+      cellIds: Array[Long], layout: String): Long = {
     val diskMax = Commit.fs(spark, path).listStatus(new Path(s"$path/$layout"))
       .iterator.map(_.getPath.getName)
       .collect { case n if n.startsWith("cell=") => n.drop(5).toLong }
@@ -371,22 +395,30 @@ object IvfIndex {
     * matching [[splitCell]]. Returns the merged cell id.
     */
   def mergeCells(spark: SparkSession, path: String, a: Long,
-      b: Long): Long = {
-    import org.apache.hadoop.fs.Path
+      b: Long): Long =
+    mergeCellsIn(spark, path, "vectors", vectorsSchema(spark, path), a, b)
+
+  /** [[mergeCells]]'s body for any cell-partitioned layout under `path`
+    * (`vectors` here, `codes` for [[IvfPqIndex.mergeCells]]), read with
+    * the caller's pinned `schema`: one copy of the append → seeds flip
+    * → drop protocol.
+    */
+  private[store] def mergeCellsIn(spark: SparkSession, path: String,
+      layout: String, schema: StructType, a: Long, b: Long): Long = {
     require(a != b, s"mergeCells needs two distinct cells, got $a twice")
-    val seeds = spark.read.parquet(s"$path/seeds")
-    val cellIds = seeds.select(col("cell")).collect().map(_.getLong(0))
+    val seeds = readSeeds(spark, path)
+    val cellIds = cellIdsOf(seeds)
     Seq(a, b).foreach(c => require(cellIds.contains(c),
       s"no such cell in the codebook: $c"))
-    val nextId = nextCellId(spark, path, cellIds)
+    val nextId = nextCellId(spark, path, cellIds, layout)
     // 1) append both cells' rows under the new id (invisible)
-    spark.read.parquet(s"$path/vectors")
+    spark.read.schema(schema).parquet(s"$path/$layout")
       .filter(col("cell").isin(a, b)) // partition-pruned: two cells' IO
       .drop("cell")
       .withColumn("cell", lit(nextId))
       .write.mode(SaveMode.Append)
       .partitionBy("cell")
-      .parquet(s"$path/vectors")
+      .parquet(s"$path/$layout")
     // 2) flip the codebook — the commit point (collected first, as in
     // splitCell: overwriting the seeds dir from a plan reading it
     // would fail/corrupt).
@@ -398,12 +430,12 @@ object IvfIndex {
     val mean = sa.zip(sb).map { case (x, y) => (x + y) / 2f }
     val kept = rows.filterNot(r => r._1 == a || r._1 == b)
     import spark.implicits._
-    writeSeeds((kept :+ (nextId, mean)).toSeq.toDF("cell", "seed_vec"),
+    writeSeeds((kept :+ ((nextId, mean))).toSeq.toDF("cell", "seed_vec"),
       "cell", "seed_vec", path)
     // 3) drop the retired source cells (best-effort; dead if they stay)
     val fs = Commit.fs(spark, path)
     Seq(a, b).foreach(c =>
-      fs.delete(new Path(s"$path/vectors/cell=$c"), true))
+      fs.delete(new Path(s"$path/$layout/cell=$c"), true))
     nextId
   }
 
@@ -419,20 +451,105 @@ object IvfIndex {
       .write.mode(SaveMode.Overwrite).parquet(s"$path/idcol")
   }
 
+  /** `idcol/`: the one-row id column name [[writeIdCol]] writes. */
+  private[store] val IdColSchema = StructType(Seq(
+    StructField("id_col", StringType)))
+
   private def storedIdCol(spark: SparkSession, path: String): String = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(s"$path/idcol")
     require(Commit.fs(spark, path).exists(p),
       s"$path/idcol missing — tombstone compaction needs the id column " +
         "recorded at build time (rebuild, or write the marker by hand)")
-    spark.read.parquet(p.toString).head().getString(0)
+    spark.read.schema(IdColSchema).parquet(p.toString).head().getString(0)
   }
+
+  /** The `vectors` layout carries whatever columns the caller built it
+    * from, so its read schema cannot be a constant: [[build]] records
+    * the data columns' types as JSON in `vectors_schema.json`, beside
+    * `idcol`, and every read passes them back instead of paying a
+    * footer-inference job. The record is a plain file read on the
+    * driver, not a Spark job.
+    */
+  private def writeVectorsRecord(assigned: DataFrame, path: String): Unit = {
+    val out = Commit.fs(assigned.sparkSession, path)
+      .create(new Path(s"$path/$VectorsRecord"), true)
+    try out.write(dataColumns(assigned).json.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  private val VectorsRecord = "vectors_schema.json"
+
+  /** The partition column as every cell-partitioned layout reads it back
+    * (`cell=N` directory names infer as int).
+    */
+  private[store] val CellField = StructField("cell", IntegerType)
+
+  /** The data columns of an assigned frame as parquet reads them back:
+    * every field, element and map value nullable.
+    */
+  private def dataColumns(assigned: DataFrame): StructType = {
+    def readBack(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = readBack(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(readBack(e), containsNull = true)
+      case MapType(k, v, _) => MapType(readBack(k), readBack(v), true)
+      case other => other
+    }
+    readBack(StructType(assigned.schema.filterNot(_.name == "cell")))
+      .asInstanceOf[StructType]
+  }
+
+  /** The recorded data columns of `vectors`; fails with the remedy when
+    * the index predates the record (a missing column must never read
+    * back as silent nulls).
+    */
+  private def vectorsRecord(spark: SparkSession, path: String): StructType = {
+    val p = new Path(s"$path/$VectorsRecord")
+    val fs = Commit.fs(spark, path)
+    require(fs.exists(p),
+      s"$p missing — reading the vectors layout needs the column types " +
+        "recorded at build time (rebuild the index with IvfIndex.build or " +
+        "buildQuantized)")
+    val in = fs.open(p)
+    val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+      finally in.close()
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
+  /** The full read schema of `vectors`: the recorded columns, then
+    * `cell`.
+    */
+  private[store] def vectorsSchema(spark: SparkSession, path: String)
+      : StructType =
+    StructType(vectorsRecord(spark, path) :+ CellField)
+
+  /** The `vectors` layout read with its recorded schema. Scans still
+    * read only the columns a plan uses, and a column the record lacks
+    * fails at analysis instead of reading back as nulls.
+    */
+  private def readVectors(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(vectorsSchema(spark, path)).parquet(s"$path/vectors")
+
+  /** `seeds/`: the codebook, (cell, seed_vec). The writer casts to the
+    * pinned types, so a caller's int ids or its seed column names never
+    * reach disk.
+    */
+  private[store] val SeedsSchema = StructType(Seq(
+    StructField("cell", LongType),
+    StructField("seed_vec", ArrayType(FloatType))))
 
   private[store] def writeSeeds(seeds: DataFrame, seedIdCol: String,
       seedVecCol: String, path: String): Unit =
-    seeds.select(col(seedIdCol).as("cell"), col(seedVecCol).as("seed_vec"))
+    seeds.select(col(seedIdCol).cast(LongType).as("cell"),
+        col(seedVecCol).cast(ArrayType(FloatType)).as("seed_vec"))
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/seeds")
+
+  private[store] def readSeeds(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(SeedsSchema).parquet(s"$path/seeds")
+
+  private def cellIdsOf(seeds: DataFrame): Array[Long] =
+    seeds.select(col("cell")).collect().map(_.getLong(0))
 
   /** Search: the on-disk face of [[Similarity.ivfMultiProbeSearch]]
     * (delegated, like [[searchBatch]] and [[searchQuantized]], so every
@@ -443,13 +560,19 @@ object IvfIndex {
     * sort). Tombstoned ids ([[delete]]) are anti-joined out of the
     * pruned scan before scoring, so a deleted vector is invisible from
     * the moment the tombstone lands, not from the next compact.
+    *
+    * Job count: a search and its collect run 3 Spark jobs — the
+    * codebook rank ([[Similarity.probeCells]]), the tombstone broadcast
+    * (only when something was deleted) and the probed-cell top-k. The
+    * seeds and tombstones read with their pinned schemas and `vectors`
+    * with the types recorded at build ([[vectorsSchema]]), so no read
+    * pays a footer-inference job (one job each).
     */
   def search(spark: SparkSession, path: String, idCol: String,
       vecCol: String, query: Array[Float], k: Int, nProbe: Int = 1): DataFrame =
     Similarity.ivfMultiProbeSearch(
-      dropTombstoned(spark.read.parquet(s"$path/vectors"), idCol, spark, path),
-      idCol, vecCol,
-      spark.read.parquet(s"$path/seeds"), "cell", "seed_vec",
+      dropTombstoned(readVectors(spark, path), idCol, spark, path),
+      idCol, vecCol, readSeeds(spark, path), "cell", "seed_vec",
       query, nProbe, k)
 
   /** Batch search: the on-disk face of [[Similarity.ivfSearchBatch]]
@@ -469,9 +592,8 @@ object IvfIndex {
       vecCol: String, probes: DataFrame, probeIdCol: String,
       probeVecCol: String, k: Int, nProbe: Int = 1): DataFrame =
     Similarity.ivfSearchBatch(
-      dropTombstoned(spark.read.parquet(s"$path/vectors"), idCol, spark, path),
-      idCol, vecCol,
-      spark.read.parquet(s"$path/seeds"), "cell", "seed_vec",
+      dropTombstoned(readVectors(spark, path), idCol, spark, path),
+      idCol, vecCol, readSeeds(spark, path), "cell", "seed_vec",
       probes, probeIdCol, probeVecCol, nProbe, k)
 
   /** Probe a [[buildQuantized]] index: the on-disk face of
@@ -484,8 +606,7 @@ object IvfIndex {
   def searchQuantized(spark: SparkSession, path: String, idCol: String,
       query: Array[Float], k: Int, nProbe: Int = 1): DataFrame =
     Similarity.ivfQuantizedSearch(
-      dropTombstoned(spark.read.parquet(s"$path/vectors"), idCol, spark, path),
-      idCol,
-      spark.read.parquet(s"$path/seeds"), "cell", "seed_vec",
+      dropTombstoned(readVectors(spark, path), idCol, spark, path),
+      idCol, readSeeds(spark, path), "cell", "seed_vec",
       query, nProbe, k)
 }

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.{ProductQuantizer, Similarity}
 import graft.operators.ProductQuantizer.Codebooks
@@ -39,16 +40,9 @@ object IvfPqIndex {
       cb: Codebooks, path: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol, seedVecCol)
-      .select(col(idCol).cast("long").as("id"),
-        ProductQuantizer.codesCol(col(vecCol), cb).as("codes"),
-        col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/codes")
-    seeds.select(col(seedIdCol).as("cell"), col(seedVecCol).as("seed_vec"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/seeds")
+    writeCodes(Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol,
+      seedVecCol), idCol, vecCol, cb, path, SaveMode.Overwrite)
+    IvfIndex.writeSeeds(seeds, seedIdCol, seedVecCol, path)
     cb.codewords.iterator.zipWithIndex.flatMap { case (cws, b) =>
       cws.iterator.zipWithIndex.map { case (cw, c) => (b, c, cw.toSeq) }
     }.toSeq.toDF("block", "code", "codeword")
@@ -56,9 +50,35 @@ object IvfPqIndex {
       .write.mode(SaveMode.Overwrite).parquet(s"$path/codebooks")
   }
 
+  /** `codes/`: (id, PQ codes) partitioned by cell — the layout
+    * [[writeCodes]] writes for [[build]] and [[append]].
+    */
+  private[store] val CodesSchema = StructType(Seq(
+    StructField("id", LongType),
+    StructField("codes", ArrayType(IntegerType)),
+    IvfIndex.CellField))
+
+  /** `codebooks/`: one (block, code, codeword) row per PQ codeword. */
+  private[store] val CodebooksSchema = StructType(Seq(
+    StructField("block", IntegerType),
+    StructField("code", IntegerType),
+    StructField("codeword", ArrayType(FloatType))))
+
+  /** Encode assigned rows against `cb` and write them to `codes`. */
+  private def writeCodes(assigned: DataFrame, idCol: String, vecCol: String,
+      cb: Codebooks, path: String, mode: SaveMode): Unit =
+    assigned
+      .select(col(idCol).cast("long").as("id"),
+        ProductQuantizer.codesCol(col(vecCol), cb).as("codes"),
+        col("cell"))
+      .write.mode(mode)
+      .partitionBy("cell")
+      .parquet(s"$path/codes")
+
   /** Reconstruct the per-block codebooks persisted by [[build]]. */
   def loadCodebooks(spark: SparkSession, path: String): Codebooks = {
-    val rows = spark.read.parquet(s"$path/codebooks").collect()
+    val rows = spark.read.schema(CodebooksSchema)
+      .parquet(s"$path/codebooks").collect()
     require(rows.nonEmpty, s"no codebooks at $path/codebooks")
     val blocks = rows.iterator.map(_.getInt(0)).max + 1
     val codes = rows.iterator.map(_.getInt(1)).max + 1
@@ -81,15 +101,9 @@ object IvfPqIndex {
   def append(df: DataFrame, idCol: String, vecCol: String,
       path: String): Unit = {
     val spark = df.sparkSession
-    val seeds = spark.read.parquet(s"$path/seeds")
-    val cb = loadCodebooks(spark, path)
-    Similarity.ivfAssign(df, idCol, vecCol, seeds, "cell", "seed_vec")
-      .select(col(idCol).cast("long").as("id"),
-        ProductQuantizer.codesCol(col(vecCol), cb).as("codes"),
-        col("cell"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("cell")
-      .parquet(s"$path/codes")
+    writeCodes(Similarity.ivfAssign(df, idCol, vecCol,
+        IvfIndex.readSeeds(spark, path), "cell", "seed_vec"),
+      idCol, vecCol, loadCodebooks(spark, path), path, SaveMode.Append)
   }
 
   /** Per-document delete, [[IvfIndex.delete]]'s PQ twin — the PQ
@@ -105,7 +119,7 @@ object IvfPqIndex {
     * [[Commit.swap]]), applied to the `codes` directory.
     */
   def compact(spark: SparkSession, path: String): (Long, Long) =
-    IvfIndex.compactLayout(spark, path, "codes", "id")
+    IvfIndex.compactLayout(spark, path, "codes", CodesSchema, "id")
 
   /** Merge two cold cells — [[IvfIndex.mergeCells]]'s PQ twin, SOUND
     * for this layout precisely because [[build]] quantizes the RAW
@@ -123,41 +137,8 @@ object IvfPqIndex {
     * [[compact]]. Returns the merged cell id.
     */
   def mergeCells(spark: SparkSession, path: String, a: Long,
-      b: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    require(a != b, s"mergeCells needs two distinct cells, got $a twice")
-    val seeds = spark.read.parquet(s"$path/seeds")
-    val cellIds = seeds.select(col("cell")).collect().map(_.getLong(0))
-    Seq(a, b).foreach(c => require(cellIds.contains(c),
-      s"no such cell in the codebook: $c"))
-    val nextId = IvfIndex.nextCellId(spark, path, cellIds, "codes")
-    // 1) append both cells' code rows under the new id (invisible)
-    spark.read.parquet(s"$path/codes")
-      .filter(col("cell").isin(a, b)) // partition-pruned: two cells' IO
-      .drop("cell")
-      .withColumn("cell", lit(nextId))
-      .write.mode(SaveMode.Append)
-      .partitionBy("cell")
-      .parquet(s"$path/codes")
-    // 2) flip the codebook — the commit point (collected first:
-    // overwriting the seeds dir from a plan reading it would corrupt).
-    val rows = seeds.collect()
-      .map(r => (r.getLong(r.fieldIndex("cell")),
-        r.getSeq[Float](r.fieldIndex("seed_vec"))))
-    val sa = rows.find(_._1 == a).get._2
-    val sb = rows.find(_._1 == b).get._2
-    val mean = sa.zip(sb).map { case (x, y) => (x + y) / 2f }
-    val kept = rows.filterNot(r => r._1 == a || r._1 == b)
-    import spark.implicits._
-    IvfIndex.writeSeeds(
-      (kept :+ ((nextId, mean))).toSeq.toDF("cell", "seed_vec"),
-      "cell", "seed_vec", path)
-    // 3) drop the retired source cells (best-effort; dead if they stay)
-    val fs = Commit.fs(spark, path)
-    Seq(a, b).foreach(c =>
-      fs.delete(new Path(s"$path/codes/cell=$c"), true))
-    nextId
-  }
+      b: Long): Long =
+    IvfIndex.mergeCellsIn(spark, path, "codes", CodesSchema, a, b)
 
   /** Probe the `nProbe` nearest cells (partition-pruned) and ADC-score
     * their codes; `(cell, id, score)` top-k. Cells rank and the probed
@@ -170,8 +151,9 @@ object IvfPqIndex {
       k: Int, nProbe: Int = 1): DataFrame =
     Similarity.probeSearch(
       IvfIndex.dropTombstoned(
-        spark.read.parquet(s"$path/codes"), "id", spark, path),
-      "id", spark.read.parquet(s"$path/seeds"), "cell", "seed_vec", query,
+        spark.read.schema(CodesSchema).parquet(s"$path/codes"), "id", spark,
+        path),
+      "id", IvfIndex.readSeeds(spark, path), "cell", "seed_vec", query,
       nProbe, k, ProductQuantizer.adcScoreCol(
         col("codes"), loadCodebooks(spark, path), query))
 }

@@ -1,10 +1,12 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DriverRows
+import org.apache.spark.sql.types._
 
 import graft.text.{Bm25, TextFunctions => TF}
 
@@ -55,8 +57,15 @@ import graft.text.{Bm25, TextFunctions => TF}
   * to the same doubles), and the per-document sum is assembled in TERM
   * ORDER as a fixed chain of column additions rather than a SUM over
   * rows, because a row-order SUM of doubles would drift in the last ulp
-  * against the scan path's left-to-right fold. The TextIndexSpec pins
+  * against the scan path's left-to-right fold. The solo faces' driver
+  * finish replays the same chain on the driver. The TextIndexSpec pins
   * the equality exactly, not approximately.
+  *
+  * Every layout is read back with the schema pinned next to its writer
+  * (`PostingsSchema`, `StatsSchema`, ...), never inferred: inference
+  * costs one Spark job per read (about 80 ms at serving sizes), and a
+  * serving call reads three to four layouts. LayoutSchemaSpec pins each
+  * value to what the writers produce.
   */
 object TextIndex {
 
@@ -88,6 +97,13 @@ object TextIndex {
       .write.mode(SaveMode.Overwrite).parquet(s"$path/meta")
   }
 
+  /** `meta/`: the one-row bucket modulus [[build]] writes. */
+  private[store] val MetaSchema = StructType(Seq(
+    StructField("n_buckets", IntegerType)))
+
+  private def nBucketsOf(spark: SparkSession, path: String): Int =
+    spark.read.schema(MetaSchema).parquet(s"$path/meta").head().getInt(0)
+
   /** INCREMENTAL maintenance: index a delta batch into the existing
     * layout (the [[IvfIndex.append]] shape — postings land inside
     * existing `bucket=N` directories, doclens fold by append, and the
@@ -99,11 +115,30 @@ object TextIndex {
     * that is index freshness, not drift.)
     */
   def append(docs: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val spark = docs.sparkSession
-    val nBuckets = spark.read.parquet(s"$path/meta").head().getInt(0)
-    writeParts(docs, idCol, textCol, path, nBuckets, SaveMode.Append)
-  }
+      path: String): Unit =
+    writeParts(docs, idCol, textCol, path, nBucketsOf(docs.sparkSession, path),
+      SaveMode.Append)
+
+  /** `postings/`: (term, doc_id, dl, tf) partitioned by bucket. */
+  private[store] val PostingsSchema = StructType(Seq(
+    StructField("term", StringType),
+    StructField("doc_id", LongType),
+    StructField("dl", LongType),
+    StructField("tf", LongType),
+    StructField("bucket", IntegerType)))
+
+  /** `doclens/`: (doc_id, dl). */
+  private[store] val DoclensSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("dl", LongType)))
+
+  /** `stats/` and `tombstone_stats/`: (n_docs, sum_dl) delta rows. */
+  private[store] val StatsSchema = StructType(Seq(
+    StructField("n_docs", LongType),
+    StructField("sum_dl", LongType)))
+
+  private def readDoclens(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(DoclensSchema).parquet(s"$path/doclens")
 
   /** The three layout writes for one doc frame: bucketed postings,
     * doclens, and ONE stats delta row holding exactly this frame's
@@ -304,8 +339,7 @@ object TextIndex {
             s"no positional tier at $path — withPositions must be set " +
               "from the FIRST batch (or buildPositions over the full " +
               "corpus before streaming into it)")
-        val seen = spark.read.parquet(s"$path/doclens")
-          .select(col("doc_id"))
+        val seen = readDoclens(spark, path).select(col("doc_id"))
         // checkpoint: writeParts consumes `fresh` three times (the
         // multi-consumer rule), and the anti-join must be evaluated once.
         val fresh = batch.join(broadcast(batch.select(col(idCol)).distinct()
@@ -347,7 +381,7 @@ object TextIndex {
     // The stats correction is paid ONCE here (one doclens lookup per
     // bulk delete), so search never scans doclens: it reads the tiny
     // correction rows instead. Ids absent from the index contribute 0.
-    val doclens = spark.read.parquet(s"$path/doclens")
+    val doclens = readDoclens(spark, path)
     val c = doclens
       .join(broadcast(fresh), doclens("doc_id") === fresh("id"))
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
@@ -398,7 +432,7 @@ object TextIndex {
             .localCheckpoint() // consumed twice below (the correction + write)
           if (fresh.head(1).isEmpty) false
           else {
-            val doclens = spark.read.parquet(s"$path/doclens")
+            val doclens = readDoclens(spark, path)
             val c = doclens
               .join(broadcast(fresh), doclens("doc_id") === fresh("id"))
               .agg(count(lit(1)).as("n"),
@@ -438,7 +472,7 @@ object TextIndex {
     // (1) purge doclens of reclaimed docs while the tombstones that
     // name them still exist (a redo re-runs this as a no-op).
     dead.foreach { t =>
-      val doclens = spark.read.parquet(s"$path/doclens")
+      val doclens = readDoclens(spark, path)
       val kept = doclens
         .join(broadcast(t), doclens("doc_id") === t("id"), "left_anti")
         .localCheckpoint() // the source dir is about to be overwritten
@@ -449,7 +483,7 @@ object TextIndex {
     // from a crashed predecessor heals here.
     val tsP = new Path(s"$path/tombstone_stats")
     if (fs.exists(tsP)) fs.delete(tsP, true)
-    val s = spark.read.parquet(s"$path/doclens")
+    val s = readDoclens(spark, path)
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0L)).as("s")).head()
     Seq((s.getLong(0), s.getAs[Long]("s")))
@@ -467,8 +501,8 @@ object TextIndex {
     // corpus-side ordering lives only here), so this tier compacts
     // against the same tombstones instead of rebuilding.
     if (Commit.parquetFiles(fs, new Path(s"$path/postings_pos")).nonEmpty)
-      IvfIndex.compactLayout(spark, path, "postings_pos", "doc_id",
-        partCol = "bucket", clearTombstones = false)
+      IvfIndex.compactLayout(spark, path, "postings_pos", PositionsSchema,
+        "doc_id", partCol = "bucket", clearTombstones = false)
     // (3c) the IMPACT tier reclaims against the same tombstones too,
     // EVEN THOUGH step (5) rebuilds it: the rebuild runs only after
     // (4) has cleared the tombstone set, so a crash between the two
@@ -479,16 +513,16 @@ object TextIndex {
     // its df_full stays the snapshot's until (5) refreshes it, the
     // already-documented freshness lag.
     if (Commit.parquetFiles(fs, new Path(s"$path/postings_top")).nonEmpty)
-      IvfIndex.compactLayout(spark, path, "postings_top", "doc_id",
-        partCol = "bucket", clearTombstones = false)
+      IvfIndex.compactLayout(spark, path, "postings_top", PostingsTopSchema,
+        "doc_id", partCol = "bucket", clearTombstones = false)
     // (4) physical reclamation; clears tombstones/ as its last step —
     // done by hand when the posting layout is already fileless (an
     // idempotent re-compact of an emptied index must not try to read
     // schema off _SUCCESS droppings).
     val counts =
       if (Commit.parquetFiles(fs, new Path(s"$path/postings")).nonEmpty)
-        IvfIndex.compactLayout(spark, path, "postings", "doc_id",
-          partCol = "bucket")
+        IvfIndex.compactLayout(spark, path, "postings", PostingsSchema,
+          "doc_id", partCol = "bucket")
       else {
         fs.delete(new Path(s"$path/tombstones"), true)
         (0L, 0L)
@@ -509,7 +543,7 @@ object TextIndex {
         fs.delete(new Path(s"$path/postings_top"), true)
         fs.delete(topMeta, true)
       } else {
-        val tm = spark.read.parquet(topMeta.toString)
+        val tm = spark.read.schema(TopMetaSchema).parquet(topMeta.toString)
           .select(col("top_n"), col("k1"), col("b")).head()
         buildTopTier(spark, path, tm.getInt(0), tm.getDouble(1),
           tm.getDouble(2))
@@ -518,16 +552,18 @@ object TextIndex {
     counts
   }
 
-  /** meta's n_buckets + the live-stats pair in ONE job (r22, guide
-    * §1.2 job count; VERDICT r21 ask #4): every serving face paid 2–3
-    * driver-blocking jobs (meta head, stats sum, tombstone_stats sum)
-    * before its real work — a fixed per-search tax. The three tiny
-    * layouts read as ONE merged-schema parquet scan; correction rows
-    * are recognized by their file path (`_metadata.file_path`) and
-    * enter the sums NEGATED. Exact: the same integer sums and the same
-    * single-row n_buckets as the separate reads, just computed in one
-    * pass (the only fs call left is the driver-side tombstone_stats
-    * existence probe, which is not a Spark job).
+  /** meta's n_buckets + the live-stats pair in ONE Spark job, a plain
+    * scan: every serving face pays this before its real work, so it is
+    * a fixed per-search tax. The three tiny layouts read as ONE scan
+    * under [[LiveStatsSchema]] (the union of their pinned schemas, so no
+    * footer-inference job), the rows are collected, and the sums run on
+    * the driver; correction rows are recognized by their file path
+    * (`_metadata.file_path`) and enter the sums NEGATED. The row count
+    * is one per stats delta since the last [[compact]] — batch-count
+    * sized, never corpus-sized. Exact: the same integer sums and the
+    * same single-row n_buckets as separate reads (the only fs call left
+    * is the driver-side tombstone_stats existence probe, which is not a
+    * Spark job).
     */
   private[graft] def metaAndLiveStats(spark: SparkSession, path: String)
       : (Int, Long, Long) = {
@@ -535,17 +571,24 @@ object TextIndex {
     val ts = s"$path/tombstone_stats"
     val paths = Seq(s"$path/meta", s"$path/stats") ++
       (if (fs.exists(new Path(ts))) Seq(ts) else Nil)
-    val sign = when(col("_fp").contains("/tombstone_stats/"), lit(-1L))
-      .otherwise(lit(1L))
-    val r = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    val rows = spark.read.schema(LiveStatsSchema).parquet(paths: _*)
       .select(col("n_buckets"), col("n_docs"), col("sum_dl"),
-        col("_metadata.file_path").as("_fp"))
-      .agg(max(col("n_buckets")),
-        coalesce(sum(sign * col("n_docs")), lit(0L)),
-        coalesce(sum(sign * col("sum_dl")), lit(0L)))
-      .head()
-    (r.getInt(0), r.getLong(1), r.getLong(2))
+        col("_metadata.file_path"))
+      .collect()
+    val nBuckets = rows.filterNot(_.isNullAt(0)).map(_.getInt(0))
+    require(nBuckets.nonEmpty, s"no meta row at $path/meta")
+    var n = 0L
+    var sumDl = 0L
+    rows.filter(_.isNullAt(0)).foreach { r =>
+      val sign = if (r.getString(3).contains("/tombstone_stats/")) -1L else 1L
+      if (!r.isNullAt(1)) n += sign * r.getLong(1)
+      if (!r.isNullAt(2)) sumDl += sign * r.getLong(2)
+    }
+    (nBuckets.max, n, sumDl)
   }
+
+  /** The merged read of `meta`, `stats` and `tombstone_stats`. */
+  private val LiveStatsSchema = StructType(MetaSchema ++ StatsSchema)
 
   /** The empty result frame — [[search]]'s shape when the index holds
     * no live documents (everything tombstoned): scoring against
@@ -562,23 +605,72 @@ object TextIndex {
     * documents holding at least one query term (a doc outside every
     * posting scores 0 by definition and cannot enter a positive-idf
     * top-k). Ties break on doc_id.
+    *
+    * Job count: when the candidate rows fit under [[DriverFinishRows]]
+    * (the serving case), a search and its collect run 3 Spark jobs —
+    * the live-stats scan, the tombstone broadcast (only when something
+    * was deleted) and the one candidate probe — because every read
+    * passes its pinned schema and the BM25 finish runs on the driver
+    * ([[readCandidates]]). The returned frame then holds the scored
+    * rows and collecting it runs no job; its plan shows the pruned read
+    * that produced them. Larger candidate sets take df from the same
+    * probe and score in Spark ([[scoreCandidates]]): about 6 jobs.
     */
   def search(spark: SparkSession, path: String, query: Seq[String],
       k: Int, k1: Double = Bm25.DefaultK1,
       b: Double = Bm25.DefaultB): DataFrame = {
     require(query.nonEmpty, "empty query")
-    val terms = query.distinct
-    readCandidates(spark, path, terms, topTier = false, shared = false)
-      .fold(emptyResult(spark))(c =>
-        scoreCandidates(c.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k))
+    require(k >= 1, s"k must be >= 1, got $k")
+    soloSearch(spark, path, query.distinct, topTier = false, k1, b, k)
   }
+
+  /** Both solo faces: one candidate read, then the driver finish when
+    * the probe returned the rows, else the Spark scoring tail.
+    */
+  private def soloSearch(spark: SparkSession, path: String,
+      terms: Seq[String], topTier: Boolean, k1: Double, b: Double,
+      k: Int): DataFrame =
+    readCandidates(spark, path, terms, topTier, shared = false)
+      .fold(emptyResult(spark))(c => c.local match {
+        case Some(local) =>
+          DriverRows.frame(local.source, ResultSchema,
+            scoreLocal(local.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k)
+              .map { case (id, score) => Row(id, score) })
+        case None =>
+          scoreCandidates(c.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k)
+      })
+
+  /** The largest candidate row count a solo face scores on the driver.
+    * A collected row is 28 bytes of primitive columns plus its share of
+    * a per-doc score slot, so the cap holds a few tens of MB at most.
+    * The probe that decides it is the df pass the Spark tail needs
+    * anyway, so neither side of the cap reads the candidates more often
+    * than the tail alone. On a 4-core box driver scoring beat the
+    * tail's aggregate and top-k jobs up to about 1M rows (355 vs 519 ms
+    * at 262k, 688 vs 911 ms at 524k, even at 1M); the cap sits a
+    * quarter of the way there, since more cores speed the tail and not
+    * the driver.
+    */
+  private[store] val DriverFinishRows = 1 << 18
 
   /** One serving read's candidates: the posting rows of the query
     * terms (tombstones anti-joined out), each term's df, and the live
     * n / avgdl — or None when the index holds no live documents.
+    * `local` holds the rows themselves when a solo face collected them.
     */
-  private case class Candidates(rows: DataFrame, dfs: Map[String, Long],
-      n: Long, avgdl: Double)
+  private case class Candidates(rows: DataFrame, local: Option[LocalRows],
+      dfs: Map[String, Long], n: Long, avgdl: Double)
+
+  /** Collected candidate rows, and the frame whose read produced them. */
+  private case class LocalRows(rows: Postings, source: DataFrame)
+
+  /** Candidate postings column by column; `slot` indexes the query
+    * terms. Primitive arrays keep a task's result compact on the wire.
+    */
+  private case class Postings(slot: Array[Int], docId: Array[Long],
+      dl: Array[Long], tf: Array[Long]) {
+    def length: Int = slot.length
+  }
 
   /** The candidate read every serving face shares: live stats, then
     * ONLY the terms' bucket partitions of the full postings or of the
@@ -587,6 +679,19 @@ object TextIndex {
     * `df_full` on the tier (every surviving row of a term carries the
     * same value, so max reads it without a second scan) — driver state
     * bounded by |terms|, exactly like Bm25.score's single stats row.
+    *
+    * The solo faces (`shared = false`) take df in ONE map-only job over
+    * the pruned read ([[probeCandidates]]) that also returns the rows
+    * when they fit under [[DriverFinishRows]]: then the rows come back
+    * in `local` and the search scores on the driver — one job for the
+    * whole candidate set, where the Spark df collect and scoring tail
+    * cost about five (an AQE aggregate for df, another for the per-doc
+    * sum, then the top-k). Past the cap the probe still supplies df,
+    * so the Spark tail runs only its scoring plan. The finish is
+    * REPOSE's local-prune, global-merge top-k with the merge on the
+    * driver, [[graft.text.Dedup]]'s driver-finish pattern; the choice
+    * depends on the candidate rows per read partition only, never on
+    * a setting.
     * `shared` (the batch faces) locally checkpoints the rows once: the
     * df collect and the scoring join both read them, never the parquet
     * again.
@@ -598,20 +703,119 @@ object TextIndex {
     if (n <= 0L) None
     else {
       val buckets = terms.map(t => hash32Of(t) % nBuckets).distinct
-      val tier = if (topTier) "postings_top" else "postings"
+      val (tier, schema) =
+        if (topTier) ("postings_top", PostingsTopSchema)
+        else ("postings", PostingsSchema)
       val read = IvfIndex.dropTombstoned(
-        spark.read.parquet(s"$path/$tier")
+        spark.read.schema(schema).parquet(s"$path/$tier")
           .filter(col("bucket").isin(buckets: _*)) // partition pruning
           .filter(col("term").isin(terms: _*)),
         "doc_id", spark, path)
-      val pruned = if (shared) read.localCheckpoint() else read
-      val df = if (topTier) max(col("df_full")) else count(lit(1))
-      val dfs = pruned.groupBy(col("term")).agg(df.as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      Some(Candidates(if (topTier) pruned.drop("df_full") else pruned,
-        dfs, n, sumDl.toDouble / n))
+      val rows = if (topTier) read.drop("df_full") else read
+      val avgdl = sumDl.toDouble / n
+      if (shared) {
+        val pruned = read.localCheckpoint()
+        val df = if (topTier) max(col("df_full")) else count(lit(1))
+        val dfs = pruned.groupBy(col("term")).agg(df.as("df"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        Some(Candidates(if (topTier) pruned.drop("df_full") else pruned,
+          None, dfs, n, avgdl))
+      } else {
+        val (dfs, local) = probeCandidates(read, terms, topTier)
+        Some(Candidates(rows, local, dfs, n, avgdl))
+      }
     }
   }
+
+  /** The solo faces' one pass over the pruned candidate read: each
+    * task folds its rows into per-term df (a count, or the tier's
+    * df_full) and keeps its rows while it holds at most an even share
+    * of [[DriverFinishRows]], so the driver never receives more than
+    * the cap whatever the partition count. The rows come back when
+    * every task kept them; df always does. One map-only job, no
+    * shuffle.
+    */
+  private def probeCandidates(read: DataFrame, terms: Seq[String],
+      topTier: Boolean): (Map[String, Long], Option[LocalRows]) = {
+    val source = read.select(col("term"), col("doc_id"), col("dl"),
+      col("tf"), if (topTier) col("df_full") else lit(0L))
+    val rdd = source.queryExecution.toRdd
+    val share = DriverFinishRows / math.max(1, rdd.getNumPartitions)
+    val slotOf = terms.zipWithIndex.toMap
+    val nTerms = terms.length
+    val parts = rdd.mapPartitions { it =>
+      val df = new Array[Long](nTerms)
+      val slot = Array.newBuilder[Int]
+      val docId, dl, tf = Array.newBuilder[Long]
+      var kept = 0
+      it.foreach { r =>
+        val i = slotOf(r.getUTF8String(0).toString)
+        df(i) = if (topTier) math.max(df(i), r.getLong(4)) else df(i) + 1L
+        if (kept <= share) {
+          kept += 1
+          slot += i; docId += r.getLong(1); dl += r.getLong(2)
+          tf += r.getLong(3)
+        }
+      }
+      Iterator.single(df -> (if (kept > share) None
+        else Some(Postings(slot.result(), docId.result(), dl.result(),
+          tf.result()))))
+    }.collect()
+    val dfs = terms.indices.map(i => terms(i) -> parts.iterator.map(_._1(i))
+      .foldLeft(0L)((x, y) => if (topTier) math.max(x, y) else x + y)).toMap
+    val local = if (parts.exists(_._2.isEmpty)) None else {
+      val ps = parts.toSeq.map(_._2.get)
+      Some(LocalRows(Postings(ps.flatMap(_.slot).toArray,
+        ps.flatMap(_.docId).toArray, ps.flatMap(_.dl).toArray,
+        ps.flatMap(_.tf).toArray), source))
+    }
+    (dfs, local)
+  }
+
+  /** BM25's idf, the one expression every scoring path embeds. */
+  private def idfOf(n: Long, df: Long): Double =
+    math.log((n - df + 0.5) / (df + 0.5) + 1.0)
+
+  /** [[scoreCandidates]] on the driver, bit for bit: each term's part is
+    * the same IEEE expression in the same operation order (max over a
+    * doc's rows of the term, 0.0 when it has none), the parts add left
+    * to right in term order, and the sum rounds as Spark's `round` does
+    * on a double (`BigDecimal.valueOf(x).setScale(ScoreScale, HALF_UP)`).
+    * Sorted by (score DESC, doc_id ASC), first k.
+    */
+  private def scoreLocal(rows: Postings, terms: Seq[String],
+      dfs: Map[String, Long], n: Long, avgdl: Double, k1: Double, b: Double,
+      k: Int): Seq[(Long, Double)] = {
+    val idf = terms.map(t => idfOf(n, dfs.getOrElse(t, 0L))).toArray
+    val parts = scala.collection.mutable.HashMap.empty[Long, Array[Double]]
+    (0 until rows.length).foreach { r =>
+      val i = rows.slot(r)
+      val tf = rows.tf(r).toDouble
+      val dl = rows.dl(r).toDouble
+      val v = idf(i) * (tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / avgdl)))
+      val a = parts.getOrElseUpdate(rows.docId(r),
+        Array.fill(terms.length)(Double.NaN))
+      if (a(i).isNaN || v > a(i)) a(i) = v
+    }
+    def part(x: Double): Double = if (x.isNaN) 0.0 else x
+    parts.iterator.map { case (id, a) =>
+      var sum = part(a(0))
+      var i = 1
+      while (i < a.length) { sum = sum + part(a(i)); i += 1 }
+      id -> java.math.BigDecimal.valueOf(sum)
+        .setScale(Bm25.ScoreScale, java.math.RoundingMode.HALF_UP).doubleValue()
+    }.toSeq
+      .sortWith { case ((ia, sa), (ib, sb)) =>
+        val c = java.lang.Double.compare(sb, sa)
+        if (c != 0) c < 0 else ia < ib
+      }
+      .take(k)
+  }
+
+  /** (doc_id, score): every solo face's result shape. */
+  private val ResultSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("score", DoubleType)))
 
   /** Cap on one serving batch's query count (r22, the r19 robustness
     * ask): the per-batch score dispatch is one CASE chain with a branch
@@ -662,6 +866,7 @@ object TextIndex {
       b: Double, k: Int): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "empty batch or empty query")
+    require(k >= 1, s"k must be >= 1, got $k")
     require(queries.length <= MaxBatchQueries,
       s"batch of ${queries.length} queries exceeds MaxBatchQueries=" +
         s"$MaxBatchQueries — chunk the batch and union the results")
@@ -712,14 +917,11 @@ object TextIndex {
     import org.apache.spark.sql.expressions.Window
     val spark = pruned.sparkSession
     import spark.implicits._
-    def idfOf(t: String): Double =
-      math.log((n - dfs.getOrElse(t, 0L) + 0.5) /
-        (dfs.getOrElse(t, 0L) + 0.5) + 1.0)
     // the fan-out side: one row per (query, distinct term), idf
     // pre-computed driver-side — the SAME double search would embed as
     // a literal, so col("idf") * part is the identical IEEE multiply.
     val qterms = queries.flatMap { case (qid, ts) =>
-      ts.distinct.map(t => (qid, t, idfOf(t)))
+      ts.distinct.map(t => (qid, t, idfOf(n, dfs.getOrElse(t, 0L))))
     }.toDF("query_id", "q_term", "idf")
     val dl = col("dl").cast("double")
     val tf = col("tf").cast("double")
@@ -770,8 +972,7 @@ object TextIndex {
     val part = tf * lit(k1 + 1.0) /
       (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(avgdl)))
     val perTerm = terms.zipWithIndex.map { case (t, i) =>
-      val idf = math.log((n - dfs.getOrElse(t, 0L) + 0.5) /
-        (dfs.getOrElse(t, 0L) + 0.5) + 1.0)
+      val idf = idfOf(n, dfs.getOrElse(t, 0L))
       coalesce(max(when(col("term") === t, lit(idf) * part)), lit(0.0))
         .as(s"p$i")
     }
@@ -866,7 +1067,8 @@ object TextIndex {
     require(n > 0L, "cannot build a serving tier over an empty index")
     val avgdl = sumDl.toDouble / n
     val posts = IvfIndex.dropTombstoned(
-      spark.read.parquet(s"$path/postings"), "doc_id", spark, path)
+      spark.read.schema(PostingsSchema).parquet(s"$path/postings"), "doc_id",
+      spark, path)
     val dl = col("dl").cast("double")
     val tf = col("tf").cast("double")
     val impact = tf * lit(k1 + 1.0) /
@@ -889,6 +1091,21 @@ object TextIndex {
     Seq((topN, k1, b)).toDF("top_n", "k1", "b").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$path/top_meta")
   }
+
+  /** `postings_top/`: [[PostingsSchema]] plus the term's true df. */
+  private[store] val PostingsTopSchema = StructType(Seq(
+    StructField("term", StringType),
+    StructField("df_full", LongType),
+    StructField("doc_id", LongType),
+    StructField("dl", LongType),
+    StructField("tf", LongType),
+    StructField("bucket", IntegerType)))
+
+  /** `top_meta/`: the tier's (top_n, k1, b). */
+  private[store] val TopMetaSchema = StructType(Seq(
+    StructField("top_n", IntegerType),
+    StructField("k1", DoubleType),
+    StructField("b", DoubleType)))
 
   /** POSITIONAL tier — phrase queries are the one lookup the bag-of-
     * words postings cannot answer (tf says "hash" and "join" both
@@ -917,11 +1134,9 @@ object TextIndex {
     * one marker.
     */
   def buildPositions(docs: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val nBuckets = docs.sparkSession.read.parquet(s"$path/meta")
-      .head().getInt(0)
-    writePositions(docs, idCol, textCol, path, nBuckets, SaveMode.Overwrite)
-  }
+      path: String): Unit =
+    writePositions(docs, idCol, textCol, path,
+      nBucketsOf(docs.sparkSession, path), SaveMode.Overwrite)
 
   /** Incremental positional maintenance — delta batches land inside
     * existing `bucket=<b>` directories, append ≡ one-shot rebuild
@@ -935,11 +1150,9 @@ object TextIndex {
     * [[appendBatch]](withPositions = true) instead.
     */
   def appendPositions(docs: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val nBuckets = docs.sparkSession.read.parquet(s"$path/meta")
-      .head().getInt(0)
-    writePositions(docs, idCol, textCol, path, nBuckets, SaveMode.Append)
-  }
+      path: String): Unit =
+    writePositions(docs, idCol, textCol, path,
+      nBucketsOf(docs.sparkSession, path), SaveMode.Append)
 
   /** The positional-tier write for one doc frame. `nBuckets` is passed
     * in (not read from `<path>/meta`) so [[appendBatch]] can stage this
@@ -947,6 +1160,13 @@ object TextIndex {
     * its own — and so the first streaming batch can write positions
     * BEFORE the meta marker that commits the build.
     */
+  /** `postings_pos/`: (term, doc_id, positions) partitioned by bucket. */
+  private[store] val PositionsSchema = StructType(Seq(
+    StructField("term", StringType),
+    StructField("doc_id", LongType),
+    StructField("positions", ArrayType(IntegerType)),
+    StructField("bucket", IntegerType)))
+
   private[store] def writePositions(docs: DataFrame, idCol: String,
       textCol: String, path: String, nBuckets: Int, mode: SaveMode): Unit =
     docs.select(col(idCol).cast("long").as("doc_id"),
@@ -1020,7 +1240,7 @@ object TextIndex {
     def posRead(ts: Seq[String]): DataFrame = {
       val bks = ts.map(t => hash32Of(t) % nBuckets).distinct
       IvfIndex.dropTombstoned(
-        spark.read.parquet(s"$path/postings_pos")
+        spark.read.schema(PositionsSchema).parquet(s"$path/postings_pos")
           .filter(col("bucket").isin(bks: _*)) // partition pruning
           .filter(col("term").isin(ts: _*)),
         "doc_id", spark, path)
@@ -1028,7 +1248,7 @@ object TextIndex {
     val pruned =
       if (terms.length < 2) posRead(terms)
       else {
-        val dfs = spark.read.parquet(s"$path/postings")
+        val dfs = spark.read.schema(PostingsSchema).parquet(s"$path/postings")
           .filter(col("bucket").isin(
             terms.map(t => hash32Of(t) % nBuckets).distinct: _*))
           .filter(col("term").isin(terms: _*))
@@ -1070,15 +1290,15 @@ object TextIndex {
     * the stored TRUE df (`df_full`), n/avgdl the live stats, and the
     * scoring tail is the same fixed-order chain, so whenever every
     * query term's full list fits the tier the result is bit-identical
-    * to the exact path.
+    * to the exact path. Same job count as [[search]]: 3 when the
+    * candidates fit under [[DriverFinishRows]] (df_full rides the one
+    * candidate probe).
     */
   def searchTop(spark: SparkSession, path: String, query: Seq[String],
       k: Int, k1: Double = Bm25.DefaultK1,
       b: Double = Bm25.DefaultB): DataFrame = {
     require(query.nonEmpty, "empty query")
-    val terms = query.distinct
-    readCandidates(spark, path, terms, topTier = true, shared = false)
-      .fold(emptyResult(spark))(c =>
-        scoreCandidates(c.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k))
+    require(k >= 1, s"k must be >= 1, got $k")
+    soloSearch(spark, path, query.distinct, topTier = true, k1, b, k)
   }
 }

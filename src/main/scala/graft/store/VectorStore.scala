@@ -195,7 +195,9 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
   /** The live tombstone set, or None when nothing was ever deleted. */
   private def tombstones(index: String): Option[DataFrame] = {
     val p = dir(index).resolve("_tombstones")
-    if (Files.isDirectory(p)) Some(spark.read.parquet(p.toString))
+    if (Files.isDirectory(p))
+      Some(spark.read.schema(ParquetVectorStore.TombstonesSchema)
+        .parquet(p.toString))
     else None
   }
 
@@ -242,4 +244,15 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
     */
   def topRecords(index: String, n: Int = 10): DataFrame =
     read(index).select("page_content", "metadata").limit(n)
+}
+
+object ParquetVectorStore {
+
+  /** `<index>/_tombstones/`: (k, v) — the metadata key and value
+    * [[ParquetVectorStore.deleteDocumentsFrame]] writes per deleted
+    * document.
+    */
+  private[store] val TombstonesSchema: StructType = StructType(Seq(
+    StructField("k", StringType),
+    StructField("v", StringType)))
 }

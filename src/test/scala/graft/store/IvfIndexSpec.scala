@@ -494,4 +494,55 @@ class IvfIndexSpec extends AnyFunSuite {
       "post-compact content ≡ pre-crash content, duplicates gone")
     staged.foreach(c => assert(!profile(p2).contains(c)))
   }
+
+  test("a solo search on an appended, tombstoned index runs at most 3 jobs") {
+    val e = Tables.embeddings(spark, sf)
+    val seeds = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("seed_id"), col("embedding").as("seed_vec"))
+    val p2 = Files.createTempDirectory("graft-ivf-jobs").toString
+    IvfIndex.build(e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
+      seeds, "seed_id", "seed_vec", p2)
+    IvfIndex.append(e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", p2)
+    def rows(p: String) = IvfIndex.search(spark, p, "vec_id", "embedding",
+        query, k = 5, nProbe = 2)
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    val dead = rows(p2).take(2).map(_._1)
+    IvfIndex.delete(spark, p2, dead)
+    // the codebook rank, the tombstone broadcast, the probed-cell top-k
+    val (got, jobs) = graft.JobCount(spark)(rows(p2))
+    assert(jobs <= 3, s"solo search ran $jobs jobs")
+    assert(got.length == 5 && got.forall(r => !dead.contains(r._1)))
+  }
+
+  test("the vectors layout reads its recorded types; no record or no such column fails loudly") {
+    val e = Tables.embeddings(spark, sf)
+    val seeds = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("seed_id"), col("embedding").as("seed_vec"))
+    val p2 = Files.createTempDirectory("graft-ivf-record").toString
+    IvfIndex.build(e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
+      seeds, "seed_id", "seed_vec", p2)
+    // the same columns in another order append: parquet reads by name
+    val reordered = e.filter(col("vec_id") % 2 === 1)
+      .select(e.columns.reverse.map(col): _*)
+    IvfIndex.append(reordered, "vec_id", "embedding", p2)
+    val odd = reordered.orderBy(col("vec_id")).head()
+    val oddVec = odd.getSeq[Float](odd.fieldIndex("embedding")).toArray
+    val hit = IvfIndex.search(spark, p2, "vec_id", "embedding", oddVec,
+      k = 1, nProbe = 8).head()
+    assert(hit.getLong(1) == odd.getLong(odd.fieldIndex("vec_id")) &&
+      math.abs(hit.getDouble(2) - 1.0) < 1e-6, hit.toString)
+    val noCol = intercept[org.apache.spark.sql.AnalysisException](
+      IvfIndex.search(spark, p2, "vec_id", "embeding", query, k = 5))
+    assert(noCol.getMessage.contains("embeding"), noCol.getMessage)
+    // a delta of another shape would read back as nulls: refused
+    val wrongShape = intercept[IllegalArgumentException](IvfIndex.append(
+      e.select(col("vec_id").cast("int").as("vec_id"), col("embedding")),
+      "vec_id", "embedding", p2))
+    assert(wrongShape.getMessage.contains("do not match the vectors layout"))
+    Commit.fs(spark, p2).delete(
+      new org.apache.hadoop.fs.Path(s"$p2/vectors_schema.json"), false)
+    val missing = intercept[IllegalArgumentException](
+      IvfIndex.search(spark, p2, "vec_id", "embedding", query, k = 5))
+    assert(missing.getMessage.contains("rebuild the index"), missing.getMessage)
+  }
 }

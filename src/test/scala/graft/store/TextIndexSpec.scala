@@ -720,10 +720,11 @@ class TextIndexSpec extends AnyFunSuite {
     // BEFORE they cleared, so searchTop must not serve a deleted doc
     // even though no tombstone is left to mask it (the r18 ADVICE
     // hole: rebuilding only at (5) left this window serving them).
-    IvfIndex.compactLayout(spark, p, "postings_top", "doc_id",
+    IvfIndex.compactLayout(spark, p, "postings_top",
+      TextIndex.PostingsTopSchema, "doc_id",
       partCol = "bucket", clearTombstones = false)
-    IvfIndex.compactLayout(spark, p, "postings", "doc_id",
-      partCol = "bucket")
+    IvfIndex.compactLayout(spark, p, "postings", TextIndex.PostingsSchema,
+      "doc_id", partCol = "bucket")
     assert(!Commit.fs(spark, p)
       .exists(new org.apache.hadoop.fs.Path(s"$p/tombstones")),
       "fixture: tombstones must be cleared to open the window")
@@ -941,5 +942,79 @@ class TextIndexSpec extends AnyFunSuite {
       case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
       case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
     }.length <= 2, "one (query_id, doc_id) aggregate expected")
+  }
+
+  test("a solo search on an appended, tombstoned index runs at most 3 jobs, exactly") {
+    val docs = Tables.documents(spark, sf)
+    val p = Files.createTempDirectory("graft-ti-jobs").toString
+    TextIndex.build(docs.filter(col("doc_id") < 400), "doc_id", "text", p,
+      nBuckets = 16)
+    TextIndex.append(docs.filter(col("doc_id") >= 400), "doc_id", "text", p)
+    val dead = TextIndex.search(spark, p, query, k = 2)
+      .collect().map(_.getLong(0)).toSeq
+    TextIndex.delete(spark, p, dead)
+    TextIndex.buildTopTier(spark, p, topN = 2000)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // the stats scan, the tombstone broadcast, the candidate probe
+    val (got, jobs) = graft.JobCount(spark)(rows(TextIndex.search(spark, p, query, k = 10)))
+    assert(jobs <= 3, s"solo search ran $jobs jobs")
+    val (top, topJobs) =
+      graft.JobCount(spark)(rows(TextIndex.searchTop(spark, p, query, k = 10)))
+    assert(topJobs <= 3, s"solo searchTop ran $topJobs jobs")
+    val want = rows(Bm25.score(docs.filter(!col("doc_id").isin(dead: _*)),
+        "doc_id", "text", query)
+      .orderBy(col("score").desc, col("doc_id")).limit(10))
+    assert(got.nonEmpty && got == want, s"\n got: $got\nwant: $want")
+    assert(top == want, "df ≤ topN: the tier face must match too")
+  }
+
+  test("both sides of the driver-finish cap score bit for bit like Bm25.score") {
+    // 8 query terms in every doc: 8 candidate rows per doc, so n docs
+    // give 8n rows. tf and length vary per doc, so scores spread.
+    val terms = (0 until 8).map(j => s"t$j")
+    def corpus(n: Int) = (0 until n).map { i =>
+      val words = terms.zipWithIndex.flatMap { case (t, j) =>
+        Seq.fill(1 + (i * (j + 1)) % 3)(t)
+      } ++ Seq.fill(i % 4)(s"f${i % 7}")
+      (i.toLong, words.mkString(" "))
+    }.toDF("doc_id", "text")
+    // 8 × 64 rows sit far under the cap whatever the file count; past
+    // it, no task can hold its share.
+    val cap = TextIndex.DriverFinishRows
+    Seq(64 -> true, cap / 8 + 1 -> false).foreach { case (n, onDriver) =>
+      val docs = corpus(n)
+      val p = Files.createTempDirectory("graft-ti-cap").toString
+      TextIndex.build(docs, "doc_id", "text", p, nBuckets = 16)
+      val df = TextIndex.search(spark, p, terms, k = 25)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("CommandResult") == onDriver,
+        s"$n docs (${8 * n} rows vs cap $cap): driver finish expected " +
+          s"$onDriver in:\n${plan.take(600)}")
+      assert(plan.contains("PartitionFilters"), plan.take(600))
+      if (!onDriver) assert(plan.contains("TakeOrderedAndProject") &&
+          !plan.contains("Window") && !plan.contains("SortMergeJoin"),
+        s"past the cap the top-k is the per-partition heap and nothing " +
+          s"joins or sorts corpus-scale:\n${plan.take(600)}")
+      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val want = Bm25.score(docs, "doc_id", "text", terms)
+        .orderBy(col("score").desc, col("doc_id")).limit(25)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got == want, s"$n docs:\n got: $got\nwant: $want")
+    }
+  }
+
+  test("every TextIndex search face requires k >= 1") {
+    Seq(0, -1).foreach { k =>
+      val solo = intercept[IllegalArgumentException](
+        TextIndex.search(spark, path, query, k))
+      assert(solo.getMessage.contains(s"k must be >= 1, got $k"))
+      intercept[IllegalArgumentException](
+        TextIndex.searchTop(spark, path, query, k))
+      intercept[IllegalArgumentException](
+        TextIndex.searchBatch(spark, path, Seq(1L -> query), k))
+      intercept[IllegalArgumentException](
+        TextIndex.searchTopBatch(spark, path, Seq(1L -> query), k))
+    }
   }
 }
