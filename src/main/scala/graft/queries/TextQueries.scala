@@ -644,11 +644,11 @@ object TextQueries {
 
     // BATCH BM25 SERVING — d100's index answering a QUERY BATCH from
     // one pruned posting read ([[graft.store.TextIndex.searchBatch]]):
-    // the union of the batch's terms prunes the scan, the candidate
-    // rows materialize once, and each query scores its own subset
-    // through the solo-search fixed-order chain, so every row is
-    // bit-identical to running that query alone (TextIndexSpec pins
-    // the equality; the oracle re-derives each query's scores
+    // the union of the batch's terms prunes the scan, one probe returns
+    // the candidate rows, and each query scores its own terms' rows on
+    // the driver through the solo-search fixed-order chain, so every
+    // row is bit-identical to running that query alone (TextIndexSpec
+    // pins the equality; the oracle re-derives each query's scores
     // independently and the union matches). At 100 TB this is the
     // serving amortization that matters: Q queries sharing hot terms
     // pay ONE bucket read, not Q. Build included in the timing, as
@@ -660,16 +660,17 @@ object TextQueries {
       graft.store.TextIndex.searchBatch(s, p, QueryBatch, k = 5)
     },
 
-    // BATCH SERVING OFF THE IMPACT TIER — d104's one-plan batch
+    // BATCH SERVING OFF THE IMPACT TIER — d104's one-read batch
     // amortization composed with d102's configured read bound
     // ([[graft.store.TextIndex.searchTopBatch]]): the whole batch is
     // answered from ≤ topN tier rows per DISTINCT term across the
     // batch, so Q queries sharing hot terms pay one read whose size is
     // CONFIGURED, not data-dependent — the shape a serving fleet runs
     // at 100 TB (both bounds at once: tier-bounded candidates,
-    // batch-amortized read, one aggregate + one rank window whatever Q
-    // is). idf uses the tier's stored TRUE df, so only candidate
-    // recall is bounded; per query the rows are bit-identical to solo
+    // batch-amortized read, each query scored on the driver while the
+    // rows fit, one aggregate + one rank window past that). idf uses
+    // the tier's stored TRUE df, so only candidate recall is bounded;
+    // per query the rows are bit-identical to solo
     // [[graft.store.TextIndex.searchTop]] (TextIndexSpec pins it). The
     // oracle replays each term's tier cut declaratively (d102's
     // ROW_NUMBER by the identical IEEE impact) and each query's

@@ -57,7 +57,7 @@ import graft.text.{Bm25, TextFunctions => TF}
   * to the same doubles), and the per-document sum is assembled in TERM
   * ORDER as a fixed chain of column additions rather than a SUM over
   * rows, because a row-order SUM of doubles would drift in the last ulp
-  * against the scan path's left-to-right fold. The solo faces' driver
+  * against the scan path's left-to-right fold. Every face's driver
   * finish replays the same chain on the driver. The TextIndexSpec pins
   * the equality exactly, not approximately.
   *
@@ -371,25 +371,33 @@ object TextIndex {
     */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
-    val fresh0 = ids.distinct.toDF("id")
-    // Ignore ids already tombstoned — a double delete must not
-    // double-subtract from the stats correction.
-    val fresh = IvfIndex.tombstones(spark, path)
-      .fold(fresh0)(t =>
-        fresh0.join(broadcast(t.select(col("id"))), Seq("id"), "left_anti"))
-      .localCheckpoint() // we append to the directory it was read from
-    // The stats correction is paid ONCE here (one doclens lookup per
-    // bulk delete), so search never scans doclens: it reads the tiny
-    // correction rows instead. Ids absent from the index contribute 0.
-    val doclens = readDoclens(spark, path)
-    val c = doclens
-      .join(broadcast(fresh), doclens("doc_id") === fresh("id"))
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s"))
-      .head()
+    val (fresh, correction) = tombstoneDelta(spark, path, ids.distinct.toDF("id"))
     fresh.write.mode(SaveMode.Append).parquet(s"$path/tombstones")
-    Seq((c.getLong(0), c.getAs[Long]("s")))
-      .toDF("n_docs", "sum_dl")
-      .write.mode(SaveMode.Append).parquet(s"$path/tombstone_stats")
+    correction.write.mode(SaveMode.Append).parquet(s"$path/tombstone_stats")
+  }
+
+  /** The tombstone delta both delete faces write: the `ids` (one `id`
+    * column, distinct) not yet tombstoned — a double delete must not
+    * double-subtract from the stats correction — and their correction,
+    * the one (n_docs, sum_dl) row of their count and summed length from
+    * `doclens` (ids absent from the index contribute 0). The correction
+    * is paid ONCE here, one doclens lookup per delete, so search never
+    * scans doclens: it reads the tiny correction rows instead. The ids
+    * are checkpointed: the correction and the caller's tombstone write
+    * both consume them, and [[delete]] appends to the directory they
+    * were filtered against.
+    */
+  private def tombstoneDelta(spark: SparkSession, path: String,
+      ids: DataFrame): (DataFrame, DataFrame) = {
+    val fresh = IvfIndex.tombstones(spark, path)
+      .fold(ids)(t =>
+        ids.join(broadcast(t.select(col("id"))), Seq("id"), "left_anti"))
+      .localCheckpoint()
+    val doclens = readDoclens(spark, path)
+    (fresh, doclens
+      .join(broadcast(fresh), doclens("doc_id") === fresh("id"))
+      .agg(count(lit(1)).as("n_docs"),
+        coalesce(sum(col("dl")), lit(0L)).as("sum_dl")))
   }
 
   /** Streaming DELETE — [[delete]]'s micro-batch face under the staged
@@ -417,32 +425,19 @@ object TextIndex {
   def deleteBatch(idsBatch: DataFrame, idCol: String, path: String,
       batchId: Long): Unit = {
     val spark = idsBatch.sparkSession
-    import spark.implicits._
     val token = s"d$batchId"
     val fs = Commit.fs(spark, path)
     Commit.once(fs, path, "d", batchId) {
       // without meta there is no index, so nothing to delete from
       if (fs.exists(new Path(s"$path/meta")))
         stageAndPublish(fs, path, token) { stg =>
-          val fresh0 = idsBatch.select(col(idCol).cast("long").as("id"))
-            .distinct()
-          val fresh = IvfIndex.tombstones(spark, path)
-            .fold(fresh0)(t => fresh0.join(broadcast(t.select(col("id"))),
-              Seq("id"), "left_anti"))
-            .localCheckpoint() // consumed twice below (the correction + write)
-          if (fresh.head(1).isEmpty) false
-          else {
-            val doclens = readDoclens(spark, path)
-            val c = doclens
-              .join(broadcast(fresh), doclens("doc_id") === fresh("id"))
-              .agg(count(lit(1)).as("n"),
-                coalesce(sum(col("dl")), lit(0L)).as("s"))
-              .head()
+          val (fresh, correction) = tombstoneDelta(spark, path,
+            idsBatch.select(col(idCol).cast("long").as("id")).distinct())
+          fresh.head(1).nonEmpty && {
             fresh.coalesce(1).write.mode(SaveMode.Overwrite)
               .parquet(s"$stg/tombstones")
-            Seq((c.getLong(0), c.getAs[Long]("s")))
-              .toDF("n_docs", "sum_dl").coalesce(1)
-              .write.mode(SaveMode.Overwrite).parquet(s"$stg/tombstone_stats")
+            correction.coalesce(1).write.mode(SaveMode.Overwrite)
+              .parquet(s"$stg/tombstone_stats")
             true
           }
         }
@@ -630,78 +625,76 @@ object TextIndex {
   private def soloSearch(spark: SparkSession, path: String,
       terms: Seq[String], topTier: Boolean, k1: Double, b: Double,
       k: Int): DataFrame =
-    readCandidates(spark, path, terms, topTier, shared = false)
+    readCandidates(spark, path, Seq(terms), topTier)
       .fold(emptyResult(spark))(c => c.local match {
         case Some(local) =>
-          DriverRows.frame(local.source, ResultSchema,
-            scoreLocal(local.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k)
+          DriverRows.frame(c.source, ResultSchema,
+            scoreLocal(c, local, terms, k1, b, k)
               .map { case (id, score) => Row(id, score) })
         case None =>
           scoreCandidates(c.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k)
       })
 
-  /** The largest candidate row count a solo face scores on the driver.
-    * A collected row is 28 bytes of primitive columns plus its share of
-    * a per-doc score slot, so the cap holds a few tens of MB at most.
-    * The probe that decides it is the df pass the Spark tail needs
-    * anyway, so neither side of the cap reads the candidates more often
-    * than the tail alone. On a 4-core box driver scoring beat the
-    * tail's aggregate and top-k jobs up to about 1M rows (355 vs 519 ms
-    * at 262k, 688 vs 911 ms at 524k, even at 1M); the cap sits a
-    * quarter of the way there, since more cores speed the tail and not
-    * the driver.
+  /** The largest number of candidate rows a serving call scores on the
+    * driver: a solo face's collected rows, or for a batch the sum over
+    * its queries of the rows of each query's terms (what the driver
+    * finish visits). A collected row is 24 bytes of primitive columns
+    * plus its share of a per-doc score slot, so the cap holds a few tens
+    * of MB at most. The probe that decides it is the df pass the Spark
+    * tail needs anyway, so neither side of the cap reads the candidates
+    * more often than the tail alone. On a 4-core box driver scoring
+    * beat the tail's aggregate and top-k jobs up to about 1M rows (355
+    * vs 519 ms at 262k, 688 vs 911 ms at 524k, even at 1M); the cap
+    * sits a quarter of the way there, since more cores speed the tail
+    * and not the driver.
     */
   private[store] val DriverFinishRows = 1 << 18
 
-  /** One serving read's candidates: the posting rows of the query
-    * terms (tombstones anti-joined out), each term's df, and the live
-    * n / avgdl — or None when the index holds no live documents.
-    * `local` holds the rows themselves when a solo face collected them.
+  /** One serving read's candidates: the posting rows of the read's
+    * distinct `terms` (tombstones anti-joined out), each term's df, and
+    * the live n / avgdl — or None when the index holds no live
+    * documents. `local` holds the rows `source` (the probe's read)
+    * returned when the driver finishes the call.
     */
-  private case class Candidates(rows: DataFrame, local: Option[LocalRows],
-      dfs: Map[String, Long], n: Long, avgdl: Double)
+  private case class Candidates(rows: DataFrame, source: DataFrame,
+      local: Option[Postings], terms: Seq[String], dfs: Map[String, Long],
+      n: Long, avgdl: Double)
 
-  /** Collected candidate rows, and the frame whose read produced them. */
-  private case class LocalRows(rows: Postings, source: DataFrame)
-
-  /** Candidate postings column by column; `slot` indexes the query
-    * terms. Primitive arrays keep a task's result compact on the wire.
+  /** Candidate postings grouped by probe slot: `docId(i)`, `dl(i)` and
+    * `tf(i)` hold the rows of the read's i-th term, so a query visits
+    * only its own terms' rows. Primitive arrays keep a task's result
+    * compact on the wire.
     */
-  private case class Postings(slot: Array[Int], docId: Array[Long],
-      dl: Array[Long], tf: Array[Long]) {
-    def length: Int = slot.length
-  }
+  private case class Postings(docId: Array[Array[Long]],
+      dl: Array[Array[Long]], tf: Array[Array[Long]])
 
-  /** The candidate read every serving face shares: live stats, then
-    * ONLY the terms' bucket partitions of the full postings or of the
-    * impact tier (`topTier`), minus tombstones. df per term comes from
-    * the pruned rows — a count on the full postings, the stored TRUE
-    * `df_full` on the tier (every surviving row of a term carries the
-    * same value, so max reads it without a second scan) — driver state
-    * bounded by |terms|, exactly like Bm25.score's single stats row.
+  /** The one candidate read of every serving face, for the distinct
+    * terms of all its `queries` (one query for a solo face): live
+    * stats, then ONLY those terms' bucket partitions of the full
+    * postings or of the impact tier (`topTier`), minus tombstones, in
+    * ONE map-only job ([[probeCandidates]]) that returns df per term —
+    * a count on the full postings, the stored TRUE `df_full` on the
+    * tier — and the rows themselves when every task held at most its
+    * share of [[DriverFinishRows]].
     *
-    * The solo faces (`shared = false`) take df in ONE map-only job over
-    * the pruned read ([[probeCandidates]]) that also returns the rows
-    * when they fit under [[DriverFinishRows]]: then the rows come back
-    * in `local` and the search scores on the driver — one job for the
-    * whole candidate set, where the Spark df collect and scoring tail
-    * cost about five (an AQE aggregate for df, another for the per-doc
-    * sum, then the top-k). Past the cap the probe still supplies df,
-    * so the Spark tail runs only its scoring plan. The finish is
-    * REPOSE's local-prune, global-merge top-k with the merge on the
-    * driver, [[graft.text.Dedup]]'s driver-finish pattern; the choice
-    * depends on the candidate rows per read partition only, never on
-    * a setting.
-    * `shared` (the batch faces) locally checkpoints the rows once: the
-    * df collect and the scoring join both read them, never the parquet
-    * again.
+    * The driver finishes the call when the probe returned the rows and
+    * the rows its queries score fit under [[DriverFinishRows]]: then
+    * `local` holds them and [[scoreLocal]] scores each query on the
+    * driver — one job for the whole candidate set, where the Spark
+    * scoring tail costs about five (an aggregate for the per-doc sum,
+    * the top-k or rank window, their broadcasts). Otherwise the tail
+    * runs with the probe's df over the same pruned read, re-reading the
+    * pruned buckets. The finish is REPOSE's local-prune, global-merge
+    * top-k with the merge on the driver, [[graft.text.Dedup]]'s
+    * driver-finish pattern; the choice depends on the candidate rows
+    * only, never on a setting.
     */
   private def readCandidates(spark: SparkSession, path: String,
-      terms: Seq[String], topTier: Boolean,
-      shared: Boolean): Option[Candidates] = {
+      queries: Seq[Seq[String]], topTier: Boolean): Option[Candidates] = {
     val (nBuckets, n, sumDl) = metaAndLiveStats(spark, path)
     if (n <= 0L) None
     else {
+      val terms = queries.flatten.distinct
       val buckets = terms.map(t => hash32Of(t) % nBuckets).distinct
       val (tier, schema) =
         if (topTier) ("postings_top", PostingsTopSchema)
@@ -711,63 +704,53 @@ object TextIndex {
           .filter(col("bucket").isin(buckets: _*)) // partition pruning
           .filter(col("term").isin(terms: _*)),
         "doc_id", spark, path)
-      val rows = if (topTier) read.drop("df_full") else read
-      val avgdl = sumDl.toDouble / n
-      if (shared) {
-        val pruned = read.localCheckpoint()
-        val df = if (topTier) max(col("df_full")) else count(lit(1))
-        val dfs = pruned.groupBy(col("term")).agg(df.as("df"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        Some(Candidates(if (topTier) pruned.drop("df_full") else pruned,
-          None, dfs, n, avgdl))
-      } else {
-        val (dfs, local) = probeCandidates(read, terms, topTier)
-        Some(Candidates(rows, local, dfs, n, avgdl))
-      }
+      val source = read.select(col("term"), col("doc_id"), col("dl"),
+        col("tf"), if (topTier) col("df_full") else lit(0L))
+      val (dfs, probed) = probeCandidates(source, terms, topTier)
+      val local = probed.filter(l => queries.iterator.flatten
+        .map(t => l.docId(terms.indexOf(t)).length.toLong).sum <=
+          DriverFinishRows)
+      Some(Candidates(if (topTier) read.drop("df_full") else read, source,
+        local, terms, dfs, n, sumDl.toDouble / n))
     }
   }
 
-  /** The solo faces' one pass over the pruned candidate read: each
-    * task folds its rows into per-term df (a count, or the tier's
-    * df_full) and keeps its rows while it holds at most an even share
-    * of [[DriverFinishRows]], so the driver never receives more than
-    * the cap whatever the partition count. The rows come back when
-    * every task kept them; df always does. One map-only job, no
-    * shuffle.
+  /** The one pass over the pruned candidate read: each task folds its
+    * rows into per-term df (a count, or the tier's df_full) and keeps
+    * its rows while it holds at most an even share of
+    * [[DriverFinishRows]], so the driver never receives more than the
+    * cap whatever the partition count. The rows come back when every
+    * task kept them; df always does. One map-only job, no shuffle.
     */
-  private def probeCandidates(read: DataFrame, terms: Seq[String],
-      topTier: Boolean): (Map[String, Long], Option[LocalRows]) = {
-    val source = read.select(col("term"), col("doc_id"), col("dl"),
-      col("tf"), if (topTier) col("df_full") else lit(0L))
+  private def probeCandidates(source: DataFrame, terms: Seq[String],
+      topTier: Boolean): (Map[String, Long], Option[Postings]) = {
     val rdd = source.queryExecution.toRdd
     val share = DriverFinishRows / math.max(1, rdd.getNumPartitions)
     val slotOf = terms.zipWithIndex.toMap
     val nTerms = terms.length
     val parts = rdd.mapPartitions { it =>
       val df = new Array[Long](nTerms)
-      val slot = Array.newBuilder[Int]
-      val docId, dl, tf = Array.newBuilder[Long]
+      val docId, dl, tf = Array.fill(nTerms)(Array.newBuilder[Long])
       var kept = 0
       it.foreach { r =>
         val i = slotOf(r.getUTF8String(0).toString)
         df(i) = if (topTier) math.max(df(i), r.getLong(4)) else df(i) + 1L
         if (kept <= share) {
           kept += 1
-          slot += i; docId += r.getLong(1); dl += r.getLong(2)
-          tf += r.getLong(3)
+          docId(i) += r.getLong(1); dl(i) += r.getLong(2); tf(i) += r.getLong(3)
         }
       }
       Iterator.single(df -> (if (kept > share) None
-        else Some(Postings(slot.result(), docId.result(), dl.result(),
-          tf.result()))))
+        else Some(Postings(docId.map(_.result()), dl.map(_.result()),
+          tf.map(_.result())))))
     }.collect()
     val dfs = terms.indices.map(i => terms(i) -> parts.iterator.map(_._1(i))
       .foldLeft(0L)((x, y) => if (topTier) math.max(x, y) else x + y)).toMap
     val local = if (parts.exists(_._2.isEmpty)) None else {
       val ps = parts.toSeq.map(_._2.get)
-      Some(LocalRows(Postings(ps.flatMap(_.slot).toArray,
-        ps.flatMap(_.docId).toArray, ps.flatMap(_.dl).toArray,
-        ps.flatMap(_.tf).toArray), source))
+      def concat(f: Postings => Array[Array[Long]]) =
+        Array.tabulate(nTerms)(i => ps.flatMap(p => f(p)(i)).toArray)
+      Some(Postings(concat(_.docId), concat(_.dl), concat(_.tf)))
     }
     (dfs, local)
   }
@@ -776,26 +759,30 @@ object TextIndex {
   private def idfOf(n: Long, df: Long): Double =
     math.log((n - df + 0.5) / (df + 0.5) + 1.0)
 
-  /** [[scoreCandidates]] on the driver, bit for bit: each term's part is
-    * the same IEEE expression in the same operation order (max over a
-    * doc's rows of the term, 0.0 when it has none), the parts add left
-    * to right in term order, and the sum rounds as Spark's `round` does
-    * on a double (`BigDecimal.valueOf(x).setScale(ScoreScale, HALF_UP)`).
-    * Sorted by (score DESC, doc_id ASC), first k.
+  /** The driver finish of every face: one query's top k over the
+    * collected candidate rows, reading each query term's rows through
+    * its probe slot. Bit for bit [[scoreCandidates]] and
+    * [[scoreBatchCandidates]]: each term's part is the same IEEE
+    * expression in the same operation order (max over a doc's rows of
+    * the term, 0.0 when it has none), the parts add left to right in
+    * the query's term order, and the sum rounds as Spark's `round`
+    * does on a double (`BigDecimal.valueOf(x).setScale(ScoreScale,
+    * HALF_UP)`). Sorted by (score DESC, doc_id ASC), first k.
     */
-  private def scoreLocal(rows: Postings, terms: Seq[String],
-      dfs: Map[String, Long], n: Long, avgdl: Double, k1: Double, b: Double,
-      k: Int): Seq[(Long, Double)] = {
-    val idf = terms.map(t => idfOf(n, dfs.getOrElse(t, 0L))).toArray
+  private def scoreLocal(c: Candidates, rows: Postings, query: Seq[String],
+      k1: Double, b: Double, k: Int): Seq[(Long, Double)] = {
     val parts = scala.collection.mutable.HashMap.empty[Long, Array[Double]]
-    (0 until rows.length).foreach { r =>
-      val i = rows.slot(r)
-      val tf = rows.tf(r).toDouble
-      val dl = rows.dl(r).toDouble
-      val v = idf(i) * (tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / avgdl)))
-      val a = parts.getOrElseUpdate(rows.docId(r),
-        Array.fill(terms.length)(Double.NaN))
-      if (a(i).isNaN || v > a(i)) a(i) = v
+    query.zipWithIndex.foreach { case (t, i) =>
+      val s = c.terms.indexOf(t)
+      val idf = idfOf(c.n, c.dfs.getOrElse(t, 0L))
+      rows.docId(s).indices.foreach { r =>
+        val tf = rows.tf(s)(r).toDouble
+        val dl = rows.dl(s)(r).toDouble
+        val v = idf * (tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / c.avgdl)))
+        val a = parts.getOrElseUpdate(rows.docId(s)(r),
+          Array.fill(query.length)(Double.NaN))
+        if (a(i).isNaN || v > a(i)) a(i) = v
+      }
     }
     def part(x: Double): Double = if (x.isNaN) 0.0 else x
     parts.iterator.map { case (id, a) =>
@@ -817,40 +804,38 @@ object TextIndex {
     StructField("doc_id", LongType),
     StructField("score", DoubleType)))
 
+  /** (query_id, rank, doc_id, score): every batch face's result shape. */
+  private val BatchResultSchema = StructType(Seq(
+    StructField("query_id", LongType),
+    StructField("rank", LongType),
+    StructField("doc_id", LongType),
+    StructField("score", DoubleType)))
+
   /** Cap on one serving batch's query count (r22, the r19 robustness
-    * ask): the per-batch score dispatch is one CASE chain with a branch
-    * per query, so plan size and generated code grow O(Q) — fine for
-    * real serving batches (hundreds), but an unbounded Q would blow
-    * codegen/analysis long before any executor works hard. Fail loud
-    * with the remedy instead of degrading mysteriously; a caller with
-    * more queries chunks and unions.
+    * ask): the Spark tail's per-batch score dispatch is one CASE chain
+    * with a branch per query, so plan size and generated code grow
+    * O(Q) — fine for real serving batches (hundreds), but an unbounded
+    * Q would blow codegen/analysis long before any executor works
+    * hard. Fail loud with the remedy instead of degrading mysteriously;
+    * a caller with more queries chunks and unions.
     */
   val MaxBatchQueries = 1024
 
   /** BATCH SERVING: answer a whole query batch from ONE pruned posting
-    * read AND ONE plan — the [[graft.operators.Similarity
-    * .ivfSearchBatch]] shape applied to the lexical index (production
-    * retrieval serves query BATCHES; paying a disk read per query
-    * wastes the bucket layout when queries share hot terms). The union
-    * of the batch's terms prunes the read to ≤ |terms| bucket
-    * partitions and the candidate rows are locally checkpointed ONCE;
-    * a broadcast (query_id, term, idf) frame then fans each candidate
-    * row out to the queries that want its term, ONE (query_id, doc_id)
-    * aggregate assembles each query-candidate's term→contribution map,
-    * and the per-query score replays [[search]]'s fixed-order term
-    * chain as an `element_at` addition chain dispatched on query_id —
-    * so per query the rows are BIT-IDENTICAL to a solo search
-    * (TextIndexSpec pins it): n/avgdl/df are frame-independent
-    * numbers, idf is the same driver-computed double riding the
-    * broadcast row, and the additions run in the same term order.
-    * (The round-18 shape unioned Q separate aggregate subtrees —
-    * right data-side, but Catalyst paid O(Q) planning and Q passes
-    * over the checkpointed candidates; this is one aggregate and one
-    * window whatever Q is.) The batch itself is driver-held — a query
-    * batch is codebook-sized by nature, never data-scale. Output:
-    * (query_id, rank, doc_id, score); the per-query rank window
-    * partitions by query_id over candidate-bounded rows (ties on
-    * doc_id).
+    * read — the [[graft.operators.Similarity.ivfSearchBatch]] shape
+    * applied to the lexical index (production retrieval serves query
+    * BATCHES; paying a disk read per query wastes the bucket layout
+    * when queries share hot terms). The union of the batch's terms
+    * prunes the read to ≤ |terms| bucket partitions and
+    * [[readCandidates]]' one probe takes df and, under
+    * [[DriverFinishRows]], the rows; the driver then scores the
+    * queries one after another with [[search]]'s finish, so per query
+    * the rows are BIT-IDENTICAL to a solo search (TextIndexSpec pins
+    * it) and a call runs 3 Spark jobs, like a solo search. Past the
+    * cap the probe's df feeds [[scoreBatchCandidates]], one Spark plan
+    * whatever Q is. The batch itself is driver-held — a query batch is
+    * codebook-sized by nature, never data-scale. Output: (query_id,
+    * rank, doc_id, score) ordered by (query_id, rank), ties on doc_id.
     */
   def searchBatch(spark: SparkSession, path: String,
       queries: Seq[(Long, Seq[String])], k: Int,
@@ -858,8 +843,9 @@ object TextIndex {
     servingBatch(spark, path, queries, topTier = false, k1, b, k)
 
   /** Both batch faces: the batch-argument checks, ONE candidate read
-    * for the whole batch ([[readCandidates]], materialized once), and
-    * the shared batch scoring tail.
+    * for the union of the batch's terms ([[readCandidates]]), then
+    * each query scored on the driver ([[scoreLocal]]) when the rows
+    * fit, else the Spark batch scoring tail.
     */
   private def servingBatch(spark: SparkSession, path: String,
       queries: Seq[(Long, Seq[String])], topTier: Boolean, k1: Double,
@@ -872,25 +858,34 @@ object TextIndex {
         s"$MaxBatchQueries — chunk the batch and union the results")
     require(queries.map(_._1).distinct.length == queries.length,
       "query ids must be unique")
-    readCandidates(spark, path, queries.flatMap(_._2).distinct, topTier,
-      shared = true)
-      .fold(emptyBatchResult(spark))(c =>
-        scoreBatchCandidates(c.rows, queries, c.dfs, c.n, c.avgdl, k1, b, k))
+    val qs = queries.map { case (qid, ts) => qid -> ts.distinct }
+    readCandidates(spark, path, qs.map(_._2), topTier)
+      .fold(emptyBatchResult(spark))(c => c.local match {
+        case Some(local) =>
+          DriverRows.frame(c.source, BatchResultSchema,
+            qs.sortBy(_._1).flatMap { case (qid, ts) =>
+              scoreLocal(c, local, ts, k1, b, k).zipWithIndex.map {
+                case ((id, score), i) => Row(qid, i + 1L, id, score)
+              }
+            })
+        case None =>
+          scoreBatchCandidates(c.rows, qs, c.dfs, c.n, c.avgdl, k1, b, k)
+      })
   }
 
-  /** BATCH SERVING off the IMPACT TIER — [[searchBatch]]'s one-plan
-    * shape reading `postings_top` instead of the full postings, so the
-    * whole batch's disk read is bounded by topN rows per DISTINCT term
-    * across the batch: Q queries sharing hot terms pay one CONFIGURED
-    * read ([[buildTopTier]]'s bound), the shape a 100-TB serving fleet
-    * actually runs (tier-bounded candidates, batch-amortized read, one
-    * aggregate + one rank window whatever Q is). idf uses the tier's
-    * stored TRUE df (`df_full`), n/avgdl the live stats, and the
-    * per-query scoring replays the solo chain — so per query the rows
-    * are BIT-IDENTICAL to [[searchTop]] alone (TextIndexSpec pins it),
-    * and [[buildTopTier]]'s exactness contract lifts to the batch:
-    * every query term's df ≤ topN → the batch row set ≡
-    * [[searchBatch]]'s. Output: (query_id, rank, doc_id, score).
+  /** BATCH SERVING off the IMPACT TIER — [[searchBatch]] reading
+    * `postings_top` instead of the full postings, so the whole batch's
+    * disk read is bounded by topN rows per DISTINCT term across the
+    * batch: Q queries sharing hot terms pay one CONFIGURED read
+    * ([[buildTopTier]]'s bound), the shape a 100-TB serving fleet
+    * actually runs (tier-bounded candidates, batch-amortized read). idf
+    * uses the tier's stored TRUE df (`df_full`), n/avgdl the live
+    * stats, and the per-query scoring replays the solo chain — so per
+    * query the rows are BIT-IDENTICAL to [[searchTop]] alone
+    * (TextIndexSpec pins it), and [[buildTopTier]]'s exactness contract
+    * lifts to the batch: every query term's df ≤ topN → the batch row
+    * set ≡ [[searchBatch]]'s. Same job count as [[searchBatch]]: 3
+    * under the cap. Output: (query_id, rank, doc_id, score).
     */
   def searchTopBatch(spark: SparkSession, path: String,
       queries: Seq[(Long, Seq[String])], k: Int,
@@ -903,13 +898,16 @@ object TextIndex {
       .toDF("query_id", "rank", "doc_id", "score")
   }
 
-  /** The shared BATCH scoring tail ([[searchBatch]] /
-    * [[searchTopBatch]]): broadcast (query_id, term, idf) fan-out, ONE
-    * (query_id, doc_id) aggregate, and the solo fixed-order addition
-    * chain dispatched on query_id — per query bit-identical to the
-    * matching solo search because n/avgdl/df are frame-independent
-    * numbers, idf is the same driver-computed double riding the
-    * broadcast row, and the additions run in the same term order.
+  /** The BATCH scoring tail past [[DriverFinishRows]] ([[searchBatch]]
+    * / [[searchTopBatch]]): over the pruned read, a broadcast
+    * (query_id, term, idf) fan-out, ONE (query_id, doc_id) aggregate,
+    * the solo fixed-order addition chain dispatched on query_id, and
+    * one per-query rank window — one plan whatever Q is (unioning Q
+    * per-query aggregate subtrees paid O(Q) planning and Q passes over
+    * the candidates). Per query bit-identical to the matching solo
+    * search because n/avgdl/df are frame-independent numbers, idf is
+    * the same driver-computed double riding the broadcast row, and the
+    * additions run in the same term order.
     */
   private def scoreBatchCandidates(pruned: DataFrame,
       queries: Seq[(Long, Seq[String])], dfs: Map[String, Long], n: Long,

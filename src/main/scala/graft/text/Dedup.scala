@@ -142,10 +142,9 @@ object Dedup {
     // min over the shingles, and min over a set equals min over the
     // multiset, so signatures, candidates, and Jaccards are all
     // bit-identical to the multiset form (the oracle replays the same
-    // min). localCheckpoint (executor-held blocks, the searchBatch
-    // idiom) is the right mode for the bounded frames a query pass
-    // holds; the arrays it stores are exactly the bytes the rescore
-    // joins shuffled anyway.
+    // min). localCheckpoint (executor-held blocks) is the right mode
+    // for the bounded frames a query pass holds; the arrays it stores
+    // are exactly the bytes the rescore joins shuffled anyway.
     val sets = df
       .select(col(idCol).as("_dd_id"),
         array_distinct(TF.shingles(TF.tokens(col(textCol)), shingleLen))

@@ -329,34 +329,10 @@ class TextIndexSpec extends AnyFunSuite {
         .map { case (r, i) => (qid, i + 1L, r.getLong(0), r.getDouble(1)) }
     }
     assert(got == want, s"\n got: $got\nwant: $want")
-    // the batch plan consumes the ONE checkpointed candidate read —
-    // no parquet scan may survive into the per-query aggregates.
-    val plan = df.queryExecution.sparkPlan
-    val parquetScans = plan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(parquetScans.isEmpty,
-      "the posting read must be paid once at checkpoint time, not per query")
-    // …and is ONE plan whatever Q is: a broadcast (query, term, idf)
-    // fan-out into a single (query_id, doc_id) aggregate and a single
-    // per-query rank window — never Q unioned aggregate subtrees
-    // (the r18 shape: O(Q) planning, Q passes over the candidates).
-    val planStr = plan.toString
-    assert(!planStr.contains("Union"),
-      s"batch serving must not union per-query plans:\n${planStr.take(800)}")
-    assert("(?i)window".r.findAllIn(planStr).length >= 1 &&
-      plan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w
-      }.length == 1,
-      s"one per-query rank window expected:\n${planStr.take(800)}")
-    val aggs = plan.collect {
-      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
-      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
-      case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
-    }
-    assert(aggs.length <= 2, // partial + final of the ONE aggregate
-      s"one (query_id, doc_id) aggregate expected, got ${aggs.length}:\n" +
-        planStr.take(800))
+    // under the cap the batch is driver-finished; the Spark tail's plan
+    // pins sit on the past-cap side of the driver-finish cap test.
+    assert(df.queryExecution.executedPlan.toString.contains("CommandResult"),
+      "the batch's candidates fit: its queries score on the driver")
   }
 
   test("top tier ≡ exact search when every query term's list fits; reads stay tier-bounded") {
@@ -925,23 +901,10 @@ class TextIndexSpec extends AnyFunSuite {
       .toSeq
     assert(tiered == exact,
       "df ≤ topN must make the tier's batch face ≡ the exact batch")
-    // searchBatch's plan pins hold here too: the ONE checkpointed
-    // tier read, no per-query unions, one rank window, one aggregate.
-    val plan = df.queryExecution.sparkPlan
-    assert(plan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.isEmpty, "the tier read must be paid once at checkpoint time")
-    val planStr = plan.toString
-    assert(!planStr.contains("Union"),
-      s"tier batch serving must not union per-query plans:\n${planStr.take(800)}")
-    assert(plan.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
-    }.length == 1, s"one per-query rank window expected:\n${planStr.take(800)}")
-    assert(plan.collect {
-      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
-      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
-      case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
-    }.length <= 2, "one (query_id, doc_id) aggregate expected")
+    // driver-finished like searchBatch; the tail's plan pins sit on the
+    // past-cap side of the driver-finish cap test.
+    assert(df.queryExecution.executedPlan.toString.contains("CommandResult"),
+      "the tier batch's candidates fit: its queries score on the driver")
   }
 
   test("a solo search on an appended, tombstoned index runs at most 3 jobs, exactly") {
@@ -967,6 +930,24 @@ class TextIndexSpec extends AnyFunSuite {
       .orderBy(col("score").desc, col("doc_id")).limit(10))
     assert(got.nonEmpty && got == want, s"\n got: $got\nwant: $want")
     assert(top == want, "df ≤ topN: the tier face must match too")
+    // the batch faces: the same 3 jobs for the union of the batch's
+    // terms, and per query the solo face's rows.
+    val batch = Seq(1L -> query, 2L -> query.reverse.take(2))
+    def batchRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    def perQuery(face: Seq[String] => org.apache.spark.sql.DataFrame) =
+      batch.flatMap { case (qid, ts) =>
+        rows(face(ts)).zipWithIndex.map { case ((id, s), i) => (qid, i + 1L, id, s) }
+      }
+    val (gotBatch, batchJobs) = graft.JobCount(spark)(
+      batchRows(TextIndex.searchBatch(spark, p, batch, k = 10)))
+    assert(batchJobs <= 3, s"searchBatch ran $batchJobs jobs")
+    assert(gotBatch.nonEmpty &&
+      gotBatch == perQuery(TextIndex.search(spark, p, _, k = 10)))
+    val (gotTopBatch, topBatchJobs) = graft.JobCount(spark)(
+      batchRows(TextIndex.searchTopBatch(spark, p, batch, k = 10)))
+    assert(topBatchJobs <= 3, s"searchTopBatch ran $topBatchJobs jobs")
+    assert(gotTopBatch == perQuery(TextIndex.searchTop(spark, p, _, k = 10)))
   }
 
   test("both sides of the driver-finish cap score bit for bit like Bm25.score") {
@@ -980,9 +961,15 @@ class TextIndexSpec extends AnyFunSuite {
       (i.toLong, words.mkString(" "))
     }.toDF("doc_id", "text")
     // 8 × 64 rows sit far under the cap whatever the file count; past
-    // it, no task can hold its share.
+    // it, no task can hold its share. 8 × cap/64 rows fit, but nine
+    // queries over all 8 terms score nine times that many: the batch
+    // takes the Spark tail while the solo face stays on the driver.
     val cap = TextIndex.DriverFinishRows
-    Seq(64 -> true, cap / 8 + 1 -> false).foreach { case (n, onDriver) =>
+    val pair = Seq(1L -> terms, 2L -> terms.take(3).reverse)
+    val nine = (0 until 9).map(i => (i + 1L) -> (terms.drop(i % 8) ++ terms.take(i % 8)))
+    Seq((64, true, pair, true), (cap / 64, true, nine, false),
+        (cap / 8 + 1, false, pair, false)).foreach {
+      case (n, onDriver, batch, batchOnDriver) =>
       val docs = corpus(n)
       val p = Files.createTempDirectory("graft-ti-cap").toString
       TextIndex.build(docs, "doc_id", "text", p, nBuckets = 16)
@@ -1001,6 +988,45 @@ class TextIndexSpec extends AnyFunSuite {
         .orderBy(col("score").desc, col("doc_id")).limit(25)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == want, s"$n docs:\n got: $got\nwant: $want")
+      // the batch face, ≡ per-query solo search on either side.
+      val bdf = TextIndex.searchBatch(spark, p, batch, k = 25)
+      val bplan = bdf.queryExecution.sparkPlan
+      val bplanStr = bdf.queryExecution.executedPlan.toString
+      assert(bplanStr.contains("CommandResult") == batchOnDriver,
+        s"$n docs, ${batch.length} queries: driver finish expected " +
+          s"$batchOnDriver in:\n${bplanStr.take(600)}")
+      if (!batchOnDriver) {
+        // the tail: ONE bucket-pruned read for the whole batch, a
+        // broadcast (query, term, idf) fan-out into a single
+        // (query_id, doc_id) aggregate and a single per-query rank
+        // window — never Q unioned aggregate subtrees (O(Q) planning,
+        // Q passes over the candidates).
+        val scans = bplan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+        }
+        assert(scans.length == 1 &&
+          scans.head.metadata.getOrElse("PartitionFilters", "").contains("bucket"),
+          s"one bucket-pruned posting read for the batch:\n${bplan.toString.take(800)}")
+        assert(!bplan.toString.contains("Union"),
+          s"batch serving must not union per-query plans:\n${bplan.toString.take(800)}")
+        assert(bplan.collect {
+          case w: org.apache.spark.sql.execution.window.WindowExec => w
+        }.length == 1, s"one per-query rank window expected:\n${bplan.toString.take(800)}")
+        assert(bplan.collect {
+          case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
+          case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
+          case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
+        }.length <= 2, // partial + final of the ONE aggregate
+          s"one (query_id, doc_id) aggregate expected:\n${bplan.toString.take(800)}")
+      }
+      val gotBatch = bdf.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      val wantBatch = batch.flatMap { case (qid, ts) =>
+        TextIndex.search(spark, p, ts, k = 25).collect().zipWithIndex
+          .map { case (r, i) => (qid, i + 1L, r.getLong(0), r.getDouble(1)) }
+      }
+      assert(gotBatch.nonEmpty && gotBatch == wantBatch,
+        s"$n docs, batch:\n got: $gotBatch\nwant: $wantBatch")
     }
   }
 
