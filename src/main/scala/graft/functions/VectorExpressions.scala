@@ -54,28 +54,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = VectorBinaryExpression.checkSameLength(a, b)
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
-      dot += x * y
-      na += x * x
-      nb += y * y
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0
-    else {
-      val r = dot / (math.sqrt(na) * math.sqrt(nb))
-      math.max(-1.0, math.min(1.0, r))
-    }
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -103,6 +83,34 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** The interpreted arithmetic, line for line the generated loop's: the
+    * one cosine code outside a plan calls (the driver cell ranker and the
+    * batch IVF heap scan in [[graft.operators.Similarity]]), so a value
+    * computed there equals the expression's bit for bit.
+    */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
+    val n = VectorBinaryExpression.checkSameLength(a, b)
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a.getFloat(i).toDouble
+      val y = b.getFloat(i).toDouble
+      dot += x * y
+      na += x * x
+      nb += y * y
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) 0.0
+    else {
+      val r = dot / (math.sqrt(na) * math.sqrt(nb))
+      math.max(-1.0, math.min(1.0, r))
+    }
+  }
 }
 
 /** Plain inner product over `array<float>` in double precision. */

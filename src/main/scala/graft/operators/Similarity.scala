@@ -1,10 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DriverRows
+import org.apache.spark.sql.types._
 
-import graft.functions.vectors
+import graft.functions.{CosineSimilarity, vectors}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -267,9 +271,9 @@ object Similarity {
     * neighbor assigned to the runner-up cell is missed at nprobe=1 and
     * found at 2; [[graft.store.IvfIndex.search]] is the on-disk face of
     * the same contract, where each probed cell is a pruned partition).
-    * Cell ranking runs as a codebook-sized Spark job through the SAME
-    * cosine expression as the scan, so ranking and scoring can never
-    * disagree on arithmetic.
+    * Cells rank on the driver ([[probeCells]]) with the arithmetic the
+    * scan's cosine expression runs, so ranking and scoring can never
+    * disagree.
     */
   def ivfMultiProbeSearch(assigned: DataFrame, idCol: String, vecCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
@@ -304,7 +308,7 @@ object Similarity {
       query: Array[Float], nprobe: Int, k: Int, score: Column): DataFrame = {
     require(nprobe >= 1 && k >= 1, s"nprobe=$nprobe k=$k must be positive")
     cellTopK(corpus, idCol,
-      probeCells(seeds, seedIdCol, seedVecCol, query, nprobe), score, k)
+      probeCells(seeds, seedIdCol, seedVecCol, Seq(query), nprobe).head, score, k)
   }
 
   /** The exact top-k of a probed cell set: keep the rows of `cells`
@@ -323,115 +327,160 @@ object Similarity {
       .select(col("cell"), col(idCol), col("score"))
 
   /** Batch ANN: exact top-k inside the probed cells for EVERY probe
-    * row in ONE pass — the serving shape for query BATCHES, where the
-    * single-probe faces ([[ivfSearch]]/[[ivfMultiProbeSearch]], whose
-    * probe is a driver-side literal) would launch one job per query.
+    * row — the serving shape for query BATCHES, where the single-probe
+    * faces ([[ivfSearch]]/[[ivfMultiProbeSearch]], whose probe is a
+    * driver-side literal) would run one scan per query.
     *
-    * Scale shape: probe cells rank per probe against the BROADCAST
-    * codebook through the same cosine expression the scan scores with
-    * (the per-probe rank window runs over |probes|·|cells| rows — both
-    * query/codebook-sized); the corpus then joins the broadcast
-    * (probe, cell) pairs on its own cell key, so the corpus side
-    * NEVER shuffles — candidates score row-locally inside the scan
-    * (nprobe·|corpus|/|cells| pairs per probe on balanced cells, never
-    * all-pairs), and the per-probe top-k is the mergeable heap
-    * aggregate ([[Sketches.TopKByScore]], q24's no-window-sort
-    * argument): the only data-scale exchange carries ≤ k rows per
-    * probe per task. nprobe = |cells| degenerates to exact brute
-    * force — which makes recall@k evaluation (v16) a two-call
-    * comparison through identical arithmetic.
+    * The probes are query-sized by contract and collect to the driver;
+    * [[probeCells]] ranks each probe's cells there (the codebook
+    * collects once for the whole batch), and one map-only pass over the
+    * corpus under `cell IN` the union of the probed cells — static
+    * partition pruning on a cell-partitioned layout — keeps one
+    * top-k heap per probe id ([[batchTopK]]). The driver merges the
+    * task heaps: REPOSE's local-prune, global-merge top-k, with at most
+    * tasks × probes × k rows crossing the wire and no exchange.
+    * nprobe = |cells| degenerates to exact brute force — which makes
+    * recall@k evaluation (v16) a two-call comparison through identical
+    * arithmetic.
+    *
+    * Job count: the probe collect (none for a local frame), the
+    * codebook collect and the heap scan. The result holds the rows
+    * (collecting it runs no job); its plan shows the pruned scan.
     *
     * Output: (probeIdCol, rank, idCol, score), rank 1..k per probe by
-    * (score DESC, id ASC).
+    * (score DESC, id ASC); ids read as long.
     */
   def ivfSearchBatch(assigned: DataFrame, idCol: String, vecCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
       probes: DataFrame, probeIdCol: String, probeVecCol: String,
       nprobe: Int, k: Int): DataFrame = {
     require(nprobe >= 1 && k >= 1, s"nprobe=$nprobe k=$k must be positive")
-    batchTopK(
-      assigned, vectors.cosineSimilarity(col(vecCol), col("_ann_pv")),
-      idCol, batchProbeCells(probes, probeIdCol, probeVecCol,
-        seeds, seedIdCol, seedVecCol, nprobe), probeIdCol, k)
+    batchTopK(assigned, col(vecCol), idCol, seeds, seedIdCol, seedVecCol,
+      probes, probeIdCol, probeVecCol, nprobe, k)
   }
 
   /** [[ivfSearchBatch]] over int8-quantized storage: the corpus side
     * carries (codes, scale, cell) — [[ScalarQuant.quantize]]'s output,
     * [[graft.store.IvfIndex.buildQuantized]]'s on-disk layout — so the
-    * batch's coarse scan reads ~4× fewer bytes per probed cell, and
-    * candidates score on dequantized codes with v11/v13's exact
-    * arithmetic. Identical probe-cell ranking, join shape, and
-    * per-probe heap as the float batch; only the score input differs.
+    * batch's scan reads ~4× fewer bytes per probed cell, and candidates
+    * score on dequantized codes ([[ScalarQuant.scoringVec]], projected
+    * in the scan) with v11/v13's exact arithmetic. Same cell ranker,
+    * heap scan and job count as the float batch; only the scanned
+    * vector differs.
     */
   def ivfSearchBatchQuantized(quantized: DataFrame, idCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
       probes: DataFrame, probeIdCol: String, probeVecCol: String,
       nprobe: Int, k: Int): DataFrame = {
     require(nprobe >= 1 && k >= 1, s"nprobe=$nprobe k=$k must be positive")
-    batchTopK(quantized,
-      vectors.cosineSimilarity(ScalarQuant.scoringVec, col("_ann_pv")),
-      idCol, batchProbeCells(probes, probeIdCol, probeVecCol,
-        seeds, seedIdCol, seedVecCol, nprobe), probeIdCol, k)
+    batchTopK(quantized, ScalarQuant.scoringVec, idCol, seeds, seedIdCol,
+      seedVecCol, probes, probeIdCol, probeVecCol, nprobe, k)
   }
 
-  /** Per-probe top-nprobe cells against the broadcast codebook —
-    * (probe id, probe vec, cell), the broadcast side of every batch
-    * search. The rank window runs over |probes|·|cells| rows, both
-    * query/codebook-sized by contract.
+  /** The shared tail of both batch faces: collect the probes, rank each
+    * one's cells with [[probeCells]], scan the corpus once under `cell
+    * IN` their union projecting (cell, id, `vec`), and return the merged
+    * heaps of [[heapScan]] as driver rows. A probe with a null vector
+    * scores nothing and returns no rows; probe rows sharing an id share
+    * one top-k over all their candidates. An empty probe frame runs no
+    * codebook or scan job.
     */
-  private def batchProbeCells(probes: DataFrame, probeIdCol: String,
-      probeVecCol: String, seeds: DataFrame, seedIdCol: String,
-      seedVecCol: String, nprobe: Int): DataFrame = {
-    val ranked = probes
-      .select(col(probeIdCol).as("_ann_pid"), col(probeVecCol).as("_ann_pv"))
-      .crossJoin(broadcast(seeds.select(col(seedIdCol).as("_ann_cell"),
-        col(seedVecCol).as("_ann_cv"))))
-      .withColumn("_ann_cs",
-        vectors.cosineSimilarity(col("_ann_pv"), col("_ann_cv")))
-    val w = Window.partitionBy(col("_ann_pid"))
-      .orderBy(col("_ann_cs").desc, col("_ann_cell"))
-    ranked
-      .withColumn("_ann_rn", row_number().over(w))
-      .filter(col("_ann_rn") <= nprobe)
-      .select(col("_ann_pid"), col("_ann_pv"), col("_ann_cell"))
+  private def batchTopK(corpus: DataFrame, vec: Column, idCol: String,
+      seeds: DataFrame, seedIdCol: String, seedVecCol: String,
+      probes: DataFrame, probeIdCol: String, probeVecCol: String,
+      nprobe: Int, k: Int): DataFrame = {
+    val probeFrame = probes.select(col(probeIdCol),
+      col(probeVecCol).cast(ArrayType(FloatType)))
+    val live = probeFrame.collect().filterNot(_.isNullAt(1))
+    val ids = live.map(_.get(0)).distinct
+    val slotOf = ids.zipWithIndex.toMap
+    val vecs = live.map(_.getSeq[Float](1).toArray)
+    val cells =
+      if (live.isEmpty) Seq.empty
+      else probeCells(seeds, seedIdCol, seedVecCol, vecs.toSeq, nprobe)
+    val byCell = live.indices
+      .flatMap(i => cells(i).map(c => c -> ((slotOf(live(i).get(0)), vecs(i)))))
+      .groupMap(_._1)(_._2).map { case (c, ps) => c -> ps.toArray }
+    val scan = corpus
+      .filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
+      .select(col("cell").cast(LongType), col(idCol).cast(LongType),
+        vec.cast(ArrayType(FloatType)))
+    val heaps =
+      if (byCell.isEmpty) Array.empty[Seq[(Double, Long)]]
+      else heapScan(scan, byCell, ids.length, k)
+    val schema = StructType(Seq(
+      probeFrame.schema.head.copy(name = probeIdCol),
+      StructField("rank", LongType, nullable = false),
+      StructField(idCol, LongType), StructField("score", DoubleType)))
+    DriverRows.frame(scan, schema, heaps.toSeq.zipWithIndex.flatMap {
+      case (heap, s) => heap.zipWithIndex.map { case ((score, id), r) =>
+        Row(ids(s), r + 1L, id, score) }
+    })
   }
 
-  /** The shared tail of every batch search: broadcast-join the
-    * (probe, cell) pairs to the corpus on its own cell key, score
-    * row-locally with `scoreExpr` (which may reference `_ann_pv`),
-    * and heap-aggregate per probe — the only data-scale exchange
-    * carries ≤ k rows per probe per task.
+  /** The one pass of a batch search: a map-only job over `scan`'s
+    * (cell, id, vector) rows that scores each row against the probes of
+    * its cell with [[CosineSimilarity.cosine]] (corpus first, probe
+    * second — the expression's argument order) and folds the scores
+    * into one [[Sketches.TopKByScore]] heap per probe slot with the
+    * aggregator's own `reduce` (null skipped, NaN refused, duplicates
+    * merged). The driver merges the task heaps with its `merge`.
     */
-  private def batchTopK(corpus: DataFrame, scoreExpr: Column,
-      idCol: String, probeCellPairs: DataFrame, probeIdCol: String,
-      k: Int): DataFrame = {
-    val topk = udaf(new Sketches.TopKByScore(k),
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(java.lang.Double, java.lang.Long)]())
-    corpus
-      .join(broadcast(probeCellPairs), col("cell") === col("_ann_cell"))
-      .withColumn("_ann_score", scoreExpr)
-      .groupBy(col("_ann_pid"))
-      .agg(topk(col("_ann_score"), col(idCol)).as("_ann_top"))
-      .select(col("_ann_pid").as(probeIdCol),
-        posexplode(col("_ann_top")).as(Seq("_ann_r0", "_ann_p")))
-      .select(col(probeIdCol), (col("_ann_r0") + 1).cast("long").as("rank"),
-        col("_ann_p._2").as(idCol), col("_ann_p._1").as("score"))
+  private def heapScan(scan: DataFrame,
+      byCell: Map[Long, Array[(Int, Array[Float])]], nSlots: Int,
+      k: Int): Array[Seq[(Double, Long)]] = {
+    val agg = new Sketches.TopKByScore(k)
+    scan.queryExecution.toRdd.mapPartitions { it =>
+      val probesOf = byCell.map { case (c, ps) =>
+        c -> ps.map { case (s, v) => (s, UnsafeArrayData.fromPrimitiveArray(v)) }
+      }
+      val heaps = Array.fill(nSlots)(agg.zero)
+      it.foreach { r =>
+        if (!r.isNullAt(2)) probesOf.get(r.getLong(0)).foreach { ps =>
+          val v = r.getArray(2)
+          val id = if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))
+          ps.foreach { case (s, p) =>
+            heaps(s) = agg.reduce(heaps(s),
+              (java.lang.Double.valueOf(CosineSimilarity.cosine(v, p)), id))
+          }
+        }
+      }
+      Iterator.single(heaps)
+    }.collect().foldLeft(Array.fill(nSlots)(agg.zero))((a, b) =>
+      a.zip(b).map { case (x, y) => agg.merge(x, y) })
   }
 
-  /** The one cell ranker: the `nprobe` cells whose centroids are most
-    * cosine-similar to the query (ties to the smaller cell id), ranked
-    * through the SAME clamped cosine expression the scans score with and
-    * [[ivfAssign]] assigns with — ranking, assignment and scoring can
-    * never disagree on arithmetic. [[batchProbeCells]] is its per-probe
-    * form for query batches.
+  /** The one cell ranker of every IVF face, solo and batch: the `nprobe`
+    * cells whose centroids are most cosine-similar to each query, as
+    * the cell ids of each. The codebook collects once per call (one
+    * job, none for a local frame) and ranks on the driver with
+    * [[CosineSimilarity.cosine]] (seed first, query second), the
+    * clamped arithmetic the scans score with and [[ivfAssign]] assigns
+    * with — ranking, assignment and scoring can never disagree. Order
+    * is (score DESC, cell ASC) compared as Spark sorts doubles (NaN
+    * greatest); a seed with a null vector ranks last, as a null score
+    * sorts last descending.
     */
-  private def probeCells(seeds: DataFrame, seedIdCol: String,
-      seedVecCol: String, query: Array[Float], nprobe: Int): Seq[Long] =
-    seeds
-      .withColumn("_mp_s", vectors.cosineSimilarity(col(seedVecCol), lit(query)))
-      .orderBy(col("_mp_s").desc, col(seedIdCol))
-      .limit(nprobe)
-      .select(col(seedIdCol).cast("long"))
-      .collect().map(_.getLong(0)).toIndexedSeq
+  private[graft] def probeCells(seeds: DataFrame, seedIdCol: String,
+      seedVecCol: String, queries: Seq[Array[Float]],
+      nprobe: Int): Seq[Seq[Long]] = {
+    val codebook = seeds
+      .select(col(seedIdCol).cast(LongType), col(seedVecCol).cast(ArrayType(FloatType)))
+      .collect().map(r => (r.getLong(0),
+        if (r.isNullAt(1)) None
+        else Some(UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](1).toArray))))
+    queries.map { q =>
+      val qv = UnsafeArrayData.fromPrimitiveArray(q)
+      codebook
+        .map { case (cell, v) => (v.map(CosineSimilarity.cosine(_, qv)), cell) }
+        .sorted(Ordering.Tuple2(CellScoreOrder, Ordering.Long))
+        .take(nprobe).map(_._2).toSeq
+    }
+  }
+
+  /** Descending score, as Spark sorts doubles, nulls last. */
+  private val CellScoreOrder: Ordering[Option[Double]] = {
+    case (Some(x), Some(y)) => SQLOrderingUtil.compareDoubles(y, x)
+    case (x, y) => java.lang.Boolean.compare(x.isEmpty, y.isEmpty)
+  }
 }

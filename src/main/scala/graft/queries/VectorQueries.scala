@@ -556,9 +556,10 @@ object VectorQueries {
     // Recall@k evaluation of the IVF index — THE tuning query for the
     // nprobe/recall trade every ANN deployment runs before serving:
     // both arms go through [[Similarity.ivfSearchBatch]] (the batch
-    // serving shape: probe cells ranked against the broadcast
-    // codebook, corpus joined on its own cell key without shuffling,
-    // per-probe top-k as the q24 heap aggregate), with nprobe=1 as
+    // serving shape: each probe's cells ranked on the driver against
+    // the collected codebook, one map-only scan of the probed cells
+    // keeping a per-probe q24 top-k heap, the heaps merged on the
+    // driver — no exchange), with nprobe=1 as
     // the approximate arm and nprobe=8 — every cell — degenerating to
     // exact brute force through IDENTICAL arithmetic. Recall is then
     // pure set arithmetic per probe, and the oracle replays both arms
@@ -590,10 +591,10 @@ object VectorQueries {
     // — v13's int8 serving configuration answering a probe FRAME per
     // pass: the coarse scan reads codes+scale (~4× fewer bytes per
     // probed cell), candidates score on dequantized codes with v11's
-    // exact arithmetic, and the per-probe top-k is the same mergeable
-    // heap as v16's float arms. At 100 TB this is THE serving shape:
-    // quantized storage × batch probes × cell pruning, all in one
-    // declarative pass.
+    // exact arithmetic, and the per-probe top-k is the same driver cell
+    // ranker and map-only heap scan as v16's float arms. At 100 TB this
+    // is THE serving shape: quantized storage × batch probes × cell
+    // pruning, in one pass over the probed cells.
     "v17_ivfq_batch" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val seeds = e.filter(col("vec_id") < 8)

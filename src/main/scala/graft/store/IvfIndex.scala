@@ -132,7 +132,7 @@ object IvfIndex {
     * cell-partitioned layout. Because cell is the argmax against the
     * same codebook the index was built with, appended files land
     * inside existing `cell=N` directories, so every search face
-    * (static isin pruning, the DPP batch join, the quantized probe)
+    * (the solo and batch `cell IN` pruning, the quantized probe)
     * serves base ∪ delta with no rebuild and no re-shuffle of data
     * already on disk — the daily-ingest shape of a 100-TB ANN store.
     * v20 pins the semantics (append ≡ one-shot rebuild, per cell);
@@ -578,15 +578,21 @@ object IvfIndex {
   /** Batch search: the on-disk face of [[Similarity.ivfSearchBatch]]
     * (delegated, so the store and the spec-pinned operator can never
     * drift) — top-k for a whole probe FRAME in one pass over the
-    * partitioned index. The probe-cell pairs broadcast into the join
-    * against the cell-partitioned scan, which makes the cell filter a
-    * DYNAMIC partition-pruning subquery: the files of unprobed cells
-    * are skipped before IO exactly as [[search]]'s static `isin` prunes
-    * for one query, but derived at runtime from the whole batch —
-    * asserted against the physical plan in IvfIndexSpec, not just
-    * claimed. This is how an ANN serving job answers a query batch
-    * against a 1000-cell 100-TB index while reading only the probed
-    * cells' bytes once, shared across all queries that probe them.
+    * partitioned index. The probes collect to the driver, each one's
+    * cells rank there against the codebook ([[search]]'s ranker), and
+    * ONE map-only scan reads the index under `cell IN` the union of the
+    * batch's probed cells — static partition pruning, so the files of
+    * unprobed cells are skipped before IO and each probed cell's bytes
+    * are read once, shared across all the queries that probe it — while
+    * keeping a top-k heap per probe; the driver merges the task heaps.
+    * Tombstoned ids are anti-joined out of the scan as in [[search]].
+    *
+    * Job count: a batch and its collect run 2 Spark jobs — the codebook
+    * collect and the heap scan — plus the tombstone broadcast once
+    * something was deleted, and one more when the probe frame itself
+    * needs a job to collect (a local frame needs none). No shuffle. The
+    * returned frame holds the rows; its plan shows the pruned scan —
+    * asserted in IvfIndexSpec, not just claimed.
     */
   def searchBatch(spark: SparkSession, path: String, idCol: String,
       vecCol: String, probes: DataFrame, probeIdCol: String,

@@ -38,6 +38,48 @@ class VectorContractSpec extends AnyFunSuite {
       s"unexpected failure: $ex")
   }
 
+  test("CosineSimilarity.cosine equals the expression on the codegen and interpreted paths") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val expr = CosineSimilarity(BoundReference(0, ArrayType(FloatType), true),
+      BoundReference(1, ArrayType(FloatType), true))
+    val generated = GenerateUnsafeProjection.generate(Seq(expr))
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    /** cosine(a, b), after asserting both paths give the same bits. */
+    def all3(a: Array[Float], b: Array[Float]): Double = {
+      val (x, y) = (ArrayData.toArrayData(a), ArrayData.toArrayData(b))
+      val row = InternalRow(x, y)
+      val direct = CosineSimilarity.cosine(x, y)
+      assert(bits(direct) == bits(expr.eval(row).asInstanceOf[Double]),
+        s"interpreted path differs on ${a.toSeq} ${b.toSeq}")
+      assert(bits(direct) == bits(generated(row).getDouble(0)),
+        s"codegen path differs on ${a.toSeq} ${b.toSeq}")
+      direct
+    }
+    val rnd = new scala.util.Random(7)
+    (1 to 200).foreach { i =>
+      val n = 1 + i % 37
+      all3(Array.fill(n)(rnd.nextGaussian().toFloat),
+        Array.fill(n)(rnd.nextGaussian().toFloat))
+    }
+    val v = Array.fill(64)(rnd.nextFloat() - 0.5f)
+    all3(v, v)
+    assert(all3(Array(0.1f, 0.2f, 0.3f), Array(0.1f, 0.2f, 0.3f)) == 1.0)
+    assert(all3(Array(0f, 0f), Array(1f, 2f)) == 0.0)
+    assert(all3(Array(0f, 0f), Array(0f, 0f)) == 0.0)
+    val (a, b) = (ArrayData.toArrayData(Array(1f, 2f, 3f)),
+      ArrayData.toArrayData(Array(1f, 2f)))
+    Seq(() => CosineSimilarity.cosine(a, b),
+      () => expr.eval(InternalRow(a, b)),
+      () => generated(InternalRow(a, b))).foreach { f =>
+      val ex = intercept[IllegalArgumentException](f())
+      assert(ex.getMessage.contains("vector length mismatch"), ex.getMessage)
+    }
+  }
+
   test("null input yields null, not a crash") {
     val r = Seq((Some(Seq(1f, 2f)), Option.empty[Seq[Float]]))
       .toDF("a", "b")

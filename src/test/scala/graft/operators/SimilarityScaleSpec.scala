@@ -113,17 +113,64 @@ class SimilarityScaleSpec extends AnyFunSuite {
       .select(col("probe_id"), col("rank"), col("neighbor_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == exact)
-    // The scale contract: the corpus side joins the broadcast probe-cell
-    // pairs and aggregates map-side — every hash exchange in the plan
-    // is keyed on the probe id (the probe-side rank window and the
-    // final ≤ k-rows-per-probe-per-task combine), never on a corpus
-    // column.
+    // The scale contract: cells rank on the driver and the corpus is
+    // scored in one map-only pass whose per-probe heaps merge on the
+    // driver — no exchange of any kind, and no probe × corpus product.
     val p = batch.queryExecution.executedPlan.toString
-    val keys = "hashpartitioning\\(([^,)]+)".r.findAllMatchIn(p)
-      .map(_.group(1)).toSeq
-    assert(keys.nonEmpty && keys.forall(_.startsWith("_ann_pid")),
-      s"corpus-keyed exchange leaked into the batch search: $keys")
-    assert(p.contains("BroadcastHashJoin"),
-      s"probe-cell pairs must broadcast to the corpus:\n${p.take(600)}")
+    assert(!p.contains("Exchange") && !p.contains("BroadcastNestedLoopJoin"),
+      s"the batch search must not exchange or cross-join:\n${p.take(600)}")
+  }
+
+  /** The sf0.001 embeddings assigned to 8 seeds (the v16/v17 fixture),
+    * and probes at every 100th id below 500.
+    */
+  private lazy val sfFixture = {
+    val e = graft.Tables.embeddings(spark, graft.TestSession.sf)
+    val seeds = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("seed_id"), col("embedding").as("seed_vec"))
+    val assigned = Similarity.ivfAssign(e, "vec_id", "embedding",
+      seeds, "seed_id", "seed_vec")
+      .select(col("vec_id"), col("embedding"), col("cell"))
+    val probes = e.filter(col("vec_id") % 100 === 0 && col("vec_id") < 500)
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    (seeds, assigned, probes)
+  }
+
+  test("ivfSearchBatchQuantized ≡ per-probe ivfQuantizedSearch bit for bit at nprobe 2") {
+    val (seeds, assigned, probes) = sfFixture
+    val quantized = ScalarQuant.quantize(assigned, "embedding").drop("embedding")
+    val got = Similarity.ivfSearchBatchQuantized(quantized, "vec_id",
+        seeds, "seed_id", "seed_vec", probes, "probe_id", "embedding",
+        nprobe = 2, k = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
+    val want = probes.collect().flatMap { p =>
+      Similarity.ivfQuantizedSearch(quantized, "vec_id", seeds, "seed_id",
+          "seed_vec", p.getSeq[Float](1).toArray, nprobe = 2, k = 5)
+        .collect().zipWithIndex.map { case (r, i) =>
+          (p.getLong(0), i + 1L, r.getLong(1),
+            java.lang.Double.doubleToRawLongBits(r.getDouble(2))) }
+    }.toSet
+    assert(got.size == 25 && got == want)
+  }
+
+  test("ivfSearchBatch: probe rows sharing an id give one top-k over both rows' candidates") {
+    val (seeds, assigned, probes) = sfFixture
+    val vs = probes.collect().map(_.getSeq[Float](1)).take(2)
+    val dup = Seq((7L, vs(0)), (7L, vs(1))).toDF("probe_id", "embedding")
+    val got = Similarity.ivfSearchBatch(assigned, "vec_id", "embedding",
+        seeds, "seed_id", "seed_vec", dup, "probe_id", "embedding",
+        nprobe = 2, k = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSeq.sortBy(_._2)
+    // the union's top-k is the top-k of the two rows' own top-k lists
+    val want = vs.flatMap { v =>
+      Similarity.ivfMultiProbeSearch(assigned, "vec_id", "embedding",
+          seeds, "seed_id", "seed_vec", v.toArray, nprobe = 2, k = 5)
+        .collect().map(r => (r.getDouble(2), r.getLong(1)))
+    }.distinct.sortBy { case (score, id) => (-score, id) }.take(5)
+      .zipWithIndex.map { case ((score, id), i) => (7L, i + 1L, id, score) }
+      .toSeq
+    assert(got == want)
   }
 }

@@ -97,13 +97,42 @@ class IvfIndexSpec extends AnyFunSuite {
     val (_, tieGot, tieExpected) =
       batchAndSolo(tiePath, Seq((0L, q.toSeq)).toDF("probe_id", "embedding"))
     assert(tieGot.nonEmpty && tieGot == tieExpected)
-    // The scale pin: the cell filter must reach the partitioned scan
-    // as a DYNAMIC pruning subquery (derived from the broadcast
-    // probe-cell pairs at runtime), so unprobed cells' files are
-    // skipped before IO for the whole batch at once.
-    val plan = batch.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"),
-      "expected dynamic partition pruning on cell in:\n" + plan.take(1200))
+    // The scale pin: the batch is driver-finished over ONE `vectors`
+    // scan whose partition filter is `cell IN` the union of the cells
+    // the solo face probes for each query, so unprobed cells' files
+    // are skipped before IO for the whole batch at once, and nothing
+    // is exchanged.
+    val soloCells = probes.collect().flatMap { p =>
+      IvfIndex.search(spark, path, "vec_id", "embedding",
+          p.getSeq[Float](1).toArray, k = 5)
+        .collect().map(_.getAs[Number]("cell").longValue)
+    }.toSet
+    val executed = batch.queryExecution.executedPlan
+    val plan = executed.toString
+    assert(plan.contains("CommandResult") && !plan.contains("Exchange"),
+      "expected a driver-finished batch with no exchange:\n" + plan.take(1200))
+    val scans = executed.collect {
+      case c: org.apache.spark.sql.execution.CommandResultExec =>
+        c.commandPhysicalPlan
+    }.flatMap(_.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    })
+    assert(scans.length == 1 &&
+      scans.head.relation.location.rootPaths.forall(_.getName == "vectors"),
+      "expected exactly one vectors scan in:\n" + plan.take(1200))
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, InSet, Literal}
+    def cellOf(a: AttributeReference) = a.name == "cell"
+    def num(v: Any) = v.asInstanceOf[Number].longValue
+    val cellSets = scans.head.partitionFilters.collect {
+      case In(a: AttributeReference, list) if cellOf(a) =>
+        list.map(e => num(e.eval())).toSet
+      case InSet(a: AttributeReference, set) if cellOf(a) => set.map(num)
+      // the optimizer's form of a one-element IN
+      case EqualTo(a: AttributeReference, l: Literal) if cellOf(a) =>
+        Set(num(l.value))
+    }
+    assert(cellSets == Seq(soloCells),
+      s"partition filter must be cell IN $soloCells:\n" + plan.take(1200))
   }
 
   test("nProbe widens the searched cells monotonically") {
@@ -512,6 +541,42 @@ class IvfIndexSpec extends AnyFunSuite {
     val (got, jobs) = graft.JobCount(spark)(rows(p2))
     assert(jobs <= 3, s"solo search ran $jobs jobs")
     assert(got.length == 5 && got.forall(r => !dead.contains(r._1)))
+    // the batch face on a local 3-probe frame: the codebook collect,
+    // the tombstone broadcast, the heap scan
+    import spark.implicits._
+    val probes = e.filter(col("vec_id").isin(7, 42, 300)).collect()
+      .map(r => (r.getLong(r.fieldIndex("vec_id")),
+        r.getSeq[Float](r.fieldIndex("embedding"))))
+      .toSeq.toDF("probe_id", "embedding")
+    val (batch, batchJobs) = graft.JobCount(spark)(
+      IvfIndex.searchBatch(spark, p2, "vec_id", "embedding", probes,
+        "probe_id", "embedding", k = 5, nProbe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getDouble(3))).toSet)
+    assert(batchJobs <= 3, s"batch search ran $batchJobs jobs")
+    val solo = probes.collect().flatMap { p =>
+      IvfIndex.search(spark, p2, "vec_id", "embedding",
+          p.getSeq[Float](1).toArray, k = 5, nProbe = 2)
+        .collect().zipWithIndex.map { case (r, i) =>
+          (p.getLong(0), i + 1L, r.getLong(1), r.getDouble(2)) }
+    }.toSet
+    assert(batch.size == 15 && batch == solo)
+    assert(batch.forall(r => !dead.contains(r._3)))
+  }
+
+  test("searchBatch on an empty probe frame returns the output schema and runs no job") {
+    import spark.implicits._
+    val none = Seq.empty[(Long, Seq[Float])].toDF("probe_id", "embedding")
+    val (df, jobs) = graft.JobCount(spark) {
+      val df = IvfIndex.searchBatch(spark, path, "vec_id", "embedding", none,
+        "probe_id", "embedding", k = 5)
+      assert(df.collect().isEmpty)
+      df
+    }
+    assert(jobs == 0, s"an empty batch ran $jobs jobs")
+    assert(df.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "probe_id" -> "bigint", "rank" -> "bigint", "vec_id" -> "bigint",
+      "score" -> "double"))
   }
 
   test("the vectors layout reads its recorded types; no record or no such column fails loudly") {
