@@ -377,13 +377,10 @@ object Similarity {
       seedVecCol, probes, probeIdCol, probeVecCol, nprobe, k)
   }
 
-  /** The shared tail of both batch faces: collect the probes, rank each
-    * one's cells with [[probeCells]], scan the corpus once under `cell
-    * IN` their union projecting (cell, id, `vec`), and return the merged
-    * heaps of [[heapScan]] as driver rows. A probe with a null vector
-    * scores nothing and returns no rows; probe rows sharing an id share
-    * one top-k over all their candidates. An empty probe frame runs no
-    * codebook or scan job.
+  /** The shared tail of both batch faces, scanning (cell, id, `vec`).
+    * A probe with a null vector returns no rows; probe rows sharing an
+    * id share one top-k over all their candidates. An empty probe frame
+    * runs no codebook or scan job.
     */
   private def batchTopK(corpus: DataFrame, vec: Column, idCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
@@ -395,9 +392,7 @@ object Similarity {
     val ids = live.map(_.get(0)).distinct
     val slotOf = ids.zipWithIndex.toMap
     val vecs = live.map(_.getSeq[Float](1).toArray)
-    val cells =
-      if (live.isEmpty) Seq.empty
-      else probeCells(seeds, seedIdCol, seedVecCol, vecs.toSeq, nprobe)
+    val cells = probeCells(seeds, seedIdCol, seedVecCol, vecs.toSeq, nprobe)
     val byCell = live.indices
       .flatMap(i => cells(i).map(c => c -> ((slotOf(live(i).get(0)), vecs(i)))))
       .groupMap(_._1)(_._2).map { case (c, ps) => c -> ps.toArray }
@@ -464,7 +459,7 @@ object Similarity {
   private[graft] def probeCells(seeds: DataFrame, seedIdCol: String,
       seedVecCol: String, queries: Seq[Array[Float]],
       nprobe: Int): Seq[Seq[Long]] = {
-    val codebook = seeds
+    lazy val codebook = seeds // no queries, no job
       .select(col(seedIdCol).cast(LongType), col(seedVecCol).cast(ArrayType(FloatType)))
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) None
