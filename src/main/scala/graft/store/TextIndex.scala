@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -55,11 +56,12 @@ import graft.text.{Bm25, TextFunctions => TF}
   * candidate set — per-term score parts are identical IEEE expressions
   * (tf and dl are exact integers in both paths; n/avgdl/df/idf come out
   * to the same doubles), and the per-document sum is assembled in TERM
-  * ORDER as a fixed chain of column additions rather than a SUM over
-  * rows, because a row-order SUM of doubles would drift in the last ulp
-  * against the scan path's left-to-right fold. Every face's driver
-  * finish replays the same chain on the driver. The TextIndexSpec pins
-  * the equality exactly, not approximately.
+  * ORDER as a fixed chain of additions rather than a SUM over rows,
+  * because a row-order SUM of doubles would drift in the last ulp
+  * against the scan path's left-to-right fold. Every face scores with
+  * the one scorer that replays that chain, [[scoreLocal]], on the
+  * driver or once per doc partition. The TextIndexSpec pins the
+  * equality exactly, not approximately.
   *
   * Every layout is read back with the schema pinned next to its writer
   * (`PostingsSchema`, `StatsSchema`, ...), never inferred: inference
@@ -601,15 +603,15 @@ object TextIndex {
     * posting scores 0 by definition and cannot enter a positive-idf
     * top-k). Ties break on doc_id.
     *
-    * Job count: when the candidate rows fit under [[DriverFinishRows]]
-    * (the serving case), a search and its collect run 3 Spark jobs —
-    * the live-stats scan, the tombstone broadcast (only when something
-    * was deleted) and the one candidate probe — because every read
-    * passes its pinned schema and the BM25 finish runs on the driver
-    * ([[readCandidates]]). The returned frame then holds the scored
-    * rows and collecting it runs no job; its plan shows the pruned read
-    * that produced them. Larger candidate sets take df from the same
-    * probe and score in Spark ([[scoreCandidates]]): about 6 jobs.
+    * Job count: the live-stats scan, the tombstone broadcast (only when
+    * something was deleted) and the one candidate probe
+    * ([[readCandidates]]), because every read passes its pinned schema.
+    * When the candidate rows fit under [[DriverFinishRows]] (the serving
+    * case) that is all, 3 jobs, and [[topK]] scores them on the driver;
+    * past the cap one more job runs the doc_id exchange and the same
+    * scorer once per doc partition. Either way the returned frame holds
+    * the scored rows, collecting it runs no job, and its plan shows the
+    * read (and past the cap the exchange) that produced them.
     */
   def search(spark: SparkSession, path: String, query: Seq[String],
       k: Int, k1: Double = Bm25.DefaultK1,
@@ -619,45 +621,48 @@ object TextIndex {
     soloSearch(spark, path, query.distinct, topTier = false, k1, b, k)
   }
 
-  /** Both solo faces: one candidate read, then the driver finish when
-    * the probe returned the rows, else the Spark scoring tail.
+  /** Both solo faces: one candidate read, then [[topK]] shaped as
+    * (doc_id, score) rows.
     */
   private def soloSearch(spark: SparkSession, path: String,
       terms: Seq[String], topTier: Boolean, k1: Double, b: Double,
       k: Int): DataFrame =
     readCandidates(spark, path, Seq(terms), topTier)
-      .fold(emptyResult(spark))(c => c.local match {
-        case Some(local) =>
-          DriverRows.frame(c.source, ResultSchema,
-            scoreLocal(c, local, terms, k1, b, k)
-              .map { case (id, score) => Row(id, score) })
-        case None =>
-          scoreCandidates(c.rows, terms, c.dfs, c.n, c.avgdl, k1, b, k)
-      })
+      .fold(emptyResult(spark))(c =>
+        topK(c, Seq(terms), k1, b, k, ResultSchema)(
+          _.head.map { case (id, score) => Row(id, score) }))
 
-  /** The largest number of candidate rows a serving call scores on the
+  /** The largest number of candidate rows a serving call gathers on the
     * driver: a solo face's collected rows, or for a batch the sum over
     * its queries of the rows of each query's terms (what the driver
     * finish visits). A collected row is 24 bytes of primitive columns
     * plus its share of a per-doc score slot, so the cap holds a few tens
-    * of MB at most. The probe that decides it is the df pass the Spark
-    * tail needs anyway, so neither side of the cap reads the candidates
-    * more often than the tail alone. On a 4-core box driver scoring
-    * beat the tail's aggregate and top-k jobs up to about 1M rows (355
-    * vs 519 ms at 262k, 688 vs 911 ms at 524k, even at 1M); the cap
-    * sits a quarter of the way there, since more cores speed the tail
-    * and not the driver.
+    * of MB at most. The cap decides only WHERE the rows are grouped —
+    * all on the driver, or by doc_id across the session's shuffle
+    * partitions — never how they are scored: both sides run
+    * [[scoreLocal]]. On a 4-core box the driver finish beat a Spark
+    * aggregate-and-top-k plan up to about 1M rows (355 vs 519 ms at
+    * 262k, 688 vs 911 ms at 524k, even at 1M), and the partitioned
+    * finish beats that plan from 262k to 1M rows (`SERVING_AB.md`); the
+    * cap sits a quarter of the way to the crossover, since more cores
+    * speed the partitioned finish and not the driver.
     */
   private[store] val DriverFinishRows = 1 << 18
 
-  /** One serving read's candidates: the posting rows of the read's
-    * distinct `terms` (tombstones anti-joined out), each term's df, and
-    * the live n / avgdl — or None when the index holds no live
-    * documents. `local` holds the rows `source` (the probe's read)
-    * returned when the driver finishes the call.
+  /** One serving read's candidates: `source`, the pruned and
+    * tombstone-filtered read of the distinct terms of all its queries,
+    * as (term, doc_id, dl, tf, df_full or 0); `local`, the rows the
+    * probe returned when they fit under [[DriverFinishRows]]; and the
+    * BM25 globals every scorer needs.
     */
-  private case class Candidates(rows: DataFrame, source: DataFrame,
-      local: Option[Postings], terms: Seq[String], dfs: Map[String, Long],
+  private case class Candidates(source: DataFrame, local: Option[Postings],
+      stats: TermStats)
+
+  /** The read's distinct `terms` in probe-slot order, each term's df,
+    * and the live n / avgdl: everything [[scoreLocal]] needs besides the
+    * rows, and all an executor-side finish ships with its closure.
+    */
+  private case class TermStats(terms: Seq[String], dfs: Map[String, Long],
       n: Long, avgdl: Double)
 
   /** Candidate postings grouped by probe slot: `docId(i)`, `dl(i)` and
@@ -668,6 +673,21 @@ object TextIndex {
   private case class Postings(docId: Array[Array[Long]],
       dl: Array[Array[Long]], tf: Array[Array[Long]])
 
+  /** Folds candidate rows (term, doc_id, dl, tf, ...) into [[Postings]],
+    * slot i holding the rows of `terms(i)`: the probe's per-task
+    * builder, and the partitioned finish's per-partition one.
+    */
+  private final class PostingsBuilder(terms: Seq[String]) {
+    private val slotOf = terms.zipWithIndex.toMap
+    private val docId, dl, tf = Array.fill(terms.length)(Array.newBuilder[Long])
+    def slot(r: InternalRow): Int = slotOf(r.getUTF8String(0).toString)
+    def add(i: Int, r: InternalRow): Unit = {
+      docId(i) += r.getLong(1); dl(i) += r.getLong(2); tf(i) += r.getLong(3)
+    }
+    def result(): Postings =
+      Postings(docId.map(_.result()), dl.map(_.result()), tf.map(_.result()))
+  }
+
   /** The one candidate read of every serving face, for the distinct
     * terms of all its `queries` (one query for a solo face): live
     * stats, then ONLY those terms' bucket partitions of the full
@@ -675,19 +695,10 @@ object TextIndex {
     * ONE map-only job ([[probeCandidates]]) that returns df per term —
     * a count on the full postings, the stored TRUE `df_full` on the
     * tier — and the rows themselves when every task held at most its
-    * share of [[DriverFinishRows]].
-    *
-    * The driver finishes the call when the probe returned the rows and
-    * the rows its queries score fit under [[DriverFinishRows]]: then
-    * `local` holds them and [[scoreLocal]] scores each query on the
-    * driver — one job for the whole candidate set, where the Spark
-    * scoring tail costs about five (an aggregate for the per-doc sum,
-    * the top-k or rank window, their broadcasts). Otherwise the tail
-    * runs with the probe's df over the same pruned read, re-reading the
-    * pruned buckets. The finish is REPOSE's local-prune, global-merge
-    * top-k with the merge on the driver, [[graft.text.Dedup]]'s
-    * driver-finish pattern; the choice depends on the candidate rows
-    * only, never on a setting.
+    * share of [[DriverFinishRows]]. `local` keeps them when the rows
+    * its queries score fit under the cap too; the choice depends on the
+    * candidate rows only, never on a setting. None when the index holds
+    * no live documents.
     */
   private def readCandidates(spark: SparkSession, path: String,
       queries: Seq[Seq[String]], topTier: Boolean): Option[Candidates] = {
@@ -699,19 +710,18 @@ object TextIndex {
       val (tier, schema) =
         if (topTier) ("postings_top", PostingsTopSchema)
         else ("postings", PostingsSchema)
-      val read = IvfIndex.dropTombstoned(
+      val source = IvfIndex.dropTombstoned(
         spark.read.schema(schema).parquet(s"$path/$tier")
           .filter(col("bucket").isin(buckets: _*)) // partition pruning
           .filter(col("term").isin(terms: _*)),
         "doc_id", spark, path)
-      val source = read.select(col("term"), col("doc_id"), col("dl"),
-        col("tf"), if (topTier) col("df_full") else lit(0L))
+        .select(col("term"), col("doc_id"), col("dl"), col("tf"),
+          if (topTier) col("df_full") else lit(0L))
       val (dfs, probed) = probeCandidates(source, terms, topTier)
       val local = probed.filter(l => queries.iterator.flatten
         .map(t => l.docId(terms.indexOf(t)).length.toLong).sum <=
           DriverFinishRows)
-      Some(Candidates(if (topTier) read.drop("df_full") else read, source,
-        local, terms, dfs, n, sumDl.toDouble / n))
+      Some(Candidates(source, local, TermStats(terms, dfs, n, sumDl.toDouble / n)))
     }
   }
 
@@ -726,23 +736,17 @@ object TextIndex {
       topTier: Boolean): (Map[String, Long], Option[Postings]) = {
     val rdd = source.queryExecution.toRdd
     val share = DriverFinishRows / math.max(1, rdd.getNumPartitions)
-    val slotOf = terms.zipWithIndex.toMap
     val nTerms = terms.length
     val parts = rdd.mapPartitions { it =>
       val df = new Array[Long](nTerms)
-      val docId, dl, tf = Array.fill(nTerms)(Array.newBuilder[Long])
+      val rows = new PostingsBuilder(terms)
       var kept = 0
       it.foreach { r =>
-        val i = slotOf(r.getUTF8String(0).toString)
+        val i = rows.slot(r)
         df(i) = if (topTier) math.max(df(i), r.getLong(4)) else df(i) + 1L
-        if (kept <= share) {
-          kept += 1
-          docId(i) += r.getLong(1); dl(i) += r.getLong(2); tf(i) += r.getLong(3)
-        }
+        if (kept <= share) { kept += 1; rows.add(i, r) }
       }
-      Iterator.single(df -> (if (kept > share) None
-        else Some(Postings(docId.map(_.result()), dl.map(_.result()),
-          tf.map(_.result())))))
+      Iterator.single(df -> (if (kept > share) None else Some(rows.result())))
     }.collect()
     val dfs = terms.indices.map(i => terms(i) -> parts.iterator.map(_._1(i))
       .foldLeft(0L)((x, y) => if (topTier) math.max(x, y) else x + y)).toMap
@@ -755,31 +759,76 @@ object TextIndex {
     (dfs, local)
   }
 
-  /** BM25's idf, the one expression every scoring path embeds. */
+  /** The one finish of every face: each query's top k, scored by
+    * [[scoreLocal]], shaped into `schema` rows by `shape` and returned
+    * as a [[DriverRows]] frame whose plan produced them. When the probe
+    * returned the rows, the driver scores them and the plan is
+    * `source`'s. Otherwise `source` is repartitioned on doc_id, so all
+    * of a doc's rows, for every query term, land in one partition, and
+    * one job runs the exchange and a map over its partitions that builds
+    * each partition's [[Postings]] and keeps its top k per query with
+    * the same scorer; the driver merges each query's partition lists in
+    * [[RankOrder]] and takes k. A doc's score is whole inside its
+    * partition, so the merge is exact whatever the partition count
+    * (REPOSE's local prune, global merge). The exchange reads the
+    * probe's executed plan, so its tombstone broadcast does not run
+    * again. The closure ships only the [[TermStats]], the queries and
+    * (k1, b, k); the driver receives at most partitions × queries × k
+    * rows.
+    */
+  private def topK(c: Candidates, queries: Seq[Seq[String]], k1: Double,
+      b: Double, k: Int, schema: StructType)(
+      shape: Seq[Seq[(Long, Double)]] => Seq[Row]): DataFrame =
+    c.local match {
+      case Some(rows) => DriverRows.frame(c.source, schema,
+        shape(queries.map(q => scoreLocal(c.stats, rows, q, k1, b, k))))
+      case None =>
+        val (byDoc, exchange) = DriverRows.repartition(c.source, "doc_id")
+        val stats = c.stats
+        val parts = exchange.execute().mapPartitions { it =>
+          val rows = new PostingsBuilder(stats.terms)
+          it.foreach(r => rows.add(rows.slot(r), r))
+          val local = rows.result()
+          Iterator.single(queries.map(q => scoreLocal(stats, local, q, k1, b, k)))
+        }.collect()
+        DriverRows.frame(byDoc, exchange, schema, shape(queries.indices.map(q =>
+          parts.toSeq.flatMap(_(q)).sorted(RankOrder).take(k))))
+    }
+
+  /** BM25's idf, the one expression the scorer embeds. */
   private def idfOf(n: Long, df: Long): Double =
     math.log((n - df + 0.5) / (df + 0.5) + 1.0)
 
-  /** The driver finish of every face: one query's top k over the
-    * collected candidate rows, reading each query term's rows through
-    * its probe slot. Bit for bit [[scoreCandidates]] and
-    * [[scoreBatchCandidates]]: each term's part is the same IEEE
-    * expression in the same operation order (max over a doc's rows of
-    * the term, 0.0 when it has none), the parts add left to right in
-    * the query's term order, and the sum rounds as Spark's `round`
-    * does on a double (`BigDecimal.valueOf(x).setScale(ScoreScale,
-    * HALF_UP)`). Sorted by (score DESC, doc_id ASC), first k.
+  /** The one result order: score DESC, compared as
+    * `java.lang.Double.compare` does, then doc_id ASC.
     */
-  private def scoreLocal(c: Candidates, rows: Postings, query: Seq[String],
+  private val RankOrder: Ordering[(Long, Double)] = Ordering.fromLessThan {
+    case ((ia, sa), (ib, sb)) =>
+      val c = java.lang.Double.compare(sb, sa)
+      if (c != 0) c < 0 else ia < ib
+  }
+
+  /** The one BM25 scorer of every face, on the driver or once per doc
+    * partition ([[topK]]): one query's top k over candidate rows,
+    * reading each query term's rows through its probe slot. Bit for bit
+    * [[Bm25.score]]: each term's part is the same IEEE expression in
+    * the same operation order (max over a doc's rows of the term, 0.0
+    * when it has none), the parts add left to right in the query's term
+    * order, and the sum rounds as Spark's `round` does on a double
+    * (`BigDecimal.valueOf(x).setScale(ScoreScale, HALF_UP)`). Sorted in
+    * [[RankOrder]], first k.
+    */
+  private def scoreLocal(s: TermStats, rows: Postings, query: Seq[String],
       k1: Double, b: Double, k: Int): Seq[(Long, Double)] = {
     val parts = scala.collection.mutable.HashMap.empty[Long, Array[Double]]
     query.zipWithIndex.foreach { case (t, i) =>
-      val s = c.terms.indexOf(t)
-      val idf = idfOf(c.n, c.dfs.getOrElse(t, 0L))
-      rows.docId(s).indices.foreach { r =>
-        val tf = rows.tf(s)(r).toDouble
-        val dl = rows.dl(s)(r).toDouble
-        val v = idf * (tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / c.avgdl)))
-        val a = parts.getOrElseUpdate(rows.docId(s)(r),
+      val slot = s.terms.indexOf(t)
+      val idf = idfOf(s.n, s.dfs.getOrElse(t, 0L))
+      rows.docId(slot).indices.foreach { r =>
+        val tf = rows.tf(slot)(r).toDouble
+        val dl = rows.dl(slot)(r).toDouble
+        val v = idf * (tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / s.avgdl)))
+        val a = parts.getOrElseUpdate(rows.docId(slot)(r),
           Array.fill(query.length)(Double.NaN))
         if (a(i).isNaN || v > a(i)) a(i) = v
       }
@@ -791,12 +840,7 @@ object TextIndex {
       while (i < a.length) { sum = sum + part(a(i)); i += 1 }
       id -> java.math.BigDecimal.valueOf(sum)
         .setScale(Bm25.ScoreScale, java.math.RoundingMode.HALF_UP).doubleValue()
-    }.toSeq
-      .sortWith { case ((ia, sa), (ib, sb)) =>
-        val c = java.lang.Double.compare(sb, sa)
-        if (c != 0) c < 0 else ia < ib
-      }
-      .take(k)
+    }.toSeq.sorted(RankOrder).take(k)
   }
 
   /** (doc_id, score): every solo face's result shape. */
@@ -812,12 +856,13 @@ object TextIndex {
     StructField("score", DoubleType)))
 
   /** Cap on one serving batch's query count (r22, the r19 robustness
-    * ask): the Spark tail's per-batch score dispatch is one CASE chain
-    * with a branch per query, so plan size and generated code grow
-    * O(Q) — fine for real serving batches (hundreds), but an unbounded
-    * Q would blow codegen/analysis long before any executor works
-    * hard. Fail loud with the remedy instead of degrading mysteriously;
-    * a caller with more queries chunks and unions.
+    * ask). The batch is driver-held — its queries, their terms and the
+    * per-query top-k lists — and past [[DriverFinishRows]] every doc
+    * partition returns its top k for each query, so the driver merges
+    * partitions × Q × k rows: bounded for real serving batches
+    * (hundreds), but an unbounded Q would grow both without limit. Fail
+    * loud with the remedy instead of degrading mysteriously; a caller
+    * with more queries chunks and unions.
     */
   val MaxBatchQueries = 1024
 
@@ -828,14 +873,14 @@ object TextIndex {
     * when queries share hot terms). The union of the batch's terms
     * prunes the read to ≤ |terms| bucket partitions and
     * [[readCandidates]]' one probe takes df and, under
-    * [[DriverFinishRows]], the rows; the driver then scores the
-    * queries one after another with [[search]]'s finish, so per query
-    * the rows are BIT-IDENTICAL to a solo search (TextIndexSpec pins
-    * it) and a call runs 3 Spark jobs, like a solo search. Past the
-    * cap the probe's df feeds [[scoreBatchCandidates]], one Spark plan
-    * whatever Q is. The batch itself is driver-held — a query batch is
-    * codebook-sized by nature, never data-scale. Output: (query_id,
-    * rank, doc_id, score) ordered by (query_id, rank), ties on doc_id.
+    * [[DriverFinishRows]], the rows; [[topK]] then scores the queries
+    * one after another with [[search]]'s scorer, on the driver or once
+    * per doc partition past the cap, so per query the rows are
+    * BIT-IDENTICAL to a solo search (TextIndexSpec pins it) and a call
+    * runs the jobs of a solo search: 3 under the cap. The batch itself
+    * is driver-held — a query batch is codebook-sized by nature, never
+    * data-scale. Output: (query_id, rank, doc_id, score) ordered by
+    * (query_id, rank), ties on doc_id.
     */
   def searchBatch(spark: SparkSession, path: String,
       queries: Seq[(Long, Seq[String])], k: Int,
@@ -844,8 +889,7 @@ object TextIndex {
 
   /** Both batch faces: the batch-argument checks, ONE candidate read
     * for the union of the batch's terms ([[readCandidates]]), then
-    * each query scored on the driver ([[scoreLocal]]) when the rows
-    * fit, else the Spark batch scoring tail.
+    * [[topK]] shaped as (query_id, rank, doc_id, score) rows.
     */
   private def servingBatch(spark: SparkSession, path: String,
       queries: Seq[(Long, Seq[String])], topTier: Boolean, k1: Double,
@@ -860,17 +904,13 @@ object TextIndex {
       "query ids must be unique")
     val qs = queries.map { case (qid, ts) => qid -> ts.distinct }
     readCandidates(spark, path, qs.map(_._2), topTier)
-      .fold(emptyBatchResult(spark))(c => c.local match {
-        case Some(local) =>
-          DriverRows.frame(c.source, BatchResultSchema,
-            qs.sortBy(_._1).flatMap { case (qid, ts) =>
-              scoreLocal(c, local, ts, k1, b, k).zipWithIndex.map {
-                case ((id, score), i) => Row(qid, i + 1L, id, score)
-              }
-            })
-        case None =>
-          scoreBatchCandidates(c.rows, qs, c.dfs, c.n, c.avgdl, k1, b, k)
-      })
+      .fold(emptyBatchResult(spark))(c =>
+        topK(c, qs.map(_._2), k1, b, k, BatchResultSchema)(
+          _.zip(qs.map(_._1)).sortBy(_._2).flatMap { case (top, qid) =>
+            top.zipWithIndex.map { case ((id, score), i) =>
+              Row(qid, i + 1L, id, score)
+            }
+          }))
   }
 
   /** BATCH SERVING off the IMPACT TIER — [[searchBatch]] reading
@@ -880,7 +920,7 @@ object TextIndex {
     * ([[buildTopTier]]'s bound), the shape a 100-TB serving fleet
     * actually runs (tier-bounded candidates, batch-amortized read). idf
     * uses the tier's stored TRUE df (`df_full`), n/avgdl the live
-    * stats, and the per-query scoring replays the solo chain — so per
+    * stats, and every query is scored by the solo faces' scorer — so per
     * query the rows are BIT-IDENTICAL to [[searchTop]] alone
     * (TextIndexSpec pins it), and [[buildTopTier]]'s exactness contract
     * lifts to the batch: every query term's df ≤ topN → the batch row
@@ -896,92 +936,6 @@ object TextIndex {
     import spark.implicits._
     Seq.empty[(Long, Long, Long, Double)]
       .toDF("query_id", "rank", "doc_id", "score")
-  }
-
-  /** The BATCH scoring tail past [[DriverFinishRows]] ([[searchBatch]]
-    * / [[searchTopBatch]]): over the pruned read, a broadcast
-    * (query_id, term, idf) fan-out, ONE (query_id, doc_id) aggregate,
-    * the solo fixed-order addition chain dispatched on query_id, and
-    * one per-query rank window — one plan whatever Q is (unioning Q
-    * per-query aggregate subtrees paid O(Q) planning and Q passes over
-    * the candidates). Per query bit-identical to the matching solo
-    * search because n/avgdl/df are frame-independent numbers, idf is
-    * the same driver-computed double riding the broadcast row, and the
-    * additions run in the same term order.
-    */
-  private def scoreBatchCandidates(pruned: DataFrame,
-      queries: Seq[(Long, Seq[String])], dfs: Map[String, Long], n: Long,
-      avgdl: Double, k1: Double, b: Double, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = pruned.sparkSession
-    import spark.implicits._
-    // the fan-out side: one row per (query, distinct term), idf
-    // pre-computed driver-side — the SAME double search would embed as
-    // a literal, so col("idf") * part is the identical IEEE multiply.
-    val qterms = queries.flatMap { case (qid, ts) =>
-      ts.distinct.map(t => (qid, t, idfOf(n, dfs.getOrElse(t, 0L))))
-    }.toDF("query_id", "q_term", "idf")
-    val dl = col("dl").cast("double")
-    val tf = col("tf").cast("double")
-    val part = tf * lit(k1 + 1.0) /
-      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(avgdl)))
-    // ONE aggregate for the whole batch: (term, doc) is unique in the
-    // postings and (query, term) unique in the broadcast frame, so
-    // each map key appears once per (query_id, doc_id) group.
-    val parts = pruned
-      .join(broadcast(qterms), col("term") === col("q_term"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(map_from_entries(collect_list(
-        struct(col("term"), col("idf") * part))).as("m"))
-    // [[search]]'s fixed-order addition chain, dispatched on query_id:
-    // one CASE WHEN expression over the batch — O(Q) expression size,
-    // but a single analyzed plan and a single pass over the groups.
-    val chains = queries.map { case (qid, ts) =>
-      qid -> ts.distinct
-        .map(t => coalesce(element_at(col("m"), lit(t)), lit(0.0)))
-        .reduce(_ + _)
-    }
-    val score = chains.tail.foldLeft(
-      when(col("query_id") === chains.head._1, chains.head._2)) {
-      case (acc, (qid, chain)) => acc.when(col("query_id") === qid, chain)
-    }
-    parts
-      .select(col("query_id"), col("doc_id"),
-        round(score, Bm25.ScoreScale).as("score"))
-      .withColumn("rank", row_number()
-        .over(Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("doc_id")))
-        .cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** The shared scoring tail: per-term part columns assembled in TERM
-    * ORDER as a fixed addition chain — the bit-exact mirror of
-    * [[Bm25.score]]'s left-to-right term fold (a row-order SUM of
-    * doubles would drift in the last ulp).
-    */
-  private def scoreCandidates(pruned: DataFrame, terms: Seq[String],
-      dfs: Map[String, Long], n: Long, avgdl: Double, k1: Double,
-      b: Double, k: Int): DataFrame = {
-    val dl = col("dl").cast("double")
-    val tf = col("tf").cast("double")
-    val part = tf * lit(k1 + 1.0) /
-      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(avgdl)))
-    val perTerm = terms.zipWithIndex.map { case (t, i) =>
-      val idf = idfOf(n, dfs.getOrElse(t, 0L))
-      coalesce(max(when(col("term") === t, lit(idf) * part)), lit(0.0))
-        .as(s"p$i")
-    }
-    pruned
-      .groupBy(col("doc_id"))
-      .agg(perTerm.head, perTerm.tail: _*)
-      .select(col("doc_id"),
-        round((0 until terms.length).map(i => col(s"p$i"))
-          .reduce(_ + _), Bm25.ScoreScale).as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
   }
 
   /** Per-term top-k postings by (impact DESC, doc_id ASC) with the
@@ -1286,11 +1240,10 @@ object TextIndex {
     * shape with the posting read bounded by `topN` per term instead of
     * df (see [[buildTopTier]] for the exactness contract). idf uses
     * the stored TRUE df (`df_full`), n/avgdl the live stats, and the
-    * scoring tail is the same fixed-order chain, so whenever every
-    * query term's full list fits the tier the result is bit-identical
-    * to the exact path. Same job count as [[search]]: 3 when the
-    * candidates fit under [[DriverFinishRows]] (df_full rides the one
-    * candidate probe).
+    * scorer is [[search]]'s, so whenever every query term's full list
+    * fits the tier the result is bit-identical to the exact path. Same
+    * jobs as [[search]] on either side of [[DriverFinishRows]]: 3 when
+    * the candidates fit (df_full rides the one candidate probe).
     */
   def searchTop(spark: SparkSession, path: String, query: Seq[String],
       k: Int, k1: Double = Bm25.DefaultK1,

@@ -585,24 +585,18 @@ object EventStreams {
     */
   final class LeaderboardLedger(k: Int = 3)
       extends BatchLedger[Map[Long, Vector[(Double, Long)]]](Map.empty) {
-    require(k >= 1, s"leaderboard needs k >= 1, got $k")
+    private val topK = new graft.operators.Sketches.TopKByScore(k)
 
-    /** Strict "ranks ahead of": value DESC then user ASC. */
-    private def ahead(a: (Double, Long), b: (Double, Long)): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-
-    /** Folds closed [[hourlyUserValue]] windows into the per-hour heaps. */
+    /** Folds closed [[hourlyUserValue]] windows into the per-hour heaps
+      * with [[graft.operators.Sketches.TopKByScore]]'s own `reduce`.
+      */
     protected def fold(s: Map[Long, Vector[(Double, Long)]], batch: DataFrame) =
       batch.select(col("hour"), col("user_id"), col("total_value"))
         .collect()
         .foldLeft(s) { (heaps, r) =>
           val h = hourIdx(r.getTimestamp(0))
-          val pair = (r.getDouble(2), r.getLong(1))
-          val heap = heaps.getOrElse(h, Vector.empty)
-          if (heap.length < k || ahead(pair, heap.last)) {
-            val (better, rest) = heap.span(ahead(_, pair))
-            heaps + (h -> ((better :+ pair) ++ rest).take(k))
-          } else heaps
+          heaps + (h -> topK.reduce(heaps.getOrElse(h, Vector.empty),
+            (r.getAs[java.lang.Double](2), r.getAs[java.lang.Long](1))).toVector)
         }
 
     /** e19 over the ledger: per closed hour, the top-k spenders ranked

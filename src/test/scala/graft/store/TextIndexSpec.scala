@@ -329,8 +329,8 @@ class TextIndexSpec extends AnyFunSuite {
         .map { case (r, i) => (qid, i + 1L, r.getLong(0), r.getDouble(1)) }
     }
     assert(got == want, s"\n got: $got\nwant: $want")
-    // under the cap the batch is driver-finished; the Spark tail's plan
-    // pins sit on the past-cap side of the driver-finish cap test.
+    // under the cap the batch is driver-finished; the past-cap plan pins
+    // sit in the driver-finish cap test.
     assert(df.queryExecution.executedPlan.toString.contains("CommandResult"),
       "the batch's candidates fit: its queries score on the driver")
   }
@@ -901,8 +901,8 @@ class TextIndexSpec extends AnyFunSuite {
       .toSeq
     assert(tiered == exact,
       "df ≤ topN must make the tier's batch face ≡ the exact batch")
-    // driver-finished like searchBatch; the tail's plan pins sit on the
-    // past-cap side of the driver-finish cap test.
+    // driver-finished like searchBatch; the past-cap plan pins sit in
+    // the driver-finish cap test.
     assert(df.queryExecution.executedPlan.toString.contains("CommandResult"),
       "the tier batch's candidates fit: its queries score on the driver")
   }
@@ -950,39 +950,84 @@ class TextIndexSpec extends AnyFunSuite {
     assert(gotTopBatch == perQuery(TextIndex.searchTop(spark, p, _, k = 10)))
   }
 
+  // 8 query terms in every doc: 8 candidate rows per doc, so n docs
+  // give 8n rows. tf and length vary per doc, so scores spread; they
+  // depend on doc_id mod 12 only, so every score is shared by a run of
+  // about n / 12 docs.
+  private val capTerms = (0 until 8).map(j => s"t$j")
+  private def capCorpus(n: Int) = (0 until n).map { i =>
+    val words = capTerms.zipWithIndex.flatMap { case (t, j) =>
+      Seq.fill(1 + (i * (j + 1)) % 3)(t)
+    } ++ Seq.fill(i % 4)(s"f${i % 7}")
+    (i.toLong, words.mkString(" "))
+  }.toDF("doc_id", "text")
+
+  /** Every physical node of a frame's plan, through a driver-held
+    * result's source plan, adaptive plans and query stages.
+    */
+  private def planNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive._
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case c: CommandResultExec => all(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => all(a.executedPlan)
+      case q: QueryStageExec => all(q.plan)
+      case _ => p.children.flatMap(all)
+    })
+    all(df.queryExecution.executedPlan)
+  }
+
+  /** Past the cap a face's plan is one bucket-pruned `postings` scan
+    * under exactly one doc-keyed exchange, and nothing that aggregates,
+    * ranks, joins by sort, sorts or unions.
+    */
+  private def assertPartitionedFinish(df: org.apache.spark.sql.DataFrame,
+      what: String): Unit = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val nodes = planNodes(df)
+    val plan = df.queryExecution.executedPlan.toString
+    val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.length == 1 &&
+      shuffles.head.outputPartitioning.toString.startsWith("hashpartitioning(doc_id"),
+      s"$what: one doc-keyed exchange expected in:\n${plan.take(1200)}")
+    val scans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(scans.length == 1 &&
+      scans.head.relation.location.rootPaths.forall(_.getName == "postings") &&
+      scans.head.metadata.getOrElse("PartitionFilters", "").contains("bucket"),
+      s"$what: one bucket-pruned postings scan expected in:\n${plan.take(1200)}")
+    val names = nodes.map(_.nodeName)
+    Seq("Window", "Aggregate", "SortMergeJoin", "TakeOrderedAndProject",
+        "Union").foreach { n =>
+      assert(!names.exists(_.contains(n)), s"$what: no $n expected in:\n${plan.take(1200)}")
+    }
+  }
+
   test("both sides of the driver-finish cap score bit for bit like Bm25.score") {
-    // 8 query terms in every doc: 8 candidate rows per doc, so n docs
-    // give 8n rows. tf and length vary per doc, so scores spread.
-    val terms = (0 until 8).map(j => s"t$j")
-    def corpus(n: Int) = (0 until n).map { i =>
-      val words = terms.zipWithIndex.flatMap { case (t, j) =>
-        Seq.fill(1 + (i * (j + 1)) % 3)(t)
-      } ++ Seq.fill(i % 4)(s"f${i % 7}")
-      (i.toLong, words.mkString(" "))
-    }.toDF("doc_id", "text")
+    val terms = capTerms
     // 8 × 64 rows sit far under the cap whatever the file count; past
     // it, no task can hold its share. 8 × cap/64 rows fit, but nine
     // queries over all 8 terms score nine times that many: the batch
-    // takes the Spark tail while the solo face stays on the driver.
+    // takes the doc-partitioned finish while the solo face stays on the
+    // driver.
     val cap = TextIndex.DriverFinishRows
     val pair = Seq(1L -> terms, 2L -> terms.take(3).reverse)
     val nine = (0 until 9).map(i => (i + 1L) -> (terms.drop(i % 8) ++ terms.take(i % 8)))
     Seq((64, true, pair, true), (cap / 64, true, nine, false),
         (cap / 8 + 1, false, pair, false)).foreach {
       case (n, onDriver, batch, batchOnDriver) =>
-      val docs = corpus(n)
+      val docs = capCorpus(n)
       val p = Files.createTempDirectory("graft-ti-cap").toString
       TextIndex.build(docs, "doc_id", "text", p, nBuckets = 16)
       val df = TextIndex.search(spark, p, terms, k = 25)
       val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("CommandResult") == onDriver,
+      assert(plan.contains("CommandResult") &&
+          plan.contains("hashpartitioning(doc_id") != onDriver,
         s"$n docs (${8 * n} rows vs cap $cap): driver finish expected " +
           s"$onDriver in:\n${plan.take(600)}")
       assert(plan.contains("PartitionFilters"), plan.take(600))
-      if (!onDriver) assert(plan.contains("TakeOrderedAndProject") &&
-          !plan.contains("Window") && !plan.contains("SortMergeJoin"),
-        s"past the cap the top-k is the per-partition heap and nothing " +
-          s"joins or sorts corpus-scale:\n${plan.take(600)}")
+      if (!onDriver) assertPartitionedFinish(df, s"$n docs, solo")
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = Bm25.score(docs, "doc_id", "text", terms)
         .orderBy(col("score").desc, col("doc_id")).limit(25)
@@ -990,35 +1035,15 @@ class TextIndexSpec extends AnyFunSuite {
       assert(got == want, s"$n docs:\n got: $got\nwant: $want")
       // the batch face, ≡ per-query solo search on either side.
       val bdf = TextIndex.searchBatch(spark, p, batch, k = 25)
-      val bplan = bdf.queryExecution.sparkPlan
       val bplanStr = bdf.queryExecution.executedPlan.toString
-      assert(bplanStr.contains("CommandResult") == batchOnDriver,
+      assert(bplanStr.contains("CommandResult") &&
+          bplanStr.contains("hashpartitioning(doc_id") != batchOnDriver,
         s"$n docs, ${batch.length} queries: driver finish expected " +
           s"$batchOnDriver in:\n${bplanStr.take(600)}")
-      if (!batchOnDriver) {
-        // the tail: ONE bucket-pruned read for the whole batch, a
-        // broadcast (query, term, idf) fan-out into a single
-        // (query_id, doc_id) aggregate and a single per-query rank
-        // window — never Q unioned aggregate subtrees (O(Q) planning,
-        // Q passes over the candidates).
-        val scans = bplan.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }
-        assert(scans.length == 1 &&
-          scans.head.metadata.getOrElse("PartitionFilters", "").contains("bucket"),
-          s"one bucket-pruned posting read for the batch:\n${bplan.toString.take(800)}")
-        assert(!bplan.toString.contains("Union"),
-          s"batch serving must not union per-query plans:\n${bplan.toString.take(800)}")
-        assert(bplan.collect {
-          case w: org.apache.spark.sql.execution.window.WindowExec => w
-        }.length == 1, s"one per-query rank window expected:\n${bplan.toString.take(800)}")
-        assert(bplan.collect {
-          case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
-          case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
-          case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a
-        }.length <= 2, // partial + final of the ONE aggregate
-          s"one (query_id, doc_id) aggregate expected:\n${bplan.toString.take(800)}")
-      }
+      // past the cap: ONE bucket-pruned read and ONE doc-keyed exchange
+      // for the whole batch, each query scored per doc partition — never
+      // Q unioned per-query plans, an aggregate or a rank window.
+      if (!batchOnDriver) assertPartitionedFinish(bdf, s"$n docs, batch")
       val gotBatch = bdf.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
       val wantBatch = batch.flatMap { case (qid, ts) =>
@@ -1028,6 +1053,77 @@ class TextIndexSpec extends AnyFunSuite {
       assert(gotBatch.nonEmpty && gotBatch == wantBatch,
         s"$n docs, batch:\n got: $gotBatch\nwant: $wantBatch")
     }
+  }
+
+  /** The cap test's past-cap corpus, cap/8 + 1 docs, indexed with two
+    * docs tombstoned — one from the top score run — and the live docs.
+    */
+  private lazy val pastCap = {
+    val docs = capCorpus(TextIndex.DriverFinishRows / 8 + 1)
+    val p = Files.createTempDirectory("graft-ti-pastcap").toString
+    TextIndex.build(docs, "doc_id", "text", p, nBuckets = 16)
+    val dead = Seq(TextIndex.search(spark, p, capTerms, k = 1)
+      .collect().head.getLong(0), 7L)
+    TextIndex.delete(spark, p, dead)
+    (p, docs.filter(!col("doc_id").isin(dead: _*)))
+  }
+
+  test("past the cap a tombstoned search and searchBatch run at most 4 jobs, scoring like Bm25.score") {
+    val (p, live) = pastCap
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val (got, jobs) = graft.JobCount(spark)(rows(TextIndex.search(spark, p, capTerms, k = 25)))
+    // the stats scan, the tombstone broadcast and the candidate probe,
+    // then ONE job for the doc_id exchange and the per-partition scoring:
+    // the exchange reads the probe's plan, so the broadcast runs once.
+    info(s"past-cap solo search: $jobs jobs")
+    assert(jobs <= 4, s"past-cap solo search ran $jobs jobs")
+    val want = rows(Bm25.score(live, "doc_id", "text", capTerms)
+      .orderBy(col("score").desc, col("doc_id")).limit(25))
+    assert(got.nonEmpty && got == want, s"\n got: $got\nwant: $want")
+    val batch = Seq(1L -> capTerms, 2L -> capTerms.take(3).reverse)
+    val (gotBatch, batchJobs) = graft.JobCount(spark)(
+      TextIndex.searchBatch(spark, p, batch, k = 25).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq)
+    info(s"past-cap 2-query searchBatch: $batchJobs jobs")
+    assert(batchJobs <= 4, s"past-cap searchBatch ran $batchJobs jobs")
+    val wantBatch = batch.flatMap { case (qid, ts) =>
+      rows(Bm25.score(live, "doc_id", "text", ts)
+        .orderBy(col("score").desc, col("doc_id")).limit(25))
+        .zipWithIndex.map { case ((id, s), i) => (qid, i + 1L, id, s) }
+    }
+    assert(gotBatch == wantBatch, s"\n got: $gotBatch\nwant: $wantBatch")
+  }
+
+  test("past the cap the rows do not depend on the shuffle partition count") {
+    val (p, _) = pastCap
+    val k = 25
+    // the top score is shared by a run of docs far longer than k, so
+    // rank k and k + 1 tie and the doc_id tie-break decides the cut
+    // across partitions.
+    val scores = TextIndex.search(spark, p, capTerms, k = k + 1).collect()
+      .map(_.getDouble(1))
+    assert(scores(k - 1) == scores(k), scores.toSeq)
+    val batch = Seq(1L -> capTerms, 2L -> capTerms.take(3).reverse)
+    val width = "hashpartitioning\\(doc_id#\\d+L?, (\\d+)\\)".r
+    def run(w: String) = {
+      val solo = TextIndex.search(spark, p, capTerms, k)
+      val plan = solo.queryExecution.executedPlan.toString
+      assert(width.findFirstMatchIn(plan).map(_.group(1)).contains(w),
+        s"a doc-keyed exchange $w wide expected in:\n${plan.take(1200)}")
+      (solo.collect().toSeq, TextIndex.searchBatch(spark, p, batch, k).collect().toSeq)
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.getOption(key)
+    try {
+      val byWidth = Seq("1", "3", spark.conf.get(key)).map { w =>
+        spark.conf.set(key, w)
+        w -> run(w)
+      }
+      byWidth.tail.foreach { case (w, got) =>
+        assert(got == byWidth.head._2, s"$key=$w differs from ${byWidth.head._1}")
+      }
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("every TextIndex search face requires k >= 1") {
