@@ -93,7 +93,7 @@ object ProductQuantizer {
 
   /** Codes array column for an arbitrary vector column — composes with
     * other projections (e.g. IVF cell assignment in
-    * [[graft.store.IvfPqIndex]]) without a join.
+    * [[graft.store.IvfIndex.buildPq]]) without a join.
     */
   def codesCol(vecCol: Column, cb: Codebooks): Column =
     array((0 until cb.blocks).map(b => assignCode(vecCol, cb, b)): _*)

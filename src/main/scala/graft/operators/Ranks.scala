@@ -248,4 +248,16 @@ object Ranks {
       .filter(col("rn") === col("k_in"))
       .select(g, col("k"), col(valueCol).as("kth"))
   }
+
+  /** Reciprocal-rank fusion over 1-based ranking columns: Σ 1/(60 +
+    * rank) with the standard RRF constant, where a null rank (the row
+    * is absent from that ranking — a full outer join's other side)
+    * contributes 0. Terms add in argument order.
+    */
+  def rrf(ranks: Column*): Column = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    ranks.map(r =>
+      coalesce(lit(1.0) / (lit(60.0) + r.cast("double")), lit(0.0))
+    ).reduce(_ + _)
+  }
 }

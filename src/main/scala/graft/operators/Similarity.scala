@@ -283,9 +283,9 @@ object Similarity {
 
   /** [[ivfMultiProbeSearch]] over int8-quantized storage: the input
     * carries (codes, scale, cell) instead of a float vector column
-    * ([[ScalarQuant.quantize]]'s output, [[graft.store.IvfIndex
-    * .buildQuantized]]'s on-disk layout), cells rank exactly as the
-    * float search's, and candidates score on dequantized codes with
+    * ([[ScalarQuant.quantize]]'s output, the on-disk layout of a
+    * [[graft.store.IvfIndex.buildQuantized]] index), cells rank exactly
+    * as the float search's, and candidates score on dequantized codes with
     * v11's arithmetic ([[ScalarQuant.scoringVec]], then the same
     * cosine) — so the quantized probe reads ~4× fewer bytes per cell
     * and stays oracle-reproducible (v13).
@@ -299,7 +299,8 @@ object Similarity {
   /** The one single-query IVF probe: rank the codebook's cells with
     * [[probeCells]], then take the exact top-k of the probed cells
     * under `score` — cosine on float vectors, cosine on dequantized
-    * codes, or PQ ADC ([[graft.store.IvfPqIndex.search]]). Every face
+    * codes, or PQ ADC ([[graft.store.IvfIndex.search]] on a
+    * [[graft.store.IvfIndex.buildPq]] index). Every face
     * that ranks cells for one query, on-disk ones included, probes
     * through here, so no two faces can pick different cells for it.
     */
@@ -366,7 +367,8 @@ object Similarity {
     * score on dequantized codes ([[ScalarQuant.scoringVec]], projected
     * in the scan) with v11/v13's exact arithmetic. Same cell ranker,
     * heap scan and job count as the float batch; only the scanned
-    * vector differs.
+    * vector differs. [[graft.store.IvfIndex.searchBatch]] on an int8
+    * index is its on-disk face.
     */
   def ivfSearchBatchQuantized(quantized: DataFrame, idCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,

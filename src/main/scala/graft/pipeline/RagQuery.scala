@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.embed.Embedder
 import graft.functions.vectors
+import graft.operators.Ranks
 import graft.store.ParquetVectorStore
 
 /** LLM completion contract for the RAG tail (Q5; reference:
@@ -84,9 +85,7 @@ object RagQuery {
         .cast("long").as("brank"))
     val fused = vr.join(br, col("_hs_vid") === col("_hs_bid"), "full_outer")
       .select(coalesce(col("_hs_vid"), col("_hs_bid")).as("_hs_id"),
-        (coalesce(lit(1.0) / (lit(60.0) + col("vrank").cast("double")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("brank").cast("double")), lit(0.0)))
-          .as("rrf"))
+        Ranks.rrf(col("vrank"), col("brank")).as("rrf"))
       .orderBy(col("rrf").desc, col("_hs_id"))
       .limit(k)
     chunks.join(fused, "_hs_id")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.embed.HashingEmbedder
 import graft.functions.vectors
+import graft.operators.Ranks
 import graft.text.{Pii, Splitters, TextFunctions => TF}
 
 /** Text-processing surface over the `documents` table: chunking (T1/T2
@@ -733,10 +734,7 @@ object TextQueries {
       def fuse(vr: DataFrame) =
         vr.join(br, col("vec_id") === col("doc_id"), "full_outer")
           .select(coalesce(col("vec_id"), col("doc_id")).as("doc_id"),
-            (coalesce(lit(1.0) / (lit(60.0) + col("vrank").cast("double")),
-              lit(0.0)) +
-              coalesce(lit(1.0) / (lit(60.0) + col("brank").cast("double")),
-                lit(0.0))).as("rrf"))
+            Ranks.rrf(col("vrank"), col("brank")).as("rrf"))
           .orderBy(col("rrf").desc, col("doc_id")).limit(10)
       val served = fuse(dense2)
         .select(col("doc_id").as("s_doc"), lit(1L).as("hit"))
@@ -775,9 +773,7 @@ object TextQueries {
           .cast("long").as("brank"))
       vr.join(br, col("vec_id") === col("doc_id"), "full_outer")
         .select(coalesce(col("vec_id"), col("doc_id")).as("doc_id"),
-          (coalesce(lit(1.0) / (lit(60.0) + col("vrank").cast("double")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60.0) + col("brank").cast("double")), lit(0.0)))
-            .as("rrf"))
+          Ranks.rrf(col("vrank"), col("brank")).as("rrf"))
         .orderBy(col("rrf").desc, col("doc_id"))
         .limit(10)
     },
@@ -818,10 +814,7 @@ object TextQueries {
           .cast("long").as("brank"))
       vr.join(br, col("vec_id") === col("doc_id"), "full_outer")
         .select(coalesce(col("vec_id"), col("doc_id")).as("doc_id"),
-          (coalesce(lit(1.0) / (lit(60.0) + col("vrank").cast("double")),
-            lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60.0) + col("brank").cast("double")),
-              lit(0.0))).as("rrf"))
+          Ranks.rrf(col("vrank"), col("brank")).as("rrf"))
         .orderBy(col("rrf").desc, col("doc_id"))
         .limit(10)
     },

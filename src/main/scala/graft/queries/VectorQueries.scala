@@ -223,8 +223,9 @@ object VectorQueries {
     // Quantized multi-probe IVF ([[Similarity.ivfQuantizedSearch]]):
     // v12's cell ranking over v10's int8 storage — the operator behind
     // the on-disk [[graft.store.IvfIndex.buildQuantized]] layout
-    // (searchQuantized delegates here). Scores on dequantized codes
-    // (v11 arithmetic), so the ~4×-cheaper probe stays oracle-exact.
+    // (IvfIndex.search delegates here on an int8 index). Scores on
+    // dequantized codes (v11 arithmetic), so the ~4×-cheaper probe
+    // stays oracle-exact.
     "v13_ivfq_search" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val seeds = e.filter(col("vec_id") < 8)

@@ -6,12 +6,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods
 
-import graft.operators.Similarity
+import graft.operators.{ProductQuantizer, ScalarQuant, Similarity}
+import graft.operators.ProductQuantizer.Codebooks
 
 /** On-disk IVF (inverted-file) ANN index: the embeddings table written
-  * `partitionBy("cell")`, where cell = nearest seed centroid
-  * ([[Similarity.ivfAssign]], shuffle-free argmax projection).
+  * `partitionBy("cell")` under `vectors/`, where cell = nearest seed
+  * centroid ([[Similarity.ivfAssign]], shuffle-free argmax projection).
   *
   * This materializes the scale claim behind v05: at query time the cell
   * predicate is a PARTITION filter, so Spark's file index prunes every
@@ -20,10 +23,20 @@ import graft.operators.Similarity
   * (`PartitionFilters: [isnotnull(cell), (cell = N)]`) and asserted in
   * IvfIndexSpec, not just claimed.
   *
+  * One store, three vector encodings, chosen at build and recorded in
+  * the index's [[Record]]: float ([[build]], the vectors as they are),
+  * int8 ([[buildQuantized]], scalar-quantized codes) and PQ
+  * ([[buildPq]], product-quantized codes). [[append]], [[search]],
+  * [[searchBatch]], [[compact]], [[splitCell]] and [[mergeCells]] read
+  * the record and encode or score accordingly ([[delete]] keys on id
+  * and needs no encoding), so seeds, tombstones, compaction and cell
+  * maintenance exist once for all three.
+  *
   * Recall/exactness contract: searching `nProbe` cells is exact for
-  * vectors assigned to those cells; global recall is the standard IVF
-  * trade-off (raise nProbe or train better seeds). Seeds live next to
-  * the index so search and build can't drift.
+  * vectors assigned to those cells (under the encoding's score);
+  * global recall is the standard IVF trade-off (raise nProbe or train
+  * better seeds). Seeds live next to the index so search and build
+  * can't drift.
   */
 object IvfIndex {
 
@@ -80,105 +93,133 @@ object IvfIndex {
     seeds.toDF("cell_id", "seed_vec")
   }
 
-  /** Build: assign every vector to its nearest seed, write partitioned
-    * by cell. One narrow projection + one write; no shuffle beyond the
-    * writer's own file layout.
+  /** Build a float index: assign every vector to its nearest seed and
+    * write the rows as they are, partitioned by cell. One narrow
+    * projection + one write; no shuffle beyond the writer's own file
+    * layout.
     */
   def build(df: DataFrame, idCol: String, vecCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
       path: String): Unit =
-    writeLayout(
-      Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol, seedVecCol),
-      seeds, seedIdCol, seedVecCol, idCol, path)
+    writeLayout(df, idCol, vecCol, seeds, seedIdCol, seedVecCol, path,
+      Encoding.Float)
 
-  /** The build writes both faces share: the cell-partitioned `vectors`
-    * layout, the seeds, the id column and the layout's column types.
-    */
-  private def writeLayout(assigned: DataFrame, seeds: DataFrame,
-      seedIdCol: String, seedVecCol: String, idCol: String,
-      path: String): Unit = {
-    assigned.write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$path/vectors")
-    writeSeeds(seeds, seedIdCol, seedVecCol, path)
-    writeIdCol(assigned.sparkSession, idCol, path)
-    writeVectorsRecord(assigned, path)
-  }
-
-  /** [[build]] with int8 scalar-quantized storage ([[graft.operators
-    * .ScalarQuant]]): each vector persists as (codes array<tinyint>,
-    * scale double) INSTEAD of the float32 array — ~4× fewer bytes on
-    * disk and, because [[searchQuantized]]'s scan reads only
-    * (id, codes, scale), ~4× fewer scan bytes per probe on top of the
-    * cell pruning. The price is the standard SQ8 trade: scores are
-    * computed on dequantized codes (per-component error ≤ scale/2), so
-    * ranking near the top-k boundary can differ from the float index —
-    * when exact order matters, over-fetch here and rescore the
-    * candidate set against a full-precision column kept elsewhere
-    * (v11's retrieve-then-rescore shape, [[graft.operators.Similarity
-    * .knnQuantizedRescore]]).
+  /** [[build]] with int8 scalar-quantized storage ([[ScalarQuant]]):
+    * each vector persists as (codes array<tinyint>, scale double)
+    * INSTEAD of the float32 array — ~4× fewer bytes on disk and,
+    * because the int8 scan reads only (id, codes, scale), ~4× fewer
+    * scan bytes per probe on top of the cell pruning. The price is the
+    * standard SQ8 trade: scores are computed on dequantized codes
+    * (per-component error ≤ scale/2), so ranking near the top-k
+    * boundary can differ from the float index — when exact order
+    * matters, over-fetch here and rescore the candidate set against a
+    * full-precision column kept elsewhere (v11's retrieve-then-rescore
+    * shape, [[Similarity.knnQuantizedRescore]]).
     */
   def buildQuantized(df: DataFrame, idCol: String, vecCol: String,
       seeds: DataFrame, seedIdCol: String, seedVecCol: String,
       path: String): Unit =
-    writeLayout(
-      graft.operators.ScalarQuant.quantize(
-        Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol, seedVecCol),
-        vecCol).drop(vecCol),
-      seeds, seedIdCol, seedVecCol, idCol, path)
+    writeLayout(df, idCol, vecCol, seeds, seedIdCol, seedVecCol, path,
+      Encoding.Int8)
+
+  /** [[build]] with product-quantized storage ([[ProductQuantizer]]):
+    * the two-level IVF-PQ index. Each vector persists as `codes`
+    * (array<int>, `blocks` small ints) INSTEAD of the float32 array, so
+    * a probe's scan reads `blocks` ints per vector rather than the
+    * d×4-byte embedding (~30× less IO at 64 dims) and scores by ADC
+    * table lookups. `cb` persists beside the seeds, and every encode —
+    * this build's and [[append]]'s — runs against the codebooks read
+    * back from disk, so built and appended codes cannot drift. Codes
+    * encode the RAW vector (not a residual against the cell's
+    * centroid), which is what lets [[mergeCells]] move a code row to
+    * another cell unchanged.
+    *
+    * Approximation contract: IVF recall (probe misses) × PQ recall
+    * (quantization error) — pinned by a recall-floor test like the
+    * in-memory PQ, not an oracle row. [[searchBatch]] refuses a PQ
+    * index: the batch heap scan scores vectors, not ADC tables.
+    */
+  def buildPq(df: DataFrame, idCol: String, vecCol: String,
+      seeds: DataFrame, seedIdCol: String, seedVecCol: String,
+      cb: Codebooks, path: String): Unit = {
+    writeCodebooks(df.sparkSession, cb, path)
+    writeLayout(df, idCol, vecCol, seeds, seedIdCol, seedVecCol, path,
+      Encoding.Pq)
+  }
+
+  /** The write every build shares: the cell-partitioned `vectors`
+    * layout in `encoding`, the seeds and the [[Record]].
+    */
+  private def writeLayout(df: DataFrame, idCol: String, vecCol: String,
+      seeds: DataFrame, seedIdCol: String, seedVecCol: String, path: String,
+      encoding: String): Unit = {
+    val stored = encode(
+      Similarity.ivfAssign(df, idCol, vecCol, seeds, seedIdCol, seedVecCol),
+      vecCol, encoding, path)
+    stored.write.mode(SaveMode.Overwrite)
+      .partitionBy("cell")
+      .parquet(s"$path/vectors")
+    writeSeeds(seeds, seedIdCol, seedVecCol, path)
+    writeRecord(df.sparkSession,
+      Record(dataColumns(stored), idCol, vecCol, encoding), path)
+  }
+
+  /** Assigned rows as `encoding` stores them: the float vector as is,
+    * or in its place int8 (codes, scale) or PQ `codes` encoded against
+    * the index's own codebooks.
+    */
+  private def encode(assigned: DataFrame, vecCol: String, encoding: String,
+      path: String): DataFrame = encoding match {
+    case Encoding.Float => assigned
+    case Encoding.Int8 => ScalarQuant.quantize(assigned, vecCol).drop(vecCol)
+    case Encoding.Pq =>
+      require(!assigned.columns.contains("codes"), "a pq index stores a " +
+        "'codes' column but the input already has one — rename it first")
+      assigned.withColumn("codes", ProductQuantizer.codesCol(col(vecCol),
+        loadCodebooks(assigned.sparkSession, path))).drop(vecCol)
+  }
 
   /** INCREMENTAL index maintenance: assign a delta batch against the
-    * index's OWN frozen on-disk seeds and append into the existing
-    * cell-partitioned layout. Because cell is the argmax against the
-    * same codebook the index was built with, appended files land
-    * inside existing `cell=N` directories, so every search face
-    * (the solo and batch `cell IN` pruning, the quantized probe)
-    * serves base ∪ delta with no rebuild and no re-shuffle of data
-    * already on disk — the daily-ingest shape of a 100-TB ANN store.
-    * v20 pins the semantics (append ≡ one-shot rebuild, per cell);
-    * IvfIndexSpec pins the on-disk face (search over an appended
-    * index ≡ search over a rebuilt one, partition pruning intact).
-    * Retrain-and-rebuild remains a separate, rarer operation — the
-    * v18 cell-balance profile is the signal that it's due.
+    * index's OWN frozen on-disk seeds, encode it as the [[Record]] says
+    * (the same derivation as the build, PQ against the same on-disk
+    * codebooks), and append into the existing cell-partitioned layout.
+    * Because cell is the argmax against the same codebook the index
+    * was built with, appended files land inside existing `cell=N`
+    * directories, so every search face serves base ∪ delta with no
+    * rebuild and no re-shuffle of data already on disk — the
+    * daily-ingest shape of a 100-TB ANN store. v20 pins the semantics
+    * (append ≡ one-shot rebuild, per cell); IvfIndexSpec pins the
+    * on-disk face for every encoding (search over an appended index ≡
+    * search over a rebuilt one, partition pruning intact).
+    * Retrain-and-rebuild remains a separate, rarer operation — the v18
+    * cell-balance profile is the signal that it's due.
+    *
+    * `idCol` and `vecCol` must be the columns the index was built
+    * from, and the encoded rows must carry exactly the recorded columns
+    * and types, in any order (parquet reads columns by name): a delta
+    * missing a column (or typing it differently) would make every read
+    * of those rows return nulls or fail, long after the append that
+    * caused it.
     */
   def append(df: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit =
-    appendLayout(
-      Similarity.ivfAssign(df, idCol, vecCol, readSeeds(df.sparkSession, path),
+      path: String): Unit = {
+    val spark = df.sparkSession
+    val rec = record(spark, path)
+    rec.requireColumns(path, idCol, vecCol)
+    val stored = encode(
+      Similarity.ivfAssign(df, idCol, vecCol, readSeeds(spark, path),
         "cell", "seed_vec"),
-      path)
-
-  /** Append assigned rows to `vectors` after checking they carry exactly
-    * the columns and types recorded at build, in any order (parquet
-    * reads columns by name): a delta missing a column (or typing it
-    * differently) would make every read of those rows return nulls or
-    * fail, long after the append that caused it.
-    */
-  private def appendLayout(assigned: DataFrame, path: String): Unit = {
-    val want = vectorsRecord(assigned.sparkSession, path)
-    val got = dataColumns(assigned)
+      vecCol, rec.encoding, path)
+    val got = dataColumns(stored)
     def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
-    require(shape(got) == shape(want),
+    require(shape(got) == shape(rec.columns),
       s"appended rows do not match the vectors layout of $path: " +
-        s"got ${got.simpleString}, the index was built with ${want.simpleString}")
-    assigned.write.mode(SaveMode.Append)
+        s"got ${got.simpleString}, the index was built with " +
+        rec.columns.simpleString)
+    stored.write.mode(SaveMode.Append)
       .partitionBy("cell")
       .parquet(s"$path/vectors")
   }
-
-  /** [[append]] for a [[buildQuantized]] index: the delta batch is
-    * int8-quantized with the same per-vector scale derivation as the
-    * base build, so appended rows are indistinguishable from built
-    * ones to [[searchQuantized]].
-    */
-  def appendQuantized(df: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit =
-    appendLayout(
-      graft.operators.ScalarQuant.quantize(
-        Similarity.ivfAssign(df, idCol, vecCol,
-          readSeeds(df.sparkSession, path), "cell", "seed_vec"),
-        vecCol).drop(vecCol),
-      path)
 
   /** Per-document DELETE as a tombstone write: appends the ids to
     * `<path>/tombstones` (one long column, parquet). No index data
@@ -188,8 +229,8 @@ object IvfIndex {
     * contract), and the next [[compact]] drops the rows PHYSICALLY and
     * clears the tombstones. This is the standard LSM/GDPR shape: a
     * delete is cheap and immediately visible; reclamation rides the
-    * maintenance pass the index already schedules. Shared by the float
-    * and the quantized layout (tombstones key on id, not on storage).
+    * maintenance pass the index already schedules. Shared by every
+    * encoding (tombstones key on id, not on storage).
     */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
@@ -249,22 +290,19 @@ object IvfIndex {
     * the same rows next time (idempotent). Returns
     * (dataFilesBefore, dataFilesAfter).
     */
-  def compact(spark: SparkSession, path: String): (Long, Long) =
-    // resolve the stored id column only when tombstones exist, so a
-    // tombstone-free compact works on indexes without the marker
-    compactLayout(spark, path, "vectors", vectorsSchema(spark, path),
-      storedIdCol(spark, path))
+  def compact(spark: SparkSession, path: String): (Long, Long) = {
+    val rec = record(spark, path)
+    compactLayout(spark, path, "vectors", rec.schema, rec.idCol)
+  }
 
   /** The shared compact core: read `<path>/<dirName>` with the
-    * caller's pinned `schema`, anti-join any
-    * tombstones (on `idCol`, resolved lazily — only when tombstones
-    * exist), fold to one file per cell, and swap the directory in with
-    * [[Commit.swap]]. Shared
-    * with [[IvfPqIndex.compact]] so the PQ layout can't drift from the
-    * float layout's crash-safety story.
+    * caller's pinned `schema`, anti-join any tombstones (on `idCol`),
+    * fold to one file per partition, and swap the directory in with
+    * [[Commit.swap]]. Shared with [[TextIndex.compact]]'s layouts so
+    * every store keeps the same crash-safety story.
     */
   private[store] def compactLayout(spark: SparkSession, path: String,
-      dirName: String, schema: StructType, idCol: => String,
+      dirName: String, schema: StructType, idCol: String,
       partCol: String = "cell",
       clearTombstones: Boolean = true): (Long, Long) = {
     val dir = new Path(s"$path/$dirName")
@@ -320,20 +358,25 @@ object IvfIndex {
     * results — the seeds flip is the single commit point. Not atomic
     * for a reader that caches seeds across the flip (the [[compact]]
     * maintenance-window caveat). Tombstones key on id and ride along
-    * untouched. Float layout only: sub-seed training needs the
-    * vectors, which the quantized layouts do not store.
+    * untouched. Float encoding only: sub-seed training needs the
+    * vectors, which the int8 and PQ encodings do not store — on those
+    * it fails naming the encoding.
     *
     * Returns the two new cell ids.
     */
   def splitCell(spark: SparkSession, path: String, idCol: String,
       vecCol: String, cell: Long, iters: Int = 5): (Long, Long) = {
+    val rec = record(spark, path)
+    require(rec.encoding == Encoding.Float,
+      s"splitCell trains sub-seeds on float vectors, and $path is a " +
+        s"${rec.encoding} index that does not store them")
     val seeds = readSeeds(spark, path)
     val cellIds = cellIdsOf(seeds)
     require(cellIds.contains(cell), s"no such cell in the codebook: $cell")
-    val hot = readVectors(spark, path)
+    val hot = readVectors(spark, path, rec)
       .filter(col("cell") === cell) // partition-pruned: only this cell's IO
       .drop("cell")
-    val nextId = nextCellId(spark, path, cellIds, "vectors")
+    val nextId = nextCellId(spark, path, cellIds)
     val sub = trainSeeds(hot, idCol, vecCol, k = 2, iters = iters)
       .select((col("cell_id") + nextId).as("cell_id"), col("seed_vec"))
     // 1) append the reassigned halves (invisible: not in seeds yet)
@@ -368,9 +411,9 @@ object IvfIndex {
     * requiring a compact first. Shared by [[splitCell]] and
     * [[mergeCells]].
     */
-  private[store] def nextCellId(spark: SparkSession, path: String,
-      cellIds: Array[Long], layout: String): Long = {
-    val diskMax = Commit.fs(spark, path).listStatus(new Path(s"$path/$layout"))
+  private def nextCellId(spark: SparkSession, path: String,
+      cellIds: Array[Long]): Long = {
+    val diskMax = Commit.fs(spark, path).listStatus(new Path(s"$path/vectors"))
       .iterator.map(_.getPath.getName)
       .collect { case n if n.startsWith("cell=") => n.drop(5).toLong }
       .foldLeft(Long.MinValue)(math.max)
@@ -391,34 +434,30 @@ object IvfIndex {
     * best-effort drop of the two retired dirs; every crash point
     * leaves at worst dead extra bytes for [[compact]] to reclaim, and
     * [[nextCellId]]'s disk floor keeps retries collision-proof.
-    * Tombstones key on id and ride along untouched. Float layout only,
-    * matching [[splitCell]]. Returns the merged cell id.
+    * Tombstones key on id and ride along untouched. Every encoding:
+    * stored rows move between cells unchanged — int8 codes scale per
+    * vector, and PQ codes encode the raw vector, not a residual against
+    * the owning cell's centroid (a residual encoding could NOT merge
+    * without re-encoding every row against the new centroid). Returns
+    * the merged cell id.
     */
   def mergeCells(spark: SparkSession, path: String, a: Long,
-      b: Long): Long =
-    mergeCellsIn(spark, path, "vectors", vectorsSchema(spark, path), a, b)
-
-  /** [[mergeCells]]'s body for any cell-partitioned layout under `path`
-    * (`vectors` here, `codes` for [[IvfPqIndex.mergeCells]]), read with
-    * the caller's pinned `schema`: one copy of the append → seeds flip
-    * → drop protocol.
-    */
-  private[store] def mergeCellsIn(spark: SparkSession, path: String,
-      layout: String, schema: StructType, a: Long, b: Long): Long = {
+      b: Long): Long = {
     require(a != b, s"mergeCells needs two distinct cells, got $a twice")
+    val rec = record(spark, path)
     val seeds = readSeeds(spark, path)
     val cellIds = cellIdsOf(seeds)
     Seq(a, b).foreach(c => require(cellIds.contains(c),
       s"no such cell in the codebook: $c"))
-    val nextId = nextCellId(spark, path, cellIds, layout)
+    val nextId = nextCellId(spark, path, cellIds)
     // 1) append both cells' rows under the new id (invisible)
-    spark.read.schema(schema).parquet(s"$path/$layout")
+    readVectors(spark, path, rec)
       .filter(col("cell").isin(a, b)) // partition-pruned: two cells' IO
       .drop("cell")
       .withColumn("cell", lit(nextId))
       .write.mode(SaveMode.Append)
       .partitionBy("cell")
-      .parquet(s"$path/$layout")
+      .parquet(s"$path/vectors")
     // 2) flip the codebook — the commit point (collected first, as in
     // splitCell: overwriting the seeds dir from a plan reading it
     // would fail/corrupt).
@@ -435,59 +474,93 @@ object IvfIndex {
     // 3) drop the retired source cells (best-effort; dead if they stay)
     val fs = Commit.fs(spark, path)
     Seq(a, b).foreach(c =>
-      fs.delete(new Path(s"$path/$layout/cell=$c"), true))
+      fs.delete(new Path(s"$path/vectors/cell=$c"), true))
     nextId
   }
 
-  /** The index's id column, recorded at [[build]] time as a 1-row
-    * parquet next to the seeds — the stored layout can carry arbitrary
-    * payload columns (labels, metadata) alongside the id, so the
-    * column cannot be inferred from the schema. Read lazily: only the
-    * tombstone paths need it.
-    */
-  private def writeIdCol(spark: SparkSession, idCol: String, path: String): Unit = {
-    import spark.implicits._
-    Seq(idCol).toDF("id_col").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/idcol")
+  /** The vector encodings one index can store. */
+  private[store] object Encoding {
+    val Float = "float"
+    val Int8 = "int8"
+    val Pq = "pq"
+    val All = Set(Float, Int8, Pq)
   }
 
-  /** `idcol/`: the one-row id column name [[writeIdCol]] writes. */
-  private[store] val IdColSchema = StructType(Seq(
-    StructField("id_col", StringType)))
+  /** An index's build-time record, `vectors_schema.json`: the data
+    * columns of `vectors` as parquet reads them back, the id column,
+    * the vector column the index was built from and the [[Encoding]]
+    * it is stored in. The stored layout can carry arbitrary payload
+    * columns (labels, metadata) beside the id, and the int8 and PQ
+    * encodings replace the vector column, so none of this can be
+    * inferred from the files. Every read passes `schema` instead of
+    * paying a footer-inference job, and a column the record lacks fails
+    * at analysis instead of reading back as nulls.
+    */
+  private[store] final case class Record(columns: StructType, idCol: String,
+      vecCol: String, encoding: String) {
 
-  private def storedIdCol(spark: SparkSession, path: String): String = {
-    val p = new Path(s"$path/idcol")
-    require(Commit.fs(spark, path).exists(p),
-      s"$path/idcol missing — tombstone compaction needs the id column " +
-        "recorded at build time (rebuild, or write the marker by hand)")
-    spark.read.schema(IdColSchema).parquet(p.toString).head().getString(0)
+    /** The full read schema of `vectors`: the data columns, then `cell`. */
+    def schema: StructType = StructType(columns :+ CellField)
+
+    /** Fails unless (`idCol`, `vecCol`) are the columns the index was
+      * built from.
+      */
+    def requireColumns(path: String, id: String, vec: String): Unit =
+      require(id == idCol && vec == vecCol,
+        s"$path is a $encoding index built from ($idCol, $vecCol), " +
+          s"not ($id, $vec)")
   }
 
-  /** The `vectors` layout carries whatever columns the caller built it
-    * from, so its read schema cannot be a constant: [[build]] records
-    * the data columns' types as JSON in `vectors_schema.json`, beside
-    * `idcol`, and every read passes them back instead of paying a
-    * footer-inference job. The record is a plain file read on the
-    * driver, not a Spark job.
-    */
-  private def writeVectorsRecord(assigned: DataFrame, path: String): Unit = {
-    val out = Commit.fs(assigned.sparkSession, path)
-      .create(new Path(s"$path/$VectorsRecord"), true)
-    try out.write(dataColumns(assigned).json.getBytes(StandardCharsets.UTF_8))
+  private val RecordFile = "vectors_schema.json"
+
+  private val Rebuild =
+    "rebuild the index with IvfIndex.build, buildQuantized or buildPq"
+
+  /** Writes `rec` as one JSON file, a plain file write on the driver. */
+  private def writeRecord(spark: SparkSession, rec: Record,
+      path: String): Unit = {
+    val json = JsonMethods.compact(JObject(
+      "encoding" -> JString(rec.encoding),
+      "id_col" -> JString(rec.idCol),
+      "vec_col" -> JString(rec.vecCol),
+      "columns" -> JsonMethods.parse(rec.columns.json)))
+    val out = Commit.fs(spark, path).create(new Path(s"$path/$RecordFile"), true)
+    try out.write(json.getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  private val VectorsRecord = "vectors_schema.json"
+  /** The index's [[Record]], read on the driver (no Spark job). Fails
+    * with the rebuild remedy when there is none (a PQ index written
+    * under `codes/` has none) or when it predates the encoding (a bare
+    * column schema): a misread layout must never serve wrong rows.
+    */
+  private[store] def record(spark: SparkSession, path: String): Record = {
+    val p = new Path(s"$path/$RecordFile")
+    val fs = Commit.fs(spark, path)
+    require(fs.exists(p), s"$p missing — every face reads the encoding " +
+      s"and column types recorded at build time ($Rebuild)")
+    val in = fs.open(p)
+    val json = try JsonMethods.parse(
+        new String(in.readAllBytes(), StandardCharsets.UTF_8))
+      finally in.close()
+    (json \ "encoding", json \ "id_col", json \ "vec_col") match {
+      case (JString(enc), JString(id), JString(vec)) if Encoding.All(enc) =>
+        Record(DataType.fromJson(JsonMethods.compact(json \ "columns"))
+          .asInstanceOf[StructType], id, vec, enc)
+      case _ => throw new IllegalArgumentException(s"$p records no vector " +
+        s"encoding: the index was written in an older layout ($Rebuild)")
+    }
+  }
 
   /** The partition column as every cell-partitioned layout reads it back
     * (`cell=N` directory names infer as int).
     */
   private[store] val CellField = StructField("cell", IntegerType)
 
-  /** The data columns of an assigned frame as parquet reads them back:
+  /** The data columns of an encoded frame as parquet reads them back:
     * every field, element and map value nullable.
     */
-  private def dataColumns(assigned: DataFrame): StructType = {
+  private def dataColumns(stored: DataFrame): StructType = {
     def readBack(t: DataType): DataType = t match {
       case s: StructType => StructType(s.fields.map(f =>
         f.copy(dataType = readBack(f.dataType), nullable = true)))
@@ -495,40 +568,16 @@ object IvfIndex {
       case MapType(k, v, _) => MapType(readBack(k), readBack(v), true)
       case other => other
     }
-    readBack(StructType(assigned.schema.filterNot(_.name == "cell")))
+    readBack(StructType(stored.schema.filterNot(_.name == "cell")))
       .asInstanceOf[StructType]
   }
 
-  /** The recorded data columns of `vectors`; fails with the remedy when
-    * the index predates the record (a missing column must never read
-    * back as silent nulls).
-    */
-  private def vectorsRecord(spark: SparkSession, path: String): StructType = {
-    val p = new Path(s"$path/$VectorsRecord")
-    val fs = Commit.fs(spark, path)
-    require(fs.exists(p),
-      s"$p missing — reading the vectors layout needs the column types " +
-        "recorded at build time (rebuild the index with IvfIndex.build or " +
-        "buildQuantized)")
-    val in = fs.open(p)
-    val json = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-    DataType.fromJson(json).asInstanceOf[StructType]
-  }
-
-  /** The full read schema of `vectors`: the recorded columns, then
-    * `cell`.
-    */
-  private[store] def vectorsSchema(spark: SparkSession, path: String)
-      : StructType =
-    StructType(vectorsRecord(spark, path) :+ CellField)
-
   /** The `vectors` layout read with its recorded schema. Scans still
-    * read only the columns a plan uses, and a column the record lacks
-    * fails at analysis instead of reading back as nulls.
+    * read only the columns a plan uses.
     */
-  private def readVectors(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(vectorsSchema(spark, path)).parquet(s"$path/vectors")
+  private def readVectors(spark: SparkSession, path: String,
+      rec: Record): DataFrame =
+    spark.read.schema(rec.schema).parquet(s"$path/vectors")
 
   /** `seeds/`: the codebook, (cell, seed_vec). The writer casts to the
     * pinned types, so a caller's int ids or its seed column names never
@@ -551,33 +600,84 @@ object IvfIndex {
   private def cellIdsOf(seeds: DataFrame): Array[Long] =
     seeds.select(col("cell")).collect().map(_.getLong(0))
 
-  /** Search: the on-disk face of [[Similarity.ivfMultiProbeSearch]]
-    * (delegated, like [[searchBatch]] and [[searchQuantized]], so every
-    * face ranks cells through the one [[Similarity]] ranker): rank the
-    * stored seeds with a codebook-sized job, then scan ONLY the nProbe
-    * nearest cells — the cell filter prunes partitions before IO — and
-    * take the exact top-k inside them (per-partition heap, no global
-    * sort). Tombstoned ids ([[delete]]) are anti-joined out of the
-    * pruned scan before scoring, so a deleted vector is invisible from
-    * the moment the tombstone lands, not from the next compact.
+  /** `codebooks/` of a PQ index: one (block, code, codeword) row per
+    * codeword.
+    */
+  private[store] val CodebooksSchema = StructType(Seq(
+    StructField("block", IntegerType),
+    StructField("code", IntegerType),
+    StructField("codeword", ArrayType(FloatType))))
+
+  private def writeCodebooks(spark: SparkSession, cb: Codebooks,
+      path: String): Unit = {
+    import spark.implicits._
+    cb.codewords.iterator.zipWithIndex.flatMap { case (cws, b) =>
+      cws.iterator.zipWithIndex.map { case (cw, c) => (b, c, cw.toSeq) }
+    }.toSeq.toDF("block", "code", "codeword")
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$path/codebooks")
+  }
+
+  /** The per-block codebooks a [[buildPq]] index persisted. */
+  def loadCodebooks(spark: SparkSession, path: String): Codebooks = {
+    val rows = spark.read.schema(CodebooksSchema)
+      .parquet(s"$path/codebooks").collect()
+    require(rows.nonEmpty, s"no codebooks at $path/codebooks")
+    val blocks = rows.iterator.map(_.getInt(0)).max + 1
+    val codes = rows.iterator.map(_.getInt(1)).max + 1
+    val byKey = rows.map(r =>
+      (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
+    Codebooks(blocks, byKey((0, 0)).length,
+      Array.tabulate(blocks, codes)((b, c) => byKey((b, c))))
+  }
+
+  /** Search: rank the stored seeds ([[Similarity.probeCells]], the one
+    * cell ranker of every face), then scan ONLY the nProbe nearest
+    * cells — the cell filter prunes partitions before IO — and take the
+    * exact top-k inside them (per-partition heap, no global sort).
+    * Tombstoned ids ([[delete]]) are anti-joined out of the pruned scan
+    * before scoring, so a deleted vector is invisible from the moment
+    * the tombstone lands, not from the next compact. The score follows
+    * the recorded encoding, each face delegated to the oracle-pinned
+    * operator so the store and the operator can never drift:
+    *   - float: cosine, [[Similarity.ivfMultiProbeSearch]];
+    *   - int8: cosine on dequantized codes with v11's exact arithmetic,
+    *     [[Similarity.ivfQuantizedSearch]] (v13) — the scan reads ONLY
+    *     (id, codes, scale);
+    *   - PQ: ADC table lookups ([[ProductQuantizer.adcScoreCol]]) through
+    *     [[Similarity.probeSearch]] — the scan reads (id, codes).
+    * On the int8 and PQ encodings `idCol` and `vecCol` must name the
+    * columns the index was built from.
     *
     * Job count: a search and its collect run 3 Spark jobs — the
-    * codebook rank ([[Similarity.probeCells]]), the tombstone broadcast
-    * (only when something was deleted) and the probed-cell top-k. The
-    * seeds and tombstones read with their pinned schemas and `vectors`
-    * with the types recorded at build ([[vectorsSchema]]), so no read
-    * pays a footer-inference job (one job each).
+    * codebook rank, the tombstone broadcast (only when something was
+    * deleted) and the probed-cell top-k — plus the codebooks collect on
+    * a PQ index. The seeds and tombstones read with their pinned
+    * schemas and `vectors` with the types in the [[Record]], so no read
+    * pays a footer-inference job.
     */
   def search(spark: SparkSession, path: String, idCol: String,
-      vecCol: String, query: Array[Float], k: Int, nProbe: Int = 1): DataFrame =
-    Similarity.ivfMultiProbeSearch(
-      dropTombstoned(readVectors(spark, path), idCol, spark, path),
-      idCol, vecCol, readSeeds(spark, path), "cell", "seed_vec",
-      query, nProbe, k)
+      vecCol: String, query: Array[Float], k: Int, nProbe: Int = 1): DataFrame = {
+    val rec = record(spark, path)
+    val vectors = dropTombstoned(readVectors(spark, path, rec), idCol, spark, path)
+    val seeds = readSeeds(spark, path)
+    rec.encoding match {
+      case Encoding.Float =>
+        Similarity.ivfMultiProbeSearch(vectors, idCol, vecCol, seeds, "cell",
+          "seed_vec", query, nProbe, k)
+      case Encoding.Int8 =>
+        rec.requireColumns(path, idCol, vecCol)
+        Similarity.ivfQuantizedSearch(vectors, idCol, seeds, "cell",
+          "seed_vec", query, nProbe, k)
+      case Encoding.Pq =>
+        rec.requireColumns(path, idCol, vecCol)
+        Similarity.probeSearch(vectors, idCol, seeds, "cell", "seed_vec",
+          query, nProbe, k, ProductQuantizer.adcScoreCol(col("codes"),
+            loadCodebooks(spark, path), query))
+    }
+  }
 
-  /** Batch search: the on-disk face of [[Similarity.ivfSearchBatch]]
-    * (delegated, so the store and the spec-pinned operator can never
-    * drift) — top-k for a whole probe FRAME in one pass over the
+  /** Batch search — top-k for a whole probe FRAME in one pass over the
     * partitioned index. The probes collect to the driver, each one's
     * cells rank there against the codebook ([[search]]'s ranker), and
     * ONE map-only scan reads the index under `cell IN` the union of the
@@ -586,6 +686,12 @@ object IvfIndex {
     * are read once, shared across all the queries that probe it — while
     * keeping a top-k heap per probe; the driver merges the task heaps.
     * Tombstoned ids are anti-joined out of the scan as in [[search]].
+    * Delegated, so the store and the spec-pinned operator can never
+    * drift: [[Similarity.ivfSearchBatch]] on a float index,
+    * [[Similarity.ivfSearchBatchQuantized]] (dequantized codes, the same
+    * arithmetic as the int8 [[search]]) on an int8 one. A PQ index is
+    * refused: the heap scan scores vectors, not ADC tables — probe it
+    * with [[search]].
     *
     * Job count: a batch and its collect run 2 Spark jobs — the codebook
     * collect and the heap scan — plus the tombstone broadcast once
@@ -596,23 +702,19 @@ object IvfIndex {
     */
   def searchBatch(spark: SparkSession, path: String, idCol: String,
       vecCol: String, probes: DataFrame, probeIdCol: String,
-      probeVecCol: String, k: Int, nProbe: Int = 1): DataFrame =
-    Similarity.ivfSearchBatch(
-      dropTombstoned(readVectors(spark, path), idCol, spark, path),
-      idCol, vecCol, readSeeds(spark, path), "cell", "seed_vec",
-      probes, probeIdCol, probeVecCol, nProbe, k)
-
-  /** Probe a [[buildQuantized]] index: the on-disk face of
-    * [[Similarity.ivfQuantizedSearch]] (delegated, so the store and the
-    * oracle-pinned operator — v13 — can never drift): same cell pruning
-    * as [[search]], scores on dequantized codes with v11's exact
-    * arithmetic. The scan reads ONLY (id, codes, scale) — asserted in
-    * IvfIndexSpec, not just claimed.
-    */
-  def searchQuantized(spark: SparkSession, path: String, idCol: String,
-      query: Array[Float], k: Int, nProbe: Int = 1): DataFrame =
-    Similarity.ivfQuantizedSearch(
-      dropTombstoned(readVectors(spark, path), idCol, spark, path),
-      idCol, readSeeds(spark, path), "cell", "seed_vec",
-      query, nProbe, k)
+      probeVecCol: String, k: Int, nProbe: Int = 1): DataFrame = {
+    val rec = record(spark, path)
+    require(rec.encoding != Encoding.Pq, s"searchBatch scores float or " +
+      s"int8 vectors, and $path is a pq index: probe it with search")
+    val vectors = dropTombstoned(readVectors(spark, path, rec), idCol, spark, path)
+    val seeds = readSeeds(spark, path)
+    if (rec.encoding == Encoding.Float)
+      Similarity.ivfSearchBatch(vectors, idCol, vecCol, seeds, "cell",
+        "seed_vec", probes, probeIdCol, probeVecCol, nProbe, k)
+    else {
+      rec.requireColumns(path, idCol, vecCol)
+      Similarity.ivfSearchBatchQuantized(vectors, idCol, seeds, "cell",
+        "seed_vec", probes, probeIdCol, probeVecCol, nProbe, k)
+    }
+  }
 }

@@ -1106,12 +1106,6 @@ object TextIndex {
     writePositions(docs, idCol, textCol, path,
       nBucketsOf(docs.sparkSession, path), SaveMode.Append)
 
-  /** The positional-tier write for one doc frame. `nBuckets` is passed
-    * in (not read from `<path>/meta`) so [[appendBatch]] can stage this
-    * layout under `staging/<token>/` — a directory that has no meta of
-    * its own — and so the first streaming batch can write positions
-    * BEFORE the meta marker that commits the build.
-    */
   /** `postings_pos/`: (term, doc_id, positions) partitioned by bucket. */
   private[store] val PositionsSchema = StructType(Seq(
     StructField("term", StringType),
@@ -1119,6 +1113,12 @@ object TextIndex {
     StructField("positions", ArrayType(IntegerType)),
     StructField("bucket", IntegerType)))
 
+  /** The positional-tier write for one doc frame. `nBuckets` is passed
+    * in (not read from `<path>/meta`) so [[appendBatch]] can stage this
+    * layout under `staging/<token>/` — a directory that has no meta of
+    * its own — and so the first streaming batch can write positions
+    * BEFORE the meta marker that commits the build.
+    */
   private[store] def writePositions(docs: DataFrame, idCol: String,
       textCol: String, path: String, nBuckets: Int, mode: SaveMode): Unit =
     docs.select(col(idCol).cast("long").as("doc_id"),

@@ -1,8 +1,6 @@
 package graft.store
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -16,9 +14,12 @@ import org.apache.spark.sql.types._
   * Spark scans (S6), so every query over an index gets pushdown, pruning
   * and codegen for free; at cluster scale `root` is an object-store
   * prefix and appends are atomic directory-level commits by Spark's
-  * parquet committer. Index names are catalog-normalized by
-  * [[graft.pipeline.Product.indexName]]-style callers; this class treats
-  * names as opaque (validated against path traversal).
+  * parquet committer. Every directory operation goes through the Hadoop
+  * filesystem serving `root` ([[Commit.fs]]), so a plain path, a
+  * `file:` URI and an object-store URI behave alike. Index names are
+  * catalog-normalized by [[graft.pipeline.Product.indexName]]-style
+  * callers; this class treats names as opaque (validated against path
+  * traversal).
   */
 final class ParquetVectorStore(spark: SparkSession, root: String) {
 
@@ -35,13 +36,19 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
     */
   private val namePattern = "[a-z0-9][a-z0-9_]*"
 
+  private lazy val fs = Commit.fs(spark, root)
+
   private def dir(index: String): Path = {
     require(index.nonEmpty && index.matches(namePattern),
       s"illegal index name: $index")
-    Paths.get(root, index)
+    new Path(root, index)
   }
 
-  def exists(index: String): Boolean = Files.isDirectory(dir(index))
+  private def isDirectory(p: Path): Boolean =
+    try fs.getFileStatus(p).isDirectory
+    catch { case _: java.io.FileNotFoundException => false }
+
+  def exists(index: String): Boolean = isDirectory(dir(index))
 
   /** D1/D2: create iff absent (idempotent), with the canonical schema. */
   def createIndex(index: String): Unit = if (!exists(index)) {
@@ -56,21 +63,16 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
     * staging directory cannot surface in the catalog.
     */
   def listIndexes(): Seq[String] =
-    if (!Files.isDirectory(Paths.get(root))) Seq.empty
-    else Files.list(Paths.get(root)).iterator().asScala
-      .filter(Files.isDirectory(_))
-      .map(_.getFileName.toString)
+    if (!isDirectory(new Path(root))) Seq.empty
+    else fs.listStatus(new Path(root)).toSeq
+      .filter(_.isDirectory)
+      .map(_.getPath.getName)
       .filterNot(n => n.startsWith(".") || n.startsWith("_"))
-      .toSeq.sorted
+      .sorted
 
   /** D4: drop if exists. */
-  def deleteIndex(index: String): Unit = if (exists(index)) rm(dir(index))
-
-  private def rm(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq.foreach(rm)
-    Files.delete(p)
-  }
+  def deleteIndex(index: String): Unit =
+    if (exists(index)) fs.delete(dir(index), true)
 
   /** E3/E4: bulk append chunks (creates the index if needed). Columns are
     * aligned to the canonical schema by name.
@@ -94,7 +96,7 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
     * Returns the distinct indexes written, sorted.
     */
   def appendAll(chunks: DataFrame, indexCol: String = "index_name"): Seq[String] = {
-    val staging = Paths.get(root, s".staging-${java.util.UUID.randomUUID()}")
+    val staging = new Path(root, s".staging-${java.util.UUID.randomUUID()}")
     try {
       chunks
         .select((indexCol +: chunkSchema.fieldNames.toIndexedSeq)
@@ -102,10 +104,10 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
         .write.mode(SaveMode.Overwrite)
         .partitionBy(indexCol)
         .parquet(staging.toString)
-      val parts = Files.list(staging).iterator().asScala.toSeq
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(s"$indexCol="))
-        .map(p => p -> p.getFileName.toString.stripPrefix(s"$indexCol="))
+      val parts = fs.listStatus(staging).toSeq
+        .filter(st => st.isDirectory &&
+          st.getPath.getName.startsWith(s"$indexCol="))
+        .map(st => st.getPath -> st.getPath.getName.stripPrefix(s"$indexCol="))
       // Validate every STAGED partition name after the single write but
       // BEFORE the first move: the move loop is not atomic, so a name
       // dir() would reject (null → __HIVE_DEFAULT_PARTITION__, uppercase,
@@ -120,15 +122,16 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
         s"illegal index names in $indexCol: ${bad.mkString(", ")}")
       parts.map { case (p, idx) =>
         createIndex(idx)
-        Files.list(p).iterator().asScala.toSeq
-          .filter(_.getFileName.toString.endsWith(".parquet"))
+        fs.listStatus(p).toSeq.map(_.getPath)
+          .filter(_.getName.endsWith(".parquet"))
           .zipWithIndex.foreach { case (f, i) =>
-            Files.move(f, dir(idx).resolve(
-              s"part-${java.util.UUID.randomUUID()}-$i.parquet"))
+            val to = new Path(dir(idx),
+              s"part-${java.util.UUID.randomUUID()}-$i.parquet")
+            require(fs.rename(f, to), s"could not move $f to $to")
           }
         idx
       }.sorted
-    } finally if (Files.isDirectory(staging)) rm(staging)
+    } finally fs.delete(staging, true)
   }
 
   /** Scan-open metric: number of [[read]] calls this store instance has
@@ -189,13 +192,13 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
       .select(lit(metaKey).as("k"),
         col(values.columns.head).cast("string").as("v"))
       .write.mode(SaveMode.Append)
-      .parquet(dir(index).resolve("_tombstones").toString)
+      .parquet(new Path(dir(index), "_tombstones").toString)
   }
 
   /** The live tombstone set, or None when nothing was ever deleted. */
   private def tombstones(index: String): Option[DataFrame] = {
-    val p = dir(index).resolve("_tombstones")
-    if (Files.isDirectory(p))
+    val p = new Path(dir(index), "_tombstones")
+    if (isDirectory(p))
       Some(spark.read.schema(ParquetVectorStore.TombstonesSchema)
         .parquet(p.toString))
     else None
@@ -214,14 +217,11 @@ final class ParquetVectorStore(spark: SparkSession, root: String) {
   def compactIndex(index: String, targetFiles: Int = 1): (Long, Long) = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
     val d = dir(index)
-    val tmp = Paths.get(root, s".compacting-$index")
-    def hadoop(p: Path) = new org.apache.hadoop.fs.Path(p.toString)
+    val tmp = new Path(root, s".compacting-$index")
     // top level only: the `_tombstones/` files are not data files
     def countFiles(p: Path): Long =
-      Files.list(p).iterator().asScala
-        .count(_.getFileName.toString.endsWith(".parquet"))
-    val before = Commit.swap(Commit.fs(spark, root), hadoop(d), hadoop(tmp),
-        hadoop(Paths.get(root, s".old-$index"))) {
+      fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")).toLong
+    val before = Commit.swap(fs, d, tmp, new Path(root, s".old-$index")) {
       require(exists(index), s"no such index: $index")
       val before = countFiles(d)
       read(index) // tombstone anti-join applied here

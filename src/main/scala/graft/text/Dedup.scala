@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.store.Commit
 import graft.text.{TextFunctions => TF}
@@ -809,15 +810,25 @@ object Dedup {
             if (!fs.exists(labelsP))
               dupComponents(deltaPairs, maxIter, checkpointDir)
             else dupComponentsIncremental(
-              spark.read.parquet(labelsP.toString), deltaPairs, maxIter,
-              checkpointDir)
+              spark.read.schema(LabelsSchema).parquet(labelsP.toString),
+              deltaPairs, maxIter, checkpointDir)
           // `next` is checkpointed by dupComponents, so this write reads
           // materialized blocks, never the `labels` dir being swapped out.
-          next.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          next.select(col("id").cast(LongType).as("id"),
+              col("component").cast(LongType).as("component"))
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(tmpP.toString)
         }
     }
   }
+
+  /** `labels/` of a [[labelStoreBatch]] store: (id, component). The
+    * writer casts to the pinned types, so both reads pass this schema
+    * instead of paying a footer-inference job.
+    */
+  private[graft] val LabelsSchema = StructType(Seq(
+    StructField("id", LongType),
+    StructField("component", LongType)))
 
   /** The current label frame of a [[labelStoreBatch]] store — (id,
     * component), healing a crashed swap if one is pending (the same
@@ -838,6 +849,6 @@ object Dedup {
       import spark.implicits._
       return Seq.empty[(Long, Long)].toDF("id", "component")
     }
-    spark.read.parquet(labelsP.toString)
+    spark.read.schema(LabelsSchema).parquet(labelsP.toString)
   }
 }

@@ -270,6 +270,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(hits.length == 2)
   }
 
+  test("a store rooted at a file: URI lists, re-appends, compacts and drops its indexes") {
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-store-uri").toString
+    val store = new ParquetVectorStore(spark, "file:" + dir)
+    def chunks(src: String, n: Int) = (0 until n).map(i =>
+      (s"$src $i", Map("source" -> src), Map.empty[String, String],
+        Seq.fill(4)(i.toFloat)))
+      .toDF("page_content", "metadata", "headers", "embedding")
+    store.append("docs", chunks("a", 3))
+    store.append("docs", chunks("b", 2)) // the index exists: no re-create
+    assert(store.exists("docs") && store.listIndexes() == Seq("docs"))
+    assert(store.count("docs") == 5)
+    val written = store.appendAll(
+      chunks("c", 4).withColumn("index_name", lit("more")))
+    assert(written == Seq("more") && store.listIndexes() == Seq("docs", "more"))
+    assert(store.count("more") == 4)
+    store.deleteDocuments("docs", Seq("a"))
+    val (before, after) = store.compactIndex("docs")
+    assert(before >= 2 && after == 1 && store.count("docs") == 2,
+      s"compact: $before -> $after files")
+    store.deleteIndex("more")
+    assert(store.listIndexes() == Seq("docs"))
+    assert(new java.io.File(dir).list().toSeq == Seq("docs"),
+      "staging and compaction directories must not leak")
+  }
+
   test("listIndexes never surfaces hidden/staging directories") {
     val root = Files.createTempDirectory("graft-store").toString
     val store = new ParquetVectorStore(spark, root)

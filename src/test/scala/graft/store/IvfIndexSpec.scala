@@ -170,7 +170,8 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(schema("codes").dataType ==
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ByteType),
       s"codes must store as array<tinyint>: ${schema("codes").dataType}")
-    val probe = IvfIndex.searchQuantized(spark, qpath, "vec_id", query, k = 5)
+    val probe = IvfIndex.search(spark, qpath, "vec_id", "embedding", query,
+      k = 5)
     val Seq(scan) = probe.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
@@ -187,8 +188,8 @@ class IvfIndexSpec extends AnyFunSuite {
   }
 
   test("quantized probe: scores match v11's dequantized arithmetic; recall holds") {
-    val got = IvfIndex.searchQuantized(spark, qpath, "vec_id", query, k = 10)
-      .collect()
+    val got = IvfIndex.search(spark, qpath, "vec_id", "embedding", query,
+      k = 10).collect()
     assert(got.length == 10)
     val probedCell = got.head.getAs[Number]("cell").longValue
     // brute-force the same cell on the QUANTIZED data with v11's exact
@@ -321,15 +322,15 @@ class IvfIndexSpec extends AnyFunSuite {
     val p2 = Files.createTempDirectory("graft-ivfq-del").toString
     IvfIndex.buildQuantized(e, "vec_id", "embedding", seeds,
       "seed_id", "seed_vec", p2)
-    val top = IvfIndex.searchQuantized(spark, p2, "vec_id", query, k = 5)
+    val top = IvfIndex.search(spark, p2, "vec_id", "embedding", query, k = 5)
       .collect().map(_.getLong(1)).toSeq
     IvfIndex.delete(spark, p2, top.take(2))
-    val after = IvfIndex.searchQuantized(spark, p2, "vec_id", query, k = 5)
+    val after = IvfIndex.search(spark, p2, "vec_id", "embedding", query, k = 5)
       .collect().map(_.getLong(1)).toSeq
     assert(after.intersect(top.take(2)).isEmpty)
     assert(after.length == 5, "the heap must backfill past tombstones")
-    // quantized compact drops them physically (idColOf resolves vec_id
-    // among (codes, scale, cell))
+    // quantized compact drops them physically (the record names vec_id
+    // as the id among (codes, scale, cell))
     val preRows = spark.read.parquet(s"$p2/vectors").count()
     IvfIndex.compact(spark, p2)
     assert(spark.read.parquet(s"$p2/vectors").count() == preRows - 2)
@@ -368,15 +369,15 @@ class IvfIndexSpec extends AnyFunSuite {
     val p2 = Files.createTempDirectory("graft-ivfq-append").toString
     IvfIndex.buildQuantized(e.filter(col("vec_id") % 2 === 0), "vec_id",
       "embedding", seeds, "seed_id", "seed_vec", p2)
-    IvfIndex.appendQuantized(e.filter(col("vec_id") % 2 === 1), "vec_id",
+    IvfIndex.append(e.filter(col("vec_id") % 2 === 1), "vec_id",
       "embedding", p2)
     val schema = spark.read.parquet(s"$p2/vectors").schema
     assert(!schema.fieldNames.contains("embedding"),
       "appended rows must not reintroduce the float column")
-    val got = IvfIndex.searchQuantized(spark, p2, "vec_id", query, k = 5)
+    val got = IvfIndex.search(spark, p2, "vec_id", "embedding", query, k = 5)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
-    val ref = IvfIndex.searchQuantized(spark, qpath, "vec_id", query, k = 5)
-      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    val ref = IvfIndex.search(spark, qpath, "vec_id", "embedding", query,
+      k = 5).collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
     assert(got == ref, "quantized search over appended ≡ over rebuilt")
   }
 
@@ -609,5 +610,96 @@ class IvfIndexSpec extends AnyFunSuite {
     val missing = intercept[IllegalArgumentException](
       IvfIndex.search(spark, p2, "vec_id", "embedding", query, k = 5))
     assert(missing.getMessage.contains("rebuild the index"), missing.getMessage)
+  }
+
+  test("searchBatch on an int8 index equals per-probe search, bit for bit") {
+    val probes = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") % 100 === 0 && col("vec_id") < 300)
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    val batch = IvfIndex.searchBatch(spark, qpath, "vec_id", "embedding",
+      probes, "probe_id", "embedding", k = 5, nProbe = 2)
+    val got = batch.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), bits(r.getDouble(3)))).toSet
+    val solo = probes.collect().flatMap { p =>
+      IvfIndex.search(spark, qpath, "vec_id", "embedding",
+          p.getSeq[Float](1).toArray, k = 5, nProbe = 2)
+        .collect().zipWithIndex.map { case (r, i) =>
+          (p.getLong(0), i + 1L, r.getLong(1), bits(r.getDouble(2))) }
+    }.toSet
+    assert(got.size == 15 && got == solo)
+    // the batch scan reads the codes, never a float column
+    val scans = batch.queryExecution.executedPlan.collect {
+      case c: org.apache.spark.sql.execution.CommandResultExec =>
+        c.commandPhysicalPlan
+    }.flatMap(_.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.requiredSchema.fieldNames.sorted.toSeq
+    })
+    assert(scans == Seq(Seq("codes", "scale", "vec_id")), scans)
+  }
+
+  test("searchBatch on a PQ index and splitCell on an int8 or PQ index fail naming the encoding") {
+    val e = Tables.embeddings(spark, sf)
+    val seeds = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("seed_id"), col("embedding").as("seed_vec"))
+    val pq = Files.createTempDirectory("graft-ivfpq-refuse").toString
+    IvfIndex.buildPq(e, "vec_id", "embedding", seeds, "seed_id", "seed_vec",
+      graft.operators.ProductQuantizer.train(e, "vec_id", "embedding",
+        blocks = 4, codes = 8, iters = 2), pq)
+    val probes = e.filter(col("vec_id") === 42)
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    val batch = intercept[IllegalArgumentException](IvfIndex.searchBatch(
+      spark, pq, "vec_id", "embedding", probes, "probe_id", "embedding", k = 5))
+    assert(batch.getMessage.contains("is a pq index"), batch.getMessage)
+    Seq(qpath -> "int8", pq -> "pq").foreach { case (p, enc) =>
+      val cell = spark.read.parquet(s"$p/seeds").head().getLong(0)
+      val split = intercept[IllegalArgumentException](
+        IvfIndex.splitCell(spark, p, "vec_id", "embedding", cell))
+      assert(split.getMessage.contains(s"is a $enc index"), split.getMessage)
+      // the vector column is not on disk: a wrong name fails by the record
+      val wrong = intercept[IllegalArgumentException](
+        IvfIndex.search(spark, p, "vec_id", "embeding", query, k = 5))
+      assert(wrong.getMessage.contains(s"$enc index built from " +
+        "(vec_id, embedding)"), wrong.getMessage)
+    }
+    // the solo face serves the PQ index
+    assert(IvfIndex.search(spark, pq, "vec_id", "embedding", query, k = 5)
+      .count() == 5)
+  }
+
+  test("an index written before the encoding record fails with the rebuild remedy") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sf)
+    val seeds = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("seed_id"), col("embedding").as("seed_vec"))
+    val p2 = Files.createTempDirectory("graft-ivf-old").toString
+    IvfIndex.build(e, "vec_id", "embedding", seeds, "seed_id", "seed_vec", p2)
+    // the older float layout: the record held only the column schema, and
+    // the id column lived in a one-row `idcol/` parquet
+    val fs = Commit.fs(spark, p2)
+    val columns = IvfIndex.record(spark, p2).columns.json
+    val out = fs.create(new Path(s"$p2/vectors_schema.json"), true)
+    try out.write(columns.getBytes("UTF-8")) finally out.close()
+    Seq("vec_id").toDF("id_col").write.parquet(s"$p2/idcol")
+    val probes = e.filter(col("vec_id") === 42)
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    def refused(face: => Any): Unit = {
+      val err = intercept[IllegalArgumentException](face)
+      assert(err.getMessage.contains("rebuild the index"), err.getMessage)
+    }
+    refused(IvfIndex.search(spark, p2, "vec_id", "embedding", query, k = 5))
+    refused(IvfIndex.searchBatch(spark, p2, "vec_id", "embedding", probes,
+      "probe_id", "embedding", k = 5))
+    refused(IvfIndex.append(e.filter(col("vec_id") < 10), "vec_id",
+      "embedding", p2))
+    refused(IvfIndex.compact(spark, p2))
+    refused(IvfIndex.mergeCells(spark, p2, 0L, 1L))
+    refused(IvfIndex.splitCell(spark, p2, "vec_id", "embedding", 0L))
+    // the older PQ layout: `codes/` beside the codebooks, no record at all
+    fs.rename(new Path(s"$p2/vectors"), new Path(s"$p2/codes"))
+    fs.delete(new Path(s"$p2/vectors_schema.json"), false)
+    refused(IvfIndex.search(spark, p2, "id", "vec", query, k = 5))
   }
 }

@@ -9,9 +9,10 @@ import graft.TestSession
 import graft.functions.vectors
 import graft.operators.ProductQuantizer
 
-/** On-disk IVF-PQ contract: partition pruning visible in the plan, a
-  * codes-only scan (no vector column on disk), round-tripped codebooks,
-  * and an end-to-end recall floor against exact search.
+/** On-disk IVF-PQ contract of a [[IvfIndex.buildPq]] index: partition
+  * pruning visible in the plan, a codes-only scan (no vector column on
+  * disk), round-tripped codebooks, and an end-to-end recall floor
+  * against exact search.
   */
 class IvfPqIndexSpec extends AnyFunSuite {
   import TestSession.spark
@@ -37,12 +38,12 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val seeds = IvfIndex.trainSeeds(corpus, "id", "vec", k = 4, iters = 3)
     val cb = ProductQuantizer.train(corpus, "id", "vec",
       blocks = 4, codes = 16, iters = 3)
-    IvfPqIndex.build(corpus, "id", "vec", seeds, "cell_id", "seed_vec", cb, p)
+    IvfIndex.buildPq(corpus, "id", "vec", seeds, "cell_id", "seed_vec", cb, p)
     p
   }
 
   test("search plan prunes to the probed cells' partitions") {
-    val df = IvfPqIndex.search(spark, path, vec(34), k = 5, nProbe = 1)
+    val df = IvfIndex.search(spark, path, "id", "vec", vec(34), k = 5, nProbe = 1)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan.take(400))
     assert("cell#\\d+L? IN|cell#\\d+L? =".r.findFirstIn(plan).isDefined,
@@ -51,7 +52,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
   }
 
   test("scan reads codes only — no vector column exists on the scan") {
-    val df = IvfPqIndex.search(spark, path, vec(34), k = 5, nProbe = 2)
+    val df = IvfIndex.search(spark, path, "id", "vec", vec(34), k = 5, nProbe = 2)
     val scanned = df.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.requiredSchema.fieldNames.toSeq
@@ -63,7 +64,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
   test("codebooks round-trip from disk") {
     val cb = ProductQuantizer.train(corpus, "id", "vec",
       blocks = 4, codes = 16, iters = 3)
-    val back = IvfPqIndex.loadCodebooks(spark, path)
+    val back = IvfIndex.loadCodebooks(spark, path)
     assert(back.blocks == cb.blocks && back.codes == cb.codes &&
       back.blockDim == cb.blockDim)
     for (b <- 0 until cb.blocks; c <- 0 until cb.codes)
@@ -80,7 +81,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
         .withColumn("s", vectors.cosineSimilarity(col("vec"), lit(q)))
         .orderBy(col("s").desc, col("id")).limit(10)
         .collect().map(_.getLong(0)).toSet
-      val got = IvfPqIndex.search(spark, path, q, k = 10, nProbe = 4)
+      val got = IvfIndex.search(spark, path, "id", "vec", q, k = 10, nProbe = 4)
         .collect().map(_.getLong(1)).toSet
       (exact & got).size
     }
@@ -96,10 +97,10 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val seeds = IvfIndex.trainSeeds(corpus, "id", "vec", k = 4, iters = 3)
     val cb = ProductQuantizer.train(corpus, "id", "vec",
       blocks = 4, codes = 16, iters = 3)
-    IvfPqIndex.build(corpus.filter(col("id") % 2 === 0), "id", "vec",
+    IvfIndex.buildPq(corpus.filter(col("id") % 2 === 0), "id", "vec",
       seeds, "cell_id", "seed_vec", cb, p2)
-    IvfPqIndex.append(corpus.filter(col("id") % 2 === 1), "id", "vec", p2)
-    def layout(p: String) = spark.read.parquet(s"$p/codes")
+    IvfIndex.append(corpus.filter(col("id") % 2 === 1), "id", "vec", p2)
+    def layout(p: String) = spark.read.parquet(s"$p/vectors")
       .collect()
       .map(r => (r.getAs[Number](r.fieldIndex("cell")).longValue,
         r.getLong(r.fieldIndex("id")),
@@ -107,9 +108,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
     assert(layout(p2) == layout(path),
       "appended PQ layout must equal the one-shot layout code for code")
     // search face bit-identical over the appended index
-    val got = IvfPqIndex.search(spark, p2, vec(34), k = 5)
+    val got = IvfIndex.search(spark, p2, "id", "vec", vec(34), k = 5)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
-    val ref = IvfPqIndex.search(spark, path, vec(34), k = 5)
+    val ref = IvfIndex.search(spark, path, "id", "vec", vec(34), k = 5)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
     assert(got == ref)
   }
@@ -119,30 +120,30 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val seeds = IvfIndex.trainSeeds(corpus, "id", "vec", k = 4, iters = 3)
     val cb = ProductQuantizer.train(corpus, "id", "vec",
       blocks = 4, codes = 16, iters = 3)
-    IvfPqIndex.build(corpus.filter(col("id") % 4 === 0), "id", "vec",
+    IvfIndex.buildPq(corpus.filter(col("id") % 4 === 0), "id", "vec",
       seeds, "cell_id", "seed_vec", cb, p2)
     for (r <- 1L to 3L)
-      IvfPqIndex.append(corpus.filter(col("id") % 4 === r), "id", "vec", p2)
-    val preSearch = IvfPqIndex.search(spark, p2, vec(34), k = 5)
+      IvfIndex.append(corpus.filter(col("id") % 4 === r), "id", "vec", p2)
+    val preSearch = IvfIndex.search(spark, p2, "id", "vec", vec(34), k = 5)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
-    val (before, after) = IvfPqIndex.compact(spark, p2)
-    val nCells = spark.read.parquet(s"$p2/codes")
+    val (before, after) = IvfIndex.compact(spark, p2)
+    val nCells = spark.read.parquet(s"$p2/vectors")
       .select(col("cell")).distinct().count()
     assert(before > nCells && after == nCells,
       s"expected $nCells files after compact, got $after (before $before)")
-    assert(IvfPqIndex.search(spark, p2, vec(34), k = 5)
+    assert(IvfIndex.search(spark, p2, "id", "vec", vec(34), k = 5)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq == preSearch,
       "compaction must not change search results")
     // tombstone delete: hidden immediately, dropped physically on compact
     val dead = preSearch.take(2).map(_._1)
-    IvfPqIndex.delete(spark, p2, dead)
-    val afterDel = IvfPqIndex.search(spark, p2, vec(34), k = 5)
+    IvfIndex.delete(spark, p2, dead)
+    val afterDel = IvfIndex.search(spark, p2, "id", "vec", vec(34), k = 5)
       .collect().map(_.getLong(1)).toSeq
     assert(afterDel.intersect(dead).isEmpty && afterDel.length == 5)
-    val preRows = spark.read.parquet(s"$p2/codes").count()
-    IvfPqIndex.compact(spark, p2)
-    assert(spark.read.parquet(s"$p2/codes").count() == preRows - dead.length)
-    assert(IvfPqIndex.search(spark, p2, vec(34), k = 5)
+    val preRows = spark.read.parquet(s"$p2/vectors").count()
+    IvfIndex.compact(spark, p2)
+    assert(spark.read.parquet(s"$p2/vectors").count() == preRows - dead.length)
+    assert(IvfIndex.search(spark, p2, "id", "vec", vec(34), k = 5)
       .collect().map(_.getLong(1)).toSeq == afterDel,
       "post-compact search must equal the tombstone-filtered search")
   }
@@ -152,17 +153,18 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val seeds = IvfIndex.trainSeeds(corpus, "id", "vec", k = 4, iters = 3)
     val cb = ProductQuantizer.train(corpus, "id", "vec",
       blocks = 4, codes = 16, iters = 3)
-    IvfPqIndex.build(corpus, "id", "vec", seeds, "cell_id", "seed_vec", cb, p2)
+    IvfIndex.buildPq(corpus, "id", "vec", seeds, "cell_id", "seed_vec", cb, p2)
     val q = vec(34)
-    def full(n: Int) = IvfPqIndex.search(spark, p2, q, k = 160, nProbe = n)
+    def full(n: Int) =
+      IvfIndex.search(spark, p2, "id", "vec", q, k = 160, nProbe = n)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
     val before = full(4)
     // tombstone BEFORE the merge — it keys on id and must ride along
     val dead = before.head._1
-    IvfPqIndex.delete(spark, p2, Seq(dead))
+    IvfIndex.delete(spark, p2, Seq(dead))
     val cells = spark.read.parquet(s"$p2/seeds")
       .select(col("cell")).collect().map(_.getLong(0)).sorted
-    val merged = IvfPqIndex.mergeCells(spark, p2, cells(0), cells(1))
+    val merged = IvfIndex.mergeCells(spark, p2, cells(0), cells(1))
     // codes encode the raw vector, so every surviving (id, score) pair
     // is unchanged under recellation — only the dead id is gone
     assert(full(3) == before.filterNot(_._1 == dead),
@@ -171,8 +173,8 @@ class IvfPqIndexSpec extends AnyFunSuite {
       .select(col("cell")).collect().map(_.getLong(0)).sorted
     assert(after.length == 3 && after.contains(merged) &&
       !after.contains(cells(0)) && !after.contains(cells(1)))
-    assert(!new java.io.File(s"$p2/codes/cell=${cells(0)}").exists &&
-      !new java.io.File(s"$p2/codes/cell=${cells(1)}").exists,
+    assert(!new java.io.File(s"$p2/vectors/cell=${cells(0)}").exists &&
+      !new java.io.File(s"$p2/vectors/cell=${cells(1)}").exists,
       "retired cell directories must be dropped")
     // merged seed is the elementwise mean of the two retired seeds
     val sv = spark.read.parquet(s"$p2/seeds")
@@ -184,13 +186,14 @@ class IvfPqIndexSpec extends AnyFunSuite {
 
   test("single-cell probe stays inside one cell and is ADC-exact there") {
     val q = vec(34)
-    val rows = IvfPqIndex.search(spark, path, q, k = 5, nProbe = 1).collect()
+    val rows =
+      IvfIndex.search(spark, path, "id", "vec", q, k = 5, nProbe = 1).collect()
     val cells = rows.map(_.getAs[Number]("cell").longValue).toSet
     assert(cells.size == 1, s"nProbe=1 must touch one cell, got $cells")
     // ADC order within the probed cell matches scoring the cell's codes
     // directly with the same codebooks.
-    val cb = IvfPqIndex.loadCodebooks(spark, path)
-    val brute = spark.read.parquet(s"$path/codes")
+    val cb = IvfIndex.loadCodebooks(spark, path)
+    val brute = spark.read.parquet(s"$path/vectors")
       .filter(col("cell") === cells.head)
       .withColumn("score", ProductQuantizer.adcScoreCol(col("codes"), cb, q))
       .orderBy(col("score").desc, col("id")).limit(5)

@@ -68,63 +68,52 @@ class LayoutSchemaSpec extends AnyFunSuite {
   }
 
   test("IvfIndex, IvfPqIndex and store layouts equal their pins") {
+    import IvfIndex.Encoding
     val e = Tables.embeddings(spark, sf)
     val seeds = e.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("seed_id"),
         col("embedding").as("seed_vec"))
     val shared = Map(
       "seeds" -> IvfIndex.SeedsSchema,
-      "tombstones" -> IvfIndex.TombstonesSchema,
-      "idcol" -> IvfIndex.IdColSchema)
-    Seq(false, true).foreach { quantized =>
-      val p = Files.createTempDirectory("graft-pin-ivf").toString
+      "tombstones" -> IvfIndex.TombstonesSchema)
+    // the caller's payload columns (here `label`) ride along; int8 and
+    // PQ store their codes in place of the vector column
+    val stored = Map(
+      Encoding.Float -> Seq("vec_id", "embedding", "label", "cell"),
+      Encoding.Int8 -> Seq("vec_id", "label", "scale", "codes", "cell"),
+      Encoding.Pq -> Seq("vec_id", "label", "codes", "cell"))
+    Seq(Encoding.Float, Encoding.Int8, Encoding.Pq).foreach { enc =>
+      val p = Files.createTempDirectory(s"graft-pin-ivf-$enc").toString
       val base = e.filter(col("vec_id") % 2 === 0)
       val delta = e.filter(col("vec_id") % 2 === 1)
-      if (quantized) {
-        IvfIndex.buildQuantized(base, "vec_id", "embedding", seeds, "seed_id",
-          "seed_vec", p)
-        IvfIndex.appendQuantized(delta, "vec_id", "embedding", p)
-      } else {
-        IvfIndex.build(base, "vec_id", "embedding", seeds, "seed_id",
-          "seed_vec", p)
-        IvfIndex.append(delta, "vec_id", "embedding", p)
+      enc match {
+        case Encoding.Float => IvfIndex.build(base, "vec_id", "embedding",
+          seeds, "seed_id", "seed_vec", p)
+        case Encoding.Int8 => IvfIndex.buildQuantized(base, "vec_id",
+          "embedding", seeds, "seed_id", "seed_vec", p)
+        case Encoding.Pq => IvfIndex.buildPq(base, "vec_id", "embedding",
+          seeds, "seed_id", "seed_vec", ProductQuantizer.train(e, "vec_id",
+            "embedding", blocks = 4, codes = 8, iters = 2), p)
       }
+      IvfIndex.append(delta, "vec_id", "embedding", p)
       IvfIndex.delete(spark, p, Seq(2L, 4L))
-      val pins = shared + ("vectors" -> IvfIndex.vectorsSchema(spark, p))
-      val fields = pins("vectors").fieldNames.toSeq
-      // the caller's payload columns (here `label`) ride along
-      assert(fields == (if (quantized) Seq("vec_id", "label", "scale", "codes", "cell")
-        else Seq("vec_id", "embedding", "label", "cell")), fields)
+      val rec = IvfIndex.record(spark, p)
+      assert((rec.encoding, rec.idCol, rec.vecCol) ==
+        ((enc, "vec_id", "embedding")), rec)
+      val pins = shared + ("vectors" -> rec.schema) ++
+        (if (enc == Encoding.Pq) Map("codebooks" -> IvfIndex.CodebooksSchema)
+         else Map.empty)
+      assert(rec.schema.fieldNames.toSeq == stored(enc), rec.schema)
       assert(check(p, pins) == pins.keySet)
       IvfIndex.compact(spark, p)
-      if (!quantized) {
-        val cells = spark.read.parquet(s"$p/seeds").select("cell").as[Long]
-          .collect().sorted
-        IvfIndex.mergeCells(spark, p, cells(0), cells(1))
+      val cells = spark.read.parquet(s"$p/seeds").select("cell").as[Long]
+        .collect().sorted
+      IvfIndex.mergeCells(spark, p, cells(0), cells(1))
+      if (enc == Encoding.Float)
         IvfIndex.splitCell(spark, p, "vec_id", "embedding", cells(2))
-      }
       assert(check(p, pins) == pins.keySet - "tombstones")
+      assert(!Commit.fs(spark, p).exists(new Path(s"$p/idcol")))
     }
-
-    val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val pq = Files.createTempDirectory("graft-pin-ivfpq").toString
-    val cb = ProductQuantizer.train(corpus, "id", "vec", blocks = 4,
-      codes = 8, iters = 2)
-    IvfPqIndex.build(corpus.filter(col("id") % 2 === 0), "id", "vec", seeds,
-      "seed_id", "seed_vec", cb, pq)
-    IvfPqIndex.append(corpus.filter(col("id") % 2 === 1), "id", "vec", pq)
-    IvfPqIndex.delete(spark, pq, Seq(2L))
-    val pqPins = Map(
-      "codes" -> IvfPqIndex.CodesSchema,
-      "codebooks" -> IvfPqIndex.CodebooksSchema,
-      "seeds" -> IvfIndex.SeedsSchema,
-      "tombstones" -> IvfIndex.TombstonesSchema)
-    assert(check(pq, pqPins) == pqPins.keySet)
-    IvfPqIndex.compact(spark, pq)
-    val cells = spark.read.parquet(s"$pq/seeds").select("cell").as[Long]
-      .collect().sorted
-    IvfPqIndex.mergeCells(spark, pq, cells(0), cells(1))
-    assert(check(pq, pqPins) == pqPins.keySet - "tombstones")
 
     val root = Files.createTempDirectory("graft-pin-store").toString
     val store = new ParquetVectorStore(spark, root)
@@ -134,5 +123,15 @@ class LayoutSchemaSpec extends AnyFunSuite {
     assert(check(s"$root/docs", Map(
       "_tombstones" -> ParquetVectorStore.TombstonesSchema)) ==
       Set("_tombstones"))
+  }
+
+  test("the Dedup label store layout equals its pin") {
+    val p = Files.createTempDirectory("graft-pin-labels").toString
+    graft.text.Dedup.labelStoreBatch(
+      Seq((1L, 2L), (3L, 4L)).toDF("a_id", "b_id"), p, batchId = 0L)
+    graft.text.Dedup.labelStoreBatch(
+      Seq((2L, 3L), (5L, 5L)).toDF("a_id", "b_id"), p, batchId = 1L)
+    assert(check(p, Map("labels" -> graft.text.Dedup.LabelsSchema)) ==
+      Set("labels"))
   }
 }
